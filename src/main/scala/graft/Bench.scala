@@ -72,27 +72,34 @@ object Bench {
     val calib =
       if (only.isDefined) 0.0
       else Seq(calibOnce(), calibOnce(), calibOnce()).min
+    // A query that throws is named in `failed` and left out of the timings
+    // (so out of `value` and `nqueries`); the process then exits 1.
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       def once(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      val a = once()
-      val b = once()
-      // Shared-host CPU-steal spikes show up as one run being a multiple of
-      // the other; a third run disambiguates noise from plan cost so a
-      // single contended measurement can't masquerade as a regression.
-      val best =
-        if (math.max(a, b) > 2 * math.min(a, b) && math.min(a, b) > 0.2)
-          math.min(math.min(a, b), once())
-        else math.min(a, b)
-      name -> best
+      try {
+        val a = once()
+        val b = once()
+        // Shared-host CPU-steal spikes show up as one run being a multiple of
+        // the other; a third run disambiguates noise from plan cost so a
+        // single contended measurement can't masquerade as a regression.
+        val best =
+          if (math.max(a, b) > 2 * math.min(a, b) && math.min(a, b) > 0.2)
+            math.min(math.min(a, b), once())
+          else math.min(a, b)
+        Some(name -> best)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          None
+      }
     }
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
@@ -118,7 +125,8 @@ object Bench {
         s""","outrows":${counts.mkString("{", ",", "}")}"""
       }
     val full =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","calib":${f3(calib)},"queries":$qs$outrows,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","calib":${f3(calib)},"queries":$qs$outrows,""" +
+        s""""failed":${failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
     // Per-query detail goes to a file: at ~180 queries the full line is
     // ~6 KB, which overflows the harness's bounded stdout-tail capture.
     java.nio.file.Files.write(
@@ -134,5 +142,6 @@ object Bench {
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","nqueries":${results.size},"calib":${f3(calib)},"sf":"$sfDir"}"""
     println(compact)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

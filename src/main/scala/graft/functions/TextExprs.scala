@@ -3,8 +3,10 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Characters of a string sorted ascending — the anagram group key
@@ -47,6 +49,83 @@ case class SortChars(child: Expression) extends UnaryExpression {
         """
       }
     )
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Reference-parity tokenizer in one codegen'd expression: equal to
+  * `filter(filter(split(regexp_replace(regexp_replace(lower(t), "'", ""),
+  * "[^a-z]+", " "), " "), w -> length(w) > 1), w -> !w.isin(stopWords))`,
+  * null for a null row. That chain runs three Java-regex passes and two
+  * interpreted lambdas per row, and its `lower()` initialises ICU's
+  * case-mapping tables on first use; this is one byte loop per row whose
+  * tokens are views into one fresh buffer. The stop list is a field, so it
+  * takes part in expression equality.
+  *
+  * The input is a UTF8_BINARY string (as for [[SortChars]]). A full-ASCII
+  * row is folded A–Z → a–z inside the loop, which is what `lower()` does
+  * to ASCII there. Any other row is first lowercased by exactly Spark's
+  * `Lower` call, since non-ASCII letters can lowercase to ASCII ones (the
+  * Kelvin sign U+212A becomes `k`); the loop then sees only ASCII bytes of
+  * the result as letters, as `[^a-z]+` does.
+  */
+case class WordTokens(child: Expression, stopWords: Seq[String]) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else
+      TypeCheckResult.TypeCheckFailure(
+        s"word_tokens requires a string argument, got ${child.dataType.catalogString}"
+      )
+
+  // Read lazily, as `Lower` reads it.
+  private lazy val useICU = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  @transient private lazy val stop: java.util.HashSet[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String]()
+    stopWords.foreach(w => s.add(UTF8String.fromString(w)))
+    s
+  }
+
+  def tokenize(text: UTF8String): ArrayData = {
+    val s =
+      if (text.isFullAscii) text
+      else CollationSupport.Lower.exec(text, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    val buf = new Array[Byte](n)
+    val out = new java.util.ArrayList[AnyRef]()
+    var o = 0
+    var run = 0
+    var i = 0
+    while (i <= n) {
+      val b = if (i < n) Platform.getByte(base, off + i) else 0.toByte
+      if (b >= 'a' && b <= 'z') { buf(o) = b; o += 1; run += 1 }
+      else if (b >= 'A' && b <= 'Z') { buf(o) = (b + 32).toByte; o += 1; run += 1 }
+      else if (b != '\'') {
+        if (run > 1) {
+          val w = UTF8String.fromBytes(buf, o - run, run)
+          if (!stop.contains(w)) out.add(w)
+        }
+        run = 0
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  override def nullSafeEval(input: Any): Any = tokenize(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("wordTokens", this)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.tokenize($c);")
+  }
+
+  override def prettyName: String = "word_tokens"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

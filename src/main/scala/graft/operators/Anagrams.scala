@@ -18,10 +18,12 @@ import graft.util.Cols._
   *   - `_reduce` (`src/index.js:101-116`) → `collect_set` + HAVING + sort
   *   - `clean` (`src/index.js:364-391`) → [[renderLines]] + single-file sink.
   *
-  * Scale posture: the only shuffle is the group-by on `key`; map-side partial
-  * aggregation (partial `collect_set`) shrinks it, and the result cardinality
-  * is bounded by distinct-word count, not corpus size, so the final
-  * `coalesce(1)` sink stays safe at 100 TB of input.
+  * Scale posture: the shuffle on `key` is the one that carries the corpus;
+  * map-side partial aggregation (partial `collect_set`) shrinks it. The
+  * result cardinality is bounded by distinct-word count, not corpus size,
+  * so the single-file sink fans the finished groups in through a second,
+  * small exchange ([[writeSingleText]]) and the final `collect_set` merge
+  * keeps all of its reduce tasks.
   */
 object Anagrams {
 
@@ -73,9 +75,11 @@ object Anagrams {
       ).as("value")
     )
 
-  /** Single merged text file, the reference's `clean` sink. Safe because the
-    * group table is small (bounded by vocabulary, not corpus).
+  /** Single merged text file, the reference's `clean` sink. `repartition(1)`
+    * rather than `coalesce(1)`: a coalesce would pull the whole final
+    * `collect_set` merge into one task, while the exchange fans in only the
+    * rendered lines (bounded by vocabulary, not corpus).
     */
   def writeSingleText(groups: DataFrame, path: String): Unit =
-    renderLines(groups).coalesce(1).write.mode("overwrite").text(path)
+    renderLines(groups).repartition(1).write.mode("overwrite").text(path)
 }

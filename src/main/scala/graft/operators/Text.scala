@@ -2,17 +2,26 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.functions.WordTokens
 
 /** Tokenize + normalize + filter — the reference's reader phase
-  * (`/root/reference/src/index.js:48-55`), re-expressed as pure Catalyst
-  * expressions so it stays inside whole-stage codegen and the parquet scan
-  * only materializes the text column.
+  * (`src/index.js:48-55` of the reference).
   *
   * Semantics pinned by SURVEY.md §2.2 items 1–2:
   *   lowercase → remove ALL apostrophes (the reference's missing `g` flag is
   *   an acknowledged bug; we implement the documented intent) → collapse
   *   `[^a-z]+` runs to a single space → split → keep tokens of length > 1 →
   *   drop stop words.
+  *
+  * [[tokensAll]] and [[tokens]] run that whole chain as one codegen'd
+  * kernel, [[graft.functions.WordTokens]]: a single byte loop per row that
+  * folds A–Z, skips `'` and emits each `[a-z]` run of length > 1 not in the
+  * stop set, with no regex and no interpreted lambda. Full-ASCII rows also
+  * skip Spark's ICU-backed `lower()`; any other row is lowercased by the
+  * same `Lower` call first (a non-ASCII letter can lowercase to an ASCII
+  * one), then takes the same loop. The parquet scan still only
+  * materializes the text column.
   */
 object Text {
 
@@ -34,11 +43,9 @@ object Text {
     regexp_replace(regexp_replace(lower(text), "'", ""), "[^a-z]+", " ")
 
   /** All tokens of length > 1 (empty boundary tokens fall out with them). */
-  def tokensAll(text: Column): Column =
-    filter(split(normalize(text), " "), w => length(w) > 1)
+  def tokensAll(text: Column): Column = tokens(text, Nil)
 
-  /** Tokens with stop words removed via an IN-list predicate (stays in
-    * codegen). For big external stop lists prefer
+  /** Tokens with [[StopWords]] removed. For big external stop lists prefer
     * [[StopWordsOp.antiJoin]] (broadcast anti-join).
     */
   def tokens(text: Column): Column = tokens(text, StopWords)
@@ -48,7 +55,7 @@ object Text {
     * [[graft.sources.TextSource.stopWordsFile]]).
     */
   def tokens(text: Column, stopWords: Seq[String]): Column =
-    filter(tokensAll(text), w => !w.isin(stopWords: _*))
+    Bridge.column(WordTokens(Bridge.expression(text), stopWords))
 
   /** DuckDB expression producing the same token list from column `c`
     * (before length/stop filtering — those are WHERE clauses at the

@@ -110,6 +110,35 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("Exchange hashpartitioning"), plan.take(800))
   }
 
+  test("anagram single-file sink fans in through an exchange above the final merge, not coalesce(1)") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    @volatile var plan: String = null
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelation"))
+          plan = qe.executedPlan.toString
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = java.nio.file.Files.createTempDirectory("graft_sink_plan").toString + "/res"
+      graft.operators.Anagrams.writeSingleText(
+        graft.operators.Anagrams.pipeline(Tables.documents(spark, sf)),
+        out
+      )
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (plan == null && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plan != null, "no write plan reported")
+    // The tree prints top-down: the fan-in exchange sits above the final
+    // (merging) collect_set aggregate, which keeps its own reduce tasks.
+    val fanIn = plan.indexOf("Exchange SinglePartition")
+    val merge = plan.indexOf("ObjectHashAggregate")
+    assert(fanIn >= 0 && merge > fanIn, plan)
+    assert(!plan.contains("Coalesce 1"), plan)
+  }
+
   test("stop-word anti-join broadcasts the stop list") {
     val plan = physical("wordcount_antijoin")
     assert(

@@ -56,7 +56,7 @@ class TextSourceSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/res"
     Anagrams.writeSingleText(groups, out)
     val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
-    assert(parts.length === 1, "coalesce(1) must produce a single text file")
+    assert(parts.length === 1, "the sink must produce a single text file")
     val lines = scala.io.Source.fromFile(parts.head)
     val content = try lines.getLines().toSet
     finally lines.close()
