@@ -332,10 +332,10 @@ object Indexes {
       }
     }
 
-  private def schemeOf(dir: String): Option[String] =
+  private[graft] def schemeOf(dir: String): Option[String] =
     Option(new org.apache.hadoop.fs.Path(dir).toUri.getScheme)
 
-  private def sessionHadoopConf: org.apache.hadoop.conf.Configuration =
+  private[graft] def sessionHadoopConf: org.apache.hadoop.conf.Configuration =
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
 
   /** The object-store build mode: in-place write + marker-object commit

@@ -238,24 +238,18 @@ object IvfPq {
 
   /** The full code table: the build-time base plus any incremental
     * batch deltas appended by
-    * [[graft.streaming.VectorIndexStream.codesUpsert]]. Both trees are
+    * [[graft.streaming.VectorIndexStream.upsertBatch]]. Both trees are
     * cell-partitioned, so a probe filter prunes each branch.
+    *
+    * Full schema (vec_id, codes, metaCols..., cell): searchers prune what
+    * they don't reference; compaction must preserve meta columns or a
+    * filtered search would break after the first OPTIMIZE. The union is a
+    * strict unionByName: a delta writer that dropped the meta columns of
+    * a meta-carrying index fails loudly here rather than silently
+    * null-filtering its rows out of every filtered search.
     */
-  def readCodes(spark: SparkSession, dir: String): DataFrame = {
-    // Full schema (vec_id, codes, metaCols..., cell): searchers prune what
-    // they don't reference; compaction must preserve meta columns or a
-    // filtered search would break after the first OPTIMIZE.
-    Indexes.recoverSwap(dir)
-    val base = spark.read.parquet(s"$dir/codes")
-    if (new java.io.File(s"$dir/delta").exists())
-      // batch_id is delta bookkeeping (the partition dir name), not index
-      // data — drop it before the union. Otherwise strict unionByName: a
-      // delta writer that dropped the meta columns of a meta-carrying
-      // index fails loudly here rather than silently null-filtering its
-      // rows out of every filtered search
-      base.unionByName(spark.read.parquet(s"$dir/delta").drop("batch_id"))
-    else base
-  }
+  def readCodes(spark: SparkSession, dir: String): DataFrame =
+    graft.streaming.DeltaFold.live(spark, dir, "codes")()
 
   /** Offline maintenance: fold the streamed `delta/` trees into the base
     * code table and drop them — after compaction a search reads ONE
@@ -265,15 +259,13 @@ object IvfPq {
     * RETRAIN is a rebuild.
     *
     * Swap discipline: the merged table is fully written first, then the
-    * journaled crash-safe swap ([[Indexes.commitSwap]]) publishes it — a
-    * process death mid-flip is finished by the next reader's
-    * [[Indexes.recoverSwap]]. A concurrent searcher of a LIVE process can
-    * still observe the momentary rename window, matching lakehouse
-    * OPTIMIZE (quiesced-maintenance) semantics — not a lock-free swap.
+    * journaled crash-safe swap ([[graft.streaming.DeltaFold.compact]])
+    * publishes it. A concurrent searcher of a LIVE process can still
+    * observe the momentary rename window, matching lakehouse OPTIMIZE
+    * (quiesced-maintenance) semantics — not a lock-free swap.
     */
-  def compactDeltas(spark: SparkSession, dir: String): Unit = {
-    if (new java.io.File(s"$dir/delta").exists()) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+  def compactDeltas(spark: SparkSession, dir: String): Unit =
+    graft.streaming.DeltaFold.compact(dir, Seq("codes")) { out =>
       readCodes(spark, dir)
         // a batch replayed AFTER a compaction folded it re-lands in delta/;
         // frozen quantizers make the replayed rows bit-identical to the
@@ -282,8 +274,6 @@ object IvfPq {
         .write
         .mode("overwrite")
         .partitionBy("cell")
-        .parquet(s"$dir/codes.compact-$stamp")
-      Indexes.commitSwap(dir, stamp, Seq("codes"))
+        .parquet(out("codes"))
     }
-  }
 }

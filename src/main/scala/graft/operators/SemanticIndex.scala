@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.DeltaFold
 
 /** Persisted data-scaled quantizer state: the build-once/dedup-many form of
   * [[Similarity.semanticDedupScaled]] / [[Similarity.semanticDeltaDupsScaled]]
@@ -250,7 +251,7 @@ object SemanticIndex {
     */
   def readCellsLive(spark: SparkSession, dir: String): DataFrame = {
     val base = readCelled(spark, dir)
-    if (!new java.io.File(s"$dir/delta").exists()) base
+    if (!DeltaFold.hasDelta(dir)) base
     else {
       val delta = spark.read
         .parquet(s"$dir/delta")
@@ -286,48 +287,24 @@ object SemanticIndex {
       compactAt: Double = 0.2
   ): Unit = {
     val spark = batch.sparkSession
-    Indexes.recoverSwap(dir)
-    val cents = loadSeeds(spark, dir)
-    val counts = spark.read.parquet(s"$dir/counts")
-    val coarse = Similarity.assignCells(
-      batch.select(col("vec_id"), col("embedding")),
-      cents,
-      litK
-    )
-    Similarity
-      .resplitCells(coarse, counts, cents.length.toLong, maxCellSize)
-      .write
-      .mode("overwrite")
-      .parquet(s"$dir/delta/batch_id=$batchId")
-    if (compactAt > 0.0) {
-      maybeCompact(spark, dir, targetCellSize, maxCellSize, litK, compactAt)
-      ()
-    }
-  }
-
-  /** Fold the delta iff accumulated delta rows exceed `maxDeltaFraction`
-    * of base rows — the shared debt policy. Returns true iff it ran.
-    */
-  def maybeCompact(
-      spark: SparkSession,
-      dir: String,
-      targetCellSize: Int,
-      maxCellSize: Int,
-      litK: Int = 256,
-      maxDeltaFraction: Double = 0.2
-  ): Boolean = {
-    Indexes.recoverSwap(dir)
-    if (!new java.io.File(s"$dir/delta").exists()) false
-    else {
-      // independent read-only debt counts — overlapped (guide §2.6)
-      val (base, delta) = Indexes.par2(
-        spark.read.parquet(s"$dir/celled").count(),
-        spark.read.parquet(s"$dir/delta").count()
+    DeltaFold.upsert(dir, batchId) { (_, path) =>
+      val cents = loadSeeds(spark, dir)
+      val counts = spark.read.parquet(s"$dir/counts")
+      val coarse = Similarity.assignCells(
+        batch.select(col("vec_id"), col("embedding")),
+        cents,
+        litK
       )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) compactDeltas(spark, dir, targetCellSize, maxCellSize, litK)
-      due
+      Similarity
+        .resplitCells(coarse, counts, cents.length.toLong, maxCellSize)
+        .write
+        .mode("overwrite")
+        .parquet(path)
     }
+    if (compactAt > 0.0)
+      DeltaFold.settle(spark, dir, "celled", compactAt) {
+        compactDeltas(spark, dir, targetCellSize, maxCellSize, litK)
+      }
   }
 
   /** Rebuild the quantizer from the UNION corpus (base celled rows ∪
@@ -349,9 +326,7 @@ object SemanticIndex {
       litK: Int = 256
   ): Unit = {
     import spark.implicits._
-    Indexes.recoverSwap(dir)
-    if (new java.io.File(s"$dir/delta").exists()) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+    DeltaFold.compact(dir, Seq("celled", "seeds", "counts")) { out =>
       val union = spark.read
         .parquet(s"$dir/celled")
         .select(col("vec_id"), col("embedding"))
@@ -374,16 +349,15 @@ object SemanticIndex {
             .toDF("cell", "centroid")
             .write
             .mode("overwrite")
-            .parquet(s"$dir/seeds.compact-$stamp"),
-        () => counts.write.mode("overwrite").parquet(s"$dir/counts.compact-$stamp"),
+            .parquet(out("seeds")),
+        () => counts.write.mode("overwrite").parquet(out("counts")),
         () =>
           Similarity
             .resplitCells(coarse, counts, k, maxCellSize)
             .write
             .mode("overwrite")
-            .parquet(s"$dir/celled.compact-$stamp")
+            .parquet(out("celled"))
       )
-      Indexes.commitSwap(dir, stamp, Seq("celled", "seeds", "counts"))
     }
   }
 

@@ -120,27 +120,14 @@ object TextIndex {
       terms: Seq[String],
       nBuckets: Int = DefaultBuckets
   ): DataFrame = {
-    Indexes.recoverSwap(dir)
     // bucket ids must match the build-side xxhash64 exactly — compute them
     // through the engine, one literal row per term (no corpus scan)
     import spark.implicits._
     val ids = terms.toDF("term").select(bucketOf(col("term"), nBuckets)).as[Long].collect().toSeq
-    val cols =
-      Seq(col("term"), col("doc_id"), col("tf"), col("positions"), col("dl"))
-    val base = spark.read
-      .parquet(s"$dir/postings")
-      .filter(col("tb").isin(ids.distinct: _*) && col("term").isin(terms: _*))
-      .select(cols: _*)
-    if (!new java.io.File(s"$dir/delta").exists()) base
-    else
-      base
-        .unionByName(
-          spark.read
-            .parquet(s"$dir/delta")
-            .filter(col("tb").isin(ids.distinct: _*) && col("term").isin(terms: _*))
-            .select(cols: _*)
-        )
-        .distinct()
+    graft.streaming.DeltaFold.live(spark, dir, "postings", exactlyOnce = true)(
+      _.filter(col("tb").isin(ids.distinct: _*) && col("term").isin(terms: _*))
+        .select(col("term"), col("doc_id"), col("tf"), col("positions"), col("dl"))
+    )
   }
 
   /** The persisted top bigram — (w1, w2), one row of driver state. */
@@ -174,10 +161,10 @@ object TextIndex {
       .select(col("n_docs"), col("total_len"))
       .head()
     val (n0, s0) = (r.getLong(0), r.getLong(1))
-    if (!new java.io.File(s"$dir/delta").exists()) (n0, s0)
+    if (!graft.streaming.DeltaFold.hasDelta(dir)) (n0, s0)
     else {
       val d = spark.read
-        .parquet(s"$dir/delta")
+        .parquet(graft.streaming.DeltaFold.deltaDir(dir))
         .select(col("doc_id"), col("dl"))
         .distinct()
         .agg(count(lit(1)).cast("long"), coalesce(sum(col("dl")), lit(0L)).cast("long"))

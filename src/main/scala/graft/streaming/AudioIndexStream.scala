@@ -23,10 +23,9 @@ import graft.operators.{Audio, Indexes}
   * never re-paid), so a dedup verdict over the stream-grown index is
   * exact at any moment.
   *
-  * Compaction ([[maybeCompact]]) folds `delta/` into `docs/` when delta
-  * rows exceed `maxDeltaFraction` of base rows, re-derives `clusters/`,
-  * and publishes via the crash-safe journaled swap
-  * ([[Indexes.commitSwap]]); a batch replayed AFTER compaction folded it
+  * Compaction (the [[DeltaFold]] debt policy) folds `delta/` into
+  * `docs/`, re-derives `clusters/`, and publishes via the crash-safe
+  * journaled swap; a batch replayed AFTER compaction folded it
   * re-lands in `delta/` with bit-identical rows, and the next fold's
   * full-row `distinct()` restores exactly-once — no ledger needed.
   */
@@ -35,18 +34,10 @@ object AudioIndexStream {
   /** Per-doc fingerprint rows, base ∪ outstanding deltas, exactly-once
     * view (distinct over the pure-function rows).
     */
-  def readDocs(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    val base =
-      spark.read.parquet(s"$dir/docs").select(col("doc_id"), col("fingerprint"))
-    if (!new java.io.File(s"$dir/delta").exists()) base
-    else
-      base
-        .unionByName(
-          spark.read.parquet(s"$dir/delta").select(col("doc_id"), col("fingerprint"))
-        )
-        .distinct()
-  }
+  def readDocs(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.live(spark, dir, "docs", exactlyOnce = true)(
+      _.select(col("doc_id"), col("fingerprint"))
+    )
 
   /** LIVE (fingerprint, rep, n_variants) clusters over the stream-grown
     * index. While deltas are outstanding, clusters are re-derived from the
@@ -55,62 +46,29 @@ object AudioIndexStream {
     * already folded its rows. With no outstanding delta, the persisted
     * aggregate is served as-is (identical plan to the build-time read).
     */
-  def readClusters(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!new java.io.File(s"$dir/delta").exists())
-      spark.read
-        .parquet(s"$dir/clusters")
-        .select(col("fingerprint"), col("rep"), col("n_variants"))
-    else Audio.fpClusters(readDocs(spark, dir))
-  }
-
-  /** Fold `delta/` into the base iff accumulated delta rows exceed
-    * `maxDeltaFraction` of base rows. Returns true iff compaction ran.
-    */
-  def maybeCompact(
-      spark: SparkSession,
-      dir: String,
-      maxDeltaFraction: Double = 0.2
-  ): Boolean = {
-    if (!new java.io.File(s"$dir/delta").exists()) false
-    else {
-      // independent read-only debt counts — overlapped (guide §2.6)
-      val (base, delta) = Indexes.par2(
-        spark.read.parquet(s"$dir/docs").count(),
-        spark.read.parquet(s"$dir/delta").count()
-      )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) compactDeltas(spark, dir)
-      due
-    }
-  }
+  def readClusters(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.derived(spark, dir, "clusters", "fingerprint", "rep", "n_variants")(
+      Audio.fpClusters(readDocs(spark, dir))
+    )
 
   /** Merge base ∪ delta per-doc rows (full-row distinct = exactly-once),
     * re-derive clusters, publish both via the crash-safe journaled swap.
     */
-  def compactDeltas(spark: SparkSession, dir: String): Unit = {
-    if (new java.io.File(s"$dir/delta").exists()) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+  def compactDeltas(spark: SparkSession, dir: String): Unit =
+    DeltaFold.compact(dir, Seq("docs", "clusters")) { out =>
       val docs = readDocs(spark, dir).localCheckpoint()
       // both writes read only the executor-local checkpoint and land in
       // stamp dirs invisible until commitSwap — overlap them (guide §2.6)
       Indexes.inParallel(
-        () => docs.write.mode("overwrite").parquet(s"$dir/docs.compact-$stamp"),
-        () =>
-          Audio
-            .fpClusters(docs)
-            .write
-            .mode("overwrite")
-            .parquet(s"$dir/clusters.compact-$stamp")
+        () => docs.write.mode("overwrite").parquet(out("docs")),
+        () => Audio.fpClusters(docs).write.mode("overwrite").parquet(out("clusters"))
       )
-      Indexes.commitSwap(dir, stamp, Seq("docs", "clusters"))
     }
-  }
 
   /** One micro-batch of (doc_id, ...) clip rows → decoded, fingerprinted,
-    * appended under `dir/delta/batch_id=<id>`, then the [[maybeCompact]]
-    * policy settles the delta debt (compactAt <= 0 disables). Only the
-    * batch is decoded — the corpus-linear cost is never re-paid.
+    * appended under `dir/delta/batch_id=<id>`, then the debt policy
+    * settles the delta (compactAt <= 0 disables). Only the batch is
+    * decoded — the corpus-linear cost is never re-paid.
     */
   def upsertBatch(
       batch: DataFrame,
@@ -125,24 +83,13 @@ object AudioIndexStream {
       fp: (SparkSession, DataFrame) => DataFrame = Audio.energyFp
   ): Unit = {
     val spark = batch.sparkSession
-    fp(spark, batch)
-      .select(col("doc_id"), col("fingerprint"))
-      .write
-      .mode("overwrite")
-      .parquet(s"$dir/delta/batch_id=$batchId")
-    if (compactAt > 0.0) maybeCompact(spark, dir, compactAt)
-  }
-
-  /** foreachBatch writer over a clip-document stream. Start with
-    * `.trigger(...).option("checkpointLocation", ...)`.
-    */
-  def fpUpsert(
-      clipsStream: DataFrame,
-      dir: String,
-      compactAt: Double = 0.2,
-      fp: (SparkSession, DataFrame) => DataFrame = Audio.energyFp
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    clipsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      upsertBatch(batch, dir, batchId, compactAt, fp)
+    DeltaFold.upsert(dir, batchId) { (_, path) =>
+      fp(spark, batch)
+        .select(col("doc_id"), col("fingerprint"))
+        .write
+        .mode("overwrite")
+        .parquet(path)
     }
+    if (compactAt > 0.0) DeltaFold.settle(spark, dir, "docs", compactAt)(compactDeltas(spark, dir))
+  }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Indexes, Urls}
+import graft.operators.Urls
 import graft.sources.Warc
 
 /** Incremental CDX maintenance: newly-landed WARC shards index into the
@@ -17,8 +17,8 @@ import graft.sources.Warc
   * ONLY its new shards (a path glob — capture rows are per-member, so
   * shard-additive by construction) and overwrites its own
   * `delta/batch_id=N` (replay-idempotent); reads are base ∪ outstanding
-  * deltas after [[Indexes.recoverSwap]]; the [[maybeCompact]] debt
-  * policy folds deltas into `idx/` through the crash-safe swap, with a
+  * deltas after recovery; the [[DeltaFold]] debt policy folds deltas
+  * into `idx/` through the crash-safe swap, with a
   * full-row `distinct()` restoring exactly-once for a batch replayed
   * AFTER compaction folded it (member rows are bit-deterministic, so
   * replayed rows equal compacted ones).
@@ -34,12 +34,8 @@ object CdxStream {
     * (batch_id partition column dropped so the view matches the base
     * schema), crash-recovering a landed swap journal first.
     */
-  def readCaptures(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    val base = spark.read.parquet(s"$dir/idx")
-    if (!new java.io.File(s"$dir/delta").exists()) base
-    else base.unionByName(spark.read.parquet(s"$dir/delta").drop("batch_id"))
-  }
+  def readCaptures(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.live(spark, dir, "idx")()
 
   /** One micro-batch = the shards matching `glob` that just landed under
     * `warcDir`: walk ONLY those members, key with SURT, land under
@@ -56,51 +52,23 @@ object CdxStream {
       batchId: Long,
       compactAt: Double = 0.2
   ): Unit = {
-    Warc
-      .memberIndex(spark, warcDir, glob)
-      .withColumn("surt", Urls.surt(col("target_uri")))
-      .write
-      .mode("overwrite")
-      .parquet(s"$dir/delta/batch_id=$batchId")
-    if (compactAt > 0) maybeCompact(spark, dir, compactAt)
-  }
-
-  /** Fold deltas iff their rows exceed `maxDeltaFraction` of the base —
-    * the standard debt policy bounding read amplification while keeping
-    * amortized compaction cost O(fraction⁻¹) base rewrites per base-size
-    * of ingest. Returns true iff compaction ran.
-    */
-  def maybeCompact(spark: SparkSession, dir: String, maxDeltaFraction: Double = 0.2): Boolean = {
-    Indexes.recoverSwap(dir)
-    if (!new java.io.File(s"$dir/delta").exists()) false
-    else {
-      // independent read-only debt counts — overlapped (guide §2.6)
-      val (base, delta) = Indexes.par2(
-        spark.read.parquet(s"$dir/idx").count(),
-        spark.read.parquet(s"$dir/delta").count()
-      )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) compactDeltas(spark, dir)
-      due
+    DeltaFold.upsert(dir, batchId) { (_, path) =>
+      Warc
+        .memberIndex(spark, warcDir, glob)
+        .withColumn("surt", Urls.surt(col("target_uri")))
+        .write
+        .mode("overwrite")
+        .parquet(path)
     }
+    if (compactAt > 0) DeltaFold.settle(spark, dir, "idx", compactAt)(compactDeltas(spark, dir))
   }
 
   /** Fold `delta/` into `idx/` through the journaled crash-safe swap —
-    * after compaction a lookup reads one parquet tree again. Recovery
-    * runs FIRST (a landed journal must replay before `idx/` is read
-    * directly — the [[SubstrIndexStream]] lesson); the full-row distinct
-    * restores exactly-once under post-compaction batch replay.
+    * after compaction a lookup reads one parquet tree again; the full-row
+    * distinct restores exactly-once under post-compaction batch replay.
     */
-  def compactDeltas(spark: SparkSession, dir: String): Unit = {
-    Indexes.recoverSwap(dir)
-    if (new java.io.File(s"$dir/delta").exists()) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
-      readCaptures(spark, dir)
-        .distinct()
-        .write
-        .mode("overwrite")
-        .parquet(s"$dir/idx.compact-$stamp")
-      Indexes.commitSwap(dir, stamp, Seq("idx"))
+  def compactDeltas(spark: SparkSession, dir: String): Unit =
+    DeltaFold.compact(dir, Seq("idx")) { out =>
+      readCaptures(spark, dir).distinct().write.mode("overwrite").parquet(out("idx"))
     }
-  }
 }

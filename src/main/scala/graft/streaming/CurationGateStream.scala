@@ -1,13 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators.{Curation, Indexes}
 
 /** Incremental maintenance of the persisted curation gate-annotation
   * asset ([[Curation.ensureGateAsset]]) — the gate-table member of the
-  * delta-upsert + debt-policy family ([[SubstrIndexStream]],
-  * [[SemanticStream]], the media index folds): a continuously-ingesting
+  * [[DeltaFold]] family ([[SubstrIndexStream]], the semantic-cell and
+  * media index folds): a continuously-ingesting
   * corpus keeps its per-doc gate verdicts current without ever
   * re-reading the standing corpus's raw text.
   *
@@ -52,45 +51,16 @@ object CurationGateStream {
       compactAt: Double = 0.2
   ): Unit = {
     val spark = batch.sparkSession
-    Indexes.recoverSwap(dir)
     val (pg, ds, dt) = Curation.pureStats(batch)
-    // three independent per-batch statistics writes — overlapped (guide
-    // §2.6). Same crash contract as the sequential form: any landed
-    // subset is rewritten bit-identically by the batch replay, and the
-    // debt gate/fold only run after all three land in this process.
-    Indexes.inParallel(
-      Seq("puregates" -> pg, "docstats" -> ds, "doctoks" -> dt).map {
-        case (name, df) =>
-          () => {
-            df.write.mode("overwrite").parquet(s"$dir/delta/$name/batch_id=$batchId")
-            ()
-          }
-      }: _*
-    )
-    if (compactAt > 0) { maybeCompact(spark, dir, compactAt); () }
-  }
-
-  /** Fold `delta/` into the base tables and republish `gates/` iff
-    * accumulated delta docs exceed `maxDeltaFraction` of base docs.
-    * Returns true iff compaction ran.
-    */
-  def maybeCompact(
-      spark: SparkSession,
-      dir: String,
-      maxDeltaFraction: Double = 0.2
-  ): Boolean = {
-    Indexes.recoverSwap(dir)
-    if (!new java.io.File(s"$dir/delta/puregates").exists()) false
-    else {
-      // independent read-only debt counts — overlapped (guide §2.6)
-      val (base, delta) = Indexes.par2(
-        spark.read.parquet(s"$dir/puregates").count(),
-        spark.read.parquet(s"$dir/delta/puregates").count()
-      )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) compact(spark, dir)
-      due
+    val stats = Map("puregates" -> pg, "docstats" -> ds, "doctoks" -> dt)
+    // three independent per-batch statistics writes, overlapped: any
+    // landed subset is rewritten bit-identically by the batch replay, and
+    // the debt gate/fold only run after all three land
+    DeltaFold.upsert(dir, batchId, Tables) { (name, path) =>
+      stats(name).write.mode("overwrite").parquet(path)
     }
+    if (compactAt > 0)
+      DeltaFold.settle(spark, dir, "puregates", compactAt, "puregates")(compact(spark, dir))
   }
 
   /** Fold the delta statistics into the base tables, re-derive `gates/`
@@ -100,10 +70,8 @@ object CurationGateStream {
     * (rows are bit-deterministic, so a replayed batch's rows are
     * identical to the folded ones).
     */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    Indexes.recoverSwap(dir)
-    if (new java.io.File(s"$dir/delta/puregates").exists()) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+  def compact(spark: SparkSession, dir: String): Unit =
+    DeltaFold.compact(dir, "gates" +: Tables, "puregates") { out =>
       // the three statistics tables fold independently and land in stamp
       // dirs invisible until commitSwap — overlap the three union+distinct
       // writes (guide §2.6); deriveGates below reads the landed dirs, so
@@ -112,43 +80,27 @@ object CurationGateStream {
         Tables.map { name => () =>
           spark.read
             .parquet(s"$dir/$name")
-            .unionByName(
-              spark.read
-                .parquet(s"$dir/delta/$name")
-                .drop("batch_id")
-            )
+            .unionByName(spark.read.parquet(DeltaFold.deltaDir(dir, name)).drop("batch_id"))
             .distinct()
             .write
             .mode("overwrite")
-            .parquet(s"$dir/$name.compact-$stamp")
+            .parquet(out(name))
         }: _*
       )
       Curation
         .deriveGates(
-          spark.read.parquet(s"$dir/puregates.compact-$stamp"),
-          spark.read.parquet(s"$dir/docstats.compact-$stamp"),
-          spark.read.parquet(s"$dir/doctoks.compact-$stamp")
+          spark.read.parquet(out("puregates")),
+          spark.read.parquet(out("docstats")),
+          spark.read.parquet(out("doctoks"))
         )
         .write
         .mode("overwrite")
-        .parquet(s"$dir/gates.compact-$stamp")
-      Indexes.commitSwap(dir, stamp, "gates" +: Tables)
+        .parquet(out("gates"))
     }
-  }
 
   /** The published gate table (post-compaction view), recovery-checked. */
   def gates(spark: SparkSession, dir: String): DataFrame = {
     Indexes.recoverSwap(dir)
     spark.read.parquet(s"$dir/gates")
   }
-
-  /** Structured-streaming sink: [[upsertBatch]] per micro-batch. */
-  def sink(
-      docsStream: DataFrame,
-      dir: String,
-      compactAt: Double = 0.2
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      upsertBatch(batch, dir, batchId, compactAt)
-    }
 }

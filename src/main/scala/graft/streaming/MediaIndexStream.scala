@@ -19,10 +19,9 @@ import graft.operators.{Indexes, Multimodal}
   * reps with the (small) delta-derived reps by (min rid, sum n), so a
   * dedup verdict over the stream-grown index is exact at any moment.
   *
-  * Compaction ([[maybeCompact]]) is the [[TextIndexStream]] debt policy:
-  * fold `delta/` into `docs/` when delta rows exceed `maxDeltaFraction` of
-  * base rows, re-derive reps/bands from the merged per-doc table, and swap
-  * atomically. A batch replayed AFTER compaction folded it re-lands in
+  * Compaction (the [[DeltaFold]] debt policy) folds `delta/` into
+  * `docs/`, re-derives reps/bands from the merged per-doc table, and
+  * swaps atomically. A batch replayed AFTER compaction folded it re-lands in
   * `delta/` with bit-identical rows; the next fold's full-row `distinct()`
   * restores exactly-once — no ledger needed because rows are deterministic.
   */
@@ -31,17 +30,8 @@ object MediaIndexStream {
   /** Per-doc hash rows, base ∪ outstanding deltas, exactly-once view
     * (distinct over the pure-function rows).
     */
-  def readDocs(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    val base = spark.read.parquet(s"$dir/docs").select(col("doc_id"), col("dhash"))
-    if (!new java.io.File(s"$dir/delta").exists()) base
-    else
-      base
-        .unionByName(
-          spark.read.parquet(s"$dir/delta").select(col("doc_id"), col("dhash"))
-        )
-        .distinct()
-  }
+  def readDocs(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.live(spark, dir, "docs", exactlyOnce = true)(_.select(col("doc_id"), col("dhash")))
 
   /** LIVE cluster representatives over the stream-grown index. While
     * deltas are outstanding, reps are re-derived from the exactly-once
@@ -52,60 +42,27 @@ object MediaIndexStream {
     * the index exists to amortize — the image DECODE — is never re-paid.
     * With no outstanding delta, the persisted aggregate is served as-is.
     */
-  def readReps(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!new java.io.File(s"$dir/delta").exists())
-      spark.read.parquet(s"$dir/reps").select(col("dhash"), col("rid"), col("n"))
-    else Multimodal.hashReps(readDocs(spark, dir))
-  }
+  def readReps(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.derived(spark, dir, "reps", "dhash", "rid", "n")(
+      Multimodal.hashReps(readDocs(spark, dir))
+    )
 
   /** Hamming-band rows over the LIVE reps (the probe table a delta-dup
     * query consumes): base bands stay the persisted partitioned layout;
     * the merged view is only needed while deltas are outstanding.
     */
-  def readBands(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!new java.io.File(s"$dir/delta").exists())
-      spark.read
-        .parquet(s"$dir/bands")
-        .select(col("dhash"), col("rid"), col("n"), col("chunk"), col("cval"))
-    else
+  def readBands(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.derived(spark, dir, "bands", "dhash", "rid", "n", "chunk", "cval")(
       readReps(spark, dir).select(col("dhash"), col("rid"), col("n"), Multimodal.bandCols)
-  }
-
-  /** Fold `delta/` into the base iff accumulated delta rows exceed
-    * `maxDeltaFraction` of base rows. Returns true iff compaction ran.
-    */
-  def maybeCompact(
-      spark: SparkSession,
-      dir: String,
-      maxDeltaFraction: Double = 0.2
-  ): Boolean = {
-    if (!new java.io.File(s"$dir/delta").exists()) false
-    else {
-      // independent read-only debt counts — overlapped (guide §2.6)
-      val (base, delta) = Indexes.par2(
-        spark.read.parquet(s"$dir/docs").count(),
-        spark.read.parquet(s"$dir/delta").count()
-      )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) compactDeltas(spark, dir)
-      due
-    }
-  }
+    )
 
   /** Merge base ∪ delta per-doc rows (full-row distinct = exactly-once),
-    * re-derive reps and bands, publish all three via the crash-safe
-    * journaled swap ([[Indexes.commitSwap]]): every compacted dir is
-    * fully written FIRST, a journal marks the commit point, and a process
-    * death mid-flip is finished by the next reader's
-    * [[Indexes.recoverSwap]] — the index can never be left without a
-    * `docs/` (or with reps/bands from a different generation than docs)
-    * across a restart.
+    * re-derive reps and bands, publish all three in one journaled swap —
+    * the index can never be left without a `docs/` (or with reps/bands
+    * from a different generation than docs) across a restart.
     */
-  def compactDeltas(spark: SparkSession, dir: String): Unit = {
-    if (new java.io.File(s"$dir/delta").exists()) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+  def compactDeltas(spark: SparkSession, dir: String): Unit =
+    DeltaFold.compact(dir, Seq("docs", "bands", "reps")) { out =>
       val docs = readDocs(spark, dir).localCheckpoint()
       // the docs rewrite, the reps derivation, and the two reps-view
       // writes all hang off executor-local checkpoints and land in
@@ -113,7 +70,7 @@ object MediaIndexStream {
       // independent legs so each write back-fills the others' stage
       // tails (guide §2.6); the journal stays the single commit point
       Indexes.inParallel(
-        () => docs.write.mode("overwrite").parquet(s"$dir/docs.compact-$stamp"),
+        () => docs.write.mode("overwrite").parquet(out("docs")),
         () => {
           val reps = Multimodal.hashReps(docs).localCheckpoint()
           Indexes.inParallel(
@@ -123,18 +80,16 @@ object MediaIndexStream {
                 .write
                 .mode("overwrite")
                 .partitionBy("chunk")
-                .parquet(s"$dir/bands.compact-$stamp"),
-            () => reps.write.mode("overwrite").parquet(s"$dir/reps.compact-$stamp")
+                .parquet(out("bands")),
+            () => reps.write.mode("overwrite").parquet(out("reps"))
           )
         }
       )
-      Indexes.commitSwap(dir, stamp, Seq("docs", "bands", "reps"))
     }
-  }
 
   /** One micro-batch of (doc_id, ...) document rows → decoded, hashed,
-    * appended under `dir/delta/batch_id=<id>`, then the [[maybeCompact]]
-    * policy settles the delta debt (compactAt <= 0 disables).
+    * appended under `dir/delta/batch_id=<id>`, then the debt policy
+    * settles the delta (compactAt <= 0 disables).
     */
   def upsertBatch(
       batch: DataFrame,
@@ -143,24 +98,14 @@ object MediaIndexStream {
       compactAt: Double = 0.2
   ): Unit = {
     val spark = batch.sparkSession
-    Multimodal
-      .dHash(spark, Multimodal.withImagePayload(spark, batch))
-      .toDF()
-      .write
-      .mode("overwrite")
-      .parquet(s"$dir/delta/batch_id=$batchId")
-    if (compactAt > 0.0) maybeCompact(spark, dir, compactAt)
-  }
-
-  /** foreachBatch writer over a document stream. Start with
-    * `.trigger(...).option("checkpointLocation", ...)`.
-    */
-  def hashUpsert(
-      docsStream: DataFrame,
-      dir: String,
-      compactAt: Double = 0.2
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      upsertBatch(batch, dir, batchId, compactAt)
+    DeltaFold.upsert(dir, batchId) { (_, path) =>
+      Multimodal
+        .dHash(spark, Multimodal.withImagePayload(spark, batch))
+        .toDF()
+        .write
+        .mode("overwrite")
+        .parquet(path)
     }
+    if (compactAt > 0.0) DeltaFold.settle(spark, dir, "docs", compactAt)(compactDeltas(spark, dir))
+  }
 }

@@ -29,9 +29,9 @@ object SemanticStream {
 
   /** Flag one batch against the persisted index and write it under
     * `out/batch_id=<id>`: every delta vector with its blocking cell,
-    * duplicate count, best corpus match and uniqueness verdict. Exposed
-    * for batch callers and tests; [[dedupIngest]] wires it into
-    * foreachBatch.
+    * duplicate count, best corpus match and uniqueness verdict. A stream
+    * wires it into `writeStream.foreachBatch`; growing the quantizer asset
+    * itself is [[SemanticIndex.upsertBatch]].
     */
   def flagBatch(
       batch: DataFrame,
@@ -49,42 +49,4 @@ object SemanticStream {
       .write
       .mode("overwrite")
       .parquet(s"$out/batch_id=$batchId")
-
-  /** foreachBatch writer over a (vec_id, embedding) stream. Start with
-    * `.trigger(...).option("checkpointLocation", ...)`.
-    */
-  def dedupIngest(
-      vecsStream: DataFrame,
-      sfDir: String,
-      corpus: DataFrame,
-      out: String,
-      threshold: Double,
-      targetCellSize: Int = 50,
-      maxCellSize: Int = 100
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      flagBatch(batch, sfDir, corpus, out, batchId, threshold, targetCellSize, maxCellSize)
-    }
-
-  /** foreachBatch writer GROWING the persisted quantizer asset itself —
-    * the maintenance sink beside [[dedupIngest]]'s read-only flagging:
-    * each batch of accepted (vec_id, embedding) rows is assigned into
-    * the frozen cells ([[SemanticIndex.upsertBatch]]), and the debt
-    * policy triggers the rebuild-from-union compaction on the journaled
-    * swap. With this, every persisted index family (text postings,
-    * image/audio/video, PQ codes, substring grams, semantic cells) has
-    * a continuous-ingest path. Start with `.trigger(...)
-    * .option("checkpointLocation", ...)`.
-    */
-  def cellsUpsert(
-      vecsStream: DataFrame,
-      dir: String,
-      targetCellSize: Int = 50,
-      maxCellSize: Int = 100,
-      litK: Int = 256,
-      compactAt: Double = 0.2
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      SemanticIndex.upsertBatch(batch, dir, batchId, targetCellSize, maxCellSize, litK, compactAt)
-    }
 }

@@ -45,7 +45,7 @@ object SubstrIndexStream {
   def readGramsExcluding(spark: SparkSession, dir: String, excludeBatch: Long): DataFrame = {
     Indexes.recoverSwap(dir)
     val base = spark.read.parquet(s"$dir/grams").select(col("b"), col("gh"))
-    if (!new java.io.File(s"$dir/delta").exists()) base
+    if (!DeltaFold.hasDelta(dir)) base
     else {
       // Exactly-once WITHOUT re-shuffling the base: the old
       // `(base ∪ delta).distinct()` reshuffled the full (bucketed) base on
@@ -77,29 +77,11 @@ object SubstrIndexStream {
     }
   }
 
-  /** Fold `delta/` into the bucketed base iff accumulated delta rows exceed
-    * `maxDeltaFraction` of base rows. Returns true iff compaction ran.
+  /** Fold `delta/` into the bucketed base iff the [[DeltaFold]] debt
+    * policy says it is due. Returns true iff compaction ran.
     */
-  def maybeCompact(
-      spark: SparkSession,
-      dir: String,
-      maxDeltaFraction: Double = 0.2
-  ): Boolean = {
-    Indexes.recoverSwap(dir)
-    if (!new java.io.File(s"$dir/delta").exists()) false
-    else {
-      // the two debt counts are independent read-only jobs — overlap them
-      // (guide §2.6): every micro-batch pays this gate, so the pair's
-      // latency is the fold family's fixed per-batch floor
-      val (base, delta) = Indexes.par2(
-        spark.read.parquet(s"$dir/grams").count(),
-        spark.read.parquet(s"$dir/delta").count()
-      )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) compactDeltas(spark, dir)
-      due
-    }
-  }
+  def maybeCompact(spark: SparkSession, dir: String, maxDeltaFraction: Double = 0.2): Boolean =
+    DeltaFold.settle(spark, dir, "grams", maxDeltaFraction)(compactDeltas(spark, dir))
 
   /** Merge base ∪ delta grams, rewrite the bucketed base, publish via the
     * crash-safe journaled swap (which also retires `delta/`).
@@ -116,16 +98,8 @@ object SubstrIndexStream {
     * ([[readGramsExcluding]]); compaction pays one aligned shuffle per
     * FOLD, amortized by the same debt policy that bounds fold frequency.
     */
-  def compactDeltas(spark: SparkSession, dir: String): Unit = {
-    // finish any landed-but-unreplayed journal BEFORE reading grams/
-    // directly: the read path goes through readGrams (which recovers), but
-    // this direct fold doesn't — without this, a crash mid-swap leaves
-    // grams/ renamed away and a direct compact call would fail on the
-    // missing path, then commitSwap would overwrite the landed journal
-    // without replaying it
-    Indexes.recoverSwap(dir)
-    if (new java.io.File(s"$dir/delta").exists()) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+  def compactDeltas(spark: SparkSession, dir: String): Unit =
+    DeltaFold.compact(dir, Seq("grams")) { out =>
       val base = spark.read.parquet(s"$dir/grams").select(col("b"), col("gh"))
       val delta = spark.read
         .parquet(s"$dir/delta")
@@ -136,10 +110,8 @@ object SubstrIndexStream {
         .write
         .mode("overwrite")
         .partitionBy("b")
-        .parquet(s"$dir/grams.compact-$stamp")
-      Indexes.commitSwap(dir, stamp, Seq("grams"))
+        .parquet(out("grams"))
     }
-  }
 
   /** One micro-batch of (doc_id, text) rows: rewrite the batch against the
     * pre-batch index state (write-once under `clean/batch_id=<id>`),
@@ -159,50 +131,42 @@ object SubstrIndexStream {
     // creates the dir at job start, so a crash mid-write leaves the dir
     // behind with partial data — a replay must recompute (mode overwrite
     // rewrites the torn dir), exactly the Indexes.atomicBuild discipline
-    val cleanDone = new java.io.File(s"$dir/clean/batch_id=$batchId/_SUCCESS").exists()
-    if (!cleanDone) {
-      // rewrite + gram delta from ONE checkpointed occurrence frame —
-      // the batch is tokenized and shingled exactly once. The two heavy
-      // writes read only that executor-local checkpoint, so they overlap
-      // (guide §2.6) — but the delta lands under a tmp path and is
-      // PUBLISHED by a rename only after the clean's write-once marker
-      // exists. The fold-safety invariant is "visible delta partition ⇒
-      // its clean landed": a fold retires the delta into the base, after
-      // which a replay's probe could no longer exclude the batch's own
-      // grams — the rename keeps the old sequential ordering's guarantee
-      // at the cost of a metadata flip instead of a serialized write.
-      val (clean, grams) = Dedup.substrDeltaRemovalAndGrams(
-        readGramsExcluding(spark, dir, excludeBatch = batchId),
+    val cleanDone = DeltaFold.exists(s"$dir/clean/batch_id=$batchId/_SUCCESS")
+    DeltaFold.upsert(dir, batchId) { (_, path) =>
+      if (!cleanDone) {
+        // rewrite + gram delta from ONE checkpointed occurrence frame —
+        // the batch is tokenized and shingled exactly once. The two heavy
+        // writes read only that executor-local checkpoint, so they
+        // overlap — but the delta lands under a tmp path and is
+        // PUBLISHED by a rename only after the clean's write-once marker
+        // exists. The fold-safety invariant is "visible delta partition ⇒
+        // its clean landed": a fold retires the delta into the base, after
+        // which a replay's probe could no longer exclude the batch's own
+        // grams — the rename keeps the old sequential ordering's guarantee
+        // at the cost of a metadata flip instead of a serialized write.
+        val (clean, grams) = Dedup.substrDeltaRemovalAndGrams(
+          readGramsExcluding(spark, dir, excludeBatch = batchId),
+          batch
+        )
+        val tmpDelta = s"$dir/delta.tmp-batch_id=$batchId"
+        Indexes.inParallel(
+          () => clean.write.mode("overwrite").parquet(s"$dir/clean/batch_id=$batchId"),
+          () => grams.write.mode("overwrite").parquet(tmpDelta)
+        )
+        Indexes.publishDir(tmpDelta, path)
+      } else
+        // replay after the clean landed (crash between the two writes):
+        // recompute just the gram set
         batch
-      )
-      val tmpDelta = s"$dir/delta.tmp-batch_id=$batchId"
-      Indexes.inParallel(
-        () => clean.write.mode("overwrite").parquet(s"$dir/clean/batch_id=$batchId"),
-        () => grams.write.mode("overwrite").parquet(tmpDelta)
-      )
-      Indexes.publishDir(tmpDelta, s"$dir/delta/batch_id=$batchId")
-    } else
-      // replay after the clean landed (crash between the two writes):
-      // recompute just the gram set
-      batch
-        .select(explode(Dedup.wordShinglesAll(Text.tokensAll(col("text")), 4)).as("g"))
-        .select(md5Long(col("g")).as("gh"))
-        .distinct()
-        .withColumn("b", pmod(col("gh"), lit(Dedup.SubstrGramBuckets.toLong)).cast("int"))
-        .select(col("b"), col("gh"))
-        .write
-        .mode("overwrite")
-        .parquet(s"$dir/delta/batch_id=$batchId")
+          .select(explode(Dedup.wordShinglesAll(Text.tokensAll(col("text")), 4)).as("g"))
+          .select(md5Long(col("g")).as("gh"))
+          .distinct()
+          .withColumn("b", pmod(col("gh"), lit(Dedup.SubstrGramBuckets.toLong)).cast("int"))
+          .select(col("b"), col("gh"))
+          .write
+          .mode("overwrite")
+          .parquet(path)
+    }
     if (compactAt > 0) { maybeCompact(spark, dir, compactAt); () }
   }
-
-  /** Structured-streaming sink: [[upsertBatch]] per micro-batch. */
-  def sink(
-      docsStream: DataFrame,
-      dir: String,
-      compactAt: Double = 0.2
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      upsertBatch(batch, dir, batchId, compactAt)
-    }
 }

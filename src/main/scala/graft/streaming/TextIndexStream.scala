@@ -18,64 +18,28 @@ import graft.operators.{Indexes, TextAnalysis, TextIndex}
   * exactly-once — the [[VectorIndexStream]] frozen-quantizer argument,
   * with determinism coming from tokenization instead of frozen codebooks.
   *
-  * Compaction ([[maybeCompact]]) is the same debt policy: fold `delta/`
-  * into `postings/` when delta rows exceed `maxDeltaFraction` of base
-  * rows, bounding search-path read amplification (a union branch + file
-  * listing per surviving batch) at that fraction; the fold also refreshes
-  * the index statistics (top bigram, indexed-doc count) from the merged
-  * postings — bounded index-only aggregates, never a corpus re-scan.
+  * Compaction runs under the shared [[DeltaFold]] debt policy; the fold
+  * also refreshes the index statistics (top bigram, indexed-doc count)
+  * from the merged postings — bounded index-only aggregates, never a
+  * corpus re-scan.
   */
 object TextIndexStream {
 
   /** Base ∪ delta postings with the same schema the base read yields —
     * what a search over a delta-carrying index consumes.
     */
-  def readPostings(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    val base = spark.read
-      .parquet(s"$dir/postings")
-      .select(col("term"), col("doc_id"), col("tf"), col("positions"), col("dl"), col("tb"))
-    if (!new java.io.File(s"$dir/delta").exists()) base
-    else
-      base.unionByName(
-        spark.read
-          .parquet(s"$dir/delta")
-          .select(col("term"), col("doc_id"), col("tf"), col("positions"), col("dl"), col("tb"))
-      )
-  }
-
-  /** Fold `delta/` into `postings/` iff accumulated delta rows exceed
-    * `maxDeltaFraction` of base rows. Returns true iff compaction ran.
-    */
-  def maybeCompact(
-      spark: SparkSession,
-      dir: String,
-      maxDeltaFraction: Double = 0.2
-  ): Boolean = {
-    if (!new java.io.File(s"$dir/delta").exists()) false
-    else {
-      // independent read-only debt counts — overlapped (guide §2.6)
-      val (base, delta) = Indexes.par2(
-        spark.read.parquet(s"$dir/postings").count(),
-        spark.read.parquet(s"$dir/delta").count()
-      )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) compactDeltas(spark, dir)
-      due
-    }
-  }
+  def readPostings(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.live(spark, dir, "postings")(
+      _.select(col("term"), col("doc_id"), col("tf"), col("positions"), col("dl"), col("tb"))
+    )
 
   /** Merge base ∪ delta into a fresh partitioned-sorted postings tree,
     * recompute the statistics (`top_bigram/`, `stats/`) from the SAME
-    * merged frame, and publish all three via the crash-safe journaled
-    * swap ([[Indexes.commitSwap]]): everything is fully written before
-    * the journal commit point, and a process death mid-flip is finished
-    * by the next reader's [[Indexes.recoverSwap]] — postings and stats
-    * always come from the same generation, and the index is never left
-    * without a `postings/` across a restart. A batch replayed AFTER
-    * compaction folded it re-lands in `delta/` with bit-identical rows;
-    * the next fold's `distinct()` de-duplicates them — exactly-once
-    * without a ledger.
+    * merged frame, and publish all three in one journaled swap
+    * ([[DeltaFold.compact]]) — postings and stats always come from the
+    * same generation. A batch replayed AFTER compaction folded it
+    * re-lands in `delta/` with bit-identical rows; the next fold's
+    * `distinct()` de-duplicates them.
     *
     * The refreshed doc count is the number of INDEXED documents (>= 1
     * posting); identical to the build-time corpus count whenever every
@@ -84,8 +48,7 @@ object TextIndexStream {
     */
   def compactDeltas(spark: SparkSession, dir: String): Unit = {
     import spark.implicits._
-    if (new java.io.File(s"$dir/delta").exists()) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+    DeltaFold.compact(dir, Seq("postings", "top_bigram", "stats")) { out =>
       val merged = readPostings(spark, dir).distinct().localCheckpoint()
       // three independent legs off the merged checkpoint (postings
       // rewrite, bigram self-join, scalar totals), all landing in stamp
@@ -98,7 +61,7 @@ object TextIndexStream {
             .write
             .mode("overwrite")
             .partitionBy("tb")
-            .parquet(s"$dir/postings.compact-$stamp"),
+            .parquet(out("postings")),
         () => {
           val toks =
             merged.select(col("term"), col("doc_id"), explode(col("positions")).as("pos"))
@@ -114,7 +77,7 @@ object TextIndexStream {
             .limit(1)
             .write
             .mode("overwrite")
-            .parquet(s"$dir/top_bigram.compact-$stamp")
+            .parquet(out("top_bigram"))
         },
         () => {
           // refreshed totals for the stream-grown index: indexed-doc count
@@ -128,16 +91,15 @@ object TextIndexStream {
             .toDF("n_docs", "total_len")
             .write
             .mode("overwrite")
-            .parquet(s"$dir/stats.compact-$stamp")
+            .parquet(out("stats"))
         }
       )
-      Indexes.commitSwap(dir, stamp, Seq("postings", "top_bigram", "stats"))
     }
   }
 
   /** One micro-batch of (doc_id, text) rows → tokenized, bucketed,
-    * appended under `dir/delta/batch_id=<id>`, then the [[maybeCompact]]
-    * policy settles the delta debt (compactAt <= 0 disables).
+    * appended under `dir/delta/batch_id=<id>`, then the debt policy
+    * settles the delta (compactAt <= 0 disables).
     */
   def upsertBatch(
       batch: DataFrame,
@@ -150,27 +112,20 @@ object TextIndexStream {
     // batch alone — the delta carries the same (… , dl) schema as the base
     val idx = TextAnalysis.invertedIndex(batch).localCheckpoint()
     val dl = idx.groupBy(col("doc_id")).agg(sum(col("tf")).cast("long").as("dl"))
-    idx
-      .join(dl, Seq("doc_id"))
-      .withColumn("tb", TextIndex.bucketOf(col("term"), nBuckets))
-      .repartition(col("tb"))
-      .sortWithinPartitions(col("tb"), col("term"), col("doc_id"))
-      .write
-      .mode("overwrite")
-      .partitionBy("tb")
-      .parquet(s"$dir/delta/batch_id=$batchId")
-    if (compactAt > 0.0) maybeCompact(batch.sparkSession, dir, compactAt)
-  }
-
-  /** foreachBatch writer over a (doc_id, text) stream. Start with
-    * `.trigger(...).option("checkpointLocation", ...)`.
-    */
-  def postingsUpsert(
-      docsStream: DataFrame,
-      dir: String,
-      compactAt: Double = 0.2
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      upsertBatch(batch, dir, batchId, compactAt)
+    DeltaFold.upsert(dir, batchId) { (_, path) =>
+      idx
+        .join(dl, Seq("doc_id"))
+        .withColumn("tb", TextIndex.bucketOf(col("term"), nBuckets))
+        .repartition(col("tb"))
+        .sortWithinPartitions(col("tb"), col("term"), col("doc_id"))
+        .write
+        .mode("overwrite")
+        .partitionBy("tb")
+        .parquet(path)
     }
+    if (compactAt > 0.0)
+      DeltaFold.settle(batch.sparkSession, dir, "postings", compactAt) {
+        compactDeltas(batch.sparkSession, dir)
+      }
+  }
 }

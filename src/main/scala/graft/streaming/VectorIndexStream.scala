@@ -22,42 +22,16 @@ import graft.operators.{IvfIndex, IvfPq, Pq}
   * At 100 TB: batch deltas are code-sized (m bytes-ish per vector), the
   * base table is never rewritten, and compaction folding `delta/` into
   * `codes/` (plus an eventual retrain) runs POLICY-DRIVEN from the write
-  * path itself ([[maybeCompact]]: delta rows > `compactAt` × base rows) —
+  * path itself ([[DeltaFold.settle]]: delta rows >= `compactAt` × base rows) —
   * the search path meanwhile reads base ∪ delta with identical pruning.
   */
 object VectorIndexStream {
 
-  /** Fold `delta/` into the base code table iff accumulated delta rows
-    * exceed `maxDeltaFraction` of base rows — the debt policy that keeps
-    * the per-batch amortized compaction cost O(maxDeltaFraction⁻¹) base
-    * rewrites per base-size of ingest while bounding the search-path read
-    * amplification (file-listing + union branch per surviving batch) at
-    * the same fraction. Row counts come from parquet metadata (footer
-    * counts — no data scan). Returns true iff compaction ran.
-    */
-  def maybeCompact(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      maxDeltaFraction: Double = 0.2
-  ): Boolean = {
-    if (!new java.io.File(s"$dir/delta").exists()) false
-    else {
-      // independent read-only debt counts — overlapped (guide §2.6)
-      val (base, delta) = graft.operators.Indexes.par2(
-        spark.read.parquet(s"$dir/codes").count(),
-        spark.read.parquet(s"$dir/delta").count()
-      )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) IvfPq.compactDeltas(spark, dir)
-      due
-    }
-  }
-
   /** One micro-batch of (vec_id, embedding) rows → cell-assigned, PQ-coded,
-    * appended under `dir/delta/batch_id=<id>`, then the [[maybeCompact]]
-    * policy settles the delta debt (compactAt <= 0 disables — the manual-
-    * maintenance mode). Exposed for batch callers and tests;
-    * [[codesUpsert]] wires it into foreachBatch.
+    * appended under `dir/delta/batch_id=<id>`, then the [[DeltaFold]]
+    * debt policy settles the delta (compactAt <= 0 disables — the manual-
+    * maintenance mode). A stream wires it into
+    * `writeStream.foreachBatch`.
     */
   def upsertBatch(
       batch: DataFrame,
@@ -88,26 +62,14 @@ object VectorIndexStream {
     val celled =
       if (metaCols.isEmpty) celled0
       else celled0.join(batch.select(("vec_id" +: metaCols).map(col): _*), Seq("vec_id"))
-    Pq.encode(celled, cb, dim, keep = Seq("vec_id", "cell") ++ metaCols)
-      .write
-      .mode("overwrite")
-      .partitionBy("cell")
-      .parquet(s"$dir/delta/batch_id=$batchId")
-    if (compactAt > 0.0) maybeCompact(spark, dir, compactAt)
-  }
-
-  /** foreachBatch writer over a (vec_id, embedding) stream. Start with
-    * `.trigger(...).option("checkpointLocation", ...)`. Pass the index's
-    * build-time `metaCols` when maintaining a filtered-ANN index.
-    */
-  def codesUpsert(
-      vecsStream: DataFrame,
-      dir: String,
-      dim: Int = 64,
-      compactAt: Double = 0.2,
-      metaCols: Seq[String] = Nil
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      upsertBatch(batch, dir, batchId, dim, compactAt, metaCols)
+    DeltaFold.upsert(dir, batchId) { (_, path) =>
+      Pq.encode(celled, cb, dim, keep = Seq("vec_id", "cell") ++ metaCols)
+        .write
+        .mode("overwrite")
+        .partitionBy("cell")
+        .parquet(path)
     }
+    if (compactAt > 0.0)
+      DeltaFold.settle(spark, dir, "codes", compactAt)(IvfPq.compactDeltas(spark, dir))
+  }
 }

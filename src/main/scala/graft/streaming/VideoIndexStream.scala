@@ -23,10 +23,9 @@ import graft.operators.{Indexes, Video}
   * rows), never a frame DECODE — so dedup/ingest verdicts over the
   * stream-grown index are exact at any moment.
   *
-  * Compaction ([[maybeCompact]]) folds `delta/` into `sig/` when delta
-  * rows exceed `maxDeltaFraction` of base rows, re-derives all six
-  * aggregates from the merged table, and publishes atomically via the
-  * crash-safe journaled swap ([[Indexes.commitSwap]]); a batch replayed
+  * Compaction (the [[DeltaFold]] debt policy) folds `delta/` into
+  * `sig/`, re-derives all six aggregates from the merged table, and
+  * publishes atomically via the crash-safe journaled swap; a batch replayed
   * AFTER compaction folded it re-lands in `delta/` with bit-identical
   * rows, and the next fold's full-row `distinct()` restores exactly-once
   * — no ledger needed.
@@ -36,79 +35,44 @@ object VideoIndexStream {
   /** Distinct (doc_id, dhash) signature rows, base ∪ outstanding deltas,
     * exactly-once view (distinct over the pure-function rows).
     */
-  def readSig(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    val base = spark.read.parquet(s"$dir/sig").select(col("doc_id"), col("dhash"))
-    if (!new java.io.File(s"$dir/delta").exists()) base
-    else
-      base
-        .unionByName(
-          spark.read.parquet(s"$dir/delta").select(col("doc_id"), col("dhash"))
-        )
-        .distinct()
-  }
-
-  private def hasDelta(dir: String): Boolean =
-    new java.io.File(s"$dir/delta").exists()
+  def readSig(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.live(spark, dir, "sig", exactlyOnce = true)(_.select(col("doc_id"), col("dhash")))
 
   /** LIVE per-scene-hash document frequencies (the hot-scene cap input). */
-  def readDfs(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!hasDelta(dir)) spark.read.parquet(s"$dir/dfs").select(col("dhash"), col("df"))
-    else Video.sigDfs(readSig(spark, dir))
-  }
+  def readDfs(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.derived(spark, dir, "dfs", "dhash", "df")(Video.sigDfs(readSig(spark, dir)))
 
   /** LIVE per-video signature sizes. */
-  def readSizes(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!hasDelta(dir)) spark.read.parquet(s"$dir/sizes").select(col("doc_id"), col("n"))
-    else Video.sigSizes(readSig(spark, dir))
-  }
+  def readSizes(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.derived(spark, dir, "sizes", "doc_id", "n")(Video.sigSizes(readSig(spark, dir)))
 
   /** LIVE distinct-signature representative sig rows. While deltas are
     * outstanding the collapse is re-derived from the exactly-once sig view
     * — NOT merged rep-side (a delta video identical to a corpus video must
     * JOIN its group, and a replayed batch must not create a second rep).
     */
-  def readRepSig(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!hasDelta(dir)) spark.read.parquet(s"$dir/rsig").select(col("rid"), col("dhash"))
-    else Video.repSig(readSig(spark, dir))
-  }
+  def readRepSig(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.derived(spark, dir, "rsig", "rid", "dhash")(Video.repSig(readSig(spark, dir)))
 
   /** LIVE rep-level document frequencies. */
-  def readRepDfs(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!hasDelta(dir)) spark.read.parquet(s"$dir/rdfs").select(col("dhash"), col("df"))
-    else
+  def readRepDfs(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.derived(spark, dir, "rdfs", "dhash", "df")(
       readRepSig(spark, dir).groupBy(col("dhash")).agg(count(lit(1)).as("df"))
-  }
+    )
 
   /** LIVE rep-level signature sizes. */
-  def readRepSizes(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!hasDelta(dir)) spark.read.parquet(s"$dir/rsizes").select(col("rid"), col("n"))
-    else readRepSig(spark, dir).groupBy(col("rid")).agg(count(lit(1)).as("n"))
-  }
-
-  /** LIVE member→rep routing (one row per video). While deltas are
-    * outstanding the collapse is re-derived from the exactly-once sig
-    * view, so streamed videos route into their groups (and a streamed
-    * twin of a corpus video joins that video's group, never forks one).
-    */
-  def readMembers(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    if (!hasDelta(dir)) spark.read.parquet(s"$dir/members").select(col("doc_id"), col("rid"))
-    else Video.memberMap(readSig(spark, dir))
-  }
+  def readRepSizes(spark: SparkSession, dir: String): DataFrame =
+    DeltaFold.derived(spark, dir, "rsizes", "rid", "n")(
+      readRepSig(spark, dir).groupBy(col("rid")).agg(count(lit(1)).as("n"))
+    )
 
   /** Every collapse-side read view of the index, derived ONCE per call:
     * with no outstanding delta these are plain persisted scans; with
     * deltas, the exactly-once sig view is PINNED and members/rep-sig/
     * rep-sizes/dfs all derive from that one frame plus one pinned
     * fingerprint aggregation — a consumer taking the views individually
-    * ([[readMembers]], [[readRepSig]], …) would re-run the base ∪ delta
-    * union and the md5 collapse once per view.
+    * ([[readRepSig]], …) would re-run the base ∪ delta union and the md5
+    * collapse once per view.
     */
   case class RepViews(
       members: DataFrame, // (doc_id, rid)
@@ -119,7 +83,7 @@ object VideoIndexStream {
 
   def repViews(spark: SparkSession, dir: String): RepViews = {
     Indexes.recoverSwap(dir)
-    if (!hasDelta(dir))
+    if (!DeltaFold.hasDelta(dir))
       RepViews(
         spark.read.parquet(s"$dir/members").select(col("doc_id"), col("rid")),
         spark.read.parquet(s"$dir/rsig").select(col("rid"), col("dhash")),
@@ -139,35 +103,14 @@ object VideoIndexStream {
     }
   }
 
-  /** Fold `delta/` into the base iff accumulated delta rows exceed
-    * `maxDeltaFraction` of base rows. Returns true iff compaction ran.
-    */
-  def maybeCompact(
-      spark: SparkSession,
-      dir: String,
-      maxDeltaFraction: Double = 0.2
-  ): Boolean = {
-    if (!hasDelta(dir)) false
-    else {
-      // independent read-only debt counts — overlapped (guide §2.6)
-      val (base, delta) = Indexes.par2(
-        spark.read.parquet(s"$dir/sig").count(),
-        spark.read.parquet(s"$dir/delta").count()
-      )
-      val due = delta > 0 && delta >= maxDeltaFraction * base
-      if (due) compactDeltas(spark, dir)
-      due
-    }
-  }
-
   /** Merge base ∪ delta sig rows (full-row distinct = exactly-once),
-    * re-derive all six aggregates, publish the seven tables via the
-    * crash-safe journaled swap — sig and its aggregates always come from
-    * the same generation.
+    * re-derive all six aggregates, publish the seven tables in one
+    * journaled swap — sig and its aggregates always come from the same
+    * generation.
     */
   def compactDeltas(spark: SparkSession, dir: String): Unit = {
-    if (hasDelta(dir)) {
-      val stamp = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+    val tables = Seq("sig", "dfs", "sizes", "rsig", "rdfs", "rsizes", "members")
+    DeltaFold.compact(dir, tables) { out =>
       val sig = readSig(spark, dir).localCheckpoint()
       // seven stamp-dir writes, all invisible until commitSwap. Dependency
       // structure: sig/dfs/sizes hang directly off the sig checkpoint; the
@@ -182,47 +125,41 @@ object VideoIndexStream {
             .write
             .mode("overwrite")
             .partitionBy("hb")
-            .parquet(s"$dir/sig.compact-$stamp"),
-        () => Video.sigDfs(sig).write.mode("overwrite").parquet(s"$dir/dfs.compact-$stamp"),
-        () =>
-          Video.sigSizes(sig).write.mode("overwrite").parquet(s"$dir/sizes.compact-$stamp"),
+            .parquet(out("sig")),
+        () => Video.sigDfs(sig).write.mode("overwrite").parquet(out("dfs")),
+        () => Video.sigSizes(sig).write.mode("overwrite").parquet(out("sizes")),
         () => {
           // one fp aggregation feeds both members and the rep collapse
           val mem = Video.memberMap(sig).localCheckpoint()
           val rsig = Video.rsigOf(sig, mem).localCheckpoint()
           Indexes.inParallel(
-            () => rsig.write.mode("overwrite").parquet(s"$dir/rsig.compact-$stamp"),
+            () => rsig.write.mode("overwrite").parquet(out("rsig")),
             () =>
               rsig
                 .groupBy(col("dhash"))
                 .agg(count(lit(1)).as("df"))
                 .write
                 .mode("overwrite")
-                .parquet(s"$dir/rdfs.compact-$stamp"),
+                .parquet(out("rdfs")),
             () =>
               rsig
                 .groupBy(col("rid"))
                 .agg(count(lit(1)).as("n"))
                 .write
                 .mode("overwrite")
-                .parquet(s"$dir/rsizes.compact-$stamp"),
-            () => mem.write.mode("overwrite").parquet(s"$dir/members.compact-$stamp")
+                .parquet(out("rsizes")),
+            () => mem.write.mode("overwrite").parquet(out("members"))
           )
         }
-      )
-      Indexes.commitSwap(
-        dir,
-        stamp,
-        Seq("sig", "dfs", "sizes", "rsig", "rdfs", "rsizes", "members")
       )
     }
   }
 
   /** One micro-batch of (doc_id, ...) video rows → decoded, scene-hashed,
     * appended under `dir/delta/batch_id=<id>` (hash-bucket-partitioned
-    * like the base), then the [[maybeCompact]] policy settles the delta
-    * debt (compactAt <= 0 disables). Only the batch is decoded — the
-    * corpus-linear cost is never re-paid.
+    * like the base), then the debt policy settles the delta (compactAt
+    * <= 0 disables). Only the batch is decoded — the corpus-linear cost
+    * is never re-paid.
     */
   def upsertBatch(
       batch: DataFrame,
@@ -231,25 +168,15 @@ object VideoIndexStream {
       compactAt: Double = 0.2
   ): Unit = {
     val spark = batch.sparkSession
-    Video
-      .decodeSig(spark, batch)
-      .withColumn("hb", pmod(xxhash64(col("dhash")), lit(16L)))
-      .write
-      .mode("overwrite")
-      .partitionBy("hb")
-      .parquet(s"$dir/delta/batch_id=$batchId")
-    if (compactAt > 0.0) maybeCompact(spark, dir, compactAt)
-  }
-
-  /** foreachBatch writer over a video-document stream. Start with
-    * `.trigger(...).option("checkpointLocation", ...)`.
-    */
-  def sceneUpsert(
-      videosStream: DataFrame,
-      dir: String,
-      compactAt: Double = 0.2
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    videosStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      upsertBatch(batch, dir, batchId, compactAt)
+    DeltaFold.upsert(dir, batchId) { (_, path) =>
+      Video
+        .decodeSig(spark, batch)
+        .withColumn("hb", pmod(xxhash64(col("dhash")), lit(16L)))
+        .write
+        .mode("overwrite")
+        .partitionBy("hb")
+        .parquet(path)
     }
+    if (compactAt > 0.0) DeltaFold.settle(spark, dir, "sig", compactAt)(compactDeltas(spark, dir))
+  }
 }

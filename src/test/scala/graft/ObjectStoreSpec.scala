@@ -149,6 +149,36 @@ class ObjectStoreSpec extends AnyFunSuite {
     assert(spark.read.parquet(Indexes.liveDir(base, "grams")).count() === 15)
   }
 
+  test("delta fold on the remote scheme: outstanding batches stay visible, compaction refuses") {
+    import graft.streaming.CdxStream
+    // local WARC shards; the fold asset itself lives on the remote scheme
+    val warcDir = java.nio.file.Files.createTempDirectory("graft_slowfs_foldwarc").toString
+    Warc.write(fixtureRecords().select(col("record_bytes")), warcDir)
+    val shards = new java.io.File(warcDir).listFiles().map(_.getName)
+      .filter(_.endsWith(".warc.gz")).sorted
+    assert(shards.length >= 2, shards.mkString(", "))
+    val dir = "slowfs:" +
+      java.nio.file.Files.createTempDirectory("graft_slowfs_fold").toString + "/cdx"
+    Warc.memberIndex(spark, warcDir, shards(0))
+      .withColumn("surt", graft.operators.Urls.surt(col("target_uri")))
+      .write.parquet(s"$dir/idx")
+    val base = spark.read.parquet(s"$dir/idx").count()
+    val batch = Warc.memberIndex(spark, warcDir, shards(1)).count()
+    assert(batch > 0)
+
+    // the live view must see the outstanding delta through the scheme's
+    // own FileSystem — a local-disk existence check reports "no delta"
+    CdxStream.upsertBatch(spark, warcDir, shards(1), dir, batchId = 0L, compactAt = 0)
+    assert(CdxStream.readCaptures(spark, dir).count() === base + batch)
+
+    // the journaled swap renames directories: refused before any write
+    val local = new java.io.File(dir.stripPrefix("slowfs:"))
+    val before = local.list().toSet
+    intercept[UnsupportedOperationException](CdxStream.compactDeltas(spark, dir))
+    assert(local.list().toSet === before, "a refused compaction writes nothing")
+    assert(CdxStream.readCaptures(spark, dir).count() === base + batch)
+  }
+
   test("task-committed sink + streaming walk round-trip through a conf-resolved remote scheme") {
     val dir = slowDir("sink")
     SlowFs.reset()

@@ -769,13 +769,13 @@ class StreamingSpec extends AnyFunSuite {
         part.toPath, java.nio.file.Paths.get(in, name + ".parquet"))
     }
     def runOnce(): Unit = {
-      val q = graft.streaming.VectorIndexStream
-        .codesUpsert(
-          spark.readStream
-            .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-            .parquet(in),
-          idx
-        )
+      val q = spark.readStream
+        .schema("vec_id LONG, embedding ARRAY<FLOAT>")
+        .parquet(in)
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          graft.streaming.VectorIndexStream.upsertBatch(b, idx, id, dim = 64)
+        }
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
