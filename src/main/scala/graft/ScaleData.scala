@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
@@ -29,16 +29,8 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorStr) = args
     val factor = factorStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.envCores
+    val spark = Session(cpus)
 
     def src(name: String): DataFrame = Tables.table(spark, srcDir, name)
     def stride(df: DataFrame, c: String): Long =
@@ -58,7 +50,7 @@ object ScaleData {
 
     def write(df: DataFrame, name: String): Unit = {
       df.drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write
         .mode("overwrite")
         .parquet(s"$outDir/$name.parquet")

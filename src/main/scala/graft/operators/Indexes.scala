@@ -49,6 +49,18 @@ object Indexes {
     }
   )
 
+  /** Submit `body` to the overlap pool under the caller's Spark local
+    * properties, so its jobs carry the caller's job group and description
+    * (Bench counts a query's jobs by group). A pooled thread otherwise
+    * keeps the properties of whichever thread first created it.
+    */
+  private def overlapped[A](body: => A): java.util.concurrent.Future[A] = {
+    val install = org.apache.spark.sql.graftbridge.Bridge.captureLocalProperties()
+    overlapPool.submit(new java.util.concurrent.Callable[A] {
+      def call(): A = { install(); body }
+    })
+  }
+
   /** Run independent Spark actions concurrently and rethrow the first
     * failure. ONLY for actions with no ordering dependency — the crash
     * contract of a fold must hold for ANY landed subset (the journaled
@@ -57,13 +69,9 @@ object Indexes {
   def inParallel(thunks: (() => Unit)*): Unit = {
     if (thunks.sizeIs <= 1) thunks.foreach(_.apply())
     else {
-      val futs = thunks.tail.map { t =>
-        overlapPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
-        })
-      }
-      // head runs on the caller thread (keeps its job-description label);
-      // its failure still waits for the submitted siblings via finally.
+      val futs = thunks.tail.map(t => overlapped(t()))
+      // head runs on the caller thread; its failure still waits for the
+      // submitted siblings via finally.
       try thunks.head.apply()
       finally futs.foreach { f =>
         try { f.get(); () }
@@ -79,9 +87,7 @@ object Indexes {
     * gate).
     */
   def par2[A, B](a: => A, b: => B): (A, B) = {
-    val fb = overlapPool.submit(new java.util.concurrent.Callable[B] {
-      def call(): B = b
-    })
+    val fb = overlapped(b)
     val ra = a
     val rb =
       try fb.get()

@@ -54,7 +54,7 @@ object Md5Top60Rewrite extends Rule[LogicalPlan] {
 
 /** Session extensions installing the engine's Catalyst rules. Activate
   * with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * or a session builder's `.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

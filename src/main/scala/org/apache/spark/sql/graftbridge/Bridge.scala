@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.util.Utils
 
 /** Column ⇄ Catalyst-Expression bridge for Spark 4's reworked Column API.
   *
@@ -31,5 +33,22 @@ object Bridge {
     org.apache.spark.sql.execution.streaming.state.StateStoreCoordinatorRef
       .forDriver(org.apache.spark.SparkEnv.get, spark.sessionState.conf)
     ()
+  }
+
+  /** Block until every listener has seen every event posted so far, so
+    * the status tracker's job lists are complete (the listener bus is
+    * asynchronous).
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Copy the calling thread's Spark local properties (job group, job
+    * description) and return a thunk that installs the copy on the thread
+    * that runs it; a no-op when no SparkContext is active.
+    */
+  def captureLocalProperties(): () => Unit = SparkContext.getActive match {
+    case Some(sc) =>
+      val props = Utils.cloneProperties(sc.getLocalProperties)
+      () => sc.setLocalProperties(Utils.cloneProperties(props))
+    case None => () => ()
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Indexes
@@ -26,18 +27,10 @@ class FingerprintCatalogSpec extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    try { body; drainBus() }
+    try { body; Bridge.drainListenerBus(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(listener)
     n.get()
   }
-
-  private def drainBus(): Unit =
-    try {
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
-    } catch { case _: Throwable => Thread.sleep(1000) }
 
   test("warm catalog: locating an asset dir runs ZERO Spark jobs; cold path records it") {
     val docs = Tables.documents(spark, sf)

@@ -21,15 +21,7 @@ object LshSampleBenchMain {
     val rates = args.drop(1).headOption
       .map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(1, 2, 4, 8))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.envCores)
     val docs = Tables.documents(spark, sfDir)
       .withColumn("blk16", concat(col("lang"), lit("#"), pmod(col("doc_id"), lit(16L))))
       .localCheckpoint()

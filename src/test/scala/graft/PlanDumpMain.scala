@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for registered queries to files, one per
   * query, for the plan-audit deliverable:
   *
@@ -9,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   *   Test/runMain graft.PlanDumpMain /root/testdata/sf0.1 plans/r17 _after  q_a,q_b
   *
   * Args: sfDir outDir suffix [comma-separated query names; omit = all].
-  * Session config mirrors Bench so the dumped plan is the benched plan
+  * The session is Bench's (`Session` at `SPARK_GRAFT_CPUS` cores, so the
+  * same shuffle partition count), so the dumped plan is the benched plan
   * (AQE initial plan; the formatted output shows scan PushedFilters /
   * ReadSchema, join strategies and Exchange placement, which is what the
   * plan claims in OPTIMIZATION_r17.md are checked against).
@@ -22,16 +21,7 @@ object PlanDumpMain {
     val only = if (args.length > 3)
       Some(args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet)
     else None
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.envCores)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

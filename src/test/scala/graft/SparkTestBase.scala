@@ -5,20 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(
-        "spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString
-      )
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Spark reads `spark.*` system properties into the session conf; the
+    // temp warehouse keeps saveAsTable output out of the checkout.
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val s = Session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

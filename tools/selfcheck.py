@@ -6,7 +6,8 @@ Usage:  python3 tools/selfcheck.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs the
 matching SQL from <verifyOutDir>/oracle_sql.json in DuckDB against views over
 <sfDir>/*.parquet, and compares: columns sorted by name, rows sorted by all
-columns, exact value equality. Reports per-query PASS/FAIL.
+columns, exact value equality. Reports per-query PASS/FAIL, and MISS (counted
+as a failure) for an oracle query with no parquet output.
 """
 import sys, os, json, glob
 import duckdb
@@ -71,8 +72,10 @@ def main():
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    names = sorted([os.path.basename(p) for p in glob.glob(f"{out_dir}/*")
-                    if os.path.isdir(p)])
+    # Every oracle key must have output: a query that threw in Verify
+    # writes no directory, and skipping it would read as a pass.
+    names = sorted({os.path.basename(p) for p in glob.glob(f"{out_dir}/*")
+                    if os.path.isdir(p)} | set(oracle))
     n_pass = n_fail = 0
     for name in names:
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
