@@ -313,40 +313,6 @@ object ShingleKernel {
     )
   }
 
-  /** One-pass k-gram multiset statistics: (total grams, distinct grams,
-    * max multiplicity). The per-doc repetition signal needs exactly these
-    * three numbers — computing them here, per row, keeps the corpus scan
-    * map-only; the explode → groupBy(doc, gram) formulation shuffles every
-    * gram occurrence to get the same three longs.
-    */
-  def gramStats(
-      arr: ArrayData,
-      k: Int
-  ): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
-    val n = arr.numElements()
-    val count = math.max(n - k + 1, 1)
-    val counts = new java.util.HashMap[UTF8String, java.lang.Long](count * 2)
-    val parts = new Array[UTF8String](k)
-    var top = 0L
-    var i = 0
-    while (i < count) {
-      val m = math.min(k, n - i)
-      var j = 0
-      while (j < m) { parts(j) = arr.getUTF8String(i + j); j += 1 }
-      val s =
-        if (m == k) UTF8String.concatWs(Space, parts: _*)
-        else UTF8String.concatWs(Space, java.util.Arrays.copyOf(parts, math.max(m, 0)): _*)
-      val prev = counts.get(s)
-      val c = if (prev == null) 1L else prev.longValue() + 1L
-      counts.put(s, java.lang.Long.valueOf(c))
-      if (c > top) top = c
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](count.toLong, counts.size.toLong, top)
-    )
-  }
-
   /** All word-k-shingles WITH multiplicity, in document order — the
     * multiset [[wordShingles]] dedupes. Repetition scoring needs the
     * duplicates (they ARE the signal), so this variant keeps them.
@@ -396,45 +362,6 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
       ctx,
       ev,
       c => s"${ev.value} = graft.functions.ShingleKernel.wordShingles($c, $k);"
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `gram_stats(tokens, k)`: one-pass k-gram multiset statistics
-  * `struct(n_grams, n_distinct, top_cnt)` per row — the map-only kernel
-  * behind repetition scoring. The equivalent explode → groupBy(doc, gram)
-  * → groupBy(doc) pipeline shuffles every gram occurrence twice to
-  * produce the same three longs per document.
-  */
-case class GramStats(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(
-    Seq(
-      StructField("n_grams", LongType, nullable = false),
-      StructField("n_distinct", LongType, nullable = false),
-      StructField("top_cnt", LongType, nullable = false)
-    )
-  )
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"gram_stats requires an array<string> argument, got ${other.catalogString}"
-        )
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.gramStats(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = graft.functions.ShingleKernel.gramStats($c, $k);"
     )
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -63,13 +63,6 @@ object Dedup {
       )
     )
 
-  /** The i-th MinHash of a shingle array: min over salted 60-bit hashes.
-    * (Reference formulation; [[signatures]] uses the one-pass native
-    * [[graft.functions.MinHashSig]], which computes the same values.)
-    */
-  def minhash(shingles: Column, i: Int): Column =
-    array_min(transform(shingles, s => md5LongSalted(s, i)))
-
   /** LSH band signature b over the minhash columns mh0..mh{NumHashes-1}:
     * hash of the band's concatenated row values.
     */
@@ -134,24 +127,8 @@ object Dedup {
     i.cast("double") / u
   }
 
-  /** Exact Jaccard over two SORTED distinct-shingle arrays: same value as
-    * [[jaccard]], via one codegen merge instead of a hash-set per pair.
-    */
-  def jaccardSorted(a: Column, b: Column): Column = {
-    val i = ExpressionUtils
-      .column(
-        graft.functions.SortedIntersectCount(
-          ExpressionUtils.expression(a),
-          ExpressionUtils.expression(b)
-        )
-      )
-      .cast("long")
-    val u = size(a).cast("long") + size(b).cast("long") - i
-    i.cast("double") / u
-  }
-
-  /** [[jaccardSorted]] over 60-bit-hashed shingle sets (sorted long
-    * arrays): primitive merge, no per-element allocation.
+  /** [[jaccard]] over 60-bit-hashed shingle sets (sorted long arrays):
+    * one codegen merge, no hash set and no per-element allocation.
     */
   def jaccardSortedLong(a: Column, b: Column): Column = {
     val i = ExpressionUtils
@@ -279,78 +256,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"), jaccard(col("sa.sh"), col("sb.sh")).as("jacc"))
       .filter(col("jacc") >= threshold)
   }
-
-  /** STREAMING band-table maintenance: the daily-ingest path of
-    * [[deltaDups]] as a continuously-maintained persisted index.
-    *
-    * The index under `dir` is two batch_id-partitioned parquet tables —
-    * `bands` (doc_id, band, bhash) and `shingles` (doc_id, sh) — plus a
-    * `dups` output table. Each micro-batch:
-    *
-    *   1. computes signatures for the DELTA only (one map-only pass);
-    *   2. UPSERTS the delta's bands + shingles into the index, keyed by
-    *      batchId (a replayed batch overwrites its own partition — the
-    *      idempotent-sink recipe, so streaming's at-least-once replay can
-    *      never duplicate index rows);
-    *   3. probes delta bands against the WHOLE band table (old batches +
-    *      this one, so intra-batch dups are found too): candidates are an
-    *      equi-join on (band, bhash), never an all-pairs scan;
-    *   4. verifies candidates by exact Jaccard against the SHINGLE STORE —
-    *      a keyed lookup, so corpus documents are never re-shingled;
-    *   5. lands verified pairs in `dups/batch_id=N` (same idempotency).
-    *
-    * At 100 TB the band table is the index: bucketed by (band, bhash) it
-    * serves point probes; the shingle store amortizes the dominant
-    * tokenize+shingle cost to exactly once per document, ever.
-    */
-  def streamingBandUpsert(
-      docsStream: DataFrame,
-      dir: String,
-      threshold: Double = JaccardThreshold
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val sigs = signatures(batch.select(col("doc_id"), col("text")))
-      val newBands = sigs.select(
-        col("doc_id"),
-        posexplode(array((0 until NumBands).map(bandHash): _*))
-          .as(Seq("band", "bhash"))
-      )
-      newBands.write.mode("overwrite").parquet(s"$dir/bands/batch_id=$batchId")
-      sigs
-        .select(col("doc_id"), col("sh"))
-        .write
-        .mode("overwrite")
-        .parquet(s"$dir/shingles/batch_id=$batchId")
-
-      val allBands = spark.read.parquet(s"$dir/bands")
-      val cands = newBands
-        .as("l")
-        .join(
-          allBands.as("r"),
-          col("l.band") === col("r.band") && col("l.bhash") === col("r.bhash") &&
-            col("l.doc_id") =!= col("r.doc_id")
-        )
-        .select(
-          least(col("l.doc_id"), col("r.doc_id")).as("a_id"),
-          greatest(col("l.doc_id"), col("r.doc_id")).as("b_id")
-        )
-        .distinct()
-      val candIds = cands
-        .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
-        .distinct()
-      val sh = spark.read
-        .parquet(s"$dir/shingles")
-        .join(candIds, Seq("doc_id"), "semi")
-      cands
-        .join(sh.as("sa"), col("a_id") === col("sa.doc_id"))
-        .join(sh.as("sb"), col("b_id") === col("sb.doc_id"))
-        .select(col("a_id"), col("b_id"), jaccard(col("sa.sh"), col("sb.sh")).as("jacc"))
-        .filter(col("jacc") >= threshold)
-        .write
-        .mode("overwrite")
-        .parquet(s"$dir/dups/batch_id=$batchId")
-    }
 
   /** SimHash (60-bit, term-frequency weighted), one codegen pass per doc
     * ([[graft.functions.SimHash60]]): md5 per token occurrence, signed

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.LongType
   * Publication dispatches on the store's capabilities: local/HDFS-class
   * paths use POSIX `ATOMIC_MOVE` (temp dir + one atomic rename); scheme'd
   * paths — S3/GCS-class stores, where "rename" is non-atomic copy+delete
-  * — use the marker-commit mode ([[markerCommit]]: objects written under
+  * — use the marker-commit mode ([[markerBuild]]: objects written under
   * the final prefix, a single completion-marker object PUT LAST as the
   * read barrier; object PUTs are atomic and read-after-write consistent
   * on current S3/GCS) and the pointer-committed compaction swap
@@ -348,9 +348,6 @@ object Indexes {
     * (see [[atomicBuild]]). The build callback receives the FINAL dir —
     * no rename ever happens on this path.
     */
-  private[graft] def markerCommit(dir: String, marker: String)(build: String => Unit): Unit =
-    markerBuild(dir, marker)(build)
-
   private def markerBuild(dir: String, marker: String)(build: String => Unit): Unit = {
     val mp = new org.apache.hadoop.fs.Path(s"$dir/$marker")
     val fs = mp.getFileSystem(sessionHadoopConf)

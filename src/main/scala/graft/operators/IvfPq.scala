@@ -194,13 +194,12 @@ object IvfPq {
 
     // literal probe union -> partition pruning on the codes read (the
     // IvfIndex.search contract; directories outside the probe set are
-    // never listed, let alone read). Pruning applies to base AND deltas:
-    // both are cell-partitioned, and the filter pushes into each branch
-    // of the union. The metadata predicate (lit(true) when unfiltered)
-    // filters the same read — column pruning still drops unreferenced
-    // meta columns from ReadSchema.
+    // never listed, let alone read). The metadata predicate (lit(true)
+    // when unfiltered) filters the same read — column pruning still
+    // drops unreferenced meta columns from ReadSchema.
     val probedCells = probe.select(col("cell")).distinct().collect().map(_.getLong(0))
-    val codes = readCodes(spark, dir)
+    val codes = spark.read
+      .parquet(s"$dir/codes")
       .filter(col("cell").isin(probedCells.toIndexedSeq: _*))
       .filter(predicate)
       .select(
@@ -235,45 +234,4 @@ object IvfPq {
       case other => throw new IllegalArgumentException(s"metric must be cos|l2, got $other")
     }
   }
-
-  /** The full code table: the build-time base plus any incremental
-    * batch deltas appended by
-    * [[graft.streaming.VectorIndexStream.upsertBatch]]. Both trees are
-    * cell-partitioned, so a probe filter prunes each branch.
-    *
-    * Full schema (vec_id, codes, metaCols..., cell): searchers prune what
-    * they don't reference; compaction must preserve meta columns or a
-    * filtered search would break after the first OPTIMIZE. The union is a
-    * strict unionByName: a delta writer that dropped the meta columns of
-    * a meta-carrying index fails loudly here rather than silently
-    * null-filtering its rows out of every filtered search.
-    */
-  def readCodes(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.DeltaFold.live(spark, dir, "codes")()
-
-  /** Offline maintenance: fold the streamed `delta/` trees into the base
-    * code table and drop them — after compaction a search reads ONE
-    * cell-partitioned tree again (delta accumulation adds a file-listing
-    * and a union branch per batch; compaction restores the build-time
-    * read shape). Quantizers are untouched: compaction rewrites codes, a
-    * RETRAIN is a rebuild.
-    *
-    * Swap discipline: the merged table is fully written first, then the
-    * journaled crash-safe swap ([[graft.streaming.DeltaFold.compact]])
-    * publishes it. A concurrent searcher of a LIVE process can still
-    * observe the momentary rename window, matching lakehouse OPTIMIZE
-    * (quiesced-maintenance) semantics — not a lock-free swap.
-    */
-  def compactDeltas(spark: SparkSession, dir: String): Unit =
-    graft.streaming.DeltaFold.compact(dir, Seq("codes")) { out =>
-      readCodes(spark, dir)
-        // a batch replayed AFTER a compaction folded it re-lands in delta/;
-        // frozen quantizers make the replayed rows bit-identical to the
-        // compacted ones, so a full-row distinct restores exactly-once
-        .distinct()
-        .write
-        .mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out("codes"))
-    }
 }

@@ -493,8 +493,8 @@ object Multimodal {
     * payload bytes (same call, payloadCol = the binary column).
     */
   def dhashIndexDir(sfDir: String, corpusDocs: DataFrame): String =
-    // layout=2: per-doc docs/ table added for streaming maintenance — the
-    // params key retires any asset built under the docs-less layout
+    // layout=2: a params key from an earlier layout, kept so existing
+    // assets keep resolving
     Indexes.fingerprintDirOn("dhash-reps", sfDir, corpusDocs, "doc_id", "doc_id", "layout=2")
 
   /** Build the persisted image-dedup index ONCE per corpus version: decode
@@ -513,13 +513,10 @@ object Multimodal {
     */
   def ensureDhashIndex(spark: SparkSession, corpusDocs: DataFrame, dir: String): Unit =
     Indexes.atomicBuild(dir, "reps/_SUCCESS") { tmp =>
-      // per-doc hash rows are the index's source of truth: a pure function
-      // of the document, which is what makes streaming maintenance
-      // replay-idempotent (MediaIndexStream folds deltas with a full-row
-      // distinct). reps/bands are derived aggregates.
-      val docs = dHash(spark, withImagePayload(spark, corpusDocs)).toDF().localCheckpoint()
-      docs.write.mode("overwrite").parquet(s"$tmp/docs")
-      val reps = hashReps(docs)
+      // pinned: both writes below consume it, and each unpinned branch
+      // would re-run the corpus decode
+      val reps = hashReps(dHash(spark, withImagePayload(spark, corpusDocs)).toDF())
+        .localCheckpoint()
       reps
         .select(col("dhash"), col("rid"), col("n"), bandCols)
         .write
@@ -556,7 +553,6 @@ object Multimodal {
       deltaDocs: DataFrame,
       maxHamming: Int = 3
   ): DataFrame = {
-    Indexes.recoverSwap(dir) // finish any interrupted compaction swap
     // pin the delta hashes: the band probe and the final join-back both
     // consume them, and each unpinned branch would re-run the delta decode
     val dh = dHash(spark, withImagePayload(spark, deltaDocs)).toDF().localCheckpoint()

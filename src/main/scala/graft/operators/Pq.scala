@@ -161,22 +161,6 @@ object Pq {
       .select(col("query_id"), col("neighbor_id"), (-col("cos")).as("d2"), col("rank"))
   }
 
-  /** ADC top-k: per query, per block, the distance table to every centroid
-    * is a literal-codebook expression over the query vector (map-only on
-    * the tiny query side, then broadcast); a candidate's approximate
-    * distance is m `element_at` lookups + a left-to-right sum. Candidates
-    * reduce via the bounded top-k aggregate — the exchange carries
-    * O(partitions × |Q| × k) rows, never the corpus.
-    */
-  def pqTopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      cb: Codebooks,
-      dim: Int,
-      k: Int
-  ): DataFrame =
-    adcTopK(queries, encode(corpus, cb, dim).withColumnRenamed("vec_id", "neighbor_id"), cb, dim, k)
-
   /** Per-query ADC distance tables: one array column per block holding the
     * query's d2 to every centroid of that block — the driver-small frame
     * every ADC search broadcasts.
@@ -200,8 +184,13 @@ object Pq {
       .reduce[Column](_ + _)
 
   /** ADC top-k over a pre-encoded `(neighbor_id, codes)` table (the
-    * persisted-index path — no encode pass at query time). [[pqTopK]] is
-    * this over an inline encode.
+    * persisted-index path — no encode pass at query time): per query, per
+    * block, the distance table to every centroid is a literal-codebook
+    * expression over the query vector (map-only on the tiny query side,
+    * then broadcast); a candidate's approximate distance is m `element_at`
+    * lookups + a left-to-right sum. Candidates reduce via the bounded top-k
+    * aggregate — the exchange carries O(partitions × |Q| × k) rows, never
+    * the corpus.
     */
   def adcTopK(
       queries: DataFrame,
@@ -354,25 +343,4 @@ object Pq {
     rerankExact(cands, queries, corpus, k)
   }
 
-  /** Production PQ search: ADC shortlist (`shortlist` candidates ranked
-    * purely over codes) + EXACT re-rank of the shortlist (float vectors
-    * read only for |Q|·shortlist rows via a semi-join-sized equi-join —
-    * never a corpus scan). This two-stage shape is how PQ indexes hit
-    * high recall: quantization error decides the shortlist, not the
-    * final ranks.
-    */
-  def pqTopKReranked(
-      queries: DataFrame,
-      corpus: DataFrame,
-      cb: Codebooks,
-      dim: Int,
-      k: Int,
-      shortlist: Int
-  ): DataFrame =
-    rerankExact(
-      pqTopK(queries, corpus, cb, dim, shortlist).select(col("query_id"), col("neighbor_id")),
-      queries,
-      corpus,
-      k
-    )
 }

@@ -131,8 +131,8 @@ object SemanticIndex {
     Similarity.semanticDedupCore(readCelled(corpus.sparkSession, dir), threshold, keep)
   }
 
-  /** Steady-state [[Similarity.semanticDedupHier]] over the persisted
-    * two-level celled corpus.
+  /** Steady-state semantic dedup over the persisted two-level celled
+    * corpus ([[Similarity.hierCells]]).
     */
   def dedup2l(
       sfDir: String,
@@ -241,7 +241,7 @@ object SemanticIndex {
       .select(col("cell"), col("vec_id"), col("embedding"))
   }
 
-  // ---- streaming maintenance (the VectorIndexStream discipline) ----------
+  // ---- streaming maintenance (the DeltaFold discipline) -------------------
 
   /** LIVE celled view: base ∪ outstanding stream deltas, exactly-once via
     * the delta-probe union (the [[graft.streaming.SubstrIndexStream]]
@@ -271,11 +271,11 @@ object SemanticIndex {
     * batch (a replay overwrites its own directory with bit-identical
     * rows; assignment is deterministic closed-form). Cell GEOMETRY only
     * moves at compaction: [[compactDeltas]] REBUILDS the quantizer from
-    * the union corpus (re-derived k, seeds, counts, re-split) — the
-    * add-vs-train split of [[graft.streaming.VectorIndexStream]], with
-    * "train" here being the deterministic seeded derivation, so the
-    * folded asset is BIT-EQUAL to a wholesale [[ensureBuilt]] on the
-    * grown corpus (`d_semantic_fold`'s gate).
+    * the union corpus (re-derived k, seeds, counts, re-split) — FAISS's
+    * `add` vs `train` split (frozen quantizers on add), with "train" here
+    * being the deterministic seeded derivation, so the folded asset is
+    * BIT-EQUAL to a wholesale [[ensureBuilt]] on the grown corpus
+    * (`d_semantic_fold`'s gate).
     */
   def upsertBatch(
       batch: DataFrame,

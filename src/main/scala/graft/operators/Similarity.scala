@@ -22,7 +22,7 @@ import graft.util.Cols._
   *     iteration is one broadcast join + one bounded-top-k argmax + one
   *     partial-aggregable mean, i.e. corpus-scan passes, exactly how
   *     k-means is run at scale.
-  *   - [[ivfTopK]] / [[ivfTopKKmeans]]: rank cells per query, search only
+  *   - [[ivfTopK]]: rank cells per query, search only
   *     the nProbe best cells. At 100 TB the corpus is bucketed BY cell id,
   *     so a probe touches only nProbe buckets — partition pruning does the
   *     work of an index.
@@ -451,22 +451,6 @@ object Similarity {
     topKExplode(scored, k)
   }
 
-  /** IVF with a trained coarse quantizer: k-means cells instead of a
-    * pre-labeled cell column.
-    */
-  def ivfTopKKmeans(
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int,
-      nProbe: Int,
-      kCells: Int = 10,
-      iters: Int = 4
-  ): DataFrame = {
-    val cells = kmeansCells(corpus, kCells, iters)
-    val corpusCelled = corpus.join(cells, Seq("vec_id"))
-    ivfTopK(queries, corpusCelled, k, nProbe, cellCol = "cell")
-  }
-
   // ---- random-hyperplane (sign) LSH — the bucketed ANN scale path that
   // needs no training pass, complementing IVF's trained quantizer.
 
@@ -735,9 +719,9 @@ object Similarity {
     * Shape at scale: the quadratic term is bounded per cell (exactly the
     * IVF-cell blocking of [[cosineDupPairs]]); at 100 TB feed it cells
     * from [[scaledCells]] (k ∝ N + re-split guard — see
-    * [[semanticDedupScaled]] / [[semanticDedupHier]]) rather than a
+    * [[semanticDedupScaled]]) rather than a
     * fixed cell column, whose cells grow with the corpus and make the
-    * pair join quadratic in corpus growth ([[semanticDedupHier]] is the
+    * pair join quadratic in corpus growth ([[hierCells]] is the
     * 100 TB form — same contract, O(N·√k) assignment). Centroids are the
     * decimal-exact partial-aggregable means of [[centroids]] and
     * broadcast back, so the whole operator is one centroid aggregate +
@@ -785,28 +769,6 @@ object Similarity {
   ): DataFrame =
     semanticDedupCore(
       scaledCells(corpus, targetCellSize, maxCellSize, litK)
-        .select(col("cell"), col("vec_id"), col("embedding")),
-      threshold,
-      keep
-    )
-
-  /** [[semanticDedup]] over the TWO-LEVEL quantizer of [[hierCells]] —
-    * the 100 TB form: constant expected cell size (linear pair join, no
-    * recall decay with corpus growth) at O(N·√k) assignment cost and
-    * O(√k·dim) driver state. Deterministic end to end — both quantizer
-    * levels and the salted split are closed-form md5 constructions an
-    * oracle replays bit-exactly.
-    */
-  def semanticDedupHier(
-      corpus: DataFrame,
-      threshold: Double,
-      targetCellSize: Int,
-      maxCellSize: Int,
-      litK: Int = 256,
-      keep: KeepPolicy = KeepPolicy.Central
-  ): DataFrame =
-    semanticDedupCore(
-      hierCells(corpus, targetCellSize, maxCellSize, litK)
         .select(col("cell"), col("vec_id"), col("embedding")),
       threshold,
       keep
@@ -867,32 +829,11 @@ object Similarity {
     * embedding feed is checked against the corpus only, never delta ×
     * delta, mirroring [[Dedup]]'s text-side `deltaDups`).
     *
-    * Shape at scale: candidates are within-cell only (delta rows join the
-    * cell-partitioned corpus — with a persisted [[IvfIndex]] layout that
-    * read prunes to the delta's cells); the argmax is one
-    * partial-aggregable `max(struct(cos, id))`, no window. Deterministic:
-    * ties on cosine take the higher corpus id on both engines.
-    */
-  def semanticDeltaDups(
-      delta: DataFrame,
-      corpus: DataFrame,
-      threshold: Double,
-      cellCol: String = "label"
-  ): DataFrame = {
-    val d = delta.select(col(cellCol).as("cell"), col("vec_id"), col("embedding"))
-    semanticDeltaDupsCore(
-      d.select(col("vec_id"), col("cell")),
-      d,
-      corpus.select(col(cellCol).as("cell"), col("vec_id"), col("embedding")),
-      threshold
-    )
-  }
-
-  /** [[semanticDeltaDups]] over [[scaledCells]] derived from the CORPUS
-    * (seeds, k, and re-split counts all come from the existing corpus —
-    * the delta is assigned into the corpus's cells, never the reverse, so
-    * a day's ingest can't perturb the blocking of the data already
-    * deduped). Corpus cells above maxCellSize are salted exactly as in
+    * Cells are [[scaledCells]] derived from the CORPUS (seeds, k, and
+    * re-split counts all come from the existing corpus — the delta is
+    * assigned into the corpus's cells, never the reverse, so a day's
+    * ingest can't perturb the blocking of the data already deduped).
+    * Corpus cells above maxCellSize are salted exactly as in
     * [[semanticDedupScaled]]; the delta PROBES EVERY SUBCELL of its
     * coarse cell rather than riding its own salt — within-corpus dedup
     * loses 1 − 1/nsplit of hot-cell pairs to subcell straddle (the price
@@ -1032,14 +973,18 @@ object Similarity {
       )
   }
 
-  /** @param dOwn   (vec_id, cell) — one row per delta vector, the cell it
+  /** Within-cell candidates only; the argmax is one partial-aggregable
+    * `max(struct(cos, id))`, no window. Deterministic: ties on cosine
+    * take the higher corpus id on both engines.
+    *
+    * @param dOwn   (vec_id, cell) — one row per delta vector, the cell it
     *               reports (its own blocking cell);
     * @param dProbe (vec_id, embedding, cell) — the delta fanned out over
     *               every cell it should be COMPARED in (≥ its own; a
     *               corpus row lives in exactly one cell, so no candidate
     *               is double-counted).
     */
-  private[operators] def semanticDeltaDupsCore(
+  private def semanticDeltaDupsCore(
       dOwn: DataFrame,
       dProbe: DataFrame,
       cCelled: DataFrame,

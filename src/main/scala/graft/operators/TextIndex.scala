@@ -103,16 +103,6 @@ object TextIndex {
     * hash buckets become a literal `tb IN (...)` predicate (directories
     * outside it are never listed), then the term equality rides the
     * within-bucket sort's row-group statistics.
-    *
-    * DELTA-AWARE: a stream-maintained index
-    * ([[graft.streaming.TextIndexStream]]) accumulates
-    * `delta/batch_id=N/tb=...` trees between compactions; the seek unions
-    * the SAME pruned predicate over them (delta trees are bucketed exactly
-    * like the base, so pruning holds) and `distinct()`s only when a delta
-    * exists — a replayed batch re-lands bit-identical rows, and the
-    * distinct runs over the query-bounded O(Σ df) seek rows, never the
-    * corpus. A crash mid-compaction-swap is finished here first
-    * ([[Indexes.recoverSwap]]) so the base path always exists.
     */
   def postingsFor(
       spark: SparkSession,
@@ -124,10 +114,10 @@ object TextIndex {
     // through the engine, one literal row per term (no corpus scan)
     import spark.implicits._
     val ids = terms.toDF("term").select(bucketOf(col("term"), nBuckets)).as[Long].collect().toSeq
-    graft.streaming.DeltaFold.live(spark, dir, "postings", exactlyOnce = true)(
-      _.filter(col("tb").isin(ids.distinct: _*) && col("term").isin(terms: _*))
-        .select(col("term"), col("doc_id"), col("tf"), col("positions"), col("dl"))
-    )
+    spark.read
+      .parquet(s"$dir/postings")
+      .filter(col("tb").isin(ids.distinct: _*) && col("term").isin(terms: _*))
+      .select(col("term"), col("doc_id"), col("tf"), col("positions"), col("dl"))
   }
 
   /** The persisted top bigram — (w1, w2), one row of driver state. */
@@ -136,41 +126,19 @@ object TextIndex {
     (r.getString(0), r.getString(1))
   }
 
-  /** The corpus document count — one long of driver state, delta-aware
-    * via [[corpusTotals]].
-    */
+  /** The corpus document count — one long of driver state. */
   def nDocs(spark: SparkSession, dir: String): Long =
     corpusTotals(spark, dir)._1
 
   /** The persisted (n_docs, total_len) statistics row — two longs of
-    * driver state, the BM25 denominators — made DELTA-AWARE: when the
-    * index carries outstanding stream deltas
-    * ([[graft.streaming.TextIndexStream]]), the streamed documents'
-    * contribution is added from the delta's distinct (doc_id, dl) pairs
-    * (dl is denormalized into every posting row, so one distinct over the
-    * debt-bounded delta — <= the compaction fraction of base rows —
-    * yields exact per-doc lengths; replayed batches collapse in the
-    * distinct). Contract, same as the stream upsert's: delta doc_ids are
-    * NEW documents, never re-ingests of base docs — upserts of existing
-    * docs must go through compaction-time rebuild, not delta append.
+    * driver state, the BM25 denominators.
     */
   def corpusTotals(spark: SparkSession, dir: String): (Long, Long) = {
-    Indexes.recoverSwap(dir)
     val r = spark.read
       .parquet(s"$dir/stats")
       .select(col("n_docs"), col("total_len"))
       .head()
-    val (n0, s0) = (r.getLong(0), r.getLong(1))
-    if (!graft.streaming.DeltaFold.hasDelta(dir)) (n0, s0)
-    else {
-      val d = spark.read
-        .parquet(graft.streaming.DeltaFold.deltaDir(dir))
-        .select(col("doc_id"), col("dl"))
-        .distinct()
-        .agg(count(lit(1)).cast("long"), coalesce(sum(col("dl")), lit(0L)).cast("long"))
-        .head()
-      (n0 + d.getLong(0), s0 + d.getLong(1))
-    }
+    (r.getLong(0), r.getLong(1))
   }
 
   /** BM25 ranked retrieval (Robertson et al.; the Lucene-default scorer)

@@ -297,11 +297,10 @@ object Events {
       Some("""SELECT user_id, COUNT(*) AS n_events,
              |       SUM((value::DECIMAL(18,2) * 100)::BIGINT)::BIGINT AS total_cents
              |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
-      doc = "transformWithState (Spark 4 stateful processor: named state " +
-        "variables + event-time timers) run in BATCH: per-user running " +
-        "rollup whose batch output equals the plain aggregate, " +
-        "bit-checked; the streaming face (RocksDB state store, TTL " +
-        "eviction, mapGroupsWithState parity) is pinned in StreamingSpec."
+      doc = "transformWithState (Spark 4 stateful processor: a named " +
+        "state variable in the RocksDB state store) run in BATCH: per-user " +
+        "running rollup whose batch output equals the plain aggregate, " +
+        "bit-checked."
     ),
     // ---- latest record per key: the upsert/compaction read of any
     // append-only ingest (CDC, event logs). One partial-aggregable

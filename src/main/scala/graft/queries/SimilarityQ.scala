@@ -166,9 +166,6 @@ object SimilarityQ {
            |ORDER BY down.vec_id""".stripMargin
   }
 
-  /** DuckDB cosine helper exposed for cross-modal consumers. */
-  private[queries] def cosSqlFor(a: String, b: String): String = cosSql(a, b)
-
   val all: Seq[Q] = Seq(
     Q(
       "s_ann_brute",
@@ -634,10 +631,10 @@ object SimilarityQ {
     )
   ) ++ keepPolicyAndDelta
 
-  /** DuckDB replay of [[Similarity.semanticDedupHier]] over an arbitrary
-    * source relation `eSql` (must yield (vec_id, emb DOUBLE[])) — shared
-    * by d_semantic_2l (raw fixture) and d_semantic_prod (rotation-expanded
-    * production shape).
+  /** DuckDB replay of [[graft.operators.SemanticIndex.dedup2l]] over an
+    * arbitrary source relation `eSql` (must yield (vec_id, emb DOUBLE[]))
+    * — shared by d_semantic_2l (raw fixture) and d_semantic_prod
+    * (rotation-expanded production shape).
     */
   private def semantic2lSql(eSql: String, thr: Double): String =
     s"""WITH e AS ($eSql),

@@ -93,38 +93,6 @@ object Versioned {
     spark.read.option("mergeSchema", "true").parquet(dirs: _*)
   }
 
-  /** A [[commitChecked]] outcome: the new version (None = rejected) plus
-    * the full violations report, O(#checks) rows.
-    */
-  final case class CheckedCommit(
-      version: Option[Int],
-      report: Array[org.apache.spark.sql.Row]
-  )
-
-  /** Constraint-gated commit (table CHECK constraints enforced on write,
-    * the Delta/DLT expectations-on-ingest discipline): the candidate
-    * DataFrame is evaluated against a declarative
-    * [[graft.operators.Expectations]] contract — ONE zero-group aggregate
-    * pass — and only a fully-passing candidate becomes a version. A
-    * violating candidate commits NOTHING (the table's history never
-    * contains a version that broke its contract) and the report says
-    * exactly which checks failed. The batch twin of
-    * [[graft.streaming.QualityGateStream]]'s per-micro-batch gate.
-    */
-  def commitChecked(
-      df: DataFrame,
-      dir: String,
-      checks: Seq[graft.operators.Expectations.Check],
-      append: Boolean = true
-  ): CheckedCommit = {
-    df.persist() // evaluated once for the contract, once for the write
-    try {
-      val rep = graft.operators.Expectations.evaluate("commit", df, checks).collect()
-      if (rep.exists(r => !r.getAs[Boolean]("passed"))) CheckedCommit(None, rep)
-      else CheckedCommit(Some(commit(df, dir, append)), rep)
-    } finally df.unpersist()
-  }
-
   /** MERGE INTO, merge-on-read form (Iceberg MOR / Hudi MOR at key
     * granularity): an upsert/delete commit is a PURE APPEND of the delta
     * rows — no copy-on-write of untouched data — tagged with the commit
@@ -158,66 +126,6 @@ object Versioned {
       dir,
       append = true
     )
-  }
-
-  /** [[commitMerge]] made EXACTLY-ONCE for at-least-once writers
-    * (Structured Streaming's foreachBatch replays a batch after any
-    * restart): the commit's data dir is named by the writer's `epochId`,
-    * and a replay of an already-applied epoch is a no-op (returns None).
-    *
-    * Replay detection is vacuum-proof: applied epochs are recorded in a
-    * `_epochs/` ledger that [[vacuum]] never touches, with the manifest
-    * scan (existing manifests only — retired versions leave gaps) as the
-    * fallback for a crash between the manifest rename and the ledger
-    * write. Crash-safety of the commit itself falls out of the protocol:
-    * a crash AFTER the data write but BEFORE the manifest rename leaves
-    * an unreferenced dir that the replay simply overwrites — the manifest
-    * rename is the single atomic commit point. The one double-apply
-    * window is a vacuum that removes the referencing manifest DURING the
-    * crashed writer's rename→ledger gap, before its replay — run table
-    * maintenance and the writer under the usual single-owner discipline
-    * and the window is unreachable.
-    */
-  def commitMergeOnce(
-      delta: DataFrame,
-      dir: String,
-      epochId: Long,
-      deleted: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(false)
-  ): Option[Int] = {
-    import org.apache.spark.sql.functions.lit
-    val prev = latestVersion(dir)
-    val dataDir = s"b$epochId"
-    val ledger = Paths.get(dir, "_epochs", s"$epochId.applied")
-    val committed = Files.exists(ledger) ||
-      (1 to prev).exists { v =>
-        val m = manifestDir(dir).resolve(s"v$v.manifest")
-        Files.exists(m) && readManifest(dir, v).contains(dataDir)
-      }
-    if (committed) None
-    else {
-      val next = prev + 1
-      delta
-        .withColumn("_deleted", deleted)
-        .withColumn("_commit", lit(next.toLong))
-        .write
-        .mode("overwrite") // a torn prior attempt's dir is simply rewritten
-        .parquet(s"$dir/data/$dataDir")
-      val dirs =
-        if (prev > 0) readManifest(dir, prev) :+ dataDir else Seq(dataDir)
-      Files.createDirectories(manifestDir(dir))
-      val tmp = manifestDir(dir).resolve(s".v$next.tmp")
-      Files.write(tmp, dirs.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      Files.move(
-        tmp,
-        manifestDir(dir).resolve(s"v$next.manifest"),
-        StandardCopyOption.ATOMIC_MOVE
-      )
-      // ledger AFTER the commit point: a crash in between is covered by
-      // the manifest-scan fallback; the reverse order could drop a batch
-      Files.createDirectories(ledger.getParent)
-      Files.write(ledger, Array.emptyByteArray)
-      Some(next)
-    }
   }
 
   /** Resolve a merged table at version `v` (default latest): latest

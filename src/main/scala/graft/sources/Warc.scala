@@ -135,11 +135,11 @@ object Warc {
     * copy+delete on S3/GCS-class stores — a reader globbing mid-rename
     * there can observe a partial shard. On such stores the commit
     * discipline is the marker-object one ([[graft.operators.Indexes
-    * .markerCommit]] / [[graft.operators.TrainExport]]): the dot-prefixed
-    * temps already hide in-progress bytes from the suffix-filtered
-    * listing, and a job-level completion marker written AFTER every
-    * shard landed (a single atomic object PUT) is what readers should
-    * key on — not the rename of each shard.
+    * .atomicBuild]] on a scheme'd dir / [[graft.operators.TrainExport]]):
+    * the dot-prefixed temps already hide in-progress bytes from the
+    * suffix-filtered listing, and a job-level completion marker written
+    * AFTER every shard landed (a single atomic object PUT) is what
+    * readers should key on — not the rename of each shard.
     */
   def write(records: DataFrame, dir: String): Unit = {
     val out = dir
@@ -1355,61 +1355,6 @@ object Warc {
       .unionByName(resolved)
   }
 
-  /** Schema of [[revisitIndex]]: [[memberSchema]] plus the capture's
-    * record id and the revisit-resolution headers — the CDX columns a
-    * deduplicated archive's consumers need (Common Crawl's CDX carries
-    * the digest per capture for exactly this reason).
-    */
-  val revisitIndexSchema: StructType = StructType(
-    Seq(
-      StructField("path", StringType),
-      StructField("member_offset", LongType),
-      StructField("member_len", LongType),
-      StructField("warc_type", StringType),
-      StructField("record_id", StringType),
-      StructField("target_uri", StringType),
-      StructField("warc_date", StringType),
-      StructField("content_length", LongType),
-      StructField("payload_digest", StringType),
-      StructField("refers_to", StringType),
-      StructField("malformed", StringType)
-    )
-  )
-
-  /** [[memberIndex]] extended with record ids and the revisit headers —
-    * same one-streaming-pass-per-shard walk, member-sized residency; the
-    * digest comes from record HEADERS, never from decoding payloads, so
-    * the index build reads each shard once and materializes nothing.
-    */
-  def revisitIndex(spark: SparkSession, dir: String, glob: String = "*.warc.gz"): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(revisitIndexSchema)
-    val paths = listShardPaths(spark, dir, glob)
-    val hconf = graft.util.HadoopConfs.capture(spark)
-    spark
-      .createDataset(paths)(org.apache.spark.sql.Encoders.STRING)
-      .repartition(math.max(paths.size, 1))
-      .mapPartitions { it =>
-        val conf = graft.util.HadoopConfs.build(hconf)
-        it.flatMap { pathStr =>
-          val p = new org.apache.hadoop.fs.Path(pathStr)
-          val in = p.getFileSystem(conf).open(p)
-          val rows = new GzipMemberIterator(in).flatMap { m =>
-            if (m.malformed != null)
-              Some(Row(pathStr, m.offset, 0L, null, null, null, null, null, null, null, m.malformed))
-            else
-              parseShard(pathStr, m.bytes).headOption.map { w =>
-                Row(
-                  pathStr, m.offset, m.clen,
-                  w.warcType, w.recordId, w.targetUri, w.warcDate, w.contentLength,
-                  w.payloadDigest, w.refersTo, w.malformed
-                )
-              }
-          }
-          closeOnExhaust(rows, () => in.close())
-        }
-      }(enc)
-  }
-
   /** [[read]] with the revisit-resolution headers surfaced — the walk a
     * deduplicated archive's consumers run. Same streaming framer,
     * record-sized residency; `read()`'s public 10-column schema stays
@@ -1456,8 +1401,8 @@ object Warc {
     * place, and ONE digest-keyed join routing each revisit to its
     * original's decoded body — revisit clusters meet digest-keyed, never
     * all-pairs, and no payload byte is read twice. (Resolving a SMALL
-    * capture subset is the other access pattern: [[revisitIndex]] rows
-    * join on digest and the original members come back through
+    * capture subset is the other access pattern: captures join their
+    * originals on digest and the original members come back through
     * [[fetch]]'s ranged point reads — k captures cost k few-KB seeks,
     * never a shard walk. This function deliberately does NOT use point
     * reads: fetching every original individually re-opens shards per
@@ -1639,7 +1584,7 @@ object Warc {
       malformed: String,
       // optional revisit-resolution headers (ISO 28500 §6.7.2); null when
       // absent — [[read]]'s 10-column schema never surfaces them, only
-      // [[revisitIndex]] does
+      // [[readWithRevisitHeaders]] does
       refersTo: String = null,
       payloadDigest: String = null
   )

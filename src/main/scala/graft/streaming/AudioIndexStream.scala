@@ -7,12 +7,12 @@ import graft.operators.{Audio, Indexes}
 /** Incremental audio-dedup-index maintenance: append each micro-batch of
   * NEW clips' pad-invariant fingerprints into a persisted
   * [[Audio.ensureAudioFpIndex]] asset without re-decoding the corpus —
-  * the audio twin of [[MediaIndexStream]]. A continuously-ingesting media
+  * the audio twin of [[VideoIndexStream]]. A continuously-ingesting media
   * corpus keeps its dedup verdicts exact without ever re-publishing the
   * whole asset.
   *
-  * Discipline (the MediaIndexStream contract, fingerprints instead of
-  * dHashes): the index's source of truth is the per-doc table (`docs/`,
+  * Discipline (the [[VideoIndexStream]] contract, fingerprints instead of
+  * scene hashes): the index's source of truth is the per-doc table (`docs/`,
   * one (doc_id, fingerprint) row per clip — a pure function of the clip's
   * payload, so replayed batches are bit-identical). An upsert decodes
   * ONLY the batch and writes its rows under `delta/batch_id=N` —

@@ -13,7 +13,7 @@ import graft.sources.Warc
   * rows that later merge into the sorted index shards.
   *
   * Mechanics are the established journaled-swap discipline
-  * ([[AudioIndexStream]] / [[VectorIndexStream]]): each batch indexes
+  * ([[AudioIndexStream]] / [[SubstrIndexStream]]): each batch indexes
   * ONLY its new shards (a path glob — capture rows are per-member, so
   * shard-additive by construction) and overwrites its own
   * `delta/batch_id=N` (replay-idempotent); reads are base ∪ outstanding

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions.col
 import graft.operators.Indexes
 
 /** The delta-fold discipline every incremental index asset shares (the
-  * text postings, image/audio/video, substring-gram, PQ-code, CDX,
-  * curation-gate and semantic-cell folds). Each fold owns its
+  * audio/video, substring-gram, CDX, curation-gate and semantic-cell
+  * folds). Each fold owns its
   * derivations; this engine owns the decisions they have in common, and
   * makes each one once:
   *

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import graft.util.Cols._
 
 /** A gap-closed user session emitted by [[EventStreams.streamingSessions]]. */
@@ -51,26 +51,6 @@ object EventStreams {
         col("sum_value")
       )
 
-  /** HOPPING (sliding) windowed counts/sums: 1-hour windows every 15
-    * minutes, each event expanding map-side into its 4 overlapping
-    * windows before the hash aggregate (q_events_sliding's shape). Under
-    * streaming the watermark still bounds state: a window's state is
-    * droppable once the watermark passes its END, exactly as for tumbling
-    * windows — overlap multiplies live windows by size/slide (4×), not by
-    * the corpus.
-    */
-  def slidingStats(eventsWithTime: DataFrame): DataFrame =
-    eventsWithTime
-      .withWatermark("event_time", "2 hours")
-      .groupBy(window(col("event_time"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sumDec2(col("value")).as("sum_value"))
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"),
-        col("n"),
-        col("sum_value")
-      )
-
   /** Input record for the stateful per-user aggregator. */
   case class UserEvent(
       user_id: Long,
@@ -79,92 +59,29 @@ object EventStreams {
       event_time: java.sql.Timestamp
   )
 
-  /** Evolving per-user rollup emitted on every trigger. */
+  /** Per-user rollup: event count and value total. */
   case class UserStats(user_id: Long, n_events: Long, total_value: Double)
 
-  private def updateUser(ttlMs: Long)(
-      userId: Long,
-      events: Iterator[UserEvent],
-      state: GroupState[UserStats]
-  ): UserStats = {
-    if (state.hasTimedOut) {
-      // Idle past the TTL (watermark passed last-event-time + ttl): emit the
-      // final rollup and drop the state entry, so long-running state is
-      // bounded by ACTIVE users, never the all-time user universe.
-      val last = state.get
-      state.remove()
-      last
-    } else {
-      val prev = state.getOption.getOrElse(UserStats(userId, 0L, 0.0))
-      val batch = events.toSeq
-      val next = UserStats(
-        userId,
-        prev.n_events + batch.size,
-        prev.total_value + batch.map(_.value).sum
-      )
-      state.update(next)
-      state.setTimeoutTimestamp(batch.map(_.event_time.getTime).max + ttlMs)
-      next
-    }
-  }
-
-  /** Arbitrary stateful processing (`mapGroupsWithState`): a per-user
-    * running rollup that survives across triggers. State is one small case
-    * class per user — spillable by Spark's state store, nothing driver-side —
-    * with an EVENT-TIME TTL: a user idle for `ttlMs` of event time (as
-    * observed through the watermark) has its state emitted once more and
-    * evicted. Event-time (not processing-time) timeout is deliberate:
-    * processing-time timeouts force the microbatch engine to run batches
-    * continuously just to poll timers, and they break replay determinism —
-    * with event-time both the rollup and its evictions are a pure function
-    * of the input stream. In batch execution the watermark never advances,
-    * timeouts never fire, and the result is the plain per-user rollup.
-    */
-  def runningUserStats(
-      events: Dataset[UserEvent],
-      ttlMs: Long = 3600L * 1000
-  ): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("event_time", "10 seconds")
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[UserStats, UserStats](
-        GroupStateTimeout.EventTimeTimeout
-      )(updateUser(ttlMs))
-  }
-
-  /** [[runningUserStats]] re-expressed on Spark 4's `transformWithState`
-    * API (the successor of `mapGroupsWithState`): explicit named state
-    * variables in the state store instead of one opaque case class, and
-    * explicit event-time timers instead of `setTimeoutTimestamp`.
+  /** Per-user running rollup on Spark 4's `transformWithState` API (the
+    * successor of `mapGroupsWithState`): one named state variable in the
+    * state store per user, accumulated over every batch of that user's
+    * events and emitted after each. No timers: under batch execution
+    * there is no watermark to drive them, and none are needed — every
+    * user's events arrive as one group over empty state.
     *
-    * Semantics are kept identical to [[updateUser]] so the two APIs are
-    * parity-testable: accumulate per user, emit the rollup every trigger,
-    * and when a user is idle past `ttlMs` of EVENT time (timer fires once
-    * the watermark passes), emit the final rollup and evict the state.
-    * Exactly one live timer per user — each batch deletes the previous
-    * deadline before registering the new one, so a stale timer can never
-    * evict a still-active user.
-    *
-    * Requires the RocksDB state store provider under streaming execution
-    * (`spark.sql.streaming.stateStore.providerClass`) — which is also the
-    * right provider at scale: state lives off-heap per executor, bounded
-    * by ACTIVE users, with changelog checkpointing.
+    * Runs on the RocksDB state store provider only
+    * (`spark.sql.streaming.stateStore.providerClass`).
     */
-  class UserStatsProcessor(ttlMs: Long, useTimers: Boolean = true)
+  class UserStatsProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, UserEvent, UserStats] {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimeMode, TimerValues, ValueState}
+    import org.apache.spark.sql.streaming.{TTLConfig, TimeMode, TimerValues, ValueState}
 
     @transient private var stats: ValueState[UserStats] = _
-    @transient private var deadline: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       stats = getHandle
         .getValueState[UserStats]("stats", Encoders.product[UserStats], TTLConfig.NONE)
-      deadline = getHandle
-        .getValueState[Long]("deadline", Encoders.scalaLong, TTLConfig.NONE)
-    }
 
     override def handleInputRows(
         userId: Long,
@@ -179,52 +96,12 @@ object EventStreams {
         prev.total_value + batch.map(_.value).sum
       )
       stats.update(next)
-      if (useTimers) {
-        if (deadline.exists()) getHandle.deleteTimer(deadline.get())
-        val due = batch.map(_.event_time.getTime).max + ttlMs
-        getHandle.registerTimer(due)
-        deadline.update(due)
-      }
       Iterator.single(next)
     }
-
-    override def handleExpiredTimer(
-        userId: Long,
-        timers: TimerValues,
-        info: ExpiredTimerInfo
-    ): Iterator[UserStats] = {
-      val out =
-        if (stats.exists()) Iterator.single(stats.get()) else Iterator.empty
-      stats.clear()
-      deadline.clear()
-      out
-    }
   }
 
-  /** [[runningUserStats]] on the `transformWithState` API — same contract,
-    * see [[UserStatsProcessor]].
-    */
-  def runningUserStatsTws(
-      events: Dataset[UserEvent],
-      ttlMs: Long = 3600L * 1000
-  ): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("event_time", "10 seconds")
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new UserStatsProcessor(ttlMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update()
-      )
-  }
-
-  /** [[runningUserStatsTws]] under BATCH execution: same processor, but
-    * `TimeMode.None` and no timers — batch has no watermark to drive
-    * event-time timers (they throw), and none are needed: every user's
-    * events arrive as one group over empty state, so the emitted rollup
-    * is the complete per-user aggregate. One operator, two runtimes,
-    * like hourlyStats.
+  /** [[UserStatsProcessor]] under BATCH execution (`TimeMode.None`): the
+    * emitted rollup is the complete per-user aggregate.
     */
   def runningUserStatsTwsBatch(events: Dataset[UserEvent]): Dataset[UserStats] = {
     import events.sparkSession.implicits._
@@ -236,72 +113,22 @@ object EventStreams {
     events
       .groupByKey(_.user_id)
       .transformWithState(
-        new UserStatsProcessor(0L, useTimers = false),
+        new UserStatsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update()
       )
   }
-
-  /** Stream-stream interval join (attribution): each left event matched to
-    * the same key's right events inside `[left_time - lookback, left_time]`.
-    * Both sides carry watermarks and the join condition bounds event-time
-    * distance, so Spark can size the join state to watermark + lookback and
-    * evict behind it — the REQUIRED shape for an unbounded stream-stream
-    * join (an unconstrained join's state grows without limit). Inner
-    * matches emit as they arrive; state cleanup rides the watermarks.
-    */
-  def streamIntervalJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      lookback: String = "1 hour",
-      delay: String = "10 seconds"
-  ): DataFrame = {
-    val l = left
-      .select(col(key), col("event_time").as("l_time"), col("value").as("l_value"))
-      .withWatermark("l_time", delay)
-    val r = right
-      .select(
-        col(key).as("_rk"),
-        col("event_time").as("r_time"),
-        col("value").as("r_value")
-      )
-      .withWatermark("r_time", delay)
-    l.join(
-      r,
-      col(key) === col("_rk") &&
-        col("r_time") >= col("l_time") - expr(s"INTERVAL $lookback") &&
-        col("r_time") <= col("l_time")
-    ).drop("_rk")
-  }
-
-  /** Streaming exact dedup: first occurrence of each key combination wins;
-    * duplicates arriving within the watermark horizon are suppressed, and
-    * the per-key state is dropped once the watermark passes it
-    * (`dropDuplicatesWithinWatermark`), so dedup state is bounded by the
-    * horizon's key arrival rate — never by the all-time key universe. The
-    * streaming face of the batch `d_exact` operator: at 100 TB+ the batch
-    * pass dedups the corpus and this keeps the incremental feed clean.
-    */
-  def streamingDedup(
-      eventsWithTime: DataFrame,
-      keys: Seq[String],
-      delay: String = "10 seconds"
-  ): DataFrame =
-    eventsWithTime
-      .withWatermark("event_time", delay)
-      .dropDuplicatesWithinWatermark(keys)
 
   /** Streaming sessionization (`flatMapGroupsWithState`, Append mode): a
     * session closes when a user is idle past `gapMs` of EVENT time, as
     * observed through the watermark — the streaming face of the batch
     * `q_sessionize` window query, emitting each closed session exactly
     * once. State per user is one open session (4 numbers); eviction rides
-    * the same event-time timeout as the TTL above, so a stream over any
-    * user cardinality holds state only for currently-active users. Late
-    * events inside the watermark delay still extend their session; events
-    * later than that are dropped by the watermark, which is the documented
-    * trade of every watermarked streaming operator.
+    * an event-time timeout at the session's last event + gap, so a stream
+    * over any user cardinality holds state only for currently-active
+    * users. Late events inside the watermark delay still extend their
+    * session; events later than that are dropped by the watermark, which
+    * is the documented trade of every watermarked streaming operator.
     */
   def streamingSessions(
       events: Dataset[UserEvent],
@@ -345,23 +172,4 @@ object EventStreams {
         }
       }
   }
-
-  /** Idempotent (exactly-once-per-batch) file sink via foreachBatch: each
-    * micro-batch lands in a directory keyed by its batchId, and a replayed
-    * batch (the at-least-once case every restart produces) OVERWRITES its
-    * own directory instead of appending duplicates. This is the standard
-    * exactly-once recipe for sinks without transactional append: make the
-    * write idempotent on (batchId), let the streaming engine replay freely.
-    * Readers see `<dir>/batch_id=N/...` — a normal partitioned parquet
-    * table.
-    */
-  def idempotentParquetSink(
-      df: DataFrame,
-      outDir: String
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      batch.write
-        .mode("overwrite")
-        .parquet(s"$outDir/batch_id=$batchId")
-    }
 }

@@ -7,7 +7,7 @@ import graft.util.Cols.md5Long
 
 /** Incremental maintenance of the persisted ExactSubstr gram index
   * ([[Dedup.ensureSubstrGramIndex]]) — the text-substring twin of
-  * [[AudioIndexStream]]/[[MediaIndexStream]]: a continuously-ingesting
+  * [[AudioIndexStream]]/[[VideoIndexStream]]: a continuously-ingesting
   * corpus keeps span-removal verdicts exact without ever re-tokenizing the
   * standing corpus or re-publishing the whole asset.
   *
@@ -29,9 +29,8 @@ import graft.util.Cols.md5Long
   * deltas into the base (after which "exclude my partition" can no longer
   * reconstruct the pre-batch state), the clean output is WRITE-ONCE: an
   * existing `clean/batch_id=N` partition is the idempotency marker and a
-  * replay skips the recompute — the same exactly-once-by-marker recipe as
-  * the CDC epoch ledger ([[MergeStream]]), with the partition directory as
-  * the ledger entry.
+  * replay skips the recompute — exactly-once by marker, with the partition
+  * directory as the ledger entry.
   */
 object SubstrIndexStream {
 

@@ -7,7 +7,7 @@ import graft.operators.{Indexes, Video}
 /** Incremental video scene-index maintenance: append each micro-batch of
   * NEW videos' scene-hash signatures into a persisted
   * [[Video.ensureSceneIndex]] asset without re-decoding the corpus — the
-  * video twin of [[MediaIndexStream]]/[[AudioIndexStream]]. A
+  * video twin of [[AudioIndexStream]]. A
   * continuously-ingesting media corpus keeps its near-dup verdicts exact
   * without ever re-publishing the whole asset.
   *

@@ -56,10 +56,6 @@ object Cols {
   def md5Long(c: Column): Column =
     conv(substring(md5(c.cast(StringType)), 1, 15), 16, 10).cast(LongType)
 
-  /** Salted family of [[md5Long]] — the i-th MinHash permutation. */
-  def md5LongSalted(c: Column, salt: Int): Column =
-    md5Long(concat(c.cast(StringType), lit("#" + salt.toString)))
-
   /** Dot product of two numeric array columns, computed left-to-right in
     * double (bit-reproducible across engines; DuckDB `list_dot_product`
     * iterates in the same order). Native codegen expression — the
@@ -70,8 +66,6 @@ object Cols {
     ExpressionUtils.column(
       graft.functions.VecDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b))
     )
-
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity, single codegen pass (three independent
     * left-to-right accumulators — bit-identical to dot/(|a||b|) composed).

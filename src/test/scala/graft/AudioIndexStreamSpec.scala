@@ -9,7 +9,7 @@ import graft.streaming.AudioIndexStream
 /** Incremental audio-dedup-index maintenance: delta append, live merged
   * cluster view, debt-policy compaction with the crash-safe journaled
   * swap, replay exactly-once, and the no-corpus-rescan plan pin — the
-  * audio twin of the MediaIndexStream contract. The shared crash states
+  * audio twin of the VideoIndexStream contract. The shared crash states
   * are also the audio row of [[DeltaFoldSpec]].
   */
 class AudioIndexStreamSpec extends AnyFunSuite {

@@ -64,7 +64,7 @@ class DeltaFoldSpec extends AnyFunSuite {
     Files.createTempDirectory(s"graft_dfold_$tag").toString + "/asset"
 
   /** Synthetic documents: the media payloads derive from the doc id, the
-    * postings and grams from the text — overlapping progressions over 997
+    * grams from the text — overlapping progressions over 997
     * letter-only words (the tokenizer keeps `[a-z]` runs), so documents
     * share some spans.
     */
@@ -115,22 +115,6 @@ class DeltaFoldSpec extends AnyFunSuite {
 
   private val folds: Seq[Fold] = Seq(
     Fold(
-      "text",
-      Seq("postings", "top_bigram", "stats"),
-      dir => TextIndex.ensureBuilt(docs(0, 30), dir),
-      (dir, k, c) => TextIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
-      dir => TextIndexStream.compactDeltas(spark, dir),
-      dir => rows(TextIndexStream.readPostings(spark, dir).select("term", "doc_id", "tf", "dl"))
-    ),
-    Fold(
-      "media",
-      Seq("docs", "bands", "reps"),
-      dir => Multimodal.ensureDhashIndex(spark, docs(0, 30), dir),
-      (dir, k, c) => MediaIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
-      dir => MediaIndexStream.compactDeltas(spark, dir),
-      dir => rows(MediaIndexStream.readDocs(spark, dir))
-    ),
-    Fold(
       "audio",
       Seq("docs", "clusters"),
       dir => Audio.ensureAudioFpIndex(spark, docs(0, 30), dir),
@@ -155,18 +139,6 @@ class DeltaFoldSpec extends AnyFunSuite {
       (dir, k, c) => SubstrIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
       dir => SubstrIndexStream.compactDeltas(spark, dir),
       dir => rows(SubstrIndexStream.readGrams(spark, dir))
-    ),
-    Fold(
-      "vector",
-      Seq("codes"),
-      dir => IvfPq.ensureBuilt(emb.filter(col("vec_id") < 400), dir, cellCol = Some("label")),
-      (dir, k, c) =>
-        VectorIndexStream.upsertBatch(
-          emb.filter(col("vec_id") >= 400 + 50 * k && col("vec_id") < 450 + 50 * k)
-            .select("vec_id", "embedding"),
-          dir, k.toLong, dim = 64, compactAt = c),
-      dir => IvfPq.compactDeltas(spark, dir),
-      dir => rows(IvfPq.readCodes(spark, dir).select("vec_id", "cell", "codes"))
     ),
     Fold(
       "cdx",

@@ -111,43 +111,6 @@ class InvertedIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("BM25 reads are delta-aware: streamed docs count in postings and totals") {
-    import graft.operators.TextIndex
-    import graft.streaming.TextIndexStream
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_delta").toString + "/idx"
-    TextIndex.ensureBuilt(docs, dir)
-    val (n0, s0) = TextIndex.corpusTotals(spark, dir)
-    // stream one NEW doc in, below the compaction debt threshold is not
-    // guaranteed — disable compaction so the delta is what the read sees
-    val batch = Seq((4L, "be quick be")).toDF("doc_id", "text")
-    TextIndexStream.upsertBatch(batch, dir, batchId = 0L, compactAt = 0.0)
-    val (n1, s1) = TextIndex.corpusTotals(spark, dir)
-    assert((n1, s1) === (n0 + 1, s0 + 3))
-    // a replayed batch must not double-count (bit-identical delta rows)
-    TextIndexStream.upsertBatch(batch, dir, batchId = 0L, compactAt = 0.0)
-    assert(TextIndex.corpusTotals(spark, dir) === ((n0 + 1, s0 + 3)))
-    val hit = TextIndex
-      .searchBm25(spark, dir, Seq("quick"), 10)
-      .select("doc_id")
-      .as[Long]
-      .collect()
-      .toSeq
-    assert(hit === Seq(4L), "the streamed doc must be retrievable pre-compaction")
-    // and the delta-aware scores must equal the post-compaction scores
-    val pre = TextIndex
-      .searchBm25(spark, dir, Seq("be", "to"), 10)
-      .as[(Long, Long, Long)]
-      .collect()
-      .toSeq
-    TextIndexStream.compactDeltas(spark, dir)
-    val post = TextIndex
-      .searchBm25(spark, dir, Seq("be", "to"), 10)
-      .as[(Long, Long, Long)]
-      .collect()
-      .toSeq
-    assert(pre === post, "delta-aware read must match the compacted truth")
-  }
-
   test("phrase search finds every adjacency, including repeats") {
     val idx = TextAnalysis.invertedIndex(docs)
     val hits = TextAnalysis

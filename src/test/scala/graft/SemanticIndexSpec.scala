@@ -56,28 +56,28 @@ class SemanticIndexSpec extends AnyFunSuite {
     val withB = emb.withColumn("bkt", bkt)
     val delta = withB.filter(col("bkt") < 10).drop("bkt")
     val corpus = withB.filter(col("bkt") >= 10).drop("bkt")
-    val out = java.nio.file.Files.createTempDirectory("graft_sem_stream").toString + "/flags"
-
-    graft.streaming.SemanticStream.flagBatch(delta, sf, corpus, out, 0L, threshold = 0.30)
-    val batchRead = spark.read.parquet(s"$out/batch_id=0")
-    // the stream flags agree row-for-row with the batch operator
-    val expect = Similarity
-      .semanticDeltaDupsScaled(delta, corpus, 0.30, targetCellSize = 50, maxCellSize = 100)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(
         col("vec_id").cast("long"),
         col("cell").cast("long"),
         col("n_dups").cast("long"),
+        col("best_match").cast("long"),
         col("is_unique")
-      ).as[(Long, Long, Long, Boolean)].collect().toSeq.sorted
-    assert(rows(batchRead) === rows(expect.withColumn("is_unique", col("is_unique"))))
-    assert(batchRead.filter(col("is_dup") === col("is_unique")).count() === 0L)
+      ).as[(Long, Long, Long, Option[Long], Boolean)].collect().toSeq.sortBy(_._1)
+    def flags() = rows(SemanticIndex.deltaDups(sf, delta, corpus, 0.30, 50, 100))
 
-    // REPLAY: the same batch id overwrites its own directory with
-    // bit-identical rows — corpus untouched, no duplicate flag rows
-    graft.streaming.SemanticStream.flagBatch(delta, sf, corpus, out, 0L, threshold = 0.30)
-    assert(rows(spark.read.parquet(s"$out/batch_id=0")) === rows(expect))
-    assert(spark.read.parquet(out).count() === delta.count())
+    // the registered ingest operator (over the persisted index) agrees
+    // row-for-row with the fresh derivation, one row per delta vector
+    val expect = rows(Similarity
+      .semanticDeltaDupsScaled(delta, corpus, 0.30, targetCellSize = 50, maxCellSize = 100))
+    val first = flags()
+    assert(first === expect)
+    assert(first.size.toLong === delta.count())
+    assert(first.forall(r => r._5 === r._4.isEmpty), "unique iff no best match")
+
+    // REPLAY: the same batch against the published asset flags the same
+    // rows bit for bit
+    assert(flags() === first)
   }
 
   private def cellRows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =

@@ -85,9 +85,9 @@ class SimilaritySpec extends AnyFunSuite {
         .mapValues(_.map(_._2).toSet)
         .toMap
     val brute = topkSet(Similarity.bruteTopK(queries, corpus, k = 5))
-    val ivf = topkSet(
-      Similarity.ivfTopKKmeans(queries, corpus, k = 5, nProbe = 3, kCells = 10, iters = 4)
-    )
+    // trained coarse quantizer: k-means cells instead of a labelled column
+    val celled = corpus.join(Similarity.kmeansCells(corpus, kCells = 10, iters = 4), Seq("vec_id"))
+    val ivf = topkSet(Similarity.ivfTopK(queries, celled, k = 5, nProbe = 3, cellCol = "cell"))
     val recalls = brute.map { case (q, trueSet) =>
       ivf.getOrElse(q, Set.empty).intersect(trueSet).size.toDouble / trueSet.size
     }
@@ -290,8 +290,12 @@ class SimilaritySpec extends AnyFunSuite {
       .view
       .mapValues(_.map(_.getLong(1)).toSet)
       .toMap
+    // the persisted two-stage search: ADC shortlist over the stored codes,
+    // exact L2 rerank of the shortlist
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString + "/idx"
+    Pq.ensureBuilt(emb, dir)
     val reranked = Pq
-      .pqTopKReranked(q, emb, cb, dim = 64, k = 5, shortlist = 100)
+      .searchReranked(spark, dir, q, emb, dim = 64, k = 5, shortlist = 100)
       .collect()
       .groupBy(_.getLong(0))
       .view
@@ -301,7 +305,7 @@ class SimilaritySpec extends AnyFunSuite {
       reranked.getOrElse(qid, Set.empty).intersect(t).size.toDouble / t.size
     }
     val mean = recalls.sum / recalls.size
-    assert(mean >= 0.8, s"mean recall@5 after 50-candidate rerank was $mean")
+    assert(mean >= 0.8, s"mean recall@5 after 100-candidate rerank was $mean")
   }
 
   test("dimCovariance: hand-computed values, partition-invariant native aggregate") {

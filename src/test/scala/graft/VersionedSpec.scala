@@ -167,70 +167,6 @@ class VersionedSpec extends AnyFunSuite {
     assert(state() === Set((1L, "AA", 99)))
   }
 
-  test("commitChecked: a contract-violating candidate never becomes a version") {
-    import graft.operators.Expectations.{RowCheck, UniqueCheck}
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val dir = freshDir()
-    val checks = Seq(
-      UniqueCheck("id_unique", col("id")),
-      RowCheck("v_pos", !coalesce(col("v") > 0, lit(false)))
-    )
-    val good = Versioned.commitChecked(Seq((1L, 5), (2L, 6)).toDF("id", "v"), dir, checks)
-    assert(good.version === Some(1))
-    assert(good.report.forall(_.getAs[Boolean]("passed")))
-    val bad = Versioned.commitChecked(
-      Seq((3L, 7), (3L, -1)).toDF("id", "v"), // dup key AND negative value
-      dir,
-      checks
-    )
-    assert(bad.version === None, "violating candidate rejected")
-    assert(Versioned.latestVersion(dir) === 1, "table history untouched by the reject")
-    assert(
-      bad.report.filter(!_.getAs[Boolean]("passed")).map(_.getAs[String]("check_name")).sorted
-        === Array("id_unique", "v_pos"),
-      "report names every failed check"
-    )
-    assert(Versioned.readVersion(spark, dir).count() === 2L)
-    // a later passing commit proceeds normally
-    assert(
-      Versioned.commitChecked(Seq((3L, 7)).toDF("id", "v"), dir, checks).version === Some(2)
-    )
-  }
-
-  test("commitMergeOnce survives vacuum: retired manifests neither crash nor reopen old epochs") {
-    val dir = freshDir()
-    assert(
-      Versioned
-        .commitMergeOnce(Seq((1L, "a")).toDF("id", "v"), dir, epochId = 0L)
-        .contains(1)
-    )
-    assert(
-      Versioned
-        .commitMergeOnce(Seq((1L, "A")).toDF("id", "v"), dir, epochId = 1L)
-        .contains(2)
-    )
-    Versioned.compactMerged(spark, dir, "id") // v3
-    Versioned.vacuum(dir, retainLast = 1) // retires v1/v2 — manifest gaps appear
-    // 1) a NEW epoch after vacuum must not crash on the manifest gaps
-    assert(
-      Versioned
-        .commitMergeOnce(Seq((2L, "b")).toDF("id", "v"), dir, epochId = 2L)
-        .contains(4)
-    )
-    // 2) replays of epochs whose manifests were vacuumed stay no-ops (the
-    // _epochs ledger outlives the manifests) — a re-applied old epoch
-    // would resurrect stale state with a NEWER _commit and win resolution
-    assert(Versioned.commitMergeOnce(Seq((1L, "a")).toDF("id", "v"), dir, epochId = 0L) === None)
-    assert(
-      Versioned
-        .readMerged(spark, dir, "id")
-        .select("id", "v")
-        .as[(Long, String)]
-        .collect()
-        .toSet === Set((1L, "A"), (2L, "b"))
-    )
-  }
-
   test("vacuum is idempotent and a full-retention run is a no-op") {
     val dir = freshDir()
     (1 to 3).foreach(i => Versioned.commit(Seq((i.toLong, s"v$i")).toDF("id", "s"), dir))

@@ -9,7 +9,7 @@ import graft.streaming.VideoIndexStream
 /** Incremental video scene-index maintenance: delta append, live merged
   * sig/aggregate views, debt-policy compaction with the crash-safe
   * journaled swap, replay exactly-once, and the no-corpus-rescan plan
-  * pin — the video twin of the MediaIndexStream contract.
+  * pin — the video twin of the AudioIndexStream contract.
   */
 class VideoIndexStreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
