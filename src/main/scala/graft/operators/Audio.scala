@@ -390,22 +390,6 @@ object Audio {
       spectralPeaks(spark, withAudioPayloadTones(spark, docs)).toDF()
     ).select(col("doc_id"), col("fingerprint"))
 
-  /** Persisted audio-fingerprint index location — the stale-proof
-    * fingerprint contract keyed on the corpus membership (fixture clip
-    * content is a pure function of doc_id; a production build fingerprints
-    * the payload bytes).
-    */
-  def audioFpIndexDir(sfDir: String, corpusDocs: DataFrame): String =
-    // layout=2: per-doc `docs/` table added beside the cluster aggregate —
-    // the source-of-truth rows [[graft.streaming.AudioIndexStream]] grows
-    // incrementally; retires docs-less layout-1 assets
-    Indexes.fingerprintDirOn("audio-fp-reps", sfDir, corpusDocs, "doc_id", "doc_id", "layout=2")
-
-  /** Persisted SPECTRAL-fingerprint index location — same contract, keyed
-    * separately (different fingerprint function ⇒ different asset). */
-  def audioSpectralIndexDir(sfDir: String, corpusDocs: DataFrame): String =
-    Indexes.fingerprintDirOn("audio-spec-reps", sfDir, corpusDocs, "doc_id", "doc_id", "layout=1")
-
   /** The (fingerprint, rep, n_variants) cluster aggregate over per-doc
     * fingerprint rows — the derived table the dedup verdict joins;
     * partial-aggregable, two-column input.
@@ -418,23 +402,31 @@ object Audio {
   /** Build the persisted audio-dedup index ONCE per corpus version: decode
     * every corpus clip, compute the pad-invariant fingerprint, keep the
     * per-doc `docs/` rows (the index's source of truth — what incremental
-    * ingest appends to), collapse to the `clusters/` aggregate (written
-    * LAST — completion marker), publish atomically. The decode — the
-    * corpus-linear cost — is paid here exactly once; the daily-ingest
-    * path ([[audioDeltaDups]]) reads these tables only.
+    * ingest appends to), collapse to the `clusters/` aggregate, publish
+    * atomically. The decode — the corpus-linear cost — is paid here
+    * exactly once; the daily-ingest path ([[audioDeltaDups]]) reads these
+    * tables only. Keyed on the corpus membership: fixture clip content is
+    * a pure function of doc_id (a production build fingerprints the
+    * payload bytes).
     */
-  def ensureAudioFpIndex(spark: SparkSession, corpusDocs: DataFrame, dir: String): Unit =
-    buildFpIndex(energyFp(spark, corpusDocs), dir)
+  def ensureAudioFpIndex(sfDir: String, corpusDocs: DataFrame): String =
+    // layout=2: per-doc `docs/` table added beside the cluster aggregate —
+    // the source-of-truth rows [[graft.streaming.AudioIndexStream]] grows
+    // incrementally; retires docs-less layout-1 assets
+    fpIndex("audio-fp-reps", "layout=2", sfDir, corpusDocs)(energyFp)
 
   /** Spectral twin of [[ensureAudioFpIndex]]: decode + DFT the corpus
     * once, persist (doc_id, spectral fingerprint) + the cluster
-    * aggregate, publish atomically. */
-  def ensureAudioSpectralIndex(spark: SparkSession, corpusDocs: DataFrame, dir: String): Unit =
-    buildFpIndex(spectralFp(spark, corpusDocs), dir)
+    * aggregate — keyed separately (different fingerprint function ⇒
+    * different asset). */
+  def ensureAudioSpectralIndex(sfDir: String, corpusDocs: DataFrame): String =
+    fpIndex("audio-spec-reps", "layout=1", sfDir, corpusDocs)(spectralFp)
 
-  private def buildFpIndex(fingerprints: DataFrame, dir: String): Unit =
-    Indexes.atomicBuild(dir, "clusters/_SUCCESS") { tmp =>
-      val fps = fingerprints.localCheckpoint()
+  private def fpIndex(family: String, params: String, sfDir: String, corpusDocs: DataFrame)(
+      fingerprints: (SparkSession, DataFrame) => DataFrame
+  ): String =
+    Indexes.ensure(family, sfDir, corpusDocs, "doc_id", "doc_id", params) { tmp =>
+      val fps = fingerprints(corpusDocs.sparkSession, corpusDocs).localCheckpoint()
       fps.write.mode("overwrite").parquet(s"$tmp/docs")
       fpClusters(fps).write.mode("overwrite").parquet(s"$tmp/clusters")
     }

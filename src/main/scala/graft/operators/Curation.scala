@@ -972,8 +972,8 @@ object Curation {
       )
   }
 
-  def ensureGateAsset(sfDir: String, docs: DataFrame): String = {
-    val dir = graft.operators.Indexes.fingerprintDirOn(
+  def ensureGateAsset(sfDir: String, docs: DataFrame): String =
+    Indexes.ensure(
       "curation-gates", sfDir, docs, "doc_id", "struct(text, lang)",
       // v3: gate verdicts derived via the foldable sufficient-statistics
       // layout (puregates/docstats/doctoks + deriveGates); toxicity =
@@ -982,8 +982,7 @@ object Curation {
       // degenerate empty-token doc keeps its tercile bucket (identical
       // bits on any corpus without such docs; the salt invalidates assets
       // a v3 build left with a NULL bucket)
-      "v=4")
-    graft.operators.Indexes.atomicBuild(dir, "gates/_SUCCESS") { tmp =>
+      "v=4") { tmp =>
       val spark = docs.sparkSession
       val (pg, ds, dt) = pureStats(docs)
       pg.write.mode("overwrite").parquet(s"$tmp/puregates")
@@ -991,15 +990,13 @@ object Curation {
       dt.write.mode("overwrite").parquet(s"$tmp/doctoks")
       // derive from the WRITTEN statistics (not the in-memory frames), so
       // the wholesale build and a later fold run deriveGates over the
-      // same physical inputs — gates/ lands LAST as the completion marker
+      // same physical inputs
       deriveGates(
         spark.read.parquet(s"$tmp/puregates"),
         spark.read.parquet(s"$tmp/docstats"),
         spark.read.parquet(s"$tmp/doctoks")
       ).write.mode("overwrite").parquet(s"$tmp/gates")
     }
-    dir
-  }
 
   /** Read-side of [[ensureGateAsset]]: (doc_id, gopher_keep, c4_keep,
     * lang, rep_keep, tox_keep, kn_score_e9, bucket).

@@ -927,14 +927,6 @@ object Dedup {
   /** Gram-hash bucket count for the persisted substring index layout. */
   val SubstrGramBuckets = 64
 
-  /** Content-fingerprinted directory of the persisted corpus gram index
-    * (see [[ensureSubstrGramIndex]]).
-    */
-  def substrGramIndexDir(sfDir: String, corpusDocs: DataFrame): String =
-    Indexes.fingerprintDirOn(
-      "substr-grams", sfDir, corpusDocs, "doc_id", "text",
-      s"n=4,buckets=$SubstrGramBuckets")
-
   /** Build ONCE per corpus version the persisted duplicated-substring
     * index: the DISTINCT 60-bit hashes of every token-4-gram the corpus
     * contains, written bucketed by `b = gh mod `[[SubstrGramBuckets]] so a
@@ -945,12 +937,10 @@ object Dedup {
     * corpus-linear shingle scan is paid exactly once per corpus version,
     * never per ingest batch.
     */
-  def ensureSubstrGramIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      corpusDocs: DataFrame,
-      dir: String
-  ): Unit =
-    Indexes.atomicBuild(dir, "grams/_SUCCESS") { tmp =>
+  def ensureSubstrGramIndex(sfDir: String, corpusDocs: DataFrame): String =
+    Indexes.ensure(
+      "substr-grams", sfDir, corpusDocs, "doc_id", "text",
+      s"n=4,buckets=$SubstrGramBuckets") { tmp =>
       corpusDocs
         .select(explode(wordShinglesAll(Text.tokensAll(col("text")), 4)).as("g"))
         .select(md5Long(col("g")).as("gh"))

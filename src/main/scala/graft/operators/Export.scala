@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     per-source re-export touches only that source's directories.
   *   - `manifest/` — one row per shard: pack/doc/token counts plus
   *     `content_md5`, the md5 of the member packs' seq_md5 values in
-  *     pack order. Written LAST (completion marker): a manifest row
+  *     pack order. Written after the shards: a manifest row
   *     testifies its shard's bytes are complete — the reader-side
   *     integrity check after a copy, and the diff key between two
   *     export versions (same idea as [[graft.sources.Versioned]]
@@ -41,9 +41,6 @@ object TrainExport {
     * this is thousands of packs per shard — same arithmetic.
     */
   val PacksPerShard = 4
-
-  def defaultDir(sfDir: String, docs: DataFrame): String =
-    Indexes.fingerprintDirOn("train-export", sfDir, docs, "doc_id", "text")
 
   /** The packed-sequence table: (source, pack_id, shard, n_docs,
     * pack_tokens, first_doc, seq_text, seq_md5).
@@ -79,11 +76,11 @@ object TrainExport {
       .withColumn("shard", expr(s"pack_id div ${PacksPerShard.toLong}"))
   }
 
-  /** Build once per corpus version; no-op when `dir` holds a completed
-    * export. Shards first, manifest last (completion marker).
+  /** The export of `docs`, built once per corpus version: shards, then
+    * the manifest derived from them.
     */
-  def ensureBuilt(docs: DataFrame, dir: String): Unit =
-    Indexes.atomicBuild(dir, "manifest/_SUCCESS") { tmp =>
+  def ensure(sfDir: String, docs: DataFrame): String =
+    Indexes.ensure("train-export", sfDir, docs, "doc_id", "text", "") { tmp =>
       val seqs = packedSeqs(docs)
       seqs
         .repartition(col("source"), col("shard"))
@@ -166,7 +163,7 @@ object TrainExport {
   * merge chain + the fixed id table it induces, and the unigram-LM
   * pieces, published once per corpus content fingerprint under the
   * [[Indexes]] contract (stale-proof dir + atomic rename), with an
-  * integrity MANIFEST written LAST as the completion marker.
+  * integrity MANIFEST written after the tables it certifies.
   *
   * Layout under `dir`:
   *   - `merges/`  — (step, x, y, merged, support): the ordered byte-BPE
@@ -196,22 +193,6 @@ object TrainExport {
   */
 object TokenizerExport {
 
-  def defaultDir(
-      sfDir: String,
-      docs: DataFrame,
-      bpeSteps: Int,
-      uniVocab: Int,
-      uniPieceLen: Int,
-      uniRounds: Int
-  ): String =
-    // v= is the TRAINER-CODE version salt: a change to the training
-    // algorithms with unchanged corpus+params must map to a NEW dir, or
-    // the encode queries would silently serve rules the current trainer
-    // no longer produces (the ensureGateAsset discipline)
-    Indexes.fingerprintDirOn(
-      "tokenizer-export", sfDir, docs, "doc_id", "text",
-      s"bpe=$bpeSteps|uv=$uniVocab|upl=$uniPieceLen|ur=$uniRounds|v=1")
-
   /** md5 over a table's canonical row rendering: rows as strings, sorted
     * by a unique order key, joined with '|'. Vocabulary-sized inputs
     * only — the collect_list is bounded by the artifact, never the
@@ -226,18 +207,23 @@ object TokenizerExport {
         count(lit(1)).cast("long").as("n")
       )
 
-  /** Build and atomically publish the artifact; no-op if `dir` already
-    * holds a completed build.
+  /** The artifact for `docs`, built once and atomically published.
+    * Params v= is the TRAINER-CODE version salt: a change to the training
+    * algorithms with unchanged corpus+params must map to a NEW dir, or the
+    * encode queries would silently serve rules the current trainer no
+    * longer produces (the ensureGateAsset discipline).
     */
-  def ensureBuilt(
+  def ensure(
+      sfDir: String,
       docs: DataFrame,
-      dir: String,
       bpeSteps: Int,
       uniVocab: Int,
       uniPieceLen: Int,
       uniRounds: Int
-  ): Unit =
-    Indexes.atomicBuild(dir, "manifest/_SUCCESS") { tmp =>
+  ): String =
+    Indexes.ensure(
+      "tokenizer-export", sfDir, docs, "doc_id", "text",
+      s"bpe=$bpeSteps|uv=$uniVocab|upl=$uniPieceLen|ur=$uniRounds|v=1") { tmp =>
       val spark = docs.sparkSession
       val trainWords = docs
         .select(explode(Text.tokensUnicodeAll(col("text"))).as("word"))

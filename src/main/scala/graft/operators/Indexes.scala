@@ -4,34 +4,40 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Shared contract for persisted index directories ([[IvfIndex]], [[Pq]]).
+/** The build-once asset contract, shared by all 28 asset families (vector
+  * indexes, text and modality indexes, gate and weight tables, exports,
+  * summaries and the WARC fixture archives).
   *
-  * Two guarantees a build-once/search-many index needs at scale:
+  * [[ensure]] is the one asset call. A family's own `ensure…(sfDir,
+  * corpus[, its params]): String` passes its family name, the id/payload
+  * columns and a params string, plus a build body that writes the layout
+  * into the dir it is handed, and gets back `target/<family>/<fp12>`:
   *
   *   1. '''Stale-proof location''': the directory is keyed by a CONTENT
   *      fingerprint — row count, id sum, and an order-insensitive XOR of
-  *      per-row xxhash64(id, embedding) — so a corpus whose vectors change
-  *      IN PLACE (same ids, new embeddings) maps to a new directory instead
-  *      of silently serving the old index. One cheap corpus scan.
-  *   2. '''Atomic publication''': builders write into a process-unique temp
-  *      directory and atomically rename it into place. Readers either see
-  *      no index (and build) or a complete one — never an interleaving of
-  *      two concurrent builders; the rename loser discards its (identical,
-  *      training is deterministic) copy.
+  *      per-row xxhash64(id, payload) — so a corpus whose payload changes
+  *      IN PLACE (same ids, new bytes) maps to a new directory instead of
+  *      silently serving the old asset. `params` carries everything else
+  *      the layout depends on (build knobs, stored columns, a layout
+  *      version), so a CONTRACT change also forces a rebuild. The
+  *      fingerprint catalog makes a warm lookup free of Spark jobs.
+  *   2. '''Atomic publication''': on local/HDFS-class paths the body
+  *      writes into a process-unique temp directory that ONE atomic
+  *      rename moves into place, so the directory's presence is the
+  *      commit. Readers either see no asset (and build) or a complete
+  *      one; a rename loser discards its (identical — builds are
+  *      deterministic) copy. On scheme'd paths — S3/GCS-class stores,
+  *      where "rename" is non-atomic copy+delete — the body writes under
+  *      the final prefix and the root `_SUCCESS` object, PUT last, is the
+  *      commit (object PUTs are atomic and read-after-write consistent on
+  *      current S3/GCS). Either way the published dir carries that root
+  *      marker, written here, never by a family.
   *
-  * Publication dispatches on the store's capabilities: local/HDFS-class
-  * paths use POSIX `ATOMIC_MOVE` (temp dir + one atomic rename); scheme'd
-  * paths — S3/GCS-class stores, where "rename" is non-atomic copy+delete
-  * — use the marker-commit mode ([[markerBuild]]: objects written under
-  * the final prefix, a single completion-marker object PUT LAST as the
-  * read barrier; object PUTs are atomic and read-after-write consistent
-  * on current S3/GCS) and the pointer-committed compaction swap
-  * ([[commitSwapMarker]]/[[liveDir]]). [[TrainExport]]/
-  * [[TokenizerExport]] follow the same manifest-last discipline inside
-  * their layouts. The fingerprinted-location half of the contract is
-  * store-agnostic. `ObjectStoreSpec` drives both the build and the swap
-  * through a foreign-scheme filesystem with no rename-atomicity
-  * assumption.
+  * The fold-maintained assets add the pointer-committed compaction swap
+  * ([[commitSwapMarker]]/[[liveDir]]) and the journaled local swap
+  * ([[commitSwap]]); folds run on a [[copyDir]] of the published asset.
+  * `ObjectStoreSpec` drives the build and the swap through a
+  * foreign-scheme filesystem with no rename-atomicity assumption.
   */
 object Indexes {
 
@@ -112,22 +118,45 @@ object Indexes {
     ()
   }
 
-  /** `target/<family>/<fp12>` for this corpus's content. `params` encodes
-    * everything else the persisted layout depends on — build knobs (kCells,
-    * iters) and stored metadata columns — so a CONTRACT change (not just a
-    * data change) also forces a rebuild instead of silently adopting a
-    * stale index with the wrong columns.
+  private val AssetRoot = "target"
+
+  /** The one asset call: `target/<family>/<fp12>` for `corpus`'s content
+    * under `params`, built by `build` on a miss and published atomically
+    * (see the object doc). `build` is handed the dir to write — a temp dir
+    * on local paths, the final prefix on scheme'd ones — and must be
+    * deterministic, so concurrent builders produce identical assets.
     */
-  def fingerprintDir(
+  def ensure(
       family: String,
       sfDir: String,
       corpus: DataFrame,
-      params: String = ""
-  ): String =
-    fingerprintDirOn(family, sfDir, corpus, "vec_id", "embedding", params)
+      idCol: String,
+      payloadCol: String,
+      params: String
+  )(build: String => Unit): String =
+    ensureUnder(AssetRoot, family, sfDir, corpus, idCol, payloadCol, params)(build)
 
-  /** [[fingerprintDir]] over arbitrary id/payload columns (e.g. a document
-    * table's (doc_id, text)).
+  /** [[ensure]] with the assets under `root` instead of `target` — the
+    * object-store posture (`root` on a scheme'd filesystem) that specs
+    * drive; the fingerprint and catalog entry are the same as
+    * [[ensure]]'s.
+    */
+  private[graft] def ensureUnder(
+      root: String,
+      family: String,
+      sfDir: String,
+      corpus: DataFrame,
+      idCol: String,
+      payloadCol: String,
+      params: String
+  )(build: String => Unit): String = {
+    val dir = root + fingerprintDirOn(family, sfDir, corpus, idCol, payloadCol, params)
+      .stripPrefix(AssetRoot)
+    publish(dir)(build)
+    dir
+  }
+
+  /** `target/<family>/<fp12>` for this frame's (id, payload) content.
     *
     * Steady-state cost: the content fingerprint (a full payload-bytes
     * scan) is computed ONCE per (derivation, file-set) and recorded in
@@ -137,13 +166,13 @@ object Indexes {
     * The scan remains the slow path on a catalog miss (new data, changed
     * files, or a plan shape the catalog can't cheaply identify).
     */
-  def fingerprintDirOn(
+  private def fingerprintDirOn(
       family: String,
       sfDir: String,
       df: DataFrame,
       idCol: String,
       payloadCol: String,
-      params: String = ""
+      params: String
   ): String = {
     val ck = catalogKey(family, sfDir, df, idCol, payloadCol, params)
     ck.flatMap(catalogLookup) match {
@@ -175,7 +204,7 @@ object Indexes {
       )
       .head()
     val key = s"$sfDir|${fp.getLong(0)}|${fp.getLong(1)}|${fp.getLong(2)}|$params"
-    s"target/$family/${md5hex(key).take(12)}"
+    s"$AssetRoot/$family/${md5hex(key).take(12)}"
   }
 
   // ---- fingerprint catalog ---------------------------------------------
@@ -301,32 +330,37 @@ object Indexes {
       .map("%02x".format(_))
       .mkString
 
-  /** Publish a build-once asset at `dir`, complete-or-absent for readers.
-    * No-op if `dir/<marker>` already exists (a completed build).
+  /** The root completion marker every published asset carries. */
+  private val Marker = "_SUCCESS"
+
+  /** Publish a build-once asset at `dir`, complete-or-absent for readers;
+    * a no-op when a completed build is already there. Dispatches on the
+    * directory's URI scheme:
     *
-    * Two publication modes, dispatched on the directory's URI scheme:
-    *
-    *   - '''POSIX/HDFS''' (no scheme — local paths): run `build` against
-    *     a process-unique temp dir, then ONE atomic directory rename into
-    *     place. A concurrent builder that loses the rename discards its
-    *     (identical — builds are deterministic) copy.
+    *   - '''POSIX/HDFS''' (no scheme — local paths): the dir's presence is
+    *     the commit. `build` writes a process-unique temp dir, the marker
+    *     is added, then ONE atomic directory rename moves it into place. A
+    *     concurrent builder that loses the rename discards its (identical)
+    *     copy.
     *   - '''Object store''' (scheme'd paths — resolved through the
     *     session's Hadoop conf, e.g. the `ObjectStoreSpec` shim): there
-    *     is no atomic rename, so [[markerBuild]] writes the asset's
-    *     objects directly under the final prefix and readers key ONLY on
-    *     the completion-marker object, PUT last (a single-object PUT is
-    *     atomic on S3/GCS-class stores). Concurrent builders write
-    *     byte-identical objects (determinism again), so interleaving is
-    *     harmless; a crashed half-build leaves unreferenced objects that
-    *     the next builder's `mode("overwrite")` rewrites — readers never
-    *     saw them, because the marker never landed.
+    *     is no atomic rename, so `build` writes the objects directly under
+    *     the final prefix and readers key ONLY on the marker object, PUT
+    *     last (a single-object PUT is atomic on S3/GCS-class stores).
+    *     Concurrent builders write byte-identical objects, so interleaving
+    *     is harmless; a crashed half-build leaves unreferenced objects that
+    *     the next build's `mode("overwrite")` rewrites — readers never saw
+    *     them, because the marker never landed.
     */
-  def atomicBuild(dir: String, marker: String)(build: String => Unit): Unit =
-    if (schemeOf(dir).isDefined) markerBuild(dir, marker)(build)
-    else if (!new java.io.File(s"$dir/$marker").exists()) {
+  private def publish(dir: String)(build: String => Unit): Unit =
+    if (schemeOf(dir).isDefined) markerBuild(dir)(build)
+    else if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir))) {
       val tmp = s"$dir.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}"
       build(tmp)
-      val src = java.nio.file.Paths.get(tmp)
+      val src = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+      // a build whose single Spark write targets the root already left one
+      if (!java.nio.file.Files.exists(src.resolve(Marker)))
+        java.nio.file.Files.createFile(src.resolve(Marker))
       val dst = java.nio.file.Paths.get(dir)
       Option(dst.getParent).foreach(java.nio.file.Files.createDirectories(_))
       try
@@ -345,17 +379,17 @@ object Indexes {
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
 
   /** The object-store build mode: in-place write + marker-object commit
-    * (see [[atomicBuild]]). The build callback receives the FINAL dir —
-    * no rename ever happens on this path.
+    * (see [[publish]]). The build callback receives the FINAL dir — no
+    * rename ever happens on this path.
     */
-  private def markerBuild(dir: String, marker: String)(build: String => Unit): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(s"$dir/$marker")
+  private def markerBuild(dir: String)(build: String => Unit): Unit = {
+    val mp = new org.apache.hadoop.fs.Path(s"$dir/$Marker")
     val fs = mp.getFileSystem(sessionHadoopConf)
     if (!fs.exists(mp)) {
       build(dir)
-      // the build's own writes may already have produced the marker (a
-      // Spark job's _SUCCESS); otherwise PUT it now. create(overwrite =
-      // false) elects one winner among concurrent builders.
+      // a build whose single Spark write targets the root already PUT it;
+      // otherwise PUT it now. create(overwrite = false) elects one winner
+      // among concurrent builders.
       if (!fs.exists(mp)) {
         try fs.create(mp, false).close()
         catch { case _: java.io.IOException => () }

@@ -8,8 +8,8 @@ import graft.util.Cols._
 /** Persisted IVF index: the on-disk form of [[Similarity.ivfTopK]].
   *
   * At 100 TB an ANN index is not an in-memory structure — it IS the storage
-  * layout. [[build]] assigns every corpus vector a cell (trained k-means, or
-  * a caller-supplied cell column) and writes:
+  * layout. [[ensure]] assigns every corpus vector a trained k-means cell
+  * and writes:
   *
   *   - `dir/corpus/cell=<id>/...` — the corpus parquet, partitioned by cell
   *     id, so one cell is one directory of files;
@@ -29,76 +29,48 @@ import graft.util.Cols._
   */
 object IvfIndex {
 
-  /** Index location for a corpus — the stale-proof content-fingerprint
-    * contract of [[Indexes.fingerprintDir]] (a regenerated or in-place
-    * edited dataset can never silently reuse a stale index). Lives under
-    * target/ (build products, not source).
+  /** Coarse-quantizer cells and k-means rounds of every built index (and
+    * of [[IvfPq]]'s coarse quantizer).
     */
-  def defaultDir(
-      sfDir: String,
-      corpus: DataFrame,
-      kCells: Int = 10,
-      iters: Int = 4
-  ): String =
-    Indexes.fingerprintDir("ivf-index", sfDir, corpus, s"k=$kCells|it=$iters")
+  private[operators] val KCells = 10
+  private[operators] val Iters = 4
 
-  /** Index location for the metadata-carrying variant ([[searchFiltered]]).
-    * Separate family: the row payload differs (filter columns stored in
-    * the index), so the two layouts must never share a fingerprint dir.
-    * Build params AND metaCols are part of the fingerprint — changing the
-    * stored metadata contract forces a rebuild instead of adopting a stale
-    * index missing the new columns.
-    */
-  def defaultMetaDir(
-      sfDir: String,
-      corpus: DataFrame,
-      kCells: Int = 10,
-      iters: Int = 4,
-      metaCols: Seq[String] = Nil
-  ): String =
-    Indexes.fingerprintDir(
-      "ivf-meta-index",
-      sfDir,
-      corpus,
-      s"k=$kCells|it=$iters|meta=${metaCols.mkString(",")}"
-    )
-
-  /** Build once, reuse forever: training is deterministic (md5 seeding +
-    * decimal means — see [[Similarity.kmeansCells]]), so same data ⇒ same
-    * index, and a completed build is valid across processes; publication
-    * is atomic ([[Indexes.atomicBuild]]). This is the 100 TB amortization
-    * contract: an ANN index is BUILT once and SEARCHED many times; a query
-    * that retrains per execution pays the training corpus scans on every
-    * search.
-    */
-  def ensureBuilt(
-      corpus: DataFrame,
-      dir: String,
-      kCells: Int = 10,
-      iters: Int = 4,
-      metaCols: Seq[String] = Nil
-  ): Unit =
-    Indexes.atomicBuild(dir, "centroids/_SUCCESS") { tmp =>
-      build(corpus, tmp, None, kCells, iters, metaCols)
-    }
-
-  /** Train (or adopt `cellCol`) and write the index under `dir`.
+  /** The persisted index for `corpus`, built once (see [[Indexes.ensure]]):
+    * training is deterministic (md5 seeding + decimal means — see
+    * [[Similarity.kmeansCells]]), so same data ⇒ same index. This is the
+    * 100 TB amortization contract: an ANN index is BUILT once and
+    * SEARCHED many times; a query that retrains per execution pays the
+    * training corpus scans on every search.
+    *
     * `metaCols` are stored IN the index rows so [[searchFiltered]] can
-    * push metadata predicates into the pruned parquet read.
+    * push metadata predicates into the pruned parquet read; an index that
+    * stores them is a separate family (`ivf-meta-index`) with the columns
+    * in its params, so changing the stored metadata contract forces a
+    * rebuild instead of adopting a stale index missing the new columns.
     */
-  def build(
+  def ensure(sfDir: String, corpus: DataFrame, metaCols: Seq[String] = Nil): String = {
+    val (family, meta) =
+      if (metaCols.isEmpty) ("ivf-index", "")
+      else ("ivf-meta-index", s"|meta=${metaCols.mkString(",")}")
+    Indexes.ensure(family, sfDir, corpus, "vec_id", "embedding", s"k=$KCells|it=$Iters$meta") {
+      dir => build(corpus, dir, metaCols = metaCols)
+    }
+  }
+
+  /** Write the index layout of `corpus` under `dir`, with trained cells
+    * or, given `cellCol`, that column's values as the cell ids (specs use
+    * a label column, which keeps the cell prune observable on vectors
+    * whose trained cells collapse).
+    */
+  private[graft] def build(
       corpus: DataFrame,
       dir: String,
       cellCol: Option[String] = None,
-      kCells: Int = 10,
-      iters: Int = 4,
       metaCols: Seq[String] = Nil
   ): Unit = {
     val celled = cellCol match {
-      case Some(c) =>
-        corpus.withColumn("cell", col(c).cast(LongType))
-      case None =>
-        corpus.join(Similarity.kmeansCells(corpus, kCells, iters), Seq("vec_id"))
+      case Some(c) => corpus.withColumn("cell", col(c).cast(LongType))
+      case None    => corpus.join(Similarity.kmeansCells(corpus, KCells, Iters), Seq("vec_id"))
     }
     celled
       .select((Seq("vec_id", "embedding") ++ metaCols :+ "cell").map(col): _*)

@@ -32,90 +32,54 @@ import graft.util.Cols._
   */
 object IvfPq {
 
-  /** Index location for a corpus — the stale-proof content-fingerprint
-    * contract of [[Indexes.fingerprintDir]].
+  /** The composed index for `corpus`, built once and searched many times
+    * ([[Indexes.ensure]]): cell centroids + PQ codebooks + the
+    * cell-partitioned code table, with [[IvfIndex]]'s coarse quantizer and
+    * [[Pq]]'s codebook knobs. The single corpus-sized cost (the encode
+    * pass) happens here, once.
+    *
+    * metaCols participate in the fingerprint (the [[IvfIndex.ensure]]
+    * lesson): an index built WITHOUT the filter columns must never be
+    * adopted by a filtered search — it would fail at read time at best,
+    * silently post-filter at worst.
     */
-  def defaultDir(
-      sfDir: String,
-      corpus: DataFrame,
-      kCells: Int = 10,
-      ivfIters: Int = 4,
-      m: Int = 8,
-      ksub: Int = 16,
-      dim: Int = 64,
-      pqIters: Int = 2,
-      trainSample: Int = 256,
-      metaCols: Seq[String] = Nil
-  ): String =
-    // metaCols participate in the fingerprint (the IvfIndex.defaultMetaDir
-    // lesson): an index built WITHOUT the filter columns must never be
-    // adopted by a filtered search — it would fail at read time at best,
-    // silently post-filter at worst.
-    Indexes.fingerprintDir(
-      "ivfpq-index",
-      sfDir,
-      corpus,
-      s"k=$kCells|ivfIt=$ivfIters|m=$m|ksub=$ksub|dim=$dim|pqIt=$pqIters|ts=$trainSample" +
+  def ensure(sfDir: String, corpus: DataFrame, metaCols: Seq[String] = Nil): String = {
+    val params =
+      s"k=${IvfIndex.KCells}|ivfIt=${IvfIndex.Iters}|m=${Pq.M}|ksub=${Pq.Ksub}|dim=${Pq.Dim}" +
+        s"|pqIt=${Pq.Iters}|ts=${Pq.TrainSample}" +
         (if (metaCols.nonEmpty) s"|meta=${metaCols.mkString(",")}" else "")
-    )
-
-  /** Build once, search many — atomic publication, see
-    * [[Indexes.atomicBuild]].
-    */
-  def ensureBuilt(
-      corpus: DataFrame,
-      dir: String,
-      cellCol: Option[String] = None,
-      kCells: Int = 10,
-      ivfIters: Int = 4,
-      m: Int = 8,
-      ksub: Int = 16,
-      dim: Int = 64,
-      pqIters: Int = 2,
-      trainSample: Int = 256,
-      metaCols: Seq[String] = Nil
-  ): Unit =
-    Indexes.atomicBuild(dir, "codes/_SUCCESS") { tmp =>
-      build(corpus, tmp, cellCol, kCells, ivfIters, m, ksub, dim, pqIters, trainSample, metaCols)
+    Indexes.ensure("ivfpq-index", sfDir, corpus, "vec_id", "embedding", params) { dir =>
+      build(corpus, dir, metaCols = metaCols)
     }
+  }
 
-  /** Train (or adopt `cellCol`) and write the composed index under `dir`:
-    * cell centroids + PQ codebooks + the cell-partitioned code table. The
-    * single corpus-sized cost (the encode pass) happens here, once.
+  /** Write the composed layout of `corpus` under `dir`, with trained cells
+    * or, given `cellCol`, that column's values as the cell ids (the
+    * [[IvfIndex.build]] seam specs use).
     */
-  def build(
+  private[graft] def build(
       corpus: DataFrame,
       dir: String,
       cellCol: Option[String] = None,
-      kCells: Int = 10,
-      ivfIters: Int = 4,
-      m: Int = 8,
-      ksub: Int = 16,
-      dim: Int = 64,
-      pqIters: Int = 2,
-      trainSample: Int = 256,
       metaCols: Seq[String] = Nil
   ): Unit = {
-    val spark = corpus.sparkSession
     val celled = cellCol match {
       case Some(c) => corpus.withColumn("cell", col(c).cast(LongType))
-      case None    => corpus.join(Similarity.kmeansCells(corpus, kCells, ivfIters), Seq("vec_id"))
+      case None =>
+        corpus.join(Similarity.kmeansCells(corpus, IvfIndex.KCells, IvfIndex.Iters), Seq("vec_id"))
     }
     Similarity
       .centroids(celled, "cell")
       .write
       .mode("overwrite")
       .parquet(s"$dir/centroids")
-    val sample = corpus
-      .orderBy(md5Long(concat(col("vec_id").cast("string"), lit("#pqtrain"))), col("vec_id"))
-      .limit(trainSample)
-    val cb = Pq.trainCodebooks(sample, m, ksub, dim, pqIters)
-    Pq.writeCodebooks(spark, cb, s"$dir/codebooks")
+    val cb = Pq.trainedCodebooks(corpus)
+    Pq.writeCodebooks(corpus.sparkSession, cb, s"$dir/codebooks")
     // metaCols ride IN the code rows so a filtered search can push its
     // predicate into the pruned codes read (PushedFilters beside the
     // probe's PartitionFilters) — a handful of scalar columns next to the
     // m-byte codes, not the D-float vectors.
-    Pq.encode(celled, cb, dim, keep = Seq("vec_id", "cell") ++ metaCols)
+    Pq.encode(celled, cb, Pq.Dim, keep = Seq("vec_id", "cell") ++ metaCols)
       .write
       .mode("overwrite")
       .partitionBy("cell")
@@ -155,7 +119,7 @@ object IvfPq {
     * pushes it to the scan (`PushedFilters` beside the probe's
     * `PartitionFilters` — plan-pinned in SimilaritySpec). The index must
     * have been built with the predicate's columns in `metaCols`
-    * ([[build]]); the exact rerank then only ever sees surviving
+    * ([[ensure]]); the exact rerank then only ever sees surviving
     * candidates. As with [[IvfIndex.searchFiltered]], recall under
     * filtering thins with selectivity — raise `nProbe`/`shortlist`
     * relative to the unfiltered search.

@@ -486,24 +486,13 @@ object Multimodal {
       .select(col("doc_id"), col("component"), col("csize"))
   }
 
-  /** Persisted image near-dup index location — the stale-proof fingerprint
-    * contract ([[Indexes.fingerprintDirOn]]) keyed on the CORPUS membership.
-    * The fixture's image content is a pure function of doc_id, so the id
-    * doubles as the payload key; a production build fingerprints the
-    * payload bytes (same call, payloadCol = the binary column).
-    */
-  def dhashIndexDir(sfDir: String, corpusDocs: DataFrame): String =
-    // layout=2: a params key from an earlier layout, kept so existing
-    // assets keep resolving
-    Indexes.fingerprintDirOn("dhash-reps", sfDir, corpusDocs, "doc_id", "doc_id", "layout=2")
-
   /** Build the persisted image-dedup index ONCE per corpus version: decode
     * every corpus image, collapse to exact-hash representatives, and write
     *
     *   - `dir/bands` — the 4×15-bit SimHash band rows of each DISTINCT
     *     hash, partitioned by chunk (a delta probe reads band buckets, not
     *     the rep sweep);
-    *   - `dir/reps` — (dhash, rid, n), written LAST (completion marker).
+    *   - `dir/reps` — (dhash, rid, n).
     *
     * This is what makes modality dedup INCREMENTAL: the daily-crawl path
     * ([[dhashDeltaDups]]) never re-decodes the standing corpus — the
@@ -511,8 +500,14 @@ object Multimodal {
     * once per corpus version (the text side's deltaDups/SemanticIndex
     * amortization contract, for images).
     */
-  def ensureDhashIndex(spark: SparkSession, corpusDocs: DataFrame, dir: String): Unit =
-    Indexes.atomicBuild(dir, "reps/_SUCCESS") { tmp =>
+  def ensureDhashIndex(sfDir: String, corpusDocs: DataFrame): String =
+    // layout=2: a params key from an earlier layout, kept so existing
+    // assets keep resolving. The fixture's image content is a pure
+    // function of doc_id, so the id doubles as the payload key; a
+    // production build fingerprints the payload bytes (payloadCol = the
+    // binary column).
+    Indexes.ensure("dhash-reps", sfDir, corpusDocs, "doc_id", "doc_id", "layout=2") { tmp =>
+      val spark = corpusDocs.sparkSession
       // pinned: both writes below consume it, and each unpinned branch
       // would re-run the corpus decode
       val reps = hashReps(dHash(spark, withImagePayload(spark, corpusDocs)).toDF())

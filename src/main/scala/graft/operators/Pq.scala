@@ -238,50 +238,40 @@ object Pq {
       .select(col("query_id"), col("neighbor_id"), (-col("cos")).as("d2"), col("rank"))
   }
 
-  /** Index location for a corpus — the stale-proof content-fingerprint
-    * contract of [[Indexes.fingerprintDir]].
-    */
-  def defaultDir(
-      sfDir: String,
-      corpus: DataFrame,
-      m: Int = 8,
-      ksub: Int = 16,
-      dim: Int = 64,
-      iters: Int = 2,
-      trainSample: Int = 256
-  ): String =
-    Indexes.fingerprintDir(
-      "pq-index", sfDir, corpus, s"m=$m|ksub=$ksub|dim=$dim|it=$iters|ts=$trainSample")
-
-  /** Build once, search many: train codebooks on a bounded md5-ordered
+  /** The persisted two-stage index for `corpus`, built once and searched
+    * many times ([[Indexes.ensure]]): train 8 codebooks of 16 centroids
+    * over 64-dim vectors (2 rounds) on a bounded md5-ordered 256-row
     * sample, persist them as rows plus the whole corpus's code table.
-    * Deterministic training ⇒ a completed build is valid across processes.
-    * Publication is atomic (temp dir + rename — [[Indexes.atomicBuild]]),
-    * so concurrent builders can't interleave writes. The encode pass — the
-    * only corpus-sized cost — is paid here exactly once per dataset; a
-    * query that encodes inline pays it on every search.
+    * Deterministic training ⇒ a completed build is valid across
+    * processes. The encode pass — the only corpus-sized cost — is paid
+    * here exactly once per dataset; a query that encodes inline pays it
+    * on every search.
     */
-  def ensureBuilt(
-      corpus: DataFrame,
-      dir: String,
-      m: Int = 8,
-      ksub: Int = 16,
-      dim: Int = 64,
-      iters: Int = 2,
-      trainSample: Int = 256
-  ): Unit =
-    Indexes.atomicBuild(dir, "codes/_SUCCESS") { tmp =>
-      val spark = corpus.sparkSession
-      val sample = corpus
-        .orderBy(
-          md5Long(concat(col("vec_id").cast("string"), lit("#pqtrain"))),
-          col("vec_id")
-        )
-        .limit(trainSample)
-      val cb = trainCodebooks(sample, m, ksub, dim, iters)
-      writeCodebooks(spark, cb, s"$tmp/codebooks")
-      encode(corpus, cb, dim).write.mode("overwrite").parquet(s"$tmp/codes")
+  def ensure(sfDir: String, corpus: DataFrame): String =
+    Indexes.ensure("pq-index", sfDir, corpus, "vec_id", "embedding", Params) { dir =>
+      val cb = trainedCodebooks(corpus)
+      writeCodebooks(corpus.sparkSession, cb, s"$dir/codebooks")
+      encode(corpus, cb, Dim).write.mode("overwrite").parquet(s"$dir/codes")
     }
+
+  /** Build knobs of every persisted PQ layout (this index and
+    * [[IvfPq]]'s code table): blocks, centroids per block, vector width,
+    * training rounds and the codebook training sample.
+    */
+  private[operators] val M = 8
+  private[operators] val Ksub = 16
+  private[operators] val Dim = 64
+  private[operators] val Iters = 2
+  private[operators] val TrainSample = 256
+  private val Params = s"m=$M|ksub=$Ksub|dim=$Dim|it=$Iters|ts=$TrainSample"
+
+  /** Codebooks trained on `corpus`'s bounded md5-ordered sample. */
+  private[operators] def trainedCodebooks(corpus: DataFrame): Codebooks = {
+    val sample = corpus
+      .orderBy(md5Long(concat(col("vec_id").cast("string"), lit("#pqtrain"))), col("vec_id"))
+      .limit(TrainSample)
+    trainCodebooks(sample, M, Ksub, Dim, Iters)
+  }
 
   /** Persist codebooks as (blk, code, centroid) rows. */
   private[operators] def writeCodebooks(

@@ -15,11 +15,11 @@ import graft.streaming.DeltaFold
   * assignment) per execution — the round-8 `d_semantic` regression was
   * exactly that cost. Same contract as [[IvfIndex]]/[[Pq]]:
   *
-  *   - stale-proof location ([[Indexes.fingerprintDir]] — a corpus edited
-  *     in place maps to a new directory, never a stale index);
-  *   - atomic publication ([[Indexes.atomicBuild]] — concurrent builders
-  *     race to one complete rename; training is deterministic so the
-  *     loser's copy is identical and discarded).
+  *   - stale-proof location ([[Indexes.ensure]] — a corpus edited in
+  *     place maps to a new directory, never a stale index);
+  *   - atomic publication (the same call — concurrent builders race to
+  *     one complete rename; training is deterministic so the loser's copy
+  *     is identical and discarded).
   *
   * Layout under `dir`:
   *   - `celled/` — (vec_id, embedding, cell): the corpus with its FINAL
@@ -36,42 +36,26 @@ import graft.streaming.DeltaFold
   */
 object SemanticIndex {
 
-  /** Quantizer params are part of the fingerprint: a changed target/max
+  private def params(targetCellSize: Int, maxCellSize: Int, litK: Int) =
+    s"t=$targetCellSize|m=$maxCellSize|k=$litK"
+
+  /** The FLAT data-scaled quantizer state for `corpus`
+    * ([[Similarity.scaledCells]]' construction, with the intermediate
+    * seeds/counts also published for the delta path), built once.
+    * Quantizer params are part of the fingerprint: a changed target/max
     * cell size or literal-k is a different index layout, never a silent
     * reuse of the old one.
     */
-  def defaultDir(
+  def ensure(
       sfDir: String,
       corpus: DataFrame,
       targetCellSize: Int,
       maxCellSize: Int,
       litK: Int = 256
   ): String =
-    Indexes.fingerprintDir(
-      "sem-cells", sfDir, corpus, s"t=$targetCellSize|m=$maxCellSize|k=$litK")
-
-  def defaultDir2l(
-      sfDir: String,
-      corpus: DataFrame,
-      targetCellSize: Int,
-      maxCellSize: Int,
-      litK: Int = 256
-  ): String =
-    Indexes.fingerprintDir(
-      "sem-cells-2l", sfDir, corpus, s"t=$targetCellSize|m=$maxCellSize|k=$litK")
-
-  /** Build the FLAT data-scaled quantizer state ([[Similarity.scaledCells]]'
-    * construction, with the intermediate seeds/counts also published for
-    * the delta path). No-op if `dir` already holds a completed build.
-    */
-  def ensureBuilt(
-      corpus: DataFrame,
-      dir: String,
-      targetCellSize: Int,
-      maxCellSize: Int,
-      litK: Int = 256
-  ): Unit =
-    Indexes.atomicBuild(dir, "celled/_SUCCESS") { tmp =>
+    Indexes.ensure(
+      "sem-cells", sfDir, corpus, "vec_id", "embedding",
+      params(targetCellSize, maxCellSize, litK)) { dir =>
       val spark = corpus.sparkSession
       import spark.implicits._
       val emb = corpus.select(col("vec_id"), col("embedding")).cache()
@@ -85,32 +69,34 @@ object SemanticIndex {
         .toDF("cell", "centroid")
         .write
         .mode("overwrite")
-        .parquet(s"$tmp/seeds")
-      counts.write.mode("overwrite").parquet(s"$tmp/counts")
+        .parquet(s"$dir/seeds")
+      counts.write.mode("overwrite").parquet(s"$dir/counts")
       Similarity
         .resplitCells(coarse, counts, k, maxCellSize)
         .write
         .mode("overwrite")
-        .parquet(s"$tmp/celled")
+        .parquet(s"$dir/celled")
     }
 
-  /** Build the TWO-LEVEL quantizer state ([[Similarity.hierCells]]). Only
-    * `celled/` is published: the hierarchical seeds are distributed state,
-    * and the delta path rides the flat index.
+  /** The TWO-LEVEL quantizer state ([[Similarity.hierCells]]), built once.
+    * Only `celled/` is published: the hierarchical seeds are distributed
+    * state, and the delta path rides the flat index.
     */
-  def ensureBuilt2l(
+  private def ensure2l(
+      sfDir: String,
       corpus: DataFrame,
-      dir: String,
       targetCellSize: Int,
       maxCellSize: Int,
-      litK: Int = 256
-  ): Unit =
-    Indexes.atomicBuild(dir, "celled/_SUCCESS") { tmp =>
+      litK: Int
+  ): String =
+    Indexes.ensure(
+      "sem-cells-2l", sfDir, corpus, "vec_id", "embedding",
+      params(targetCellSize, maxCellSize, litK)) { dir =>
       Similarity
         .hierCells(corpus, targetCellSize, maxCellSize, litK)
         .write
         .mode("overwrite")
-        .parquet(s"$tmp/celled")
+        .parquet(s"$dir/celled")
     }
 
   /** Steady-state [[Similarity.semanticDedupScaled]]: ensure the index,
@@ -126,8 +112,7 @@ object SemanticIndex {
       litK: Int = 256,
       keep: Similarity.KeepPolicy = Similarity.KeepPolicy.Central
   ): DataFrame = {
-    val dir = defaultDir(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    ensureBuilt(corpus, dir, targetCellSize, maxCellSize, litK)
+    val dir = ensure(sfDir, corpus, targetCellSize, maxCellSize, litK)
     Similarity.semanticDedupCore(readCelled(corpus.sparkSession, dir), threshold, keep)
   }
 
@@ -143,8 +128,7 @@ object SemanticIndex {
       litK: Int = 256,
       keep: Similarity.KeepPolicy = Similarity.KeepPolicy.Central
   ): DataFrame = {
-    val dir = defaultDir2l(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    ensureBuilt2l(corpus, dir, targetCellSize, maxCellSize, litK)
+    val dir = ensure2l(sfDir, corpus, targetCellSize, maxCellSize, litK)
     Similarity.semanticDedupCore(readCelled(corpus.sparkSession, dir), threshold, keep)
   }
 
@@ -164,8 +148,7 @@ object SemanticIndex {
       litK: Int = 256
   ): DataFrame = {
     val spark = corpus.sparkSession
-    val dir = defaultDir(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    ensureBuilt(corpus, dir, targetCellSize, maxCellSize, litK)
+    val dir = ensure(sfDir, corpus, targetCellSize, maxCellSize, litK)
     val cents = spark.read
       .parquet(s"$dir/seeds")
       .collect()
@@ -199,8 +182,7 @@ object SemanticIndex {
       litK: Int = 256
   ): DataFrame = {
     val spark = corpus.sparkSession
-    val dir = defaultDir(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    ensureBuilt(corpus, dir, targetCellSize, maxCellSize, litK)
+    val dir = ensure(sfDir, corpus, targetCellSize, maxCellSize, litK)
     val cents = spark.read
       .parquet(s"$dir/seeds")
       .collect()
@@ -229,8 +211,7 @@ object SemanticIndex {
       maxCellSize: Int,
       litK: Int = 256
   ): DataFrame = {
-    val dir = defaultDir(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    ensureBuilt(corpus, dir, targetCellSize, maxCellSize, litK)
+    val dir = ensure(sfDir, corpus, targetCellSize, maxCellSize, litK)
     readCelled(corpus.sparkSession, dir)
   }
 
@@ -274,7 +255,7 @@ object SemanticIndex {
     * the union corpus (re-derived k, seeds, counts, re-split) — FAISS's
     * `add` vs `train` split (frozen quantizers on add), with "train" here
     * being the deterministic seeded derivation, so the folded asset is
-    * BIT-EQUAL to a wholesale [[ensureBuilt]] on the grown corpus
+    * BIT-EQUAL to a wholesale [[ensure]] on the grown corpus
     * (`d_semantic_fold`'s gate).
     */
   def upsertBatch(
@@ -312,7 +293,7 @@ object SemanticIndex {
     * from the asset itself) and publish seeds/counts/celled via the
     * crash-safe journaled swap. This is the "train" half of the
     * add-vs-train split: k, seeds and the split table are re-derived at
-    * the grown N with the exact [[ensureBuilt]] closed form, so the
+    * the grown N with the exact [[ensure]] closed form, so the
     * post-fold asset is bit-equal to a wholesale build — and the oracle
     * can replay a stream-grown index as if it were built fresh.
     * Quantizer params are passed by the maintenance owner (they are part

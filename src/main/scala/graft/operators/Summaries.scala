@@ -21,20 +21,22 @@ import org.apache.spark.sql.functions._
   */
 object Summaries {
 
-  /** Session-conf key pointing the rewrite rule at the published summary
-    * for the documents table. Unset (default) = rule inert.
+  /** Session-conf key pointing the rewrite rule at the published summary:
+    * the summary dir, then the root paths of the documents scan it
+    * summarizes, one per line. Unset (default) = rule inert.
     */
   val ConfKey = "spark.graft.summary.documents"
 
-  def defaultDir(sfDir: String, docs: DataFrame): String =
-    Indexes.fingerprintDirOn("agg-summary", sfDir, docs, "doc_id", "n_chars")
-
-  /** Build the summary once per corpus version (atomic publish, no-op on
-    * rebuild) and point the session's rewrite rule at it.
+  /** Build the summary once per corpus version and point the session's
+    * rewrite rule at it — for aggregates over `docs`' own scan only.
+    * `docs` must be a plain documents scan (the rule's match), or the
+    * summary would answer the raw table with a derived frame's numbers.
     */
   def enableFor(spark: SparkSession, sfDir: String, docs: DataFrame): String = {
-    val dir = defaultDir(sfDir, docs)
-    Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+    val roots = graft.plans.SummaryRewrite
+      .scanRoots(docs.queryExecution.analyzed)
+      .getOrElse(throw new IllegalArgumentException("a summary needs a plain file scan"))
+    val dir = Indexes.ensure("agg-summary", sfDir, docs, "doc_id", "n_chars", "") { tmp =>
       docs
         .groupBy(col("source"))
         .agg(
@@ -48,7 +50,7 @@ object Summaries {
         .mode("overwrite")
         .parquet(tmp)
     }
-    spark.conf.set(ConfKey, dir)
+    spark.conf.set(ConfKey, (dir +: roots).mkString("\n"))
     dir
   }
 

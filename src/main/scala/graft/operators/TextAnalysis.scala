@@ -1246,16 +1246,15 @@ object TextAnalysis {
     * `source`/`n_chars` ride in the asset (and in the fingerprint
     * payload) so the datacard's rollup never touches the corpus either.
     */
-  def ensureCleanGateAsset(sfDir: String, docs: DataFrame): String = {
-    val dir = Indexes.fingerprintDirOn(
+  def ensureCleanGateAsset(sfDir: String, docs: DataFrame): String =
+    Indexes.ensure(
       "cleaning-gates",
       sfDir,
       docs,
       "doc_id",
       "struct(text, source, n_chars)",
       "v=2" // v2: classifier gate = the TRAINED quality head's margin
-    )
-    Indexes.atomicBuild(dir, "gates/_SUCCESS") { tmp =>
+    ) { tmp =>
       val ann = annotateDocs(docs)
         .select(
           col("doc_id"),
@@ -1298,8 +1297,6 @@ object TextAnalysis {
         .mode("overwrite")
         .parquet(s"$tmp/gates")
     }
-    dir
-  }
 
   /** Read-side of [[ensureCleanGateAsset]]: (doc_id, source, n_chars,
     * pred_lang, n_tokens, quality_score, split, is_canonical, in_corpus,

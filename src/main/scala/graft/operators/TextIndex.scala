@@ -35,24 +35,21 @@ object TextIndex {
 
   val DefaultBuckets = 16
 
-  def defaultDir(sfDir: String, docs: DataFrame, nBuckets: Int = DefaultBuckets): String =
-    // v=2: postings rows carry the per-document length norm `dl` (the
-    // Lucene-norms analogue, what BM25's length normalization needs at
-    // SEEK time) and stats/ carries total_len beside n_docs — a layout
-    // change, so the params bump forces a rebuild instead of silently
-    // reading a v1 asset without the column
-    Indexes.fingerprintDirOn("text-index2", sfDir, docs, "doc_id", "text", s"nb=$nBuckets,v=2")
-
   private[graft] def bucketOf(term: org.apache.spark.sql.Column, nBuckets: Int) =
     pmod(xxhash64(term), lit(nBuckets.toLong))
 
-  /** Build once per corpus version: postings written term-bucket-
-    * partitioned/sorted, plus the top-bigram and corpus-count statistics
-    * (stats/ written LAST — it is the completion marker). No-op if `dir`
-    * already holds a completed build.
+  /** The index for `docs`, built once per corpus version: postings
+    * written term-bucket-partitioned/sorted, plus the top-bigram and
+    * corpus-count statistics.
+    *
+    * Params v=2: postings rows carry the per-document length norm `dl`
+    * (the Lucene-norms analogue, what BM25's length normalization needs
+    * at SEEK time) and stats/ carries total_len beside n_docs — a layout
+    * change, so the params bump forces a rebuild instead of silently
+    * reading a v1 asset without the column.
     */
-  def ensureBuilt(docs: DataFrame, dir: String, nBuckets: Int = DefaultBuckets): Unit =
-    Indexes.atomicBuild(dir, "stats/_SUCCESS") { tmp =>
+  def ensure(sfDir: String, docs: DataFrame): String =
+    Indexes.ensure("text-index2", sfDir, docs, "doc_id", "text", s"nb=$DefaultBuckets,v=2") { tmp =>
       val spark = docs.sparkSession
       import spark.implicits._
       val index = TextAnalysis.invertedIndex(docs).localCheckpoint()
@@ -64,7 +61,7 @@ object TextIndex {
         .groupBy(col("doc_id"))
         .agg(sum(col("tf")).cast("long").as("dl"))
       graft.sources.Layout.writePartitionedSorted(
-        index.join(dl, Seq("doc_id")).withColumn("tb", bucketOf(col("term"), nBuckets)),
+        index.join(dl, Seq("doc_id")).withColumn("tb", bucketOf(col("term"), DefaultBuckets)),
         s"$tmp/postings",
         "tb",
         Seq("term", "doc_id")

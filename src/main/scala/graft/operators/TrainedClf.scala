@@ -264,9 +264,8 @@ object TrainedClf {
     * (cls, j, w); `history/` is the per-class training log the
     * `t_classifier_train` gate replays.
     */
-  def ensureWeightsAsset(sfDir: String, docs: DataFrame): String = {
-    val dir = Indexes.fingerprintDirOn("clf-train", sfDir, docs, "doc_id", "text", params)
-    Indexes.atomicBuild(dir, "history/_SUCCESS") { tmp =>
+  def ensureWeightsAsset(sfDir: String, docs: DataFrame): String =
+    Indexes.ensure("clf-train", sfDir, docs, "doc_id", "text", params) { tmp =>
       val spark = docs.sparkSession
       import spark.implicits._
       val (w, hist) = train(docs)
@@ -287,8 +286,6 @@ object TrainedClf {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/history")
     }
-    dir
-  }
 
   /** The published per-class weight vectors. */
   def weightsFor(sfDir: String, docs: DataFrame): Map[String, IndexedSeq[Long]] = {

@@ -762,33 +762,6 @@ object Video {
         .select(col("doc_id").as("rid"))
         .distinct()
 
-  /** Persisted video scene-index location — the stale-proof fingerprint
-    * contract keyed on the corpus membership (fixture scene content is a
-    * pure function of doc_id; a production build fingerprints payload
-    * bytes).
-    */
-  def sceneIndexDir(sfDir: String, corpusDocs: DataFrame): String =
-    // layout=3: member→rep routing table (members/) added so the pair
-    // probe can expand rep-level discoveries to every corpus copy without
-    // re-deriving the signature collapse — retires layout-2 assets
-    Indexes.fingerprintDirOn(
-      "video-scene-reps", sfDir, corpusDocs, "doc_id", "doc_id", "layout=3")
-
-  /** Build the persisted video-dedup index ONCE per corpus version: decode
-    * every corpus video, keep the distinct (video, scene-hash) signature
-    * rows, and write
-    *
-    *   - `dir/sig` — the inverted scene index, partitioned by a 16-way
-    *     hash bucket of the scene hash (a delta probe reads the buckets of
-    *     ITS OWN scenes, not the whole table);
-    *   - `dir/dfs` — per-scene-hash document frequency (the hot-scene cap's
-    *     input, precomputed at build time);
-    *   - `dir/sizes` — per-video signature size + the corpus video count,
-    *     written LAST (completion marker).
-    *
-    * The decode — the corpus-linear cost — is paid here exactly once; the
-    * daily-ingest path ([[videoDeltaDups]]) reads these tables only.
-    */
   /** Scene-hash document frequencies over distinct (doc, hash) sig rows —
     * the hot-scene cap's input.
     */
@@ -849,8 +822,28 @@ object Video {
       .select(col("doc_id"), col("dhash"))
       .distinct()
 
-  def ensureSceneIndex(spark: SparkSession, corpusDocs: DataFrame, dir: String): Unit =
-    Indexes.atomicBuild(dir, "sizes/_SUCCESS") { tmp =>
+  /** Build the persisted video-dedup index ONCE per corpus version: decode
+    * every corpus video, keep the distinct (video, scene-hash) signature
+    * rows, and write
+    *
+    *   - `dir/sig` — the inverted scene index, partitioned by a 16-way
+    *     hash bucket of the scene hash (a delta probe reads the buckets of
+    *     ITS OWN scenes, not the whole table);
+    *   - `dir/dfs` — per-scene-hash document frequency (the hot-scene cap's
+    *     input, precomputed at build time);
+    *   - `dir/sizes` — per-video signature size + the corpus video count.
+    *
+    * The decode — the corpus-linear cost — is paid here exactly once; the
+    * daily-ingest path ([[videoDeltaDups]]) reads these tables only.
+    * Keyed on the corpus membership: fixture scene content is a pure
+    * function of doc_id (a production build fingerprints payload bytes).
+    */
+  def ensureSceneIndex(sfDir: String, corpusDocs: DataFrame): String =
+    // layout=3: member→rep routing table (members/) added so the pair
+    // probe can expand rep-level discoveries to every corpus copy without
+    // re-deriving the signature collapse — retires layout-2 assets
+    Indexes.ensure("video-scene-reps", sfDir, corpusDocs, "doc_id", "doc_id", "layout=3") { tmp =>
+      val spark = corpusDocs.sparkSession
       val sig = decodeSig(spark, corpusDocs).localCheckpoint()
       sig
         .withColumn("hb", pmod(xxhash64(col("dhash")), lit(16L)))

@@ -28,7 +28,9 @@ import graft.operators.Summaries
   *     directory, so freshness is the enabler's contract, not a
   *     rule-time scan);
   *   - the aggregate groups by exactly the `source` column of a scan of
-  *     `documents.parquet` (optionally through a column-pruning Project);
+  *     the same root paths the summary was built from (optionally through
+  *     a column-pruning Project) — another documents table in the same
+  *     session is left alone;
   *   - every output is the grouping column or one of the four covered
   *     aggregates, un-DISTINCT and un-FILTERed.
   *
@@ -38,26 +40,33 @@ import graft.operators.Summaries
   */
 object SummaryRewrite extends Rule[LogicalPlan] {
 
-  private def summaryDir: Option[String] = {
+  /** The enabled summary: (dir, root paths of the scan it summarizes). */
+  private def summary: Option[(String, Seq[String])] = {
     val v = SQLConf.get.getConfString(Summaries.ConfKey, "")
-    if (v.isEmpty) None else Some(v)
+    if (v.isEmpty) None
+    else {
+      val lines = v.split("\n").toSeq
+      Some(lines.head -> lines.tail)
+    }
   }
 
-  private def isDocumentsScan(p: LogicalPlan): Boolean = p match {
+  /** The sorted root paths of a plain file scan, seen through
+    * column-pruning Projects and row-multiset-preserving repartitions
+    * (Tables.documents repartitions the scan to session parallelism;
+    * aggregates are partition-invariant); None for any other plan.
+    */
+  private[graft] def scanRoots(p: LogicalPlan): Option[Seq[String]] = p match {
     case lr: LogicalRelation =>
       lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.exists(_.toString.contains("documents.parquet"))
-        case _ => false
+        case fs: HadoopFsRelation => Some(fs.location.rootPaths.map(_.toString).sorted)
+        case _                    => None
       }
     case Project(projList, child)
         if projList.forall(_.isInstanceOf[AttributeReference]) =>
-      isDocumentsScan(child)
-    // row-multiset-preserving nodes (Tables.documents repartitions the
-    // scan to session parallelism): aggregates are partition-invariant
-    case r: Repartition              => isDocumentsScan(r.child)
-    case r: RepartitionByExpression  => isDocumentsScan(r.child)
-    case _ => false
+      scanRoots(child)
+    case r: Repartition             => scanRoots(r.child)
+    case r: RepartitionByExpression => scanRoots(r.child)
+    case _                          => None
   }
 
   /** The summary column answering one covered aggregate function. */
@@ -81,28 +90,29 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (summaryDir.isEmpty) return plan
-    plan.transform {
-      case agg: Aggregate
-          if agg.groupingExpressions.length == 1 &&
-            agg.groupingExpressions.head.isInstanceOf[AttributeReference] &&
-            agg.groupingExpressions.head
-              .asInstanceOf[AttributeReference]
-              .name == "source" &&
-            isDocumentsScan(agg.child) =>
-        rewrite(agg).getOrElse(agg)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = summary match {
+    case None => plan
+    case Some((dir, roots)) =>
+      plan.transform {
+        case agg: Aggregate
+            if agg.groupingExpressions.length == 1 &&
+              agg.groupingExpressions.head.isInstanceOf[AttributeReference] &&
+              agg.groupingExpressions.head
+                .asInstanceOf[AttributeReference]
+                .name == "source" &&
+              scanRoots(agg.child).contains(roots) =>
+          rewrite(agg, dir).getOrElse(agg)
+      }
   }
 
-  private def rewrite(agg: Aggregate): Option[LogicalPlan] =
+  private def rewrite(agg: Aggregate, dir: String): Option[LogicalPlan] =
     try {
       val g = agg.groupingExpressions.head.asInstanceOf[AttributeReference]
       // analyzer-only resolution of the summary relation (no optimizer
       // re-entry); fresh exprIds per call, so repeated rewrites in one
       // query tree cannot collide
       val summary = SparkSession.active.read
-        .parquet(summaryDir.get)
+        .parquet(dir)
         .queryExecution
         .analyzed
       val byName = summary.output.map(a => a.name -> a).toMap

@@ -176,8 +176,7 @@ object AudioQ {
         val docs = Tables.documents(s, d)
         val corpus = docs.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 40 < 32)
         val delta = docs.filter(col("doc_id") % 3 === 0)
-        val dir = Audio.audioFpIndexDir(d, corpus)
-        Audio.ensureAudioFpIndex(s, corpus, dir)
+        val dir = Audio.ensureAudioFpIndex(d, corpus)
         Audio.audioDeltaDups(s, dir, delta).orderBy("doc_id")
       },
       Some(
@@ -221,8 +220,7 @@ object AudioQ {
         // once per dataset, like every persisted-index query); the FOLD
         // mutates a scratch COPY — the production shape, where the index
         // already exists and the stream grows it
-        val baseDir = Audio.audioFpIndexDir(d, corpus0)
-        Audio.ensureAudioFpIndex(s, corpus0, baseDir)
+        val baseDir = Audio.ensureAudioFpIndex(d, corpus0)
         val dir = QueryScratch.dir("m_audio_index_fold") + "/idx"
         graft.operators.Indexes.copyDir(baseDir, dir)
         graft.streaming.AudioIndexStream
@@ -329,8 +327,7 @@ object AudioQ {
         val docs = Tables.documents(s, d)
         val corpus = docs.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 40 < 32)
         val delta = docs.filter(col("doc_id") % 3 === 0)
-        val dir = Audio.audioSpectralIndexDir(d, corpus)
-        Audio.ensureAudioSpectralIndex(s, corpus, dir)
+        val dir = Audio.ensureAudioSpectralIndex(d, corpus)
         Audio.audioSpectralDeltaDups(s, dir, delta).orderBy("doc_id")
       },
       Some(toneDeltaOracleSql),
@@ -348,8 +345,7 @@ object AudioQ {
         val corpus0 = docs.filter(inCorpus && col("doc_id") % 5 =!= 1)
         val growth = docs.filter(inCorpus && col("doc_id") % 5 === 1)
         val delta = docs.filter(col("doc_id") % 3 === 0)
-        val baseDir = Audio.audioSpectralIndexDir(d, corpus0)
-        Audio.ensureAudioSpectralIndex(s, corpus0, baseDir)
+        val baseDir = Audio.ensureAudioSpectralIndex(d, corpus0)
         val dir = QueryScratch.dir("m_audio_shift_fold") + "/idx"
         graft.operators.Indexes.copyDir(baseDir, dir)
         graft.streaming.AudioIndexStream

@@ -911,8 +911,7 @@ object DedupQ {
         val docs = Tables.documents(s, d)
         val corpus = docs.filter(col("doc_id") % 10 =!= 7)
         val delta = docs.filter(col("doc_id") % 10 === 7)
-        val dir = Dedup.substrGramIndexDir(d, corpus)
-        Dedup.ensureSubstrGramIndex(s, corpus, dir)
+        val dir = Dedup.ensureSubstrGramIndex(d, corpus)
         Dedup.substrDeltaRemoval(s, dir, delta).orderBy("doc_id")
       },
       Some(substrDeltaOracleSql),
@@ -942,8 +941,7 @@ object DedupQ {
         val corpus0 = corpusAll.filter(col("doc_id") % 5 =!= 1)
         val growth = corpusAll.filter(col("doc_id") % 5 === 1)
         val delta = docs.filter(col("doc_id") % 10 === 7)
-        val baseDir = Dedup.substrGramIndexDir(d, corpus0)
-        Dedup.ensureSubstrGramIndex(s, corpus0, baseDir)
+        val baseDir = Dedup.ensureSubstrGramIndex(d, corpus0)
         val dir = QueryScratch.dir("d_substr_index_fold") + "/idx"
         graft.operators.Indexes.copyDir(baseDir, dir)
         graft.streaming.SubstrIndexStream

@@ -309,8 +309,7 @@ object MultimodalQ {
           .withColumn("embedding", col("embedding").cast("array<float>"))
           .withColumnRenamed("doc_id", "vec_id")
           .localCheckpoint()
-        val idxDir = IvfIndex.defaultDir(d, emb)
-        IvfIndex.ensureBuilt(emb, idxDir)
+        val idxDir = IvfIndex.ensure(d, emb)
         val q = emb.filter(col("vec_id") < 10)
         val ivf = IvfIndex.search(s, idxDir, q, k = 5, nProbe = 4)
         val brute = Similarity.bruteTopK(q, emb, k = 5)
@@ -348,8 +347,7 @@ object MultimodalQ {
         val docs = Tables.documents(s, d)
         val corpus = docs.filter(col("doc_id") % 10 =!= 7)
         val delta = docs.filter(col("doc_id") % 10 === 7)
-        val dir = Multimodal.dhashIndexDir(d, corpus)
-        Multimodal.ensureDhashIndex(s, corpus, dir)
+        val dir = Multimodal.ensureDhashIndex(d, corpus)
         Multimodal
           .dhashDeltaDups(s, dir, delta)
           .orderBy("doc_id", "rep_id")

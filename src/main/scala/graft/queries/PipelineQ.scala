@@ -853,8 +853,7 @@ object PipelineQ {
       "q_export_manifest",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val dir = graft.operators.TrainExport.defaultDir(d, docs)
-        graft.operators.TrainExport.ensureBuilt(docs, dir)
+        val dir = graft.operators.TrainExport.ensure(d, docs)
         graft.operators.TrainExport
           .manifest(s, dir)
           .select(
@@ -993,10 +992,8 @@ object PipelineQ {
               concat(col("text"), lit(" "), col("text"))
             ).otherwise(col("text"))
           )
-        val d1 = graft.operators.TrainExport.defaultDir(d, docs)
-        graft.operators.TrainExport.ensureBuilt(docs, d1)
-        val d2 = graft.operators.TrainExport.defaultDir(d, v2)
-        graft.operators.TrainExport.ensureBuilt(v2, d2)
+        val d1 = graft.operators.TrainExport.ensure(d, docs)
+        val d2 = graft.operators.TrainExport.ensure(d, v2)
         graft.operators.TrainExport
           .diffManifests(
             graft.operators.TrainExport.manifest(s, d1),

@@ -199,8 +199,7 @@ object SimilarityQ {
         // k-means inside every query — the build/search amortization an ANN
         // index exists for. The search reads only the probed cells via
         // partition pruning.
-        val idxDir = IvfIndex.defaultDir(d, emb)
-        IvfIndex.ensureBuilt(emb, idxDir)
+        val idxDir = IvfIndex.ensure(d, emb)
         val q = emb.filter(col("vec_id") < 10)
         val ivf = IvfIndex.search(s, idxDir, q, k = 5, nProbe = 3)
         val brute = Similarity.bruteTopK(q, emb, k = 5)
@@ -242,8 +241,7 @@ object SimilarityQ {
       (s, d) => {
         import graft.operators.IvfIndex
         val emb = Tables.embeddings(s, d)
-        val idxDir = IvfIndex.defaultMetaDir(d, emb, metaCols = Seq("label"))
-        IvfIndex.ensureBuilt(emb, idxDir, metaCols = Seq("label"))
+        val idxDir = IvfIndex.ensure(d, emb, metaCols = Seq("label"))
         val q = emb.filter(col("vec_id") < 10)
         val filtered =
           IvfIndex.searchFiltered(s, idxDir, q, k = 5, nProbe = 6, col("label") === 3)
@@ -823,9 +821,7 @@ object SimilarityQ {
         val corpus0 = corpus.filter(col("vec_id") % 7 =!= 3)
         val growth = corpus.filter(col("vec_id") % 7 === 3)
         val baseDir = graft.operators.SemanticIndex
-          .defaultDir(d, corpus0, targetCellSize = 50, maxCellSize = 100)
-        graft.operators.SemanticIndex
-          .ensureBuilt(corpus0, baseDir, targetCellSize = 50, maxCellSize = 100)
+          .ensure(d, corpus0, targetCellSize = 50, maxCellSize = 100)
         val dir = QueryScratch.dir("d_semantic_fold") + "/idx"
         graft.operators.Indexes.copyDir(baseDir, dir)
         graft.operators.SemanticIndex.upsertBatch(
@@ -1180,8 +1176,7 @@ object SimilarityQ {
         // search the PERSISTED index (codebooks + code table built once per
         // dataset — the IvfIndex amortization contract): no training pass
         // and no corpus-sized encode at query time
-        val idxDir = Pq.defaultDir(d, emb)
-        Pq.ensureBuilt(emb, idxDir)
+        val idxDir = Pq.ensure(d, emb)
         val q = emb.filter(col("vec_id") < 10)
         // production two-stage search: ADC shortlist over the stored codes,
         // exact re-rank of the shortlist only. The shortlist SCALES with
@@ -1231,8 +1226,7 @@ object SimilarityQ {
       (s, d) => {
         import graft.operators.IvfPq
         val emb = Tables.embeddings(s, d)
-        val idxDir = IvfPq.defaultDir(d, emb)
-        IvfPq.ensureBuilt(emb, idxDir)
+        val idxDir = IvfPq.ensure(d, emb)
         val q = emb.filter(col("vec_id") < 10)
         val ann = IvfPq.search(
           s, idxDir, q, emb, dim = 64, k = 5, nProbe = 5, shortlist = 150
@@ -1273,8 +1267,7 @@ object SimilarityQ {
       (s, d) => {
         import graft.operators.IvfPq
         val emb = Tables.embeddings(s, d)
-        val idxDir = IvfPq.defaultDir(d, emb, metaCols = Seq("label"))
-        IvfPq.ensureBuilt(emb, idxDir, metaCols = Seq("label"))
+        val idxDir = IvfPq.ensure(d, emb, metaCols = Seq("label"))
         val q = emb.filter(col("vec_id") < 10)
         val ann = IvfPq.searchFiltered(
           s, idxDir, q, emb, dim = 64, k = 5, nProbe = 7, shortlist = 150,
@@ -1320,8 +1313,7 @@ object SimilarityQ {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val docs = Tables.documents(s, d)
-        val dir = graft.operators.TextIndex.defaultDir(d, docs)
-        graft.operators.TextIndex.ensureBuilt(docs, dir)
+        val dir = graft.operators.TextIndex.ensure(d, docs)
         val (w1, w2) = graft.operators.TextIndex.topBigram(s, dir)
         // rank over the ALREADY-LIMITED k rows — the window never sees
         // more than 20 rows, no global-sort hazard. The lit(1) partition

@@ -22,14 +22,9 @@ object TextQ {
     * it once). The TRAINING queries (`t_bpe_bytes`, `t_unigram_vocab`)
     * stay live-derived — they are the build measurements.
     */
-  private def tokenizerAssetDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val docs = Tables.documents(s, d)
-    val dir = graft.operators.TokenizerExport
-      .defaultDir(d, docs, BpeSteps, UnigramVocab, UnigramPieceLen, UnigramRounds)
+  private def tokenizerAssetDir(s: org.apache.spark.sql.SparkSession, d: String): String =
     graft.operators.TokenizerExport
-      .ensureBuilt(docs, dir, BpeSteps, UnigramVocab, UnigramPieceLen, UnigramRounds)
-    dir
-  }
+      .ensure(d, Tables.documents(s, d), BpeSteps, UnigramVocab, UnigramPieceLen, UnigramRounds)
 
   /** Merge steps the BPE trainer query learns (must precede `all`:
     * object vals initialize in declaration order).
@@ -801,8 +796,7 @@ object TextQ {
         // build-once: postings persisted term-bucket-partitioned/sorted
         // (TextIndex) — steady-state runs read the layout, never re-derive
         val docs = Tables.documents(s, d)
-        val dir = graft.operators.TextIndex.defaultDir(d, docs)
-        graft.operators.TextIndex.ensureBuilt(docs, dir)
+        val dir = graft.operators.TextIndex.ensure(d, docs)
         s.read
           .parquet(s"$dir/postings")
           .select(
@@ -839,8 +833,7 @@ object TextQ {
         // at build time), and the search reads only the two query terms'
         // partition-pruned buckets. No corpus re-scan anywhere.
         val docs = Tables.documents(s, d)
-        val dir = graft.operators.TextIndex.defaultDir(d, docs)
-        graft.operators.TextIndex.ensureBuilt(docs, dir)
+        val dir = graft.operators.TextIndex.ensure(d, docs)
         val (w1, w2) = graft.operators.TextIndex.topBigram(s, dir)
         graft.operators.TextIndex
           .phraseSearchIndexed(s, dir, w1, w2)
@@ -875,8 +868,7 @@ object TextQ {
         // (top bigram), their postings, df, and N are all index reads —
         // zero corpus scans, driver state = two bucket ids + one count
         val docs = Tables.documents(s, d)
-        val dir = graft.operators.TextIndex.defaultDir(d, docs)
-        graft.operators.TextIndex.ensureBuilt(docs, dir)
+        val dir = graft.operators.TextIndex.ensure(d, docs)
         val (w1, w2) = graft.operators.TextIndex.topBigram(s, dir)
         graft.operators.TextIndex
           .searchTopK(s, dir, Seq(w1, w2), 10)
@@ -920,8 +912,7 @@ object TextQ {
       "t_bm25_search",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val dir = graft.operators.TextIndex.defaultDir(d, docs)
-        graft.operators.TextIndex.ensureBuilt(docs, dir)
+        val dir = graft.operators.TextIndex.ensure(d, docs)
         val (w1, w2) = graft.operators.TextIndex.topBigram(s, dir)
         graft.operators.TextIndex
           .searchBm25(s, dir, Seq(w1, w2), 10)
@@ -977,8 +968,7 @@ object TextQ {
       "t_search_rerank",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val dir = graft.operators.TextIndex.defaultDir(d, docs)
-        graft.operators.TextIndex.ensureBuilt(docs, dir)
+        val dir = graft.operators.TextIndex.ensure(d, docs)
         val (w1, w2) = graft.operators.TextIndex.topBigram(s, dir)
         graft.operators.TextIndex
           .searchTopK(s, dir, Seq(w1, w2), 20)
@@ -1033,8 +1023,7 @@ object TextQ {
         // seek for all three terms, AND as one aggregate, NOT as an
         // anti-join — zero corpus scans
         val docs = Tables.documents(s, d)
-        val dir = graft.operators.TextIndex.defaultDir(d, docs)
-        graft.operators.TextIndex.ensureBuilt(docs, dir)
+        val dir = graft.operators.TextIndex.ensure(d, docs)
         graft.operators.TextIndex
           .booleanSearch(s, dir, must = Seq("table", "hash"), mustNot = Seq("window"))
           .orderBy("doc_id")
@@ -1722,13 +1711,8 @@ object TextQ {
     Q(
       "q_export_tokenizer",
       (s, d) => {
-        val docs = Tables.documents(s, d)
-        val dir = graft.operators.TokenizerExport.defaultDir(
-          d, docs, BpeSteps, UnigramVocab, UnigramPieceLen, UnigramRounds)
-        graft.operators.TokenizerExport.ensureBuilt(
-          docs, dir, BpeSteps, UnigramVocab, UnigramPieceLen, UnigramRounds)
         graft.operators.TokenizerExport
-          .manifest(s, dir)
+          .manifest(s, tokenizerAssetDir(s, d))
           .select(
             col("n_merges"), col("vocab_size"), col("n_pieces"),
             col("merges_md5"), col("vocab_md5"), col("pieces_md5")

@@ -146,9 +146,7 @@ object UrlQ {
     // (doc_id, source) fully determines the URL fixture and therefore the
     // citation graph; the fingerprint keys the asset to corpus content
     val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("crawl-rank", d, docs, "doc_id", "source", "it=3|v=1")
-    graft.operators.Indexes.atomicBuild(dir, "rank/_SUCCESS") { tmp =>
+    val dir = graft.operators.Indexes.ensure("crawl-rank", d, docs, "doc_id", "source", "it=3|v=1") { tmp =>
       graft.operators.LinkGraph
         .pageRank(citationEdges(s, d), iters = 3)
         .write

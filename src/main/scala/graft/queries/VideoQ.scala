@@ -171,8 +171,7 @@ object VideoQ {
         val docs = Tables.documents(s, d)
         val corpus = docs.filter(col("doc_id") % 7 =!= 3)
         val delta = docs.filter(col("doc_id") % 7 === 3)
-        val dir = Video.sceneIndexDir(d, corpus)
-        Video.ensureSceneIndex(s, corpus, dir)
+        val dir = Video.ensureSceneIndex(d, corpus)
         Video.videoDeltaDups(s, dir, delta).orderBy("doc_id", "c_id")
       },
       Some(
@@ -210,8 +209,7 @@ object VideoQ {
         val docs = Tables.documents(s, d)
         val corpus = docs.filter(col("doc_id") % 7 =!= 3)
         val delta = docs.filter(col("doc_id") % 7 === 3)
-        val dir = Video.sceneIndexDir(d, corpus)
-        Video.ensureSceneIndex(s, corpus, dir)
+        val dir = Video.ensureSceneIndex(d, corpus)
         Video.videoDeltaVerdicts(s, dir, delta).orderBy("doc_id")
       },
       Some(
@@ -264,8 +262,7 @@ object VideoQ {
         // base asset from the normal fingerprint-cached build (decoded
         // once per dataset); the FOLD mutates a scratch COPY — the
         // production shape, where the index exists and the stream grows it
-        val baseDir = Video.sceneIndexDir(d, corpus0)
-        Video.ensureSceneIndex(s, corpus0, baseDir)
+        val baseDir = Video.ensureSceneIndex(d, corpus0)
         val dir = QueryScratch.dir("m_video_index_fold") + "/idx"
         graft.operators.Indexes.copyDir(baseDir, dir)
         graft.streaming.VideoIndexStream

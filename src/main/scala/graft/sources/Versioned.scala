@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                                 union IS version N
   * }}}
   *
-  * Commit protocol (the [[graft.operators.Indexes.atomicBuild]]
+  * Commit protocol (the [[graft.operators.Indexes.ensure]]
   * discipline): write the commit's data dir, then write the manifest to
   * a temp file and atomically rename it into place. Readers resolve a
   * version by reading one manifest — they see a whole version or none;

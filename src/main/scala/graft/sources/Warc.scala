@@ -135,7 +135,7 @@ object Warc {
     * copy+delete on S3/GCS-class stores — a reader globbing mid-rename
     * there can observe a partial shard. On such stores the commit
     * discipline is the marker-object one ([[graft.operators.Indexes
-    * .atomicBuild]] on a scheme'd dir / [[graft.operators.TrainExport]]):
+    * .ensure]] on a scheme'd dir):
     * the dot-prefixed temps already hide in-progress bytes from the
     * suffix-filtered listing, and a job-level completion marker written
     * AFTER every shard landed (a single atomic object PUT) is what
@@ -611,16 +611,26 @@ object Warc {
 
   val FixtureDate = "2026-01-01T00:00:00Z"
 
-  /** Deterministic crawl-archive fixture over the documents table, built
-    * once per corpus version (fingerprinted + atomic, the [[TextIndex]]
-    * recipe): `nShards` real `.warc.gz` shards, each holding whole
-    * `doc_id % nShards` groups — per group one `warcinfo` record, then a
-    * `request` + `response` pair per document, the response body being
-    * the [[graft.operators.Html.dirtyHtml]] page. Pure string/byte
-    * concatenation from table columns, so the oracle replays CONSTRUCTION
-    * directly from `documents` — a correct source parse must round-trip
-    * to exactly the directly-constructed pages.
+  /** Shards of every fixture archive: record group `g` is `doc_id % 8`. */
+  private val Shards = 8
+
+  /** The fixture archives' one publication path: fingerprint `docs`
+    * under `family` (params `ns=8,v=<version>`) and, on a miss, write
+    * `records` — (g, sort keys…, record_bytes) rows from the fixture's
+    * own renderer — as [[Shards]] shards, whole `g` groups per shard,
+    * each sorted by its non-byte columns in column order, so shard bytes
+    * are a pure function of the corpus.
     */
+  private def ensureShards(family: String, sfDir: String, docs: DataFrame, version: Int)(
+      records: => DataFrame
+  ): String =
+    graft.operators.Indexes.ensure(family, sfDir, docs, "doc_id", "text", s"ns=$Shards,v=$version") {
+      tmp =>
+        val recs = records
+        val keys = recs.columns.filter(_ != "record_bytes").map(col).toSeq
+        write(recs.repartition(Shards, col("g")).sortWithinPartitions(keys: _*), tmp)
+    }
+
   /** The fixture archive's PERSISTED CDX asset (the production shape:
     * Common Crawl publishes cdx-*.gz files beside every crawl so readers
     * never re-walk shards): [[memberIndex]] rows + the SURT key, written
@@ -631,24 +641,28 @@ object Warc {
     */
   def ensureCdxDir(sfDir: String, docs: DataFrame): (String, String) = {
     val warcDir = ensureFixtureDir(sfDir, docs)
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("warc-cdx", sfDir, docs, "doc_id", "text", "v=1")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+    val dir = graft.operators.Indexes.ensure("warc-cdx", sfDir, docs, "doc_id", "text", "v=1") { tmp =>
       memberIndex(docs.sparkSession, warcDir)
         .withColumn("surt", graft.operators.Urls.surt(col("target_uri")))
         .write
         .mode("overwrite")
         .parquet(s"$tmp/idx")
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
     }
     (warcDir, s"$dir/idx")
   }
 
-  def ensureFixtureDir(sfDir: String, docs: DataFrame, nShards: Int = 8): String = {
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("warc-fixture", sfDir, docs, "doc_id", "text", s"ns=$nShards,v=2")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+  /** Deterministic crawl-archive fixture over the documents table, built
+    * once per corpus version (fingerprinted + atomic, the [[TextIndex]]
+    * recipe): [[Shards]] real `.warc.gz` shards, each holding whole
+    * `doc_id % 8` groups — per group one `warcinfo` record, then a
+    * `request` + `response` pair per document, the response body being
+    * the [[graft.operators.Html.dirtyHtml]] page. Pure string/byte
+    * concatenation from table columns, so the oracle replays CONSTRUCTION
+    * directly from `documents` — a correct source parse must round-trip
+    * to exactly the directly-constructed pages.
+    */
+  def ensureFixtureDir(sfDir: String, docs: DataFrame): String =
+    ensureShards("warc-fixture", sfDir, docs, 2) {
       val spark = docs.sparkSession
       import spark.implicits._
       val pages = graft.operators.Html.dirtyHtml(docs).as[(Long, String)]
@@ -668,12 +682,12 @@ object Warc {
         )
         val resp = responseRecord(uri, s"<urn:uuid:resp-$id>", FixtureDate, html)
         Seq(
-          ((id % nShards).toInt, 1, id, 0, req),
-          ((id % nShards).toInt, 1, id, 1, resp)
+          ((id % Shards).toInt, 1, id, 0, req),
+          ((id % Shards).toInt, 1, id, 1, resp)
         )
       }
       val infoRecs = docs
-        .select((col("doc_id") % nShards).cast("int").as("g"))
+        .select((col("doc_id") % Shards).cast("int").as("g"))
         .distinct()
         .as[Int]
         .map { g =>
@@ -692,17 +706,8 @@ object Warc {
             )
           )
         }
-      val records = docRecs
-        .union(infoRecs)
-        .toDF("g", "ord", "doc_id", "sub", "record_bytes")
-        .repartition(nShards, col("g"))
-        .sortWithinPartitions(col("g"), col("ord"), col("doc_id"), col("sub"))
-      write(records, tmp)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
+      docRecs.union(infoRecs).toDF("g", "ord", "doc_id", "sub", "record_bytes")
     }
-    dir
-  }
 
   // -------------------------------------------- mixed-encoding fixture
 
@@ -819,20 +824,18 @@ object Warc {
     * decoder that skips any of de-chunking, decompression, or charset
     * resolution cannot round-trip.
     */
-  def ensureHttpMixDir(sfDir: String, docs: DataFrame, nShards: Int = 8): String = {
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("httpmix-fixture", sfDir, docs, "doc_id", "text", s"ns=$nShards,v=1")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+  def ensureHttpMixDir(sfDir: String, docs: DataFrame): String =
+    ensureShards("httpmix-fixture", sfDir, docs, 1) {
       val spark = docs.sparkSession
       import spark.implicits._
-      val records = graft.operators.Html
+      graft.operators.Html
         .dirtyHtml(docs)
         .as[(Long, String)]
         .map { case (id, dirty) =>
           val mode = (id % 6).toInt
           val html = if (mode >= 4) latinPage(id, withMeta = mode == 5) else dirty
           (
-            (id % nShards).toInt,
+            (id % Shards).toInt,
             id,
             mixResponseRecord(
               s"http://example.com/doc/$id",
@@ -844,14 +847,7 @@ object Warc {
           )
         }
         .toDF("g", "doc_id", "record_bytes")
-        .repartition(nShards, col("g"))
-        .sortWithinPartitions(col("g"), col("doc_id"))
-      write(records, tmp)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
     }
-    dir
-  }
 
   /** The fixture's responses parsed back to (doc_id, html) — the input
     * contract of [[graft.operators.Html.extract]], with doc_id recovered
@@ -896,21 +892,18 @@ object Warc {
       extra = Seq("WARC-Refers-To" -> refersTo)
     )
 
-  /** Write extracted pages as a WET shard directory (`.warc.gz`, one
-    * conversion record per page, whole `doc_id % nShards` groups per
-    * shard) — the publishable extracted-text sidecar of a processed
-    * crawl. Same sink as [[write]]: partition-parallel, one gzip member
-    * per record, deterministic bytes.
+  /** Extracted pages as WET records (one conversion record per page) —
+    * the publishable extracted-text sidecar of a processed crawl.
     */
-  def writeWet(pages: DataFrame, dir: String, nShards: Int = 8): Unit = {
+  private def conversionRecords(pages: DataFrame): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val records = pages
+    pages
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
         (
-          (id % nShards).toInt,
+          (id % Shards).toInt,
           id,
           conversionRecord(
             s"http://example.com/doc/$id",
@@ -922,9 +915,6 @@ object Warc {
         )
       }
       .toDF("g", "doc_id", "record_bytes")
-      .repartition(nShards, col("g"))
-      .sortWithinPartitions(col("g"), col("doc_id"))
-    write(records, dir)
   }
 
   /** The `conversion` records of a WET directory, text decoded — the
@@ -947,20 +937,15 @@ object Warc {
     * ([[graft.operators.Html.extract]], all-boilerplate pages dropped),
     * published as WET shards once per corpus fingerprint.
     */
-  def ensureWetDir(sfDir: String, docs: DataFrame, nShards: Int = 8): String = {
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("wet-fixture", sfDir, docs, "doc_id", "text", s"ns=$nShards,v=1")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
-      val pages = graft.operators.Html
-        .extract(graft.operators.Html.dirtyHtml(docs))
-        .filter(col("n_good") > 0)
-        .select(col("doc_id"), col("extracted").as("text"))
-      writeWet(pages, tmp, nShards)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
+  def ensureWetDir(sfDir: String, docs: DataFrame): String =
+    ensureShards("wet-fixture", sfDir, docs, 1) {
+      conversionRecords(
+        graft.operators.Html
+          .extract(graft.operators.Html.dirtyHtml(docs))
+          .filter(col("n_good") > 0)
+          .select(col("doc_id"), col("extracted").as("text"))
+      )
     }
-    dir
-  }
 
   // ------------------------------------------------------------ redirects
 
@@ -1000,13 +985,11 @@ object Warc {
     * Cycle halves and chain heads use absolute Locations, the 1-hop rule
     * a relative one, so both resolution paths are exercised.
     */
-  def ensureRedirectDir(sfDir: String, docs: DataFrame, nShards: Int = 8): String = {
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("redir-fixture", sfDir, docs, "doc_id", "text", s"ns=$nShards,v=1")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+  def ensureRedirectDir(sfDir: String, docs: DataFrame): String =
+    ensureShards("redir-fixture", sfDir, docs, 1) {
       val spark = docs.sparkSession
       import spark.implicits._
-      val records = docs
+      docs
         .select(col("doc_id"))
         .as[Long]
         .map { id =>
@@ -1018,17 +1001,10 @@ object Warc {
             else if (id % 8 == 3) redirectRecord(uri, s"<urn:uuid:red-$id>", FixtureDate, s"http://example.com/doc/${id - 2}")
             else if (id % 4 == 1) redirectRecord(uri, s"<urn:uuid:red-$id>", FixtureDate, s"/doc/${id - 1}")
             else responseRecord(uri, s"<urn:uuid:resp-$id>", FixtureDate, s"<p>ok $id</p>")
-          ((id % nShards).toInt, id, rec)
+          ((id % Shards).toInt, id, rec)
         }
         .toDF("g", "doc_id", "record_bytes")
-        .repartition(nShards, col("g"))
-        .sortWithinPartitions(col("g"), col("doc_id"))
-      write(records, tmp)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
     }
-    dir
-  }
 
   // ----------------------------------------------------- payload revisit
 
@@ -1048,39 +1024,31 @@ object Warc {
     * GLOBAL, not per-URI — the mirror must resolve to the original host's
     * capture).
     */
-  def ensureRevisitDir(sfDir: String, docs: DataFrame, nShards: Int = 8): String = {
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("revisit-fixture", sfDir, docs, "doc_id", "text", s"ns=$nShards,v=1")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+  def ensureRevisitDir(sfDir: String, docs: DataFrame): String =
+    ensureShards("revisit-fixture", sfDir, docs, 1) {
       val spark = docs.sparkSession
       import spark.implicits._
-      val pages = graft.operators.Html.dirtyHtml(docs).as[(Long, String)]
-      val records = pages
+      graft.operators.Html
+        .dirtyHtml(docs)
+        .as[(Long, String)]
         .flatMap { case (id, html) =>
           val uri = s"http://example.com/doc/$id"
           val first =
-            Seq(((id % nShards).toInt, id, 0, responseRecord(uri, s"<urn:uuid:resp-$id>", FixtureDate, html)))
+            Seq(((id % Shards).toInt, id, 0, responseRecord(uri, s"<urn:uuid:resp-$id>", FixtureDate, html)))
           val recap =
             if (id % 3 == 0)
-              Seq(((id % nShards).toInt, id, 1, responseRecord(uri, s"<urn:uuid:resp2-$id>", RevisitDate, html)))
+              Seq(((id % Shards).toInt, id, 1, responseRecord(uri, s"<urn:uuid:resp2-$id>", RevisitDate, html)))
             else if (id % 3 == 1)
-              Seq(((id % nShards).toInt, id, 1, responseRecord(uri, s"<urn:uuid:resp2-$id>", RevisitDate, html + "<!-- updated -->")))
+              Seq(((id % Shards).toInt, id, 1, responseRecord(uri, s"<urn:uuid:resp2-$id>", RevisitDate, html + "<!-- updated -->")))
             else Nil
           val mirror =
             if (id % 5 == 0)
-              Seq(((id % nShards).toInt, id, 2, responseRecord(s"http://mirror.example.com/doc/$id", s"<urn:uuid:mirror-$id>", MirrorDate, html)))
+              Seq(((id % Shards).toInt, id, 2, responseRecord(s"http://mirror.example.com/doc/$id", s"<urn:uuid:mirror-$id>", MirrorDate, html)))
             else Nil
           first ++ recap ++ mirror
         }
         .toDF("g", "doc_id", "sub", "record_bytes")
-        .repartition(nShards, col("g"))
-        .sortWithinPartitions(col("g"), col("doc_id"), col("sub"))
-      write(records, tmp)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
     }
-    dir
-  }
 
   /** Payload-digest revisit resolution — the Common-Crawl dedup shape
     * (ISO 28500 `revisit` records reference a prior capture by
@@ -1187,11 +1155,9 @@ object Warc {
     * (doc-keyed groups, date-ordered within doc), so shard bytes are a
     * pure function of the corpus.
     */
-  def ensureDedupedDir(sfDir: String, docs: DataFrame, nShards: Int = 8): String = {
+  def ensureDedupedDir(sfDir: String, docs: DataFrame): String = {
     val revDir = ensureRevisitDir(sfDir, docs)
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("revisit-deduped", sfDir, docs, "doc_id", "text", s"ns=$nShards,v=1")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+    ensureShards("revisit-deduped", sfDir, docs, 1) {
       val spark = docs.sparkSession
       import spark.implicits._
       val verdicts = revisitResolved(responses(spark, revDir))
@@ -1205,10 +1171,10 @@ object Warc {
           col("content_type"),
           col("block")
         )
-      val records = recs
+      recs
         .join(verdicts, Seq("record_id"))
         .select(
-          pmod(regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast(LongType), lit(nShards.toLong))
+          pmod(regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast(LongType), lit(Shards.toLong))
             .cast("int")
             .as("g"),
           regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast(LongType).as("doc_id"),
@@ -1238,13 +1204,7 @@ object Warc {
           (g, docId, date, rid, bytes)
         }
         .toDF("g", "doc_id", "warc_date", "record_id", "record_bytes")
-        .repartition(nShards, col("g"))
-        .sortWithinPartitions(col("g"), col("doc_id"), col("warc_date"), col("record_id"))
-      write(records, tmp)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
     }
-    dir
   }
 
   /** The OTHER ISO 28500 §6.7.3 revisit profile: `server-not-modified` —
@@ -1283,34 +1243,26 @@ object Warc {
     * [[RevisitDate]] and the server answers 304 — the crawler records a
     * [[notModifiedRecord]] instead of a payload.
     */
-  def ensureNotModifiedDir(sfDir: String, docs: DataFrame, nShards: Int = 8): String = {
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("notmod-fixture", sfDir, docs, "doc_id", "text", s"ns=$nShards,v=1")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+  def ensureNotModifiedDir(sfDir: String, docs: DataFrame): String =
+    ensureShards("notmod-fixture", sfDir, docs, 1) {
       val spark = docs.sparkSession
       import spark.implicits._
-      val pages = graft.operators.Html.dirtyHtml(docs).as[(Long, String)]
-      val records = pages
+      graft.operators.Html
+        .dirtyHtml(docs)
+        .as[(Long, String)]
         .flatMap { case (id, html) =>
           val uri = s"http://example.com/doc/$id"
           val first =
-            Seq(((id % nShards).toInt, id, 0, responseRecord(uri, s"<urn:uuid:resp-$id>", FixtureDate, html)))
+            Seq(((id % Shards).toInt, id, 0, responseRecord(uri, s"<urn:uuid:resp-$id>", FixtureDate, html)))
           val nm =
             if (id % 4 == 1)
-              Seq(((id % nShards).toInt, id, 1,
+              Seq(((id % Shards).toInt, id, 1,
                 notModifiedRecord(uri, s"<urn:uuid:nm-$id>", RevisitDate, uri, FixtureDate)))
             else Nil
           first ++ nm
         }
         .toDF("g", "doc_id", "sub", "record_bytes")
-        .repartition(nShards, col("g"))
-        .sortWithinPartitions(col("g"), col("doc_id"), col("sub"))
-      write(records, tmp)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
     }
-    dir
-  }
 
   /** Resolve `server-not-modified` revisits: each 304 capture takes the
     * payload of the LATEST prior capture of the SAME URI — a left AS-OF
@@ -1485,18 +1437,18 @@ object Warc {
       extra = Seq("WARC-Refers-To" -> refersTo)
     )
 
-  /** Write per-page WAT envelopes (`doc_id`, `wat` JSON string) as a
-    * sidecar shard directory — same partition-parallel sink as [[write]].
+  /** Per-page WAT envelopes (`doc_id`, `wat` JSON string) as sidecar
+    * metadata records.
     */
-  def writeWat(envelopes: DataFrame, dir: String, nShards: Int = 8): Unit = {
+  private def metadataRecords(envelopes: DataFrame): DataFrame = {
     val spark = envelopes.sparkSession
     import spark.implicits._
-    val records = envelopes
+    envelopes
       .select(col("doc_id"), col("wat"))
       .as[(Long, String)]
       .map { case (id, json) =>
         (
-          (id % nShards).toInt,
+          (id % Shards).toInt,
           id,
           metadataRecord(
             s"http://example.com/doc/$id",
@@ -1508,9 +1460,6 @@ object Warc {
         )
       }
       .toDF("g", "doc_id", "record_bytes")
-      .repartition(nShards, col("g"))
-      .sortWithinPartitions(col("g"), col("doc_id"))
-    write(records, dir)
   }
 
   /** The `metadata` records of a WAT directory, JSON decoded — the read
@@ -1535,10 +1484,8 @@ object Warc {
     * WAT shards once per corpus fingerprint — the link-graph sidecar a
     * crawl publishes beside WARC and WET.
     */
-  def ensureWatDir(sfDir: String, docs: DataFrame, nShards: Int = 8): String = {
-    val dir = graft.operators.Indexes
-      .fingerprintDirOn("wat-fixture", sfDir, docs, "doc_id", "text", s"ns=$nShards,v=1")
-    graft.operators.Indexes.atomicBuild(dir, "_SUCCESS") { tmp =>
+  def ensureWatDir(sfDir: String, docs: DataFrame): String =
+    ensureShards("wat-fixture", sfDir, docs, 1) {
       import graft.operators.Urls
       val uri = concat(lit("http://example.com/doc/"), col("doc_id"))
       val links = graft.operators.Html
@@ -1562,12 +1509,8 @@ object Warc {
           lit("]}")
         ).as("wat")
       )
-      writeWat(envelopes, tmp, nShards)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/_SUCCESS"))
-      ()
+      metadataRecords(envelopes)
     }
-    dir
-  }
 
   // ------------------------------------------------------------- the parse
 

@@ -129,7 +129,7 @@ object SubstrIndexStream {
     // write-once marker is the _SUCCESS file, not dir existence: Spark
     // creates the dir at job start, so a crash mid-write leaves the dir
     // behind with partial data — a replay must recompute (mode overwrite
-    // rewrites the torn dir), exactly the Indexes.atomicBuild discipline
+    // rewrites the torn dir), the marker half of the Indexes.ensure discipline
     val cleanDone = DeltaFold.exists(s"$dir/clean/batch_id=$batchId/_SUCCESS")
     DeltaFold.upsert(dir, batchId) { (_, path) =>
       if (!cleanDone) {

@@ -40,7 +40,7 @@ class AudioIndexStreamSpec extends AnyFunSuite {
     val slice2 = docs.filter(col("doc_id") >= 110)
 
     val dir = java.nio.file.Files.createTempDirectory("graft_audio_idx").toString + "/idx"
-    Audio.ensureAudioFpIndex(spark, base, dir)
+    graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, base), dir)
     assert(spark.read.parquet(s"$dir/docs").count() === base.count(),
       "docs/ holds one fingerprint row per corpus clip")
 
@@ -103,7 +103,7 @@ class AudioIndexStreamSpec extends AnyFunSuite {
       clusterSet(Audio.fpClusters(Audio.spectralFp(spark, ds)))
 
     val dir = java.nio.file.Files.createTempDirectory("graft_audio_spec_idx").toString + "/idx"
-    Audio.ensureAudioSpectralIndex(spark, base, dir)
+    graft.operators.Indexes.copyDir(Audio.ensureAudioSpectralIndex(sf, base), dir)
     AudioIndexStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 0.0,
       fp = Audio.spectralFp)
     AudioIndexStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 0.0,
@@ -120,7 +120,7 @@ class AudioIndexStreamSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 40)
     val dir = java.nio.file.Files.createTempDirectory("graft_audio_crash").toString + "/idx"
-    Audio.ensureAudioFpIndex(spark, docs, dir)
+    graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, docs), dir)
     val expected = clusterSet(spark.read.parquet(s"$dir/clusters"))
 
     // simulate a process death between the journal commit point and the
@@ -162,7 +162,7 @@ class AudioIndexStreamSpec extends AnyFunSuite {
     val base = docs.filter(col("doc_id") < 30)
     val growth = docs.filter(col("doc_id") >= 30)
     val dir = java.nio.file.Files.createTempDirectory("graft_audio_orphan").toString + "/idx"
-    Audio.ensureAudioFpIndex(spark, base, dir)
+    graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, base), dir)
     // plant residue of a fictitious crashed compaction
     val stale = "999-deadbeef"
     Files.createDirectories(Paths.get(s"$dir/docs.compact-$stale"))

@@ -142,9 +142,9 @@ class AudioSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 40 < 32)
     val delta = docs.filter(col("doc_id") % 3 === 0)
-    val dir = Audio.audioFpIndexDir(sf, corpus)
-    Audio.ensureAudioFpIndex(spark, corpus, dir)
-    val marker = new java.io.File(s"$dir/clusters/_SUCCESS")
+    val dir = Audio.ensureAudioFpIndex(sf, corpus)
+    // the published dir is the commit (its presence, not a marker file)
+    val marker = new java.io.File(dir)
     assert(marker.exists(), "index not published")
     val built = marker.lastModified()
 
@@ -154,7 +154,7 @@ class AudioSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), r.getBoolean(4)))
       .toSet
     val first = run()
-    Audio.ensureAudioFpIndex(spark, corpus, dir)
+    assert(Audio.ensureAudioFpIndex(sf, corpus) === dir)
     assert(run() === first, "delta replay diverged")
     assert(marker.lastModified() === built, "replay rebuilt the published index")
 

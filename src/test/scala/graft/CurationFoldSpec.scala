@@ -11,7 +11,7 @@ import graft.streaming.CurationGateStream
   * replays are exactly-once (before AND after their fold), and no
   * standing document's raw text is re-read by a fold.
   */
-class CurationFoldSpec extends AnyFunSuite {
+class CurationFoldSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -36,15 +36,15 @@ class CurationFoldSpec extends AnyFunSuite {
     val full = corpus(30)
     val base = full.filter(col("doc_id") % 5 =!= 1)
     val growth = full.filter(col("doc_id") % 5 === 1)
-    val sfTag = scratch("fp") // isolates the fingerprint families per run
+    val sfTag = freshSf() // isolates the fingerprint families per run
 
     // wholesale truth over the full corpus
-    val wholeDir = Curation.ensureGateAsset(sfTag, full)
+    val wholeDir = owned(Curation.ensureGateAsset(sfTag, full))
     val whole = gatesOf(spark.read.parquet(s"$wholeDir/gates"))
     assert(whole.size === 30)
 
     // grown: base asset + one folded batch
-    val baseDir = Curation.ensureGateAsset(sfTag, base)
+    val baseDir = owned(Curation.ensureGateAsset(sfTag, base))
     val dir = scratch("grow")
     Indexes.copyDir(baseDir, dir)
     CurationGateStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 1e-9)
@@ -69,8 +69,8 @@ class CurationFoldSpec extends AnyFunSuite {
     val full = corpus(20)
     val base = full.filter(col("doc_id") % 5 =!= 1).localCheckpoint()
     val growth = full.filter(col("doc_id") % 5 === 1).localCheckpoint()
-    val sfTag = scratch("fp2")
-    val baseDir = Curation.ensureGateAsset(sfTag, base)
+    val sfTag = freshSf()
+    val baseDir = owned(Curation.ensureGateAsset(sfTag, base))
     val dir = scratch("noreread")
     Indexes.copyDir(baseDir, dir)
     // the statistics tables carry no text; deriveGates consumes ONLY
@@ -81,7 +81,7 @@ class CurationFoldSpec extends AnyFunSuite {
     // wholesale.
     CurationGateStream.upsertBatch(growth, dir, batchId = 7L, compactAt = 1e-9)
     val grown = gatesOf(CurationGateStream.gates(spark, dir))
-    val wholeDir = Curation.ensureGateAsset(sfTag, full.localCheckpoint())
+    val wholeDir = owned(Curation.ensureGateAsset(sfTag, full.localCheckpoint()))
     assert(grown === gatesOf(spark.read.parquet(s"$wholeDir/gates")))
     // and the published statistics tables are text-free by schema
     Seq("puregates", "docstats", "doctoks").foreach { t =>

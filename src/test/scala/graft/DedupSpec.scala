@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -359,8 +359,7 @@ class DedupSpec extends AnyFunSuite {
       (14L, "entirely novel material with no duplicate structure anywhere"),
       (15L, "tiny one")
     ).toDF("doc_id", "text")
-    val dir = s"target/test_substr_grams/${System.nanoTime()}"
-    Dedup.ensureSubstrGramIndex(spark, corpus, dir)
+    val dir = owned(Dedup.ensureSubstrGramIndex(freshSf(), corpus))
     val inc = Dedup
       .substrDeltaRemoval(spark, dir, delta)
       .orderBy("doc_id")

@@ -28,7 +28,7 @@ import graft.streaming._
   * The expected final state is the same fold driven without any crash
   * (or, where a row names one, a wholesale build over all its rows).
   */
-class DeltaFoldSpec extends AnyFunSuite {
+class DeltaFoldSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -62,6 +62,11 @@ class DeltaFoldSpec extends AnyFunSuite {
 
   private def scratch(tag: String): String =
     Files.createTempDirectory(s"graft_dfold_$tag").toString + "/asset"
+
+  /** The sfDir every fold's published base asset is keyed under; each
+    * state of the matrix folds into its own copy of it.
+    */
+  private lazy val assetSf = freshSf()
 
   /** Synthetic documents: the media payloads derive from the doc id, the
     * grams from the text — overlapping progressions over 997
@@ -108,7 +113,7 @@ class DeltaFoldSpec extends AnyFunSuite {
   }.toDF("doc_id", "text", "lang")
 
   private lazy val curationBase =
-    Curation.ensureGateAsset(scratch("cfp"), curationCorpus.filter(col("doc_id") % 5 =!= 1))
+    owned(Curation.ensureGateAsset(assetSf, curationCorpus.filter(col("doc_id") % 5 =!= 1)))
 
   private def curationBatch(k: Int): DataFrame =
     curationCorpus.filter(col("doc_id") % 5 === 1 && (col("doc_id") < 16) === (k == 0))
@@ -117,17 +122,18 @@ class DeltaFoldSpec extends AnyFunSuite {
     Fold(
       "audio",
       Seq("docs", "clusters"),
-      dir => Audio.ensureAudioFpIndex(spark, docs(0, 30), dir),
+      dir => Indexes.copyDir(owned(Audio.ensureAudioFpIndex(assetSf, docs(0, 30))), dir),
       (dir, k, c) => AudioIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
       dir => AudioIndexStream.compactDeltas(spark, dir),
       dir => rows(AudioIndexStream.readClusters(spark, dir)),
       // the fold must equal a wholesale rebuild, residue sweep or not
-      wholesale = Some((dir, n) => Audio.ensureAudioFpIndex(spark, docs(0, 30L + 5 * n), dir))
+      wholesale = Some((dir, n) =>
+        Indexes.copyDir(owned(Audio.ensureAudioFpIndex(assetSf, docs(0, 30L + 5 * n))), dir))
     ),
     Fold(
       "video",
       Seq("sig", "dfs", "sizes", "rsig", "rdfs", "rsizes", "members"),
-      dir => Video.ensureSceneIndex(spark, docs(0, 30), dir),
+      dir => Indexes.copyDir(owned(Video.ensureSceneIndex(assetSf, docs(0, 30))), dir),
       (dir, k, c) => VideoIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
       dir => VideoIndexStream.compactDeltas(spark, dir),
       dir => rows(VideoIndexStream.readSig(spark, dir))
@@ -135,7 +141,7 @@ class DeltaFoldSpec extends AnyFunSuite {
     Fold(
       "substr",
       Seq("grams"),
-      dir => Dedup.ensureSubstrGramIndex(spark, docs(0, 30), dir),
+      dir => Indexes.copyDir(owned(Dedup.ensureSubstrGramIndex(assetSf, docs(0, 30))), dir),
       (dir, k, c) => SubstrIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
       dir => SubstrIndexStream.compactDeltas(spark, dir),
       dir => rows(SubstrIndexStream.readGrams(spark, dir))
@@ -165,7 +171,9 @@ class DeltaFoldSpec extends AnyFunSuite {
     Fold(
       "semantic",
       Seq("celled", "seeds", "counts"),
-      dir => SemanticIndex.ensureBuilt(emb.filter(col("vec_id") % 7 =!= 3), dir, 50, 100),
+      dir =>
+        Indexes.copyDir(
+          owned(SemanticIndex.ensure(assetSf, emb.filter(col("vec_id") % 7 =!= 3), 50, 100)), dir),
       (dir, k, c) =>
         SemanticIndex.upsertBatch(
           emb.filter(col("vec_id") % 7 === 3 && (col("vec_id") < 250) === (k == 0)),

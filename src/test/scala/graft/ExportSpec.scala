@@ -10,7 +10,7 @@ import graft.operators.TrainExport
   * are no-ops, and a single-shard read is partition-pruned (the
   * data-loader access path).
   */
-class ExportSpec extends AnyFunSuite {
+class ExportSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -25,13 +25,9 @@ class ExportSpec extends AnyFunSuite {
     }.toDF("doc_id", "source", "text")
   }
 
-  private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_export").toString + "/exp"
-
   test("export conserves documents and tokens; manifest certifies written shards") {
     val docs = corpus
-    val dir = freshDir()
-    TrainExport.ensureBuilt(docs, dir)
+    val dir = owned(TrainExport.ensure(freshSf(), docs))
     val man = TrainExport.manifest(spark, dir)
     val shards = spark.read.parquet(s"$dir/shards")
     // conservation: every doc in exactly one pack, every pack in one shard
@@ -68,19 +64,18 @@ class ExportSpec extends AnyFunSuite {
 
   test("rebuild is a no-op on an already-published export") {
     val docs = corpus
-    val dir = freshDir()
-    TrainExport.ensureBuilt(docs, dir)
-    val marker = new java.io.File(s"$dir/manifest/_SUCCESS")
+    val sf = freshSf()
+    val dir = owned(TrainExport.ensure(sf, docs))
+    val marker = new java.io.File(s"$dir/_SUCCESS")
     assert(marker.exists())
     val t0 = marker.lastModified()
-    TrainExport.ensureBuilt(docs, dir)
+    assert(TrainExport.ensure(sf, docs) === dir)
     assert(marker.lastModified() === t0, "second build must not rewrite")
   }
 
   test("single-shard read is partition-pruned (the data-loader path)") {
     val docs = corpus
-    val dir = freshDir()
-    TrainExport.ensureBuilt(docs, dir)
+    val dir = owned(TrainExport.ensure(freshSf(), docs))
     val one = TrainExport.shard(spark, dir, "books", 0L)
     val plan = one.queryExecution.executedPlan.toString
     assert(
@@ -94,9 +89,9 @@ class ExportSpec extends AnyFunSuite {
   test("tokenizer export: read-back round-trip — merges re-encode, ids line up, manifest certifies") {
     import graft.operators.{TextAnalysis, TokenizerExport}
     val docs = corpus.select(col("doc_id"), col("text"))
-    val dir = freshDir()
-    TokenizerExport.ensureBuilt(docs, dir, bpeSteps = 6,
-      uniVocab = 24, uniPieceLen = 4, uniRounds = 1)
+    val sf = freshSf()
+    val dir = owned(TokenizerExport.ensure(sf, docs, bpeSteps = 6,
+      uniVocab = 24, uniPieceLen = 4, uniRounds = 1))
     val merges = TokenizerExport.merges(spark, dir)
     val vocab = TokenizerExport.vocab(spark, dir).cache()
     val man = TokenizerExport.manifest(spark, dir).head()
@@ -147,9 +142,9 @@ class ExportSpec extends AnyFunSuite {
     assert(recomputed === man.getAs[String]("vocab_md5"))
 
     // 4. rebuild is a no-op (atomic-publication contract)
-    val marker = new java.io.File(s"$dir/manifest/_SUCCESS")
+    val marker = new java.io.File(s"$dir/_SUCCESS")
     val t0 = marker.lastModified()
-    TokenizerExport.ensureBuilt(docs, dir, 6, 24, 4, 1)
+    assert(TokenizerExport.ensure(sf, docs, 6, 24, 4, 1) === dir)
     assert(marker.lastModified() === t0)
     vocab.unpersist()
   }

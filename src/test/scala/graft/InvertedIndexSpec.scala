@@ -10,7 +10,7 @@ import graft.operators.TextAnalysis
   * (overlapping and repeated matches), and the seek property — the
   * phrase plan filters the index to the two query terms before any join.
   */
-class InvertedIndexSpec extends AnyFunSuite {
+class InvertedIndexSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -34,8 +34,7 @@ class InvertedIndexSpec extends AnyFunSuite {
 
   test("BM25: hand-computed scores on the fixture (exact integer tf-part, milli idf)") {
     import graft.operators.TextIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25").toString + "/idx"
-    TextIndex.ensureBuilt(docs, dir)
+    val dir = owned(TextIndex.ensure(freshSf(), docs))
     // N=3, S=14 (dl: 6, 5, 3); df(be)=df(to)=2
     // idf_milli = floor(1000·ln(8/5)) = 470
     // doc1: w(be)=w(to) = (470·44·2·14) div (20·2·14 + 6·14 + 18·6·3) = 579040 div 968 = 598
@@ -59,8 +58,7 @@ class InvertedIndexSpec extends AnyFunSuite {
     import graft.operators.TextIndex
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val docs = Tables.documents(spark, sf)
-      val dir = TextIndex.defaultDir(sf, docs)
-      TextIndex.ensureBuilt(docs, dir)
+      val dir = TextIndex.ensure(sf, docs)
       val (w1, w2) = TextIndex.topBigram(spark, dir)
       val n = TextIndex.nDocs(spark, dir)
       val dfs = TextIndex

@@ -76,9 +76,9 @@ class MultimodalSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 10 =!= 7)
     val delta = docs.filter(col("doc_id") % 10 === 7)
-    val dir = Multimodal.dhashIndexDir(sf, corpus)
-    Multimodal.ensureDhashIndex(spark, corpus, dir)
-    val marker = new java.io.File(s"$dir/reps/_SUCCESS")
+    val dir = Multimodal.ensureDhashIndex(sf, corpus)
+    // the published dir is the commit (its presence, not a marker file)
+    val marker = new java.io.File(dir)
     assert(marker.exists(), "index not published")
     val built = marker.lastModified()
 
@@ -89,7 +89,7 @@ class MultimodalSpec extends AnyFunSuite {
       .toSet
     val first = run()
     // replay idempotence: same inputs, same verdicts; the build is a no-op
-    Multimodal.ensureDhashIndex(spark, corpus, dir)
+    assert(Multimodal.ensureDhashIndex(sf, corpus) === dir)
     assert(run() === first, "delta replay diverged")
     assert(marker.lastModified() === built, "replay rebuilt the published index")
 

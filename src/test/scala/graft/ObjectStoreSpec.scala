@@ -103,22 +103,42 @@ class ObjectStoreSpec extends AnyFunSuite {
 
   test("asset publication on the remote scheme: marker-commit build + pointer-committed compaction") {
     import graft.operators.Indexes
-    val base = "slowfs:" +
-      java.nio.file.Files.createTempDirectory("graft_slowfs_asset").toString + "/asset"
+    val root = "slowfs:" +
+      java.nio.file.Files.createTempDirectory("graft_slowfs_asset").toString + "/target"
+    val corpus = (1 to 10).map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text")
     var builds = 0
-    // BUILD: atomicBuild dispatches to the marker mode on a scheme'd dir —
-    // objects land under the FINAL prefix (no temp dir, no directory
-    // rename), the completion marker is the read barrier
-    Indexes.atomicBuild(base, "grams/_SUCCESS") { d =>
-      builds += 1
-      assert(d === base, "object-store build must write the final prefix directly")
+    def ensure(body: String => Unit): String =
+      Indexes.ensureUnder(root, "os-test", "os", corpus, "doc_id", "text", "v=1") { d =>
+        builds += 1
+        body(d)
+      }
+    def writeGrams(d: String): Unit =
       (1 to 10).map(i => (i.toLong, i * 2L)).toDF("id", "v")
         .coalesce(1).write.mode("overwrite").parquet(s"$d/grams")
+    // BUILD: the asset call dispatches to the marker mode on a scheme'd
+    // root — objects land under the FINAL prefix (no temp dir, no
+    // directory rename), the root marker object is the read barrier. A
+    // build that dies before the marker leaves objects readers never key on
+    var halfDir: String = null
+    intercept[IllegalStateException] {
+      ensure { d =>
+        halfDir = d
+        writeGrams(d)
+        throw new IllegalStateException("build died before its marker")
+      }
     }
-    assert(builds === 1)
-    // idempotent: the marker gates a replay
-    Indexes.atomicBuild(base, "grams/_SUCCESS")(_ => builds += 1)
-    assert(builds === 1)
+    val local = halfDir.stripPrefix("slowfs:")
+    assert(new java.io.File(s"$local/grams").exists() && !new java.io.File(s"$local/_SUCCESS").exists())
+    // ...so the next call rebuilds it once, in place, and publishes
+    val base = ensure { d =>
+      assert(d === halfDir, "object-store build must write the final prefix directly")
+      writeGrams(d)
+    }
+    assert(base === halfDir && builds === 2)
+    assert(new java.io.File(s"$local/_SUCCESS").exists())
+    // then resolves: the marker gates a replay
+    assert(ensure(_ => ()) === base)
+    assert(builds === 2)
     // pre-generation resolution: the plain subdir
     assert(Indexes.liveDir(base, "grams") === s"$base/grams")
     assert(spark.read.parquet(Indexes.liveDir(base, "grams")).count() === 10)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{SemanticIndex, Similarity}
+import graft.operators.{Indexes, SemanticIndex, Similarity}
 
 /** The amortization contract of [[SemanticIndex]]: reading the persisted
   * quantizer state is BIT-IDENTICAL to a fresh derivation (so the oracle
@@ -27,14 +27,20 @@ class SemanticIndexSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
     val fresh = Similarity
       .semanticDedupScaled(emb, threshold = 0.35, targetCellSize = 50, maxCellSize = 100)
+    // start with no published index: dedup must build it and publish it
+    // at the corpus's fingerprinted dir
+    val dir = SemanticIndex.ensure(sf, emb, targetCellSize = 50, maxCellSize = 100)
+    Indexes.deleteRecursively(java.nio.file.Paths.get(dir))
     val amortized = SemanticIndex
       .dedup(sf, emb, threshold = 0.35, targetCellSize = 50, maxCellSize = 100)
     assert(keptSet(amortized) === keptSet(fresh))
-    // second call must reuse the published asset (same fingerprint dir,
-    // marker present) — the steady-state read path
-    val dir = SemanticIndex.defaultDir(sf, emb, targetCellSize = 50, maxCellSize = 100)
-    assert(new java.io.File(s"$dir/celled/_SUCCESS").exists(), s"no published asset at $dir")
+    val marker = new java.io.File(s"$dir/_SUCCESS")
+    assert(marker.exists(), s"dedup published no asset at $dir")
+    // the second call must reuse the published asset, not rebuild it —
+    // the steady-state read path
+    val t0 = marker.lastModified()
     assert(keptSet(SemanticIndex.dedup(sf, emb, 0.35, 50, 100)) === keptSet(fresh))
+    assert(marker.lastModified() === t0, "a second dedup must not rebuild the asset")
   }
 
   test("fingerprint is stale-proof: an in-place corpus edit maps to a new asset") {
@@ -44,7 +50,7 @@ class SemanticIndexSpec extends AnyFunSuite {
       when(col("vec_id") === 0, reverse(col("embedding"))).otherwise(col("embedding"))
     )
     assert(
-      SemanticIndex.defaultDir(sf, emb, 50, 100) !== SemanticIndex.defaultDir(sf, edited, 50, 100),
+      SemanticIndex.ensure(sf, emb, 50, 100) !== SemanticIndex.ensure(sf, edited, 50, 100),
       "same ids + changed payload must not reuse the old index"
     )
   }
@@ -90,8 +96,7 @@ class SemanticIndexSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
     val corpus0 = emb.filter(col("vec_id") % 7 =!= 3)
     val growth = emb.filter(col("vec_id") % 7 === 3)
-    val baseDir = SemanticIndex.defaultDir(sf, corpus0, 50, 100)
-    SemanticIndex.ensureBuilt(corpus0, baseDir, 50, 100)
+    val baseDir = SemanticIndex.ensure(sf, corpus0, 50, 100)
     val dir = s"target/test_sem_fold/${System.nanoTime()}/idx"
     graft.operators.Indexes.copyDir(baseDir, dir)
     val baseCells = cellRows(spark.read.parquet(s"$dir/celled"))
@@ -111,8 +116,7 @@ class SemanticIndexSpec extends AnyFunSuite {
     // build on the grown corpus (celled + seeds + counts)
     SemanticIndex.compactDeltas(spark, dir, 50, 100)
     assert(!new java.io.File(s"$dir/delta").exists(), "folded delta retired")
-    val wholeDir = SemanticIndex.defaultDir(sf, emb, 50, 100)
-    SemanticIndex.ensureBuilt(emb, wholeDir, 50, 100)
+    val wholeDir = SemanticIndex.ensure(sf, emb, 50, 100)
     assert(
       cellRows(spark.read.parquet(s"$dir/celled")) ===
         cellRows(spark.read.parquet(s"$wholeDir/celled")),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -292,8 +292,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toMap
     // the persisted two-stage search: ADC shortlist over the stored codes,
     // exact L2 rerank of the shortlist
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString + "/idx"
-    Pq.ensureBuilt(emb, dir)
+    val dir = owned(Pq.ensure(freshSf(), emb))
     val reranked = Pq
       .searchReranked(spark, dir, q, emb, dim = 64, k = 5, shortlist = 100)
       .collect()
@@ -339,7 +338,7 @@ class SimilaritySpec extends AnyFunSuite {
     // label stands in for the cell id so the prune is observable (trained
     // cells on isotropic vectors collapse — same rationale as the IVF
     // tests); build/search mechanics are cell-column-agnostic.
-    IvfPq.ensureBuilt(emb, dir, cellCol = Some("label"))
+    IvfPq.build(emb, dir, cellCol = Some("label"))
     val queries = emb.filter(col("vec_id") < 5)
     val got = IvfPq.search(spark, dir, queries, emb, dim = 64, k = 5, nProbe = 3,
       shortlist = 1 << 20)
@@ -389,8 +388,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val corpus = points.toDF("vec_id", "embedding")
     val queries = corpus.filter(col("vec_id") % 30 === 0) // one per cluster
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_syn").toString + "/idx"
-    IvfPq.ensureBuilt(corpus, dir)
+    val dir = owned(IvfPq.ensure(freshSf(), corpus))
     def topkSet(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
       df.select("query_id", "neighbor_id")
         .as[(Long, Long)]
@@ -417,7 +415,7 @@ class SimilaritySpec extends AnyFunSuite {
     // label-as-cell + an independent metadata column (vec_id parity) so
     // the pushdown is observable beside the partition prune — the same
     // construction as the IvfIndex filtered test, now on the CODE table.
-    IvfPq.ensureBuilt(
+    IvfPq.build(
       emb.withColumn("parity", col("vec_id") % 2),
       dir,
       cellCol = Some("label"),

@@ -10,7 +10,7 @@ import graft.streaming.SubstrIndexStream
   * compaction), write-once clean output, and debt-policy compaction through
   * the shared crash-safe swap.
   */
-class SubstrIndexStreamSpec extends AnyFunSuite {
+class SubstrIndexStreamSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -31,11 +31,13 @@ class SubstrIndexStreamSpec extends AnyFunSuite {
     13L -> "wholly novel delta material nothing has seen before"
   )
 
+  /** The published index of `corpus`: the pre-batch state every fold
+    * starts from, on its own copy.
+    */
+  private lazy val base = owned(Dedup.ensureSubstrGramIndex(freshSf(), corpus))
+
   private def freshDir(): String = {
-    val d = s"target/test_substr_stream/${System.nanoTime()}"
-    val base = s"$d/base"
-    Dedup.ensureSubstrGramIndex(spark, corpus, base)
-    val idx = s"$d/idx"
+    val idx = s"target/test_substr_stream/${System.nanoTime()}/idx"
     graft.operators.Indexes.copyDir(base, idx)
     idx
   }
@@ -48,8 +50,7 @@ class SubstrIndexStreamSpec extends AnyFunSuite {
       .toSet
 
   private def rebuiltSet(docs: org.apache.spark.sql.DataFrame): Set[(Int, Long)] = {
-    val d = s"target/test_substr_stream/rebuild-${System.nanoTime()}"
-    Dedup.ensureSubstrGramIndex(spark, docs, d)
+    val d = owned(Dedup.ensureSubstrGramIndex(freshSf(), docs))
     spark.read.parquet(s"$d/grams").select(col("b"), col("gh")).as[(Int, Long)].collect().toSet
   }
 
@@ -61,8 +62,7 @@ class SubstrIndexStreamSpec extends AnyFunSuite {
       .substrDeltaRemovalOn(SubstrIndexStream.readGrams(spark, dir), delta)
       .orderBy("doc_id").collect().map(_.toString).toSeq
     val fresh = {
-      val d = s"target/test_substr_stream/fresh-${System.nanoTime()}"
-      Dedup.ensureSubstrGramIndex(spark, corpus.unionByName(growth), d)
+      val d = owned(Dedup.ensureSubstrGramIndex(freshSf(), corpus.unionByName(growth)))
       Dedup.substrDeltaRemoval(spark, d, delta)
         .orderBy("doc_id").collect().map(_.toString).toSeq
     }
@@ -113,7 +113,7 @@ class SubstrIndexStreamSpec extends AnyFunSuite {
     assert(clean(4L) > 0L, "corpus-known spans in the batch must be removed")
     assert(clean(5L) > 0L, "within-batch repeated span must lose its non-canonical occurrence")
     val expected = Dedup
-      .substrDeltaRemoval(spark, s"${dir.stripSuffix("/idx")}/base", growth)
+      .substrDeltaRemoval(spark, base, growth)
       .orderBy("doc_id").collect().map(_.toString).toSeq
     val got = spark.read.parquet(s"$dir/clean/batch_id=0")
       .orderBy("doc_id").collect().map(_.toString).toSeq
@@ -185,7 +185,7 @@ class SubstrIndexStreamSpec extends AnyFunSuite {
       "replay must rewrite the torn batch output"
     )
     val expected = Dedup
-      .substrDeltaRemoval(spark, s"${dir.stripSuffix("/idx")}/base", growth)
+      .substrDeltaRemoval(spark, base, growth)
       .orderBy("doc_id").collect().map(_.toString).toSeq
     val got = spark.read.parquet(s"$dir/clean/batch_id=0")
       .orderBy("doc_id").collect().map(_.toString).toSeq

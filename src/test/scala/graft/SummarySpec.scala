@@ -16,8 +16,10 @@ class SummarySpec extends AnyFunSuite {
   private def scannedPaths(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def covered = {
-    val docs = Tables.documents(spark, sf)
+  private def covered = coveredOn(sf)
+
+  private def coveredOn(sfDir: String) = {
+    val docs = Tables.documents(spark, sfDir)
     docs
       .groupBy(col("source"))
       .agg(
@@ -43,6 +45,21 @@ class SummarySpec extends AnyFunSuite {
       )
       assert(df.collect().map(_.toString).toSeq === expected)
       assert(dir.contains("agg-summary"))
+    } finally Summaries.disable(spark)
+  }
+
+  test("a summary answers only the documents table it was built from") {
+    // same session, another documents table: the covered aggregate must
+    // scan that table, not read the enabled table's summary
+    Summaries.disable(spark)
+    val other = "/root/testdata/sf0.01"
+    val expected = coveredOn(other).collect().map(_.toString).toSeq
+    try {
+      Summaries.enableFor(spark, sf, Tables.documents(spark, sf))
+      val df = coveredOn(other)
+      val plan = scannedPaths(df)
+      assert(!plan.contains("agg-summary"), s"must scan $other:\n${plan.take(1500)}")
+      assert(df.collect().map(_.toString).toSeq === expected)
     } finally Summaries.disable(spark)
   }
 

@@ -30,7 +30,7 @@ class VideoIndexStreamSpec extends AnyFunSuite {
     val slice2 = docs.filter(col("doc_id") >= 88)
 
     val dir = java.nio.file.Files.createTempDirectory("graft_video_idx").toString + "/idx"
-    Video.ensureSceneIndex(spark, base, dir)
+    graft.operators.Indexes.copyDir(Video.ensureSceneIndex(sf, base), dir)
     val baseSig = sigSet(spark.read.parquet(s"$dir/sig"))
     assert(baseSig === sigSet(freshSig(base)), "sig/ holds the distinct corpus signatures")
 
@@ -118,15 +118,14 @@ class VideoIndexStreamSpec extends AnyFunSuite {
     val delta = docs.filter(col("doc_id") % 7 === 3 && col("doc_id") >= 50)
 
     val dir = java.nio.file.Files.createTempDirectory("graft_video_grow").toString + "/idx"
-    Video.ensureSceneIndex(spark, corpus0, dir)
+    graft.operators.Indexes.copyDir(Video.ensureSceneIndex(sf, corpus0), dir)
     // fold the growth batch in (compactAt tiny -> immediate fold)
     VideoIndexStream.upsertBatch(grow, dir, batchId = 0L, compactAt = 1e-9)
     assert(!new java.io.File(s"$dir/delta").exists())
 
     // the batch verdict over the stream-grown index equals the verdict
     // over a fresh wholesale build of the same corpus
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_video_grow2").toString + "/idx"
-    Video.ensureSceneIndex(spark, corpus0.unionByName(grow), dir2)
+    val dir2 = Video.ensureSceneIndex(sf, corpus0.unionByName(grow))
     def verdicts(d: String) =
       Video.videoDeltaVerdicts(spark, d, delta)
         .select(col("doc_id"), col("best_match"), col("is_dup"))

@@ -238,9 +238,9 @@ class VideoSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 7 =!= 3)
     val delta = docs.filter(col("doc_id") % 7 === 3)
-    val dir = Video.sceneIndexDir(sf, corpus)
-    Video.ensureSceneIndex(spark, corpus, dir)
-    val marker = new java.io.File(s"$dir/sizes/_SUCCESS")
+    val dir = Video.ensureSceneIndex(sf, corpus)
+    // the published dir is the commit (its presence, not a marker file)
+    val marker = new java.io.File(dir)
     assert(marker.exists(), "index not published")
     val built = marker.lastModified()
 
@@ -251,7 +251,7 @@ class VideoSpec extends AnyFunSuite {
       .toSet
     val first = run()
     assert(first.nonEmpty, "fixture degenerate: no delta x corpus overlaps")
-    Video.ensureSceneIndex(spark, corpus, dir)
+    assert(Video.ensureSceneIndex(sf, corpus) === dir)
     assert(run() === first, "delta replay diverged")
     assert(marker.lastModified() === built, "replay rebuilt the published index")
 

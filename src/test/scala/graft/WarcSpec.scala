@@ -14,7 +14,7 @@ import graft.sources.Warc
   * members, non-response filtering and HTTP body slicing, and the
   * malformed-record contract (truncated / bad version / bad length).
   */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -145,13 +145,10 @@ class WarcSpec extends AnyFunSuite {
 
   test("fixture shards: deterministic bytes across rebuilds") {
     val docs = Seq((1L, "alpha beta"), (2L, "gamma delta"), (9L, "epsilon")).toDF("doc_id", "text")
-    val d1 = tmpDir("fx1") + "/w"
-    val d2 = tmpDir("fx2") + "/w"
-    // build twice through the atomic builder with distinct target dirs by
-    // writing via the internal recipe: reuse ensureFixtureDir's layout by
-    // pointing sfDir at the two temp roots (fingerprint includes sfDir)
-    val f1 = Warc.ensureFixtureDir(d1, docs, nShards = 2)
-    val f2 = Warc.ensureFixtureDir(d2, docs, nShards = 2)
+    // build twice into distinct asset dirs: the fingerprint includes
+    // sfDir, so the two temp roots key two independent builds
+    val f1 = owned(Warc.ensureFixtureDir(freshSf(), docs))
+    val f2 = owned(Warc.ensureFixtureDir(freshSf(), docs))
     def shardBytes(d: String): Map[String, Seq[Byte]] =
       new java.io.File(d)
         .listFiles()

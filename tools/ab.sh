@@ -13,7 +13,8 @@
 #
 # Each run lasts BENCHMARK.json's run_seconds, as the benchmark sets it.
 #
-# The base is checked out detached into a temporary `git worktree`, removed
+# The base is checked out detached into a temporary `git clone --shared`
+# (it borrows this repo's objects and writes nothing to its .git), removed
 # at exit; each side builds and generates inputs in its own checkout. Every
 # run's result line is kept under .ab_out/<time>/. For each workload and
 # end-to-end metric the summary prints the median and quartiles of each
@@ -29,7 +30,7 @@ while [ $# -gt 0 ]; do
     --base) base=$2; shift 2 ;;
     --pairs) pairs=$2; shift 2 ;;
     --seed) seed=$2; shift 2 ;;
-    -h|--help) sed -n '2,22p' "$0"; exit 0 ;;
+    -h|--help) sed -n '2,23p' "$0"; exit 0 ;;
     -*) echo "ab.sh: unknown option $1" >&2; exit 2 ;;
     *) workloads+=("$1"); shift ;;
   esac
@@ -44,12 +45,9 @@ rev=$(git rev-parse --verify "$base^{commit}")
 out="$root/.ab_out/$(date -u +%Y%m%dT%H%M%SZ)"
 mkdir -p "$out"
 wt=$(mktemp -d "${TMPDIR:-/tmp}/graft-ab-base.XXXXXX")
-cleanup() {
-  git -C "$root" worktree remove --force "$wt" 2>/dev/null || rm -rf "$wt"
-  git -C "$root" worktree prune
-}
-trap cleanup EXIT
-git worktree add --detach --quiet "$wt" "$rev"
+trap 'rm -rf "$wt"' EXIT
+git clone --quiet --shared --no-checkout "$root" "$wt"
+git -C "$wt" checkout --quiet --detach "$rev"
 echo "[ab] base $rev in $wt; new = $root (working tree); results in $out" >&2
 
 failed=0
