@@ -448,13 +448,12 @@ object Audio {
 
   private def deltaDupsOn(spark: SparkSession, dir: String, fps: DataFrame): DataFrame = {
     // Delta-aware cluster source: a STREAM-MAINTAINED asset may carry
-    // uncompacted delta/ rows, and reading the persisted `clusters/`
+    // uncompacted delta rows, and reading the persisted `clusters/`
     // aggregate directly would silently ignore streamed docs (is_known =
     // false for clips matching uncompacted growth). The live view
     // re-derives clusters from the exactly-once per-doc view only while a
     // delta is outstanding; with no delta it is the identical persisted
-    // scan. It also runs recoverSwap on open (the commitSwap contract:
-    // every reader finishes an interrupted swap before its first listing).
+    // scan of the committed generation.
     val cl = graft.streaming.AudioIndexStream.readClusters(spark, dir)
     fps
       .select(col("doc_id"), col("fingerprint"))

@@ -978,11 +978,9 @@ object Dedup {
       dir: String,
       deltaDocs: DataFrame
   ): DataFrame =
-    {
-      Indexes.recoverSwap(dir) // no-op for batch-built assets; finishes an
-      // interrupted swap when pointed at a stream-maintained copy
-      substrDeltaRemovalOn(spark.read.parquet(s"$dir/grams"), deltaDocs)
-    }
+    // the committed generation's grams: the plain `grams/` of a batch-built
+    // asset, the folded one of a stream-maintained copy
+    substrDeltaRemovalOn(spark.read.parquet(graft.streaming.DeltaFold.gen(dir)("grams")), deltaDocs)
 
   /** [[substrDeltaRemoval]] against an arbitrary (b, gh) gram frame — the
     * entry the streaming index maintenance path

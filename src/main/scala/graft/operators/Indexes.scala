@@ -33,11 +33,11 @@ import org.apache.spark.sql.types.LongType
   *      current S3/GCS). Either way the published dir carries that root
   *      marker, written here, never by a family.
   *
-  * The fold-maintained assets add the pointer-committed compaction swap
-  * ([[commitSwapMarker]]/[[liveDir]]) and the journaled local swap
-  * ([[commitSwap]]); folds run on a [[copyDir]] of the published asset.
-  * `ObjectStoreSpec` drives the build and the swap through a
-  * foreign-scheme filesystem with no rename-atomicity assumption.
+  * This object publishes build-once assets only. Folds run on a
+  * [[copyDir]] of the published asset, and their compactions commit
+  * through [[graft.streaming.DeltaFold]]'s generation pointer.
+  * `ObjectStoreSpec` drives the build through a foreign-scheme
+  * filesystem with no rename-atomicity assumption.
   */
 object Indexes {
 
@@ -69,8 +69,8 @@ object Indexes {
 
   /** Run independent Spark actions concurrently and rethrow the first
     * failure. ONLY for actions with no ordering dependency — the crash
-    * contract of a fold must hold for ANY landed subset (the journaled
-    * swap's commit point, or the write-once replay markers, provide that).
+    * contract of a fold must hold for ANY landed subset (the generation
+    * pointer's commit, or the write-once replay markers, provide that).
     */
   def inParallel(thunks: (() => Unit)*): Unit = {
     if (thunks.sizeIs <= 1) thunks.foreach(_.apply())
@@ -99,23 +99,6 @@ object Indexes {
       try fb.get()
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     (ra, rb)
-  }
-
-  /** Publish an already-written local directory at its final path: delete
-    * any stale target, then one atomic rename. Orders a cheap visibility
-    * flip AFTER a heavy overlapped write — e.g. a fold's delta partition
-    * that must not become visible before its sibling clean output lands
-    * (the fold-safety invariant "visible delta ⇒ clean landed" survives
-    * [[inParallel]] because only this rename, not the parquet write,
-    * publishes the rows).
-    */
-  private[graft] def publishDir(src: String, dst: String): Unit = {
-    val d = java.nio.file.Paths.get(dst)
-    if (java.nio.file.Files.exists(d)) deleteRecursively(d)
-    Option(d.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files
-      .move(java.nio.file.Paths.get(src), d, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
   }
 
   private val AssetRoot = "target"
@@ -230,18 +213,22 @@ object Indexes {
   // bytes touched). Frames whose data identity isn't cheaply observable
   // (localCheckpoint RDD leaves, in-memory literal relations — their
   // plan string doesn't include row data) BYPASS the catalog and keep
-  // the scan, so the fast path can never serve a stale asset for data
-  // the key can't see. mtime granularity (ms on local fs) is the same
-  // assumption every build tool makes; an adversarial same-ms in-place
-  // edit still lands on the scan path at first sight of a new plan/file
-  // set, and the recorded value is itself content-derived.
+  // the scan, and so do plans that hold a JVM function (a typed
+  // operator's closure prints its per-JVM identity, so such a key never
+  // matches twice and would only add a catalog entry per run), so the
+  // fast path can never serve a stale asset for data the key can't see.
+  // mtime granularity (ms on local fs) is the same assumption every
+  // build tool makes; an adversarial same-ms in-place edit still lands
+  // on the scan path at first sight of a new plan/file set, and the
+  // recorded value is itself content-derived.
   private val CatalogVersion = "fpcat-1"
 
   private def catalogFile(key: String) =
     java.nio.file.Paths.get(s"target/fpcatalog/$key")
 
   /** Cheap data-identity key, or None when the frame's inputs aren't
-    * fully file-backed (then only the content scan is safe).
+    * fully file-backed or the plan holds a JVM function (then only the
+    * content scan is safe).
     */
   private def catalogKey(
       family: String,
@@ -252,7 +239,12 @@ object Indexes {
       params: String
   ): Option[String] =
     try {
+      import org.apache.spark.sql.catalyst.plans.logical._
       val plan = df.queryExecution.analyzed
+      val holdsFunction = plan.exists {
+        case _: ObjectProducer | _: ObjectConsumer | _: TypedFilter | _: AppendColumns => true
+        case _                                                                      => false
+      }
       val leaves = plan.collectLeaves()
       val fileLists = leaves.map {
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -263,7 +255,7 @@ object Indexes {
           }
         case _ => None
       }
-      if (fileLists.exists(_.isEmpty)) None
+      if (holdsFunction || fileLists.exists(_.isEmpty)) None
       else {
         val conf = df.sparkSession.sessionState.newHadoopConf()
         val sig = fileLists.flatten.flatten.distinct.sorted
@@ -395,230 +387,6 @@ object Indexes {
         catch { case _: java.io.IOException => () }
       }
     }
-  }
-
-  // ---- object-store compaction swap (pointer-committed, no renames) ----
-  //
-  // [[commitSwap]]'s journaled dir-flip assumes atomic rename; on an
-  // object store the same OPTIMIZE-style publication is a GENERATION
-  // POINTER: maintenance writes the compacted subdirs under
-  // `<name>.g-<stamp>` (fully, before commit), then REPLACES the single
-  // `generation` pointer object — the one atomic primitive object stores
-  // do have. Readers resolve every subdir through [[liveDir]]; a crash
-  // before the pointer PUT leaves the old generation fully intact, a
-  // crash after it leaves only orphaned old-generation objects, which
-  // the next publish sweeps (any `.g-` entry whose stamp is not the
-  // current pointer's). `delta/` is retired by the same publish, AFTER
-  // the pointer lands — a reader that raced the cleanup re-reads folded
-  // rows only if it also resolved the OLD pointer, i.e. it sees the old
-  // asset's consistent view, never a double count against the new one.
-
-  private val GenPointer = "generation"
-
-  /** Current (stamp, names) of the pointer, if any generation committed. */
-  private[graft] def generationOf(dir: String): Option[(String, Seq[String])] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$GenPointer")
-      val fs = p.getFileSystem(sessionHadoopConf)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val bytes =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val tmp = new Array[Byte](8192)
-            var n = in.read(tmp)
-            while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-            buf.toByteArray
-          } finally in.close()
-        val lines = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").toSeq.filter(_.nonEmpty)
-        lines.headOption.map(_ -> lines.tail)
-      }
-    } catch { case _: java.io.IOException => None }
-
-  /** Resolve the LIVE path of an asset subdir under the pointer
-    * discipline: `<dir>/<name>.g-<stamp>` when the committed generation
-    * carries `name`, the un-suffixed `<dir>/<name>` otherwise (the
-    * initial build's layout).
-    */
-  def liveDir(dir: String, name: String): String =
-    generationOf(dir) match {
-      case Some((stamp, names)) if names.contains(name) => s"$dir/$name.g-$stamp"
-      case _                                            => s"$dir/$name"
-    }
-
-  /** Commit a compaction on an object store: every `<name>.g-<stamp>` is
-    * fully written; REPLACE the pointer (single-object PUT — the commit
-    * point), then sweep previous generations and `delta/`.
-    */
-  private[graft] def commitSwapMarker(dir: String, stamp: String, names: Seq[String]): Unit = {
-    val conf = sessionHadoopConf
-    val pointer = new org.apache.hadoop.fs.Path(s"$dir/$GenPointer")
-    val fs = pointer.getFileSystem(conf)
-    val os = fs.create(pointer, true)
-    try os.write((stamp +: names).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    // post-commit sweep: anything generation-suffixed that is not the
-    // committed stamp is garbage (previous generations, crashed
-    // maintenance runs), plus the folded delta and the pre-generation
-    // un-suffixed dirs the initial build wrote
-    val entries =
-      try fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-      catch { case _: java.io.IOException => Seq.empty }
-    entries.foreach { st =>
-      val n = st.getPath.getName
-      val i = n.lastIndexOf(".g-")
-      val isOldGen = i >= 0 && n.substring(i + 3) != stamp
-      val isRetiredPlain = i < 0 && names.contains(n)
-      if (isOldGen || isRetiredPlain) { fs.delete(st.getPath, true); () }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/delta"), true)
-    ()
-  }
-
-  /** Crash-safe publication of a compaction over one or more index
-    * subdirectories. Contract: every `<name>.compact-<stamp>` dir under
-    * `dir` is fully written BEFORE this call; then
-    *
-    *   1. a journal file (`swap.journal`, listing stamp + names) is
-    *      installed by atomic rename — THE commit point;
-    *   2. each name is flipped: live dir retired, compacted dir moved in;
-    *   3. retired dirs and `delta/` are deleted, the journal last.
-    *
-    * Every step after the journal install is idempotent against partial
-    * completion (each flip checks which of compact/live exists), so a
-    * process death anywhere in 2-3 leaves a journal behind and the next
-    * [[recoverSwap]] — a cheap existence check every reader performs on
-    * open — finishes the identical steps. Readers therefore never observe
-    * a half-swapped index across a restart: before the journal lands the
-    * old asset is intact; after it lands, recovery completes the new one.
-    * (Concurrent readers IN the gap of a live process still see the
-    * momentary rename window — this is quiesced-maintenance OPTIMIZE
-    * semantics, not a lock-free swap; the crash-safety is what's new.)
-    */
-  private[graft] def commitSwap(dir: String, stamp: String, names: Seq[String]): Unit = {
-    // Sweep leftovers of CRASHED past compactions first: a death after the
-    // compact dirs were written but before the journal rename orphans
-    // <name>.compact-<oldStamp> / <name>.retired-<oldStamp> /
-    // swap.journal.tmp-<oldStamp> forever (no recovery path references
-    // them — recovery only replays a LANDED journal), and each one is a
-    // full index copy leaking on disk. commitSwap runs under the
-    // single-owner maintenance discipline, so any entry with a stamp that
-    // is neither this compaction's nor a live journal's is dead weight.
-    sweepOrphans(dir, keepStamp = stamp)
-    val journal = java.nio.file.Paths.get(s"$dir/swap.journal")
-    val tmp = java.nio.file.Paths.get(s"$dir/swap.journal.tmp-$stamp")
-    java.nio.file.Files.write(
-      tmp,
-      (stamp +: names).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    )
-    java.nio.file.Files.move(
-      tmp,
-      journal,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING
-    )
-    replaySwap(dir, stamp, names)
-  }
-
-  /** Finish an interrupted [[commitSwap]] if a journal is present — called
-    * by index readers before their first listing; no-op (one existence
-    * check) in the steady state.
-    */
-  private[graft] def recoverSwap(dir: String): Unit = {
-    val journal = java.nio.file.Paths.get(s"$dir/swap.journal")
-    if (java.nio.file.Files.exists(journal)) {
-      import scala.jdk.CollectionConverters._
-      // the journal was installed by atomic rename, so its contents are
-      // complete: line 1 = stamp, rest = subdir names. Exists→read is NOT
-      // atomic against a concurrent recoverer (explicitly anticipated by
-      // replaySwap): the winner deletes the journal as its last step, so
-      // the loser's read may find it gone — which means recovery already
-      // completed, not an error.
-      val lines =
-        try java.nio.file.Files.readAllLines(journal).asScala.toSeq
-        catch { case _: java.nio.file.NoSuchFileException => Seq.empty[String] }
-      if (lines.nonEmpty) replaySwap(dir, lines.head, lines.tail.filter(_.nonEmpty))
-    }
-  }
-
-  /** Delete residue of crashed past compactions: `<name>.compact-<s>`,
-    * `<name>.retired-<s>`, and `swap.journal.tmp-<s>` entries whose stamp
-    * `s` is neither the in-flight compaction's nor a landed journal's.
-    * Called only from [[commitSwap]] (the single maintenance owner) —
-    * readers must NOT sweep, or a reader's steady-state [[recoverSwap]]
-    * could race the owner mid-write and delete its in-flight compact dirs.
-    */
-  private def sweepOrphans(dir: String, keepStamp: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    import java.nio.file.{Files, Paths}
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return
-    val journalStamp =
-      try {
-        val j = d.resolve("swap.journal")
-        if (Files.exists(j)) Files.readAllLines(j).asScala.headOption else None
-      } catch { case _: java.io.IOException => None }
-    val keep: Set[String] = Set(keepStamp) ++ journalStamp
-    val entries =
-      try Files.list(d).iterator().asScala.toSeq
-      catch { case _: java.io.IOException => Seq.empty }
-    entries.foreach { p =>
-      val n = p.getFileName.toString
-      val stampOf: Option[String] =
-        if (n.startsWith("swap.journal.tmp-"))
-          Some(n.stripPrefix("swap.journal.tmp-"))
-        else {
-          val c = n.lastIndexOf(".compact-")
-          val r = n.lastIndexOf(".retired-")
-          if (c >= 0) Some(n.substring(c + ".compact-".length))
-          else if (r >= 0) Some(n.substring(r + ".retired-".length))
-          else None
-        }
-      stampOf.filterNot(keep.contains).foreach(_ => deleteRecursively(p))
-    }
-  }
-
-  private def replaySwap(dir: String, stamp: String, names: Seq[String]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    // Two recoverers may replay the SAME journal concurrently (any two
-    // readers after a crash): each flip below tolerates losing a move
-    // race — the loser's NoSuchFile/FileAlreadyExists just means the flip
-    // already happened. (Concurrent WRITERS during recovery remain
-    // excluded by the single-owner maintenance discipline the commitSwap
-    // scaladoc states: the delta fold below cannot distinguish a batch
-    // being written right now from one the compaction already folded.)
-    def quietMove(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-      try Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.NoSuchFileException        => ()
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      }
-    names.foreach { name =>
-      val live = Paths.get(s"$dir/$name")
-      val compact = Paths.get(s"$dir/$name.compact-$stamp")
-      val retired = Paths.get(s"$dir/$name.retired-$stamp")
-      if (Files.exists(compact)) {
-        if (Files.exists(live)) quietMove(live, retired)
-        quietMove(compact, live)
-      }
-      deleteRecursively(retired)
-    }
-    val delta = Paths.get(s"$dir/delta")
-    deleteRecursively(delta)
-    // The journal is the replay's completion marker: remove it ONLY once
-    // the folded delta is actually gone. deleteRecursively swallows IO
-    // errors (e.g. a held-open handle), and dropping the journal above a
-    // surviving delta/ would let readers double-count the folded batches
-    // (the postings live view unions base ∪ delta without distinct).
-    if (!Files.exists(delta))
-      Files.deleteIfExists(Paths.get(s"$dir/swap.journal"))
-    else
-      throw new java.io.IOException(
-        s"swap replay for $dir: delta/ survived the fold (held handle?); " +
-          "journal retained so the next recovery retries"
-      )
   }
 
   /** Recursive file copy of a published index asset into a mutable

@@ -113,7 +113,7 @@ object SemanticIndex {
       keep: Similarity.KeepPolicy = Similarity.KeepPolicy.Central
   ): DataFrame = {
     val dir = ensure(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    Similarity.semanticDedupCore(readCelled(corpus.sparkSession, dir), threshold, keep)
+    Similarity.semanticDedupCore(celled(corpus.sparkSession, DeltaFold.gen(dir)), threshold, keep)
   }
 
   /** Steady-state semantic dedup over the persisted two-level celled
@@ -129,7 +129,7 @@ object SemanticIndex {
       keep: Similarity.KeepPolicy = Similarity.KeepPolicy.Central
   ): DataFrame = {
     val dir = ensure2l(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    Similarity.semanticDedupCore(readCelled(corpus.sparkSession, dir), threshold, keep)
+    Similarity.semanticDedupCore(celled(corpus.sparkSession, DeltaFold.gen(dir)), threshold, keep)
   }
 
   /** Steady-state [[Similarity.semanticDeltaDupsScaled]]: the corpus side
@@ -146,25 +146,15 @@ object SemanticIndex {
       targetCellSize: Int,
       maxCellSize: Int,
       litK: Int = 256
-  ): DataFrame = {
-    val spark = corpus.sparkSession
-    val dir = ensure(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    val cents = spark.read
-      .parquet(s"$dir/seeds")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val counts = spark.read.parquet(s"$dir/counts")
-    Similarity.deltaDupsAgainst(
+  ): DataFrame =
+    deltaDupsAt(
+      corpus.sparkSession,
+      ensure(sfDir, corpus, targetCellSize, maxCellSize, litK),
       delta,
-      cents,
-      counts,
-      maxCellSize,
-      readCelled(spark, dir),
       threshold,
+      maxCellSize,
       litK
     )
-  }
 
   /** Steady-state [[Similarity.contaminationAgainst]]: semantic eval-
     * decontamination of a TRAIN corpus against a TEST set, riding the
@@ -182,19 +172,13 @@ object SemanticIndex {
       litK: Int = 256
   ): DataFrame = {
     val spark = corpus.sparkSession
-    val dir = ensure(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    val cents = spark.read
-      .parquet(s"$dir/seeds")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val counts = spark.read.parquet(s"$dir/counts")
+    val g = DeltaFold.gen(ensure(sfDir, corpus, targetCellSize, maxCellSize, litK))
     Similarity.contaminationAgainst(
       test,
-      cents,
-      counts,
+      loadSeeds(spark, g),
+      spark.read.parquet(g("counts")),
       maxCellSize,
-      readCelled(spark, dir),
+      celled(spark, g),
       threshold,
       litK
     )
@@ -212,15 +196,13 @@ object SemanticIndex {
       litK: Int = 256
   ): DataFrame = {
     val dir = ensure(sfDir, corpus, targetCellSize, maxCellSize, litK)
-    readCelled(corpus.sparkSession, dir)
+    celled(corpus.sparkSession, DeltaFold.gen(dir))
   }
 
-  private def readCelled(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
+  private def celled(spark: SparkSession, g: DeltaFold.Gen): DataFrame =
     spark.read
-      .parquet(s"$dir/celled")
+      .parquet(g("celled"))
       .select(col("cell"), col("vec_id"), col("embedding"))
-  }
 
   // ---- streaming maintenance (the DeltaFold discipline) -------------------
 
@@ -230,12 +212,12 @@ object SemanticIndex {
     * in the debt-bounded delta, so set-exactness needs the corpus-sized
     * base only as a JOIN PROBE — never re-shuffled into an aggregate).
     */
-  def readCellsLive(spark: SparkSession, dir: String): DataFrame = {
-    val base = readCelled(spark, dir)
-    if (!DeltaFold.hasDelta(dir)) base
+  def readCellsLive(spark: SparkSession, g: DeltaFold.Gen): DataFrame = {
+    val base = celled(spark, g)
+    if (!g.hasDelta()) base
     else {
       val delta = spark.read
-        .parquet(s"$dir/delta")
+        .parquet(g.delta())
         .select(col("cell"), col("vec_id"), col("embedding"))
         .dropDuplicates("vec_id")
       val dupes = base.join(delta.select(col("vec_id")), Seq("vec_id"), "left_semi")
@@ -245,7 +227,7 @@ object SemanticIndex {
   }
 
   /** One micro-batch of NEW (vec_id, embedding) rows appended into the
-    * persisted quantizer asset under `dir/delta/batch_id=<id>`: each
+    * persisted quantizer asset under the live delta's `batch_id=<id>`: each
     * vector is assigned its argmax-cosine cell against the FROZEN seeds
     * and sub-salted by the FROZEN corpus split table — batch-sized work
     * against O(k·dim) driver state, zero corpus scans, idempotent per
@@ -268,9 +250,10 @@ object SemanticIndex {
       compactAt: Double = 0.2
   ): Unit = {
     val spark = batch.sparkSession
-    DeltaFold.upsert(dir, batchId) { (_, path) =>
-      val cents = loadSeeds(spark, dir)
-      val counts = spark.read.parquet(s"$dir/counts")
+    val g = DeltaFold.gen(dir)
+    DeltaFold.upsert(g, batchId) { (_, path) =>
+      val cents = loadSeeds(spark, g)
+      val counts = spark.read.parquet(g("counts"))
       val coarse = Similarity.assignCells(
         batch.select(col("vec_id"), col("embedding")),
         cents,
@@ -283,15 +266,15 @@ object SemanticIndex {
         .parquet(path)
     }
     if (compactAt > 0.0)
-      DeltaFold.settle(spark, dir, "celled", compactAt) {
-        compactDeltas(spark, dir, targetCellSize, maxCellSize, litK)
+      DeltaFold.settle(spark, g, "celled", compactAt) {
+        compactDeltas(spark, g, targetCellSize, maxCellSize, litK)
       }
   }
 
   /** Rebuild the quantizer from the UNION corpus (base celled rows ∪
     * delta rows — both carry the embedding, so the corpus is recoverable
-    * from the asset itself) and publish seeds/counts/celled via the
-    * crash-safe journaled swap. This is the "train" half of the
+    * from the asset itself) and commit seeds/counts/celled as one
+    * generation behind the [[DeltaFold]] pointer. This is the "train" half of the
     * add-vs-train split: k, seeds and the split table are re-derived at
     * the grown N with the exact [[ensure]] closed form, so the
     * post-fold asset is bit-equal to a wholesale build — and the oracle
@@ -301,18 +284,18 @@ object SemanticIndex {
     */
   def compactDeltas(
       spark: SparkSession,
-      dir: String,
+      g: DeltaFold.Gen,
       targetCellSize: Int,
       maxCellSize: Int,
       litK: Int = 256
   ): Unit = {
     import spark.implicits._
-    DeltaFold.compact(dir, Seq("celled", "seeds", "counts")) { out =>
+    DeltaFold.compact(g, Seq("celled", "seeds", "counts")) { out =>
       val union = spark.read
-        .parquet(s"$dir/celled")
+        .parquet(g("celled"))
         .select(col("vec_id"), col("embedding"))
         .unionByName(
-          spark.read.parquet(s"$dir/delta").select(col("vec_id"), col("embedding"))
+          spark.read.parquet(g.delta()).select(col("vec_id"), col("embedding"))
         )
         .dropDuplicates("vec_id") // replayed batches are bit-identical
         .localCheckpoint()
@@ -320,9 +303,9 @@ object SemanticIndex {
       val cents = Similarity.seedCentroids(union, k)
       val coarse = Similarity.assignCells(union, cents, litK).localCheckpoint()
       val counts = Similarity.cellCounts(coarse)
-      // three stamp-dir writes off the coarse checkpoint (seeds is a tiny
-      // driver-side frame), invisible until commitSwap — overlap them
-      // (guide §2.6); the journal stays the single commit point
+      // three generation-dir writes off the coarse checkpoint (seeds is a
+      // tiny driver-side frame), invisible until the pointer commit —
+      // overlap them (guide §2.6); the pointer stays the single commit point
       Indexes.inParallel(
         () =>
           cents.toSeq
@@ -355,22 +338,21 @@ object SemanticIndex {
       maxCellSize: Int,
       litK: Int = 256
   ): DataFrame = {
-    val cents = loadSeeds(spark, dir)
-    val counts = spark.read.parquet(s"$dir/counts")
+    val g = DeltaFold.gen(dir)
     Similarity.deltaDupsAgainst(
       delta,
-      cents,
-      counts,
+      loadSeeds(spark, g),
+      spark.read.parquet(g("counts")),
       maxCellSize,
-      readCellsLive(spark, dir),
+      readCellsLive(spark, g),
       threshold,
       litK
     )
   }
 
-  private def loadSeeds(spark: SparkSession, dir: String): Array[(Long, Array[Double])] =
+  private def loadSeeds(spark: SparkSession, g: DeltaFold.Gen): Array[(Long, Array[Double])] =
     spark.read
-      .parquet(s"$dir/seeds")
+      .parquet(g("seeds"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)

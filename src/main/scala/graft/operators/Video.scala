@@ -906,7 +906,7 @@ object Video {
       .distinct()
       .localCheckpoint()
     val dsz = dsig.groupBy(col("doc_id")).agg(count(lit(1)).as("d_n"))
-    // Delta-aware reads (each runs recoverSwap on open): a stream-grown
+    // Delta-aware reads (each resolves the committed generation): a stream-grown
     // asset with outstanding delta/ must contribute its streamed videos to
     // the verdict, so reps/members/dfs come from the exactly-once live
     // views — identical persisted scans when no delta exists. Discovery
@@ -999,7 +999,7 @@ object Video {
       .distinct()
       .localCheckpoint()
     val dsz = dsig.groupBy(col("doc_id")).agg(count(lit(1)).as("d_n"))
-    // Delta-aware rep-level reads (each runs recoverSwap on open) — see
+    // Delta-aware rep-level reads (each resolves the committed generation) — see
     // videoDeltaDups: streamed-but-uncompacted videos must join their
     // signature groups, not be invisible to the verdict.
     val rsig = graft.streaming.VideoIndexStream

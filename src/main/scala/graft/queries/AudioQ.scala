@@ -202,7 +202,7 @@ object AudioQ {
     // ---- STREAMING index maintenance on the oracle gate: the corpus
     // index is built on 4/5 of the corpus, the remaining fifth arrives as
     // a stream batch that FOLDS into the asset (AudioIndexStream upsert +
-    // debt compaction, crash-safe journaled swap), and the ingest verdict
+    // debt compaction, generation pointer commit), and the ingest verdict
     // then runs against the stream-grown index. The oracle is the
     // m_audio_delta replay over the FULL corpus: the fold is only correct
     // if the grown index is indistinguishable from a wholesale rebuild —
@@ -242,7 +242,7 @@ object AudioQ {
       ),
       doc = "Streaming audio-index fold on the oracle gate: base index on " +
         "4/5 of the corpus, the last fifth folded in as a stream batch " +
-        "(delta append + debt-policy compaction + crash-safe swap), then " +
+        "(delta append + debt-policy compaction + pointer commit), then " +
         "the incremental ingest verdict against the stream-grown asset. " +
         "Bit-equal to m_audio_delta's wholesale-rebuild replay — the " +
         "grown index is provably indistinguishable from a fresh build. " +
@@ -356,8 +356,8 @@ object AudioQ {
       Some(toneDeltaOracleSql),
       doc = "Streaming spectral-index fold on the oracle gate: base " +
         "spectral index on 4/5 of the corpus, the last fifth folded in " +
-        "as a stream batch (delta append + debt compaction + crash-safe " +
-        "swap, the fingerprint-agnostic AudioIndexStream machinery with " +
+        "as a stream batch (delta append + debt compaction + pointer " +
+        "commit, the fingerprint-agnostic AudioIndexStream machinery with " +
         "the DFT fingerprint provider), then the incremental ingest " +
         "verdict against the stream-grown asset — bit-equal to the " +
         "wholesale replay."

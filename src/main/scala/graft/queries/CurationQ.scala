@@ -258,7 +258,7 @@ object CurationQ {
     // base asset exists for 4/5 of the corpus (fingerprint-cached); the
     // last fifth arrives as a stream batch and folds in (pure statistics
     // appended, corpus-relative legs re-derived from the folded
-    // statistics, crash-safe journaled swap) on a scratch copy. The
+    // statistics, generation pointer commit) on a scratch copy. The
     // report over the grown asset runs under pipe_curate_e2e's ORACLE —
     // the fold is provably bit-indistinguishable from a wholesale
     // rebuild over the full corpus.
@@ -283,7 +283,7 @@ object CurationQ {
         "delta-only, the corpus-relative legs (KN scores, CCNet " +
         "terciles, trained classifier heads) re-derived from the FOLDED " +
         "statistics without re-reading any standing document's text, " +
-        "published via the crash-safe journaled swap. The survivor " +
+        "committed as one generation by the pointer commit. The survivor " +
         "report over the grown asset hash-equals the wholesale " +
         "full-corpus replay — the stream-grown asset is provably " +
         "indistinguishable from a fresh build."

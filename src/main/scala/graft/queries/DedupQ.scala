@@ -932,7 +932,7 @@ object DedupQ {
         // the production shape: the gram index already exists (built on
         // 4/5 of the corpus, fingerprint-cached); the last fifth arrives
         // as a stream batch and folds in (delta upsert + debt compaction
-        // + crash-safe swap) on a scratch COPY; the ingest rewrite then
+        // + pointer commit) on a scratch COPY; the ingest rewrite then
         // probes the stream-grown asset. Must hash-equal the wholesale
         // replay over the full corpus — the grown index is provably
         // indistinguishable from a fresh build.
@@ -957,7 +957,7 @@ object DedupQ {
       doc = "Streaming substring-index fold on the oracle gate: base gram " +
         "index on 4/5 of the corpus, the last fifth folded in as a " +
         "stream batch (write-once batch rewrite + gram delta append + " +
-        "debt-policy compaction + crash-safe swap) on a scratch copy, " +
+        "debt-policy compaction + pointer commit) on a scratch copy, " +
         "then the ingest rewrite against the stream-grown asset. Same " +
         "DuckDB replay as d_substr_delta — the grown index must be " +
         "bit-indistinguishable from a wholesale rebuild."

@@ -803,7 +803,7 @@ object SimilarityQ {
     // ---- streaming maintenance of the quantizer ASSET itself: base
     // asset on most of the corpus, the rest folded in as a stream batch
     // (frozen-cell delta assignment + rebuild-from-union compaction on
-    // the journaled swap), then the SAME ingest verdict as
+    // the generation pointer commit), then the SAME ingest verdict as
     // d_semantic_delta against the stream-grown asset — under the SAME
     // oracle, because the fold's re-derivation makes the grown index
     // bit-equal to a wholesale build on the grown corpus.
@@ -835,7 +835,7 @@ object SimilarityQ {
       doc = "Streaming fold of the semantic-quantizer asset on the oracle " +
         "gate: the growth slice streams in (frozen-seed cell assignment, " +
         "batch-sized), the debt policy forces the rebuild-from-union " +
-        "compaction through the crash-safe journaled swap, and the " +
+        "compaction through the generation pointer commit, and the " +
         "ingest verdict over the grown asset is bit-equal to " +
         "d_semantic_delta's wholesale-derivation replay — the grown " +
         "index is provably indistinguishable from a fresh build. Each " +

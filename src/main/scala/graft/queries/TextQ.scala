@@ -2222,8 +2222,8 @@ object TextQ {
     ),
     // ---- STREAMING CDX maintenance on the oracle gate: the asset minus
     // one shard's rows is the base, that shard arrives as a stream batch
-    // (CdxStream upsert + forced debt compaction through the journaled
-    // swap), and the capture listing runs against the stream-grown copy
+    // (CdxStream upsert + forced debt compaction through the pointer
+    // commit), and the capture listing runs against the stream-grown copy
     // under t_warc_cdx's unchanged wholesale oracle — the fold is only
     // correct if indistinguishable from a fresh build.
     Q(
@@ -2256,7 +2256,7 @@ object TextQ {
       Some(warcCdxOracleSql),
       doc = "Streaming CDX fold on the oracle gate: base asset minus one " +
         "shard, that shard's members indexed as a stream batch (delta " +
-        "append + forced debt compaction + crash-safe journaled swap), " +
+        "append + forced debt compaction + generation pointer commit), " +
         "then the capture listing from the stream-grown index — " +
         "bit-equal to t_warc_cdx's wholesale replay. A batch's cost is " +
         "one member walk over ONLY the new shards; the standing index " +

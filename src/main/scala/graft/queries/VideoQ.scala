@@ -246,7 +246,7 @@ object VideoQ {
     // ---- STREAMING scene-index maintenance on the oracle gate: base
     // index on 4/5 of the corpus, the last fifth folded in as a stream
     // batch (VideoIndexStream sig delta + debt compaction re-deriving all
-    // five aggregates, crash-safe journaled swap), then the linear ingest
+    // five aggregates, generation pointer commit), then the linear ingest
     // verdict against the stream-grown asset. The oracle is
     // m_video_delta_best's full-corpus replay: the fold is only correct
     // if the grown index — INCLUDING its distinct-signature rep tables —
@@ -296,7 +296,7 @@ object VideoQ {
       doc = "Streaming video scene-index fold on the oracle gate: base " +
         "index on 4/5 of the corpus, the last fifth folded in as a " +
         "stream batch (sig delta + compaction re-deriving dfs/sizes and " +
-        "the distinct-signature rep tables + crash-safe swap), then the " +
+        "the distinct-signature rep tables + pointer commit), then the " +
         "linear ingest verdict against the stream-grown asset. Bit-equal " +
         "to m_video_delta_best's wholesale-rebuild replay. The base " +
         "asset is the fingerprint-cached build; each run copies it to " +

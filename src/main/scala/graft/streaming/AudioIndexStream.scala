@@ -15,7 +15,7 @@ import graft.operators.{Audio, Indexes}
   * scene hashes): the index's source of truth is the per-doc table (`docs/`,
   * one (doc_id, fingerprint) row per clip — a pure function of the clip's
   * payload, so replayed batches are bit-identical). An upsert decodes
-  * ONLY the batch and writes its rows under `delta/batch_id=N` —
+  * ONLY the batch and writes its rows under the delta's `batch_id=N` —
   * idempotent per batch. `clusters/` stays the build-time derived
   * aggregate; the LIVE view ([[readClusters]]) re-derives it from the
   * exactly-once per-doc view while deltas are outstanding (a two-column
@@ -23,19 +23,20 @@ import graft.operators.{Audio, Indexes}
   * never re-paid), so a dedup verdict over the stream-grown index is
   * exact at any moment.
   *
-  * Compaction (the [[DeltaFold]] debt policy) folds `delta/` into
-  * `docs/`, re-derives `clusters/`, and publishes via the crash-safe
-  * journaled swap; a batch replayed AFTER compaction folded it
-  * re-lands in `delta/` with bit-identical rows, and the next fold's
-  * full-row `distinct()` restores exactly-once — no ledger needed.
+  * Compaction (the [[DeltaFold]] debt policy) folds the delta into
+  * `docs/`, re-derives `clusters/`, and publishes both as one generation
+  * behind the [[DeltaFold]] pointer commit; a batch replayed AFTER
+  * compaction folded it re-lands in the new delta with bit-identical
+  * rows, and the next fold's full-row `distinct()` restores exactly-once
+  * — no ledger needed.
   */
 object AudioIndexStream {
 
-  /** Per-doc fingerprint rows, base ∪ outstanding deltas, exactly-once
-    * view (distinct over the pure-function rows).
+  /** Per-doc fingerprint rows of generation `g`, base ∪ outstanding
+    * deltas, exactly-once view (distinct over the pure-function rows).
     */
-  def readDocs(spark: SparkSession, dir: String): DataFrame =
-    DeltaFold.live(spark, dir, "docs", exactlyOnce = true)(
+  def readDocs(spark: SparkSession, g: DeltaFold.Gen): DataFrame =
+    DeltaFold.live(spark, g, "docs", exactlyOnce = true)(
       _.select(col("doc_id"), col("fingerprint"))
     )
 
@@ -46,19 +47,22 @@ object AudioIndexStream {
     * already folded its rows. With no outstanding delta, the persisted
     * aggregate is served as-is (identical plan to the build-time read).
     */
-  def readClusters(spark: SparkSession, dir: String): DataFrame =
-    DeltaFold.derived(spark, dir, "clusters", "fingerprint", "rep", "n_variants")(
-      Audio.fpClusters(readDocs(spark, dir))
+  def readClusters(spark: SparkSession, dir: String): DataFrame = {
+    val g = DeltaFold.gen(dir)
+    DeltaFold.derived(spark, g, "clusters", "fingerprint", "rep", "n_variants")(
+      Audio.fpClusters(readDocs(spark, g))
     )
+  }
 
   /** Merge base ∪ delta per-doc rows (full-row distinct = exactly-once),
-    * re-derive clusters, publish both via the crash-safe journaled swap.
+    * re-derive clusters, commit both as one generation.
     */
-  def compactDeltas(spark: SparkSession, dir: String): Unit =
-    DeltaFold.compact(dir, Seq("docs", "clusters")) { out =>
-      val docs = readDocs(spark, dir).localCheckpoint()
+  def compactDeltas(spark: SparkSession, g: DeltaFold.Gen): Unit =
+    DeltaFold.compact(g, Seq("docs", "clusters")) { out =>
+      val docs = readDocs(spark, g).localCheckpoint()
       // both writes read only the executor-local checkpoint and land in
-      // stamp dirs invisible until commitSwap — overlap them (guide §2.6)
+      // generation dirs invisible until the pointer commit — overlap them
+      // (guide §2.6)
       Indexes.inParallel(
         () => docs.write.mode("overwrite").parquet(out("docs")),
         () => Audio.fpClusters(docs).write.mode("overwrite").parquet(out("clusters"))
@@ -66,7 +70,7 @@ object AudioIndexStream {
     }
 
   /** One micro-batch of (doc_id, ...) clip rows → decoded, fingerprinted,
-    * appended under `dir/delta/batch_id=<id>`, then the debt policy
+    * appended under the live delta's `batch_id=<id>`, then the debt policy
     * settles the delta (compactAt <= 0 disables). Only the batch is
     * decoded — the corpus-linear cost is never re-paid.
     */
@@ -83,13 +87,14 @@ object AudioIndexStream {
       fp: (SparkSession, DataFrame) => DataFrame = Audio.energyFp
   ): Unit = {
     val spark = batch.sparkSession
-    DeltaFold.upsert(dir, batchId) { (_, path) =>
+    val g = DeltaFold.gen(dir)
+    DeltaFold.upsert(g, batchId) { (_, path) =>
       fp(spark, batch)
         .select(col("doc_id"), col("fingerprint"))
         .write
         .mode("overwrite")
         .parquet(path)
     }
-    if (compactAt > 0.0) DeltaFold.settle(spark, dir, "docs", compactAt)(compactDeltas(spark, dir))
+    if (compactAt > 0.0) DeltaFold.settle(spark, g, "docs", compactAt)(compactDeltas(spark, g))
   }
 }

@@ -13,8 +13,8 @@ import graft.operators.{Curation, Indexes}
   * What folds and what re-derives: the asset's statistics tables
   * ([[Curation.pureStats]] — per-doc gate verdicts, label ingredients,
   * hashed bigram/token multisets) are PURE per-doc rows, so an upsert
-  * tokenizes ONLY the batch and appends its rows under
-  * `delta/<table>/batch_id=N` (idempotent per partition — rows are
+  * tokenizes ONLY the batch and appends its rows under the delta's
+  * `<table>/batch_id=N` (idempotent per partition — rows are
   * bit-deterministic functions of the documents). The published
   * `gates/` table, however, is CORPUS-RELATIVE (KN scores against the
   * corpus LM, CCNet terciles against the per-language rank, classifier
@@ -29,12 +29,12 @@ import graft.operators.{Curation, Indexes}
   * over the grown corpus — the fold is provably indistinguishable
   * (`pipe_curate_fold` runs under `pipe_curate_e2e`'s oracle).
   *
-  * Publication is the crash-safe journaled swap ([[Indexes.commitSwap]]):
-  * readers never observe a half-folded asset across a restart. Between
-  * folds, `gates/` reflects the corpus AS OF the last compaction and
-  * `delta/` holds the pending documents — the right semantics for a
-  * corpus-relative table, where a partially-applied delta would change
-  * every doc's tercile anyway.
+  * Publication is the [[DeltaFold]] pointer commit: the four tables are
+  * one generation, so readers never observe a half-folded asset, crash
+  * or not. Between folds, `gates/` reflects the corpus AS OF the last
+  * compaction and the delta holds the pending documents — the right
+  * semantics for a corpus-relative table, where a partially-applied
+  * delta would change every doc's tercile anyway.
   */
 object CurationGateStream {
 
@@ -53,34 +53,35 @@ object CurationGateStream {
     val spark = batch.sparkSession
     val (pg, ds, dt) = Curation.pureStats(batch)
     val stats = Map("puregates" -> pg, "docstats" -> ds, "doctoks" -> dt)
+    val g = DeltaFold.gen(dir)
     // three independent per-batch statistics writes, overlapped: any
     // landed subset is rewritten bit-identically by the batch replay, and
     // the debt gate/fold only run after all three land
-    DeltaFold.upsert(dir, batchId, Tables) { (name, path) =>
+    DeltaFold.upsert(g, batchId, Tables) { (name, path) =>
       stats(name).write.mode("overwrite").parquet(path)
     }
     if (compactAt > 0)
-      DeltaFold.settle(spark, dir, "puregates", compactAt, "puregates")(compact(spark, dir))
+      DeltaFold.settle(spark, g, "puregates", compactAt, "puregates")(compact(spark, g))
   }
 
   /** Fold the delta statistics into the base tables, re-derive `gates/`
-    * from the FOLDED statistics, publish everything via the journaled
-    * swap (which also retires `delta/`). Full-row distinct on the folded
-    * tables restores exactly-once under post-compaction batch replays
-    * (rows are bit-deterministic, so a replayed batch's rows are
-    * identical to the folded ones).
+    * from the FOLDED statistics, commit all four as one generation (with
+    * a new empty delta). Full-row distinct on the folded tables restores
+    * exactly-once under post-compaction batch replays (rows are
+    * bit-deterministic, so a replayed batch's rows are identical to the
+    * folded ones).
     */
-  def compact(spark: SparkSession, dir: String): Unit =
-    DeltaFold.compact(dir, "gates" +: Tables, "puregates") { out =>
-      // the three statistics tables fold independently and land in stamp
-      // dirs invisible until commitSwap — overlap the three union+distinct
-      // writes (guide §2.6); deriveGates below reads the landed dirs, so
-      // it starts only after the barrier
+  def compact(spark: SparkSession, g: DeltaFold.Gen): Unit =
+    DeltaFold.compact(g, "gates" +: Tables, "puregates") { out =>
+      // the three statistics tables fold independently and land in
+      // generation dirs invisible until the pointer commit — overlap the
+      // three union+distinct writes (guide §2.6); deriveGates below reads
+      // the landed dirs, so it starts only after the barrier
       Indexes.inParallel(
         Tables.map { name => () =>
           spark.read
-            .parquet(s"$dir/$name")
-            .unionByName(spark.read.parquet(DeltaFold.deltaDir(dir, name)).drop("batch_id"))
+            .parquet(g(name))
+            .unionByName(spark.read.parquet(g.delta(name)).drop("batch_id"))
             .distinct()
             .write
             .mode("overwrite")
@@ -98,9 +99,7 @@ object CurationGateStream {
         .parquet(out("gates"))
     }
 
-  /** The published gate table (post-compaction view), recovery-checked. */
-  def gates(spark: SparkSession, dir: String): DataFrame = {
-    Indexes.recoverSwap(dir)
-    spark.read.parquet(s"$dir/gates")
-  }
+  /** The published gate table of the committed generation. */
+  def gates(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(DeltaFold.gen(dir)("gates"))
 }

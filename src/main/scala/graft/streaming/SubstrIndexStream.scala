@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Indexes, Text}
@@ -14,13 +15,13 @@ import graft.util.Cols.md5Long
   * Discipline: the index's source of truth is the distinct gram-hash set —
   * a pure function of the ingested documents, so a replayed batch writes
   * bit-identical rows. An upsert tokenizes ONLY the batch and lands its
-  * distinct (b, gh) rows under `delta/batch_id=N` (idempotent per
+  * distinct (b, gh) rows under the delta's `batch_id=N` (idempotent per
   * partition); the LIVE gram view is base ∪ (delta-novel grams), computed
   * by a delta-vs-base semi/anti probe so it is exactly-once — even when a
   * batch is replayed AFTER compaction already folded its rows — WITHOUT
   * ever re-shuffling the bucketed base (see [[readGramsExcluding]]).
-  * Compaction folds deltas into the bucketed base and publishes via the
-  * crash-safe journaled swap ([[Indexes.commitSwap]]).
+  * Compaction folds deltas into the bucketed base and publishes it behind
+  * the [[DeltaFold]] pointer commit.
   *
   * The batch's own REWRITE ([[upsertBatch]]'s `clean/batch_id=N` output)
   * probes the index state EXCLUDING the batch's own delta partition — the
@@ -36,15 +37,14 @@ object SubstrIndexStream {
 
   /** LIVE distinct-gram view: base ∪ outstanding deltas, exactly-once. */
   def readGrams(spark: SparkSession, dir: String): DataFrame =
-    readGramsExcluding(spark, dir, excludeBatch = -1L)
+    readGramsExcluding(spark, DeltaFold.gen(dir), excludeBatch = -1L)
 
   /** [[readGrams]] minus one delta partition — the pre-batch index state a
     * batch rewrite must probe (no-op exclusion for `excludeBatch` < 0).
     */
-  def readGramsExcluding(spark: SparkSession, dir: String, excludeBatch: Long): DataFrame = {
-    Indexes.recoverSwap(dir)
-    val base = spark.read.parquet(s"$dir/grams").select(col("b"), col("gh"))
-    if (!DeltaFold.hasDelta(dir)) base
+  def readGramsExcluding(spark: SparkSession, g: DeltaFold.Gen, excludeBatch: Long): DataFrame = {
+    val base = spark.read.parquet(g("grams")).select(col("b"), col("gh"))
+    if (!g.hasDelta()) base
     else {
       // Exactly-once WITHOUT re-shuffling the base: the old
       // `(base ∪ delta).distinct()` reshuffled the full (bucketed) base on
@@ -66,7 +66,7 @@ object SubstrIndexStream {
       // and every compaction write this very view), so the union is an
       // exact set.
       val delta = spark.read
-        .parquet(s"$dir/delta")
+        .parquet(g.delta())
         .filter(col("batch_id") =!= excludeBatch)
         .select(col("b"), col("gh"))
         .distinct()
@@ -76,14 +76,15 @@ object SubstrIndexStream {
     }
   }
 
-  /** Fold `delta/` into the bucketed base iff the [[DeltaFold]] debt
-    * policy says it is due. Returns true iff compaction ran.
+  /** Fold generation `g`'s delta into the bucketed base iff the
+    * [[DeltaFold]] debt policy says it is due. Returns true iff
+    * compaction ran.
     */
-  def maybeCompact(spark: SparkSession, dir: String, maxDeltaFraction: Double = 0.2): Boolean =
-    DeltaFold.settle(spark, dir, "grams", maxDeltaFraction)(compactDeltas(spark, dir))
+  def maybeCompact(spark: SparkSession, g: DeltaFold.Gen, maxDeltaFraction: Double = 0.2): Boolean =
+    DeltaFold.settle(spark, g, "grams", maxDeltaFraction)(compactDeltas(spark, g))
 
-  /** Merge base ∪ delta grams, rewrite the bucketed base, publish via the
-    * crash-safe journaled swap (which also retires `delta/`).
+  /** Merge base ∪ delta grams, rewrite the bucketed base, commit it as the
+    * next generation (with a new empty delta).
     *
     * Compaction deliberately does NOT reuse the read path's delta-probe
     * union: a fold is the one moment a base reshuffle is the RIGHT plan —
@@ -97,11 +98,11 @@ object SubstrIndexStream {
     * ([[readGramsExcluding]]); compaction pays one aligned shuffle per
     * FOLD, amortized by the same debt policy that bounds fold frequency.
     */
-  def compactDeltas(spark: SparkSession, dir: String): Unit =
-    DeltaFold.compact(dir, Seq("grams")) { out =>
-      val base = spark.read.parquet(s"$dir/grams").select(col("b"), col("gh"))
+  def compactDeltas(spark: SparkSession, g: DeltaFold.Gen): Unit =
+    DeltaFold.compact(g, Seq("grams")) { out =>
+      val base = spark.read.parquet(g("grams")).select(col("b"), col("gh"))
       val delta = spark.read
-        .parquet(s"$dir/delta")
+        .parquet(g.delta())
         .select(col("b"), col("gh"))
       base
         .unionByName(delta)
@@ -114,7 +115,7 @@ object SubstrIndexStream {
 
   /** One micro-batch of (doc_id, text) rows: rewrite the batch against the
     * pre-batch index state (write-once under `clean/batch_id=<id>`),
-    * upsert the batch's distinct grams under `delta/batch_id=<id>`
+    * upsert the batch's distinct grams under the delta's `batch_id=<id>`
     * (idempotent), then settle the delta debt (`compactAt` <= 0 disables).
     * Only the batch is ever tokenized — the corpus-linear shingle cost is
     * never re-paid.
@@ -131,28 +132,35 @@ object SubstrIndexStream {
     // behind with partial data — a replay must recompute (mode overwrite
     // rewrites the torn dir), the marker half of the Indexes.ensure discipline
     val cleanDone = DeltaFold.exists(s"$dir/clean/batch_id=$batchId/_SUCCESS")
-    DeltaFold.upsert(dir, batchId) { (_, path) =>
+    val g = DeltaFold.gen(dir)
+    DeltaFold.upsert(g, batchId) { (_, path) =>
       if (!cleanDone) {
         // rewrite + gram delta from ONE checkpointed occurrence frame —
         // the batch is tokenized and shingled exactly once. The two heavy
         // writes read only that executor-local checkpoint, so they
         // overlap — but the delta lands under a tmp path and is
-        // PUBLISHED by a rename only after the clean's write-once marker
-        // exists. The fold-safety invariant is "visible delta partition ⇒
-        // its clean landed": a fold retires the delta into the base, after
-        // which a replay's probe could no longer exclude the batch's own
-        // grams — the rename keeps the old sequential ordering's guarantee
-        // at the cost of a metadata flip instead of a serialized write.
-        val (clean, grams) = Dedup.substrDeltaRemovalAndGrams(
-          readGramsExcluding(spark, dir, excludeBatch = batchId),
+        // PUBLISHED by the path's own FileSystem rename only after the
+        // clean's write-once marker exists. The fold-safety invariant is
+        // "visible delta partition ⇒ its clean landed": a fold retires the
+        // delta into the base, after which a replay's probe could no longer
+        // exclude the batch's own grams — the rename keeps the sequential
+        // ordering's guarantee at the cost of one rename (a metadata flip
+        // locally, a copy on an object store) instead of a serialized write.
+        val (clean, batchGrams) = Dedup.substrDeltaRemovalAndGrams(
+          readGramsExcluding(spark, g, excludeBatch = batchId),
           batch
         )
         val tmpDelta = s"$dir/delta.tmp-batch_id=$batchId"
         Indexes.inParallel(
           () => clean.write.mode("overwrite").parquet(s"$dir/clean/batch_id=$batchId"),
-          () => grams.write.mode("overwrite").parquet(tmpDelta)
+          () => batchGrams.write.mode("overwrite").parquet(tmpDelta)
         )
-        Indexes.publishDir(tmpDelta, path)
+        val dst = new Path(path)
+        val fs = dst.getFileSystem(Indexes.sessionHadoopConf)
+        fs.delete(dst, true)
+        fs.mkdirs(dst.getParent)
+        if (!fs.rename(new Path(tmpDelta), dst))
+          throw new java.io.IOException(s"could not publish $tmpDelta at $path")
       } else
         // replay after the clean landed (crash between the two writes):
         // recompute just the gram set
@@ -166,6 +174,6 @@ object SubstrIndexStream {
           .mode("overwrite")
           .parquet(path)
     }
-    if (compactAt > 0) { maybeCompact(spark, dir, compactAt); () }
+    if (compactAt > 0) { maybeCompact(spark, g, compactAt); () }
   }
 }

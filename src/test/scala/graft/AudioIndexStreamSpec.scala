@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Audio
-import graft.streaming.AudioIndexStream
+import graft.streaming.{AudioIndexStream, DeltaFold}
 
 /** Incremental audio-dedup-index maintenance: delta append, live merged
-  * cluster view, debt-policy compaction with the crash-safe journaled
-  * swap, replay exactly-once, and the no-corpus-rescan plan pin — the
+  * cluster view, debt-policy compaction behind the generation pointer
+  * commit, replay exactly-once, and the no-corpus-rescan plan pin — the
   * audio twin of the VideoIndexStream contract. The shared crash states
   * are also the audio row of [[DeltaFoldSpec]].
   */
@@ -41,14 +41,14 @@ class AudioIndexStreamSpec extends AnyFunSuite {
 
     val dir = java.nio.file.Files.createTempDirectory("graft_audio_idx").toString + "/idx"
     graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, base), dir)
-    assert(spark.read.parquet(s"$dir/docs").count() === base.count(),
+    assert(spark.read.parquet(DeltaFold.gen(dir)("docs")).count() === base.count(),
       "docs/ holds one fingerprint row per corpus clip")
 
     // batch 0: ten clips — below the 20% debt threshold, so the delta
     // persists, and the LIVE cluster view must equal a fresh recompute
     // over base ∪ slice1 (min rep, counts across base and delta)
     AudioIndexStream.upsertBatch(slice1, dir, batchId = 0L, compactAt = 0.2)
-    assert(new java.io.File(s"$dir/delta").exists(), "below threshold: delta must persist")
+    assert(DeltaFold.gen(dir).hasDelta(), "below threshold: delta must persist")
     assert(
       clusterSet(AudioIndexStream.readClusters(spark, dir))
         === freshClusters(base.unionByName(slice1))
@@ -72,23 +72,23 @@ class AudioIndexStreamSpec extends AnyFunSuite {
     // batch 1: the rest — pushes delta debt over 20% of base, folds, and
     // the folded asset equals a fresh build over ALL docs
     AudioIndexStream.upsertBatch(slice2, dir, batchId = 1L, compactAt = 0.2)
-    assert(!new java.io.File(s"$dir/delta").exists(), "threshold crossed: delta must fold")
-    assert(clusterSet(spark.read.parquet(s"$dir/clusters")) === freshClusters(docs))
-    assert(spark.read.parquet(s"$dir/docs").count() === docs.count())
-    assert(!new java.io.File(s"$dir/swap.journal").exists(),
-      "completed compaction leaves no journal behind")
+    assert(!DeltaFold.gen(dir).hasDelta(), "threshold crossed: delta must fold")
+    assert(clusterSet(spark.read.parquet(DeltaFold.gen(dir)("clusters"))) === freshClusters(docs))
+    assert(spark.read.parquet(DeltaFold.gen(dir)("docs")).count() === docs.count())
+    assert(DeltaFold.gen(dir).stamp.nonEmpty && !new java.io.File(s"$dir/docs").exists(),
+      "completed compaction commits a generation and sweeps the build's dirs")
 
     // a batch replayed AFTER compaction folded it re-lands in delta/ with
     // bit-identical per-doc rows; the next fold's distinct() restores
     // exactly-once — clusters identical before and after
     AudioIndexStream.upsertBatch(slice2, dir, batchId = 1L, compactAt = 0.0)
-    assert(new java.io.File(s"$dir/delta").exists(), "replayed batch re-lands in delta")
+    assert(DeltaFold.gen(dir).hasDelta(), "replayed batch re-lands in delta")
     assert(clusterSet(AudioIndexStream.readClusters(spark, dir)) === freshClusters(docs),
       "live view stays exact under post-compaction replay")
-    AudioIndexStream.compactDeltas(spark, dir)
-    assert(clusterSet(spark.read.parquet(s"$dir/clusters")) === freshClusters(docs),
+    AudioIndexStream.compactDeltas(spark, DeltaFold.gen(dir))
+    assert(clusterSet(spark.read.parquet(DeltaFold.gen(dir)("clusters"))) === freshClusters(docs),
       "fold after replay must not double-count")
-    assert(spark.read.parquet(s"$dir/docs").count() === docs.count())
+    assert(spark.read.parquet(DeltaFold.gen(dir)("docs")).count() === docs.count())
   }
 
   test("spectral provider: upsert + replay + fold equal a fresh spectral build") {
@@ -110,74 +110,60 @@ class AudioIndexStreamSpec extends AnyFunSuite {
       fp = Audio.spectralFp) // replay
     assert(clusterSet(AudioIndexStream.readClusters(spark, dir)) === fresh(docs),
       "live spectral view must equal a fresh spectral build under replay")
-    AudioIndexStream.compactDeltas(spark, dir)
-    assert(clusterSet(spark.read.parquet(s"$dir/clusters")) === fresh(docs),
+    AudioIndexStream.compactDeltas(spark, DeltaFold.gen(dir))
+    assert(clusterSet(spark.read.parquet(DeltaFold.gen(dir)("clusters"))) === fresh(docs),
       "folded spectral asset must equal a wholesale spectral rebuild")
   }
 
-  test("crash-safe swap: a journaled half-swap is finished by the next reader") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+  test("crash-safe commit: a fold killed after its pointer PUT serves the fold") {
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 40)
+    val base = docs.filter(col("doc_id") < 30)
+    val growth = docs.filter(col("doc_id") >= 30)
     val dir = java.nio.file.Files.createTempDirectory("graft_audio_crash").toString + "/idx"
-    graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, docs), dir)
-    val expected = clusterSet(spark.read.parquet(s"$dir/clusters"))
+    val saved = java.nio.file.Files.createTempDirectory("graft_audio_saved").toString
+    graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, base), dir)
+    AudioIndexStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 0.0)
 
-    // simulate a process death between the journal commit point and the
-    // install step: the fully-written compacted dirs are present, the
-    // journal names them, but the live dirs were never flipped — exactly
-    // the state compactDeltas leaves if killed right after journaling
-    val stamp = "crashtest"
-    Seq("docs", "clusters").foreach { name =>
-      Files.move(
-        Paths.get(s"$dir/$name"),
-        Paths.get(s"$dir/$name.compact-$stamp"),
-        StandardCopyOption.ATOMIC_MOVE
-      )
-    }
-    Files.write(
-      Paths.get(s"$dir/swap.journal"),
-      s"$stamp\ndocs\nclusters".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    )
-    assert(!Files.exists(Paths.get(s"$dir/docs")), "precondition: live dir missing")
-
-    // the next reader open finishes the swap — no missing-docs window
-    // survives a restart
+    // a process death between the pointer replace and its sweep: the new
+    // generation is committed, the build's dirs and the folded delta are
+    // still on disk
+    Seq("docs", "clusters", "delta").foreach(n =>
+      graft.operators.Indexes.copyDir(s"$dir/$n", s"$saved/$n"))
+    AudioIndexStream.compactDeltas(spark, DeltaFold.gen(dir))
+    Seq("docs", "clusters", "delta").foreach(n =>
+      graft.operators.Indexes.copyDir(s"$saved/$n", s"$dir/$n"))
+    val expected = clusterSet(Audio.fpClusters(Audio.energyFp(spark, docs)))
+    assert(!DeltaFold.gen(dir).hasDelta(), "the committed generation names a new, empty delta")
     assert(clusterSet(AudioIndexStream.readClusters(spark, dir)) === expected)
-    assert(Files.exists(Paths.get(s"$dir/docs")))
-    assert(!Files.exists(Paths.get(s"$dir/swap.journal")))
-    assert(!Files.exists(Paths.get(s"$dir/docs.compact-$stamp")))
+    assert(AudioIndexStream.readDocs(spark, DeltaFold.gen(dir)).count() === docs.count(),
+      "one row per clip")
   }
 
-  test("crash-orphaned compaction residue is swept by the next commitSwap") {
+  test("crash-orphaned generation dirs are swept by the next fold") {
     import java.nio.file.{Files, Paths}
-    // a death AFTER writing <name>.compact-<stamp> dirs but BEFORE the
-    // journal rename references them leaves residue no recovery path ever
-    // touches (recovery only replays a LANDED journal) — each one a full
-    // index copy leaking on disk. The next compaction's commitSwap must
-    // sweep them; readers must NOT (they could race a live owner
-    // mid-write).
+    // a death AFTER writing <name>.g-<stamp> dirs but BEFORE the pointer
+    // replace leaves dirs no generation names. Readers never resolve them;
+    // the next fold's sweep deletes them.
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 40)
     val base = docs.filter(col("doc_id") < 30)
     val growth = docs.filter(col("doc_id") >= 30)
     val dir = java.nio.file.Files.createTempDirectory("graft_audio_orphan").toString + "/idx"
     graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, base), dir)
-    // plant residue of a fictitious crashed compaction
+    // plant the generation dirs of a fictitious crashed compaction
     val stale = "999-deadbeef"
-    Files.createDirectories(Paths.get(s"$dir/docs.compact-$stale"))
-    Files.write(Paths.get(s"$dir/docs.compact-$stale/part-0.parquet"), Array[Byte](1))
-    Files.createDirectories(Paths.get(s"$dir/clusters.retired-$stale"))
-    Files.write(Paths.get(s"$dir/swap.journal.tmp-$stale"), Array[Byte](2))
-    // a reader open must leave the residue alone
+    Files.createDirectories(Paths.get(s"$dir/docs.g-$stale"))
+    Files.write(Paths.get(s"$dir/docs.g-$stale/part-0.parquet"), Array[Byte](1))
+    Files.createDirectories(Paths.get(s"$dir/clusters.g-$stale"))
+    // a reader resolves the committed generation and leaves them alone
     AudioIndexStream.readClusters(spark, dir).collect()
-    assert(Files.exists(Paths.get(s"$dir/docs.compact-$stale")),
+    assert(Files.exists(Paths.get(s"$dir/docs.g-$stale")),
       "readers must not sweep (they could race a live compaction owner)")
-    // a real fold (upsert with an aggressive debt policy) sweeps it
+    // a real fold (upsert with an aggressive debt policy) sweeps them
     AudioIndexStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 1e-9)
-    assert(!Files.exists(Paths.get(s"$dir/docs.compact-$stale")), "compact residue swept")
-    assert(!Files.exists(Paths.get(s"$dir/clusters.retired-$stale")), "retired residue swept")
-    assert(!Files.exists(Paths.get(s"$dir/swap.journal.tmp-$stale")), "journal tmp swept")
+    assert(!Files.exists(Paths.get(s"$dir/docs.g-$stale")), "orphaned docs generation swept")
+    assert(!Files.exists(Paths.get(s"$dir/clusters.g-$stale")), "orphaned clusters swept")
     // and the fold itself is intact: live view equals a wholesale rebuild
     assert(
       clusterSet(AudioIndexStream.readClusters(spark, dir)) ===

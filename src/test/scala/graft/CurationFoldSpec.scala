@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Curation, Indexes}
-import graft.streaming.CurationGateStream
+import graft.streaming.{CurationGateStream, DeltaFold}
 
 /** The incremental curation-gate asset's contract: a stream-grown asset
   * is BIT-EQUAL to a wholesale rebuild over the grown corpus, batch
@@ -55,13 +55,13 @@ class CurationFoldSpec extends AnyFunSuite with ScratchAssets {
     Indexes.copyDir(baseDir, dir2)
     CurationGateStream.upsertBatch(growth, dir2, batchId = 0L, compactAt = 0)
     CurationGateStream.upsertBatch(growth, dir2, batchId = 0L, compactAt = 0)
-    CurationGateStream.compact(spark, dir2)
+    CurationGateStream.compact(spark, DeltaFold.gen(dir2))
     assert(gatesOf(CurationGateStream.gates(spark, dir2)) === whole)
 
     // post-fold replay: the batch re-lands AFTER compaction already
     // folded it; the next fold's full-row distinct restores exactly-once
     CurationGateStream.upsertBatch(growth, dir2, batchId = 0L, compactAt = 0)
-    CurationGateStream.compact(spark, dir2)
+    CurationGateStream.compact(spark, DeltaFold.gen(dir2))
     assert(gatesOf(CurationGateStream.gates(spark, dir2)) === whole)
   }
 
@@ -85,7 +85,7 @@ class CurationFoldSpec extends AnyFunSuite with ScratchAssets {
     assert(grown === gatesOf(spark.read.parquet(s"$wholeDir/gates")))
     // and the published statistics tables are text-free by schema
     Seq("puregates", "docstats", "doctoks").foreach { t =>
-      val fields = spark.read.parquet(s"$dir/$t").schema.fieldNames.toSet
+      val fields = spark.read.parquet(DeltaFold.gen(dir)(t)).schema.fieldNames.toSet
       assert(!fields.contains("text"), s"$t must not persist raw text")
     }
   }

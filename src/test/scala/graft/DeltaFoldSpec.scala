@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -10,26 +10,32 @@ import graft.operators._
 import graft.sources.Warc
 import graft.streaming._
 
-/** The crash-state matrix every delta fold must pass, one row per fold.
-  * Each row drives one asset through four states:
+/** The crash-state matrix every delta fold must pass, one row per fold,
+  * each run once on a local dir and once on an object-store-shaped
+  * foreign scheme ([[SlowFs]]). Each row drives one asset through the
+  * four states a compaction's pointer commit can leave:
   *
-  *   1. orphaned `.compact-`/`.retired-`/`swap.journal.tmp-` residue of
-  *      a crashed compaction is left alone by readers (they could race a
-  *      live owner mid-write) and swept by the next fold;
-  *   2. a batch replayed after its fold stays exactly-once, in the live
+  *   1. a crash before the pointer replace: `<name>.g-<stamp>` dirs no
+  *      generation names. Readers keep the committed generation, and the
+  *      next fold sweeps them;
+  *   2. a crash after the replace but before its sweep: the old
+  *      generation's dirs and the old delta are still on disk. The live
+  *      view is the folded one, with no row counted twice;
+  *   3. a batch replayed after its fold stays exactly-once, in the live
   *      view and after the next fold;
-  *   3. a journaled half-swap (compacted dirs written, journal landed,
-  *      live dirs not yet flipped) is finished by the next reader;
-  *   4. no lost batch: with a landed journal and a surviving `delta/`
-  *      (the state the swap replay leaves when `delta/` outlives its
-  *      deletion), a new batch's rows reach the live view and survive the
-  *      next fold — the upsert recovers the journal before it writes.
+  *   4. a new batch landed in state 2 reaches the live view and survives
+  *      the next fold, which sweeps the old generation.
   *
   * The expected final state is the same fold driven without any crash
   * (or, where a row names one, a wholesale build over all its rows).
   */
 class DeltaFoldSpec extends AnyFunSuite with ScratchAssets {
-  lazy val spark = TestSpark.spark
+  lazy val spark = {
+    val s = TestSpark.spark
+    // the object-store shim, registered on the session conf only
+    s.sparkContext.hadoopConfiguration.set("fs.slowfs.impl", "graft.SlowFs")
+    s
+  }
   import spark.implicits._
 
   /** One fold under test. `upsert(dir, k, compactAt)` lands batch k (0 or
@@ -60,8 +66,12 @@ class DeltaFoldSpec extends AnyFunSuite with ScratchAssets {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(show).toSeq.sorted
 
-  private def scratch(tag: String): String =
-    Files.createTempDirectory(s"graft_dfold_$tag").toString + "/asset"
+  private def scratch(tag: String): String = scratchDir(s"dfold_$tag") + "/asset"
+
+  /** The local path behind a dir, remote (`slowfs:`) or not. */
+  private def local(dir: String): String = dir.stripPrefix("slowfs:")
+
+  private def copyTo(asset: String, dir: String): Unit = Indexes.copyDir(asset, local(dir))
 
   /** The sfDir every fold's published base asset is keyed under; each
     * state of the matrix folds into its own copy of it.
@@ -92,7 +102,7 @@ class DeltaFoldSpec extends AnyFunSuite with ScratchAssets {
   }.toDF("vec_id", "embedding", "label")
 
   private lazy val warcDir = {
-    val d = Files.createTempDirectory("graft_dfold_warc").toString
+    val d = scratchDir("dfold_warc")
     (0 until 3).foreach { shard =>
       val out = new java.io.ByteArrayOutputStream()
       (0 until 4).foreach { i =>
@@ -122,28 +132,28 @@ class DeltaFoldSpec extends AnyFunSuite with ScratchAssets {
     Fold(
       "audio",
       Seq("docs", "clusters"),
-      dir => Indexes.copyDir(owned(Audio.ensureAudioFpIndex(assetSf, docs(0, 30))), dir),
+      dir => copyTo(owned(Audio.ensureAudioFpIndex(assetSf, docs(0, 30))), dir),
       (dir, k, c) => AudioIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
-      dir => AudioIndexStream.compactDeltas(spark, dir),
+      dir => AudioIndexStream.compactDeltas(spark, DeltaFold.gen(dir)),
       dir => rows(AudioIndexStream.readClusters(spark, dir)),
       // the fold must equal a wholesale rebuild, residue sweep or not
       wholesale = Some((dir, n) =>
-        Indexes.copyDir(owned(Audio.ensureAudioFpIndex(assetSf, docs(0, 30L + 5 * n))), dir))
+        copyTo(owned(Audio.ensureAudioFpIndex(assetSf, docs(0, 30L + 5 * n))), dir))
     ),
     Fold(
       "video",
       Seq("sig", "dfs", "sizes", "rsig", "rdfs", "rsizes", "members"),
-      dir => Indexes.copyDir(owned(Video.ensureSceneIndex(assetSf, docs(0, 30))), dir),
+      dir => copyTo(owned(Video.ensureSceneIndex(assetSf, docs(0, 30))), dir),
       (dir, k, c) => VideoIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
-      dir => VideoIndexStream.compactDeltas(spark, dir),
-      dir => rows(VideoIndexStream.readSig(spark, dir))
+      dir => VideoIndexStream.compactDeltas(spark, DeltaFold.gen(dir)),
+      dir => rows(VideoIndexStream.readSig(spark, DeltaFold.gen(dir)))
     ),
     Fold(
       "substr",
       Seq("grams"),
-      dir => Indexes.copyDir(owned(Dedup.ensureSubstrGramIndex(assetSf, docs(0, 30))), dir),
+      dir => copyTo(owned(Dedup.ensureSubstrGramIndex(assetSf, docs(0, 30))), dir),
       (dir, k, c) => SubstrIndexStream.upsertBatch(docBatch(k), dir, k.toLong, c),
-      dir => SubstrIndexStream.compactDeltas(spark, dir),
+      dir => SubstrIndexStream.compactDeltas(spark, DeltaFold.gen(dir)),
       dir => rows(SubstrIndexStream.readGrams(spark, dir))
     ),
     Fold(
@@ -155,16 +165,16 @@ class DeltaFoldSpec extends AnyFunSuite with ScratchAssets {
           .write.parquet(s"$dir/idx"),
       (dir, k, c) =>
         CdxStream.upsertBatch(spark, warcDir, s"part-0000${k + 1}.warc.gz", dir, k.toLong, c),
-      dir => CdxStream.compactDeltas(spark, dir),
+      dir => CdxStream.compactDeltas(spark, DeltaFold.gen(dir)),
       dir => rows(CdxStream.readCaptures(spark, dir)
         .select("path", "member_offset", "member_len", "target_uri", "surt"))
     ),
     Fold(
       "curation",
       Seq("gates", "puregates", "docstats", "doctoks"),
-      dir => Indexes.copyDir(curationBase, dir),
+      dir => copyTo(curationBase, dir),
       (dir, k, c) => CurationGateStream.upsertBatch(curationBatch(k), dir, k.toLong, c),
-      dir => CurationGateStream.compact(spark, dir),
+      dir => CurationGateStream.compact(spark, DeltaFold.gen(dir)),
       dir => rows(CurationGateStream.gates(spark, dir)),
       liveDelta = false
     ),
@@ -172,92 +182,99 @@ class DeltaFoldSpec extends AnyFunSuite with ScratchAssets {
       "semantic",
       Seq("celled", "seeds", "counts"),
       dir =>
-        Indexes.copyDir(
+        copyTo(
           owned(SemanticIndex.ensure(assetSf, emb.filter(col("vec_id") % 7 =!= 3), 50, 100)), dir),
       (dir, k, c) =>
         SemanticIndex.upsertBatch(
           emb.filter(col("vec_id") % 7 === 3 && (col("vec_id") < 250) === (k == 0)),
           dir, k.toLong, 50, 100, compactAt = c),
-      dir => SemanticIndex.compactDeltas(spark, dir, 50, 100),
+      dir => SemanticIndex.compactDeltas(spark, DeltaFold.gen(dir), 50, 100),
       // cells move at every fold (the quantizer is rebuilt); the vector
       // set is the fold-invariant view
-      dir => rows(SemanticIndex.readCellsLive(spark, dir).select("vec_id"))
+      dir => rows(SemanticIndex.readCellsLive(spark, DeltaFold.gen(dir)).select("vec_id"))
     )
   )
 
-  private def exists(p: String): Boolean = Files.exists(Paths.get(p))
+  private def exists(p: String): Boolean = Files.exists(Paths.get(local(p)))
+
+  private def entries(dir: String): Set[String] =
+    Option(new java.io.File(local(dir)).list()).map(_.toSet).getOrElse(Set.empty)
+
+  /** Each fold's crash-free final view, shared by its local and remote rows. */
+  private val expectedViews = scala.collection.concurrent.TrieMap[String, Seq[String]]()
+
+  private def wholesaleView(f: Fold, n: Int): Option[Seq[String]] = f.wholesale.map { build =>
+    val ref = scratch(s"${f.name}_whole$n")
+    build(ref, n)
+    f.view(ref)
+  }
+
+  private def expectedView(f: Fold): Seq[String] =
+    expectedViews.getOrElseUpdate(f.name, wholesaleView(f, 2).getOrElse {
+      val ref = scratch(s"${f.name}_ref")
+      f.build(ref)
+      f.upsert(ref, 0, 0.0)
+      f.upsert(ref, 1, 0.0)
+      f.compact(ref)
+      f.view(ref)
+    })
+
+  private def matrix(f: Fold, dir: String): Unit = {
+    val expected = expectedView(f)
+    f.build(dir)
+    val before = f.view(dir)
+
+    // 1. a crash before the pointer replace: generation dirs no pointer
+    // names (unreadable, so a reader that resolved one would fail).
+    // Readers keep the committed generation; the next fold sweeps them
+    val orphans = f.swapped.map(n => s"$dir/$n.g-999-deadbeef")
+    orphans.foreach { o =>
+      Files.createDirectories(Paths.get(local(o)))
+      Files.write(Paths.get(local(s"$o/part-0.parquet")), Array[Byte](1))
+    }
+    assert(f.view(dir) === before, "readers see the committed generation unchanged")
+    orphans.foreach(o => assert(exists(o), s"readers must not sweep $o"))
+    f.upsert(dir, 0, 1e-9)
+    assert(!DeltaFold.gen(dir).hasDelta(), "forced debt policy must fold the batch")
+    orphans.foreach(o => assert(!exists(o), s"the fold must sweep $o"))
+    val folded = f.view(dir)
+    assert(expected.toSet != folded.toSet, "batch 1 must add rows, or step 4 proves nothing")
+    wholesaleView(f, 1).foreach(w => assert(folded === w, "the sweep must not disturb the fold"))
+
+    // 3. a batch replayed after its fold re-lands in the delta; the live
+    // view stays exactly-once
+    f.upsert(dir, 0, 0.0)
+    assert(DeltaFold.gen(dir).hasDelta(), "the replayed batch re-lands in the delta")
+    // (as a set: the CDX live view has no distinct, so a replayed batch
+    // shows twice until its fold)
+    if (f.liveDelta) assert(f.view(dir).toSet === folded.toSet, "live view under replay")
+
+    // 2. its fold dies after the pointer replace, before the sweep: the
+    // old generation's dirs and the old delta are back on disk
+    val old = entries(dir) - "generation"
+    val saved = scratchDir(s"dfold_${f.name}_saved")
+    old.foreach(n => Indexes.copyDir(local(s"$dir/$n"), s"$saved/$n"))
+    f.compact(dir)
+    old.filterNot(entries(dir)).foreach(n => Indexes.copyDir(s"$saved/$n", local(s"$dir/$n")))
+    assert(old.subsetOf(entries(dir)), "precondition: the sweep's victims are back")
+    assert(!DeltaFold.gen(dir).hasDelta(), "the committed generation names a new, empty delta")
+    assert(f.view(dir) === folded, "fold after replay: no row counted twice")
+
+    // 4. a new batch landed in state 2 reaches the live view and survives
+    // the next fold, whose sweep leaves only the committed generation
+    f.upsert(dir, 1, 0.0)
+    if (f.liveDelta) assert(f.view(dir).toSet === expected.toSet, "new batch in the live view")
+    f.compact(dir)
+    assert(f.view(dir) === expected, "new batch survives the next fold")
+    val stamp = DeltaFold.gen(dir).stamp.get
+    val left = entries(dir)
+    assert(left.filter(_.contains(".g-")).forall(_.endsWith(s".g-$stamp")), left.toString)
+    assert(!left.exists(n => f.swapped.contains(n) || n == "delta"), left.toString)
+  }
 
   folds.foreach { f =>
-    test(s"${f.name} fold: crash-state matrix") {
-      def wholesaleView(n: Int): Option[Seq[String]] = f.wholesale.map { build =>
-        val ref = scratch(s"${f.name}_whole$n")
-        build(ref, n)
-        f.view(ref)
-      }
-      val expected = wholesaleView(2).getOrElse {
-        val ref = scratch(s"${f.name}_ref")
-        f.build(ref)
-        f.upsert(ref, 0, 0.0)
-        f.upsert(ref, 1, 0.0)
-        f.compact(ref)
-        f.view(ref)
-      }
-      val dir = scratch(f.name)
-      f.build(dir)
-
-      // 1. residue of a fictitious crashed compaction: readers leave it,
-      // the next fold (an upsert under an aggressive debt policy) sweeps it
-      val stale = "999-deadbeef"
-      val residue = Seq(
-        s"$dir/${f.swapped.head}.compact-$stale",
-        s"$dir/${f.swapped.last}.retired-$stale",
-        s"$dir/swap.journal.tmp-$stale"
-      )
-      Files.createDirectories(Paths.get(residue(0)))
-      Files.write(Paths.get(s"${residue(0)}/part-0.parquet"), Array[Byte](1))
-      Files.createDirectories(Paths.get(residue(1)))
-      Files.write(Paths.get(residue(2)), Array[Byte](2))
-      f.view(dir)
-      residue.foreach(p => assert(exists(p), s"readers must not sweep $p"))
-      f.upsert(dir, 0, 1e-9)
-      assert(!exists(s"$dir/delta"), "forced debt policy must fold the batch")
-      residue.foreach(p => assert(!exists(p), s"the fold must sweep $p"))
-      val folded = f.view(dir)
-      assert(expected.toSet != folded.toSet, "batch 1 must add rows, or step 4 proves nothing")
-      wholesaleView(1).foreach(w => assert(folded === w, "the sweep must not disturb the fold"))
-
-      // 2. a batch replayed after its fold re-lands in delta/; the live view
-      // and the next fold stay exactly-once
-      f.upsert(dir, 0, 0.0)
-      assert(exists(s"$dir/delta"), "the replayed batch re-lands in delta/")
-      if (f.liveDelta) assert(f.view(dir).toSet === folded.toSet, "live view under replay")
-      f.compact(dir)
-      assert(f.view(dir) === folded, "fold after replay must not double-count")
-
-      // 3. a process death between the journal commit point and the flips:
-      // compacted dirs present, journal naming them, live dirs gone
-      f.swapped.foreach { n =>
-        Files.move(Paths.get(s"$dir/$n"), Paths.get(s"$dir/$n.compact-crash"),
-          StandardCopyOption.ATOMIC_MOVE)
-      }
-      Files.write(Paths.get(s"$dir/swap.journal"), ("crash" +: f.swapped).mkString("\n").getBytes)
-      assert(!exists(s"$dir/${f.swapped.head}"), "precondition: live dir missing")
-      assert(f.view(dir) === folded, "the next reader finishes the swap")
-      f.swapped.foreach { n =>
-        assert(exists(s"$dir/$n"), s"$n flipped in")
-        assert(!exists(s"$dir/$n.compact-crash"), s"$n.compact-crash consumed")
-      }
-      assert(!exists(s"$dir/swap.journal"), "journal cleared after replay")
-
-      // 4. a landed journal above a surviving delta/ (folded rows of batch
-      // 0), then a NEW batch: it must not be retired with the old delta
-      f.upsert(dir, 0, 0.0)
-      Files.write(Paths.get(s"$dir/swap.journal"), ("lost" +: f.swapped).mkString("\n").getBytes)
-      f.upsert(dir, 1, 0.0)
-      if (f.liveDelta) assert(f.view(dir).toSet === expected.toSet, "new batch in the live view")
-      f.compact(dir)
-      assert(f.view(dir) === expected, "new batch survives the next fold")
-      assert(!exists(s"$dir/swap.journal"))
-    }
+    test(s"${f.name} fold: crash-state matrix")(matrix(f, scratch(f.name)))
+    test(s"${f.name} fold on the remote scheme: crash-state matrix")(
+      matrix(f, "slowfs:" + scratch(s"${f.name}_remote")))
   }
 }

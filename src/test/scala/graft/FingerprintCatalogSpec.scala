@@ -125,6 +125,34 @@ class FingerprintCatalogSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(s"$dir/_SUCCESS")), "a resolved asset is not rewritten")
   }
 
+  test("a typed mapPartitions corpus builds once and adds no catalog entry") {
+    import java.nio.file.{Files, Paths}
+    // a typed operator's closure prints its per-JVM identity in the plan
+    // string, so a catalog key over it never matches a second build of
+    // the same frame: such frames must keep the content scan and leave
+    // the catalog alone
+    def corpus() = graft.operators.Multimodal
+      .embedBatchStub(spark, graft.operators.Multimodal.withPayload(Tables.documents(spark, sf)))
+    def ensure(df: org.apache.spark.sql.DataFrame): String =
+      Indexes.ensureUnder(root, "fpcat-test", sf, df, "doc_id", "embedding", "v=6") { _ =>
+        builds.incrementAndGet(); ()
+      }
+    val catalog = Paths.get("target/fpcatalog")
+    def entries(): Long =
+      if (!Files.isDirectory(catalog)) 0L
+      else {
+        val l = Files.list(catalog)
+        try l.count()
+        finally l.close()
+      }
+    val (b0, n0) = (builds.get(), entries())
+    val d1 = ensure(corpus())
+    val d2 = ensure(corpus())
+    assert(d1 === d2)
+    assert(builds.get() - b0 === 1, "the second call must resolve, not build")
+    assert(entries() === n0, "a plan holding a JVM function must not key the catalog")
+  }
+
   test("end to end: a warmed ensure-asset call issues zero jobs (location + marker check only)") {
     val docs = Tables.documents(spark, sf)
     // first call may build (jobs); second call must resolve the dir from

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Warc
+import graft.streaming.DeltaFold
 
 /** Object-store posture of the WARC paths, exercised through [[SlowFs]]
   * (a foreign-scheme, latency-injecting, byte-counting filesystem):
@@ -139,37 +140,41 @@ class ObjectStoreSpec extends AnyFunSuite {
     // then resolves: the marker gates a replay
     assert(ensure(_ => ()) === base)
     assert(builds === 2)
-    // pre-generation resolution: the plain subdir
-    assert(Indexes.liveDir(base, "grams") === s"$base/grams")
-    assert(spark.read.parquet(Indexes.liveDir(base, "grams")).count() === 10)
 
-    // COMPACTION SWAP: fold a delta into a fully-written generation dir,
-    // then commit by REPLACING the single pointer object — the only
-    // atomic primitive assumed; no directory rename anywhere
-    (11 to 15).map(i => (i.toLong, i * 2L)).toDF("id", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/delta")
-    spark.read.parquet(s"$base/grams")
-      .unionByName(spark.read.parquet(s"$base/delta"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/grams.g-2")
-    Indexes.commitSwapMarker(base, "2", Seq("grams"))
-    assert(Indexes.liveDir(base, "grams") === s"$base/grams.g-2")
-    assert(spark.read.parquet(Indexes.liveDir(base, "grams")).count() === 15)
-    // the old layout and the folded delta are swept after the commit
-    val left = new java.io.File(base.stripPrefix("slowfs:")).listFiles().map(_.getName).toSet
-    assert(!left.contains("grams") && !left.contains("delta"), left.toString)
-    assert(left.contains("grams.g-2") && left.contains("generation"))
+    // COMPACTION: the fold writes a fully-written generation dir, then one
+    // REPLACE of the pointer object commits it and the sweep retires the
+    // build's subdir and the folded delta
+    assert(DeltaFold.gen(base)("grams") === s"$base/grams", "before the first fold: plain")
+    def fold(rows: Range): DeltaFold.Gen = {
+      val g = DeltaFold.gen(base)
+      DeltaFold.upsert(g, 0L) { (_, path) =>
+        rows.map(i => (i.toLong, i * 2L)).toDF("id", "v")
+          .coalesce(1).write.mode("overwrite").parquet(path)
+      }
+      DeltaFold.compact(g, Seq("grams")) { out =>
+        spark.read.parquet(g("grams"))
+          .unionByName(spark.read.parquet(g.delta()).drop("batch_id"))
+          .coalesce(1).write.mode("overwrite").parquet(out("grams"))
+      }
+      DeltaFold.gen(base)
+    }
+    def listing = new java.io.File(base.stripPrefix("slowfs:")).listFiles().map(_.getName).toSet
+    val g2 = fold(11 to 15)
+    val stamp2 = g2.stamp.get
+    assert(g2("grams") === s"$base/grams.g-$stamp2")
+    assert(spark.read.parquet(g2("grams")).count() === 15)
+    assert(!listing.contains("grams") && !listing.contains("delta"), listing.toString)
+    assert(listing.contains(s"grams.g-$stamp2") && listing.contains("generation"))
 
-    // a second swap sweeps the previous generation
-    spark.read.parquet(s"$base/grams.g-2")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/grams.g-3")
-    Indexes.commitSwapMarker(base, "3", Seq("grams"))
-    assert(Indexes.liveDir(base, "grams") === s"$base/grams.g-3")
-    val left2 = new java.io.File(base.stripPrefix("slowfs:")).listFiles().map(_.getName).toSet
-    assert(!left2.contains("grams.g-2"), left2.toString)
-    assert(spark.read.parquet(Indexes.liveDir(base, "grams")).count() === 15)
+    // a second fold sweeps the previous generation and its delta
+    val g3 = fold(16 to 17)
+    assert(g3.stamp !== g2.stamp)
+    assert(!listing.contains(s"grams.g-$stamp2") && !listing.contains(s"delta.g-$stamp2"),
+      listing.toString)
+    assert(spark.read.parquet(g3("grams")).count() === 17)
   }
 
-  test("delta fold on the remote scheme: outstanding batches stay visible, compaction refuses") {
+  test("delta fold on the remote scheme: batches stay visible and compaction commits") {
     import graft.streaming.CdxStream
     // local WARC shards; the fold asset itself lives on the remote scheme
     val warcDir = java.nio.file.Files.createTempDirectory("graft_slowfs_foldwarc").toString
@@ -191,11 +196,13 @@ class ObjectStoreSpec extends AnyFunSuite {
     CdxStream.upsertBatch(spark, warcDir, shards(1), dir, batchId = 0L, compactAt = 0)
     assert(CdxStream.readCaptures(spark, dir).count() === base + batch)
 
-    // the journaled swap renames directories: refused before any write
-    val local = new java.io.File(dir.stripPrefix("slowfs:"))
-    val before = local.list().toSet
-    intercept[UnsupportedOperationException](CdxStream.compactDeltas(spark, dir))
-    assert(local.list().toSet === before, "a refused compaction writes nothing")
+    // the pointer commit needs no directory rename: compaction commits on
+    // the remote scheme, and the build's idx/ and the delta are swept
+    CdxStream.compactDeltas(spark, DeltaFold.gen(dir))
+    val left = new java.io.File(dir.stripPrefix("slowfs:")).list().toSet
+    assert(left.contains("generation") && !left.contains("idx") && !left.contains("delta"),
+      left.toString)
+    assert(!DeltaFold.gen(dir).hasDelta())
     assert(CdxStream.readCaptures(spark, dir).count() === base + batch)
   }
 

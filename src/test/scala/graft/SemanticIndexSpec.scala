@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Indexes, SemanticIndex, Similarity}
+import graft.streaming.DeltaFold
 
 /** The amortization contract of [[SemanticIndex]]: reading the persisted
   * quantizer state is BIT-IDENTICAL to a fresh derivation (so the oracle
@@ -11,7 +12,7 @@ import graft.operators.{Indexes, SemanticIndex, Similarity}
   * edits, and the streaming ingest face flags batches deterministically
   * and replay-idempotently.
   */
-class SemanticIndexSpec extends AnyFunSuite {
+class SemanticIndexSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
   import spark.implicits._
@@ -97,40 +98,41 @@ class SemanticIndexSpec extends AnyFunSuite {
     val corpus0 = emb.filter(col("vec_id") % 7 =!= 3)
     val growth = emb.filter(col("vec_id") % 7 === 3)
     val baseDir = SemanticIndex.ensure(sf, corpus0, 50, 100)
-    val dir = s"target/test_sem_fold/${System.nanoTime()}/idx"
+    val dir = scratchDir("sem_fold") + "/idx"
     graft.operators.Indexes.copyDir(baseDir, dir)
-    val baseCells = cellRows(spark.read.parquet(s"$dir/celled"))
+    val baseCells = cellRows(spark.read.parquet(DeltaFold.gen(dir)("celled")))
 
     // PRE-compaction: delta lands under frozen seeds, base untouched,
     // live view = base ∪ frozen-assigned growth
     SemanticIndex.upsertBatch(growth, dir, batchId = 0L, 50, 100, compactAt = 0.0)
-    val live = cellRows(SemanticIndex.readCellsLive(spark, dir))
-    assert(cellRows(spark.read.parquet(s"$dir/celled")) === baseCells, "base frozen during ingest")
-    assert(live.map(_._1) === cellRows(spark.read.parquet(s"$dir/celled")).map(_._1) ++
+    val live = cellRows(SemanticIndex.readCellsLive(spark, DeltaFold.gen(dir)))
+    val celled = spark.read.parquet(DeltaFold.gen(dir)("celled"))
+    assert(cellRows(celled) === baseCells, "base frozen during ingest")
+    assert(live.map(_._1) === cellRows(celled).map(_._1) ++
       growth.select(col("vec_id")).as[Long].collect().toSet)
     // REPLAY exactly-once: same batch id re-landed changes nothing
     SemanticIndex.upsertBatch(growth, dir, batchId = 0L, 50, 100, compactAt = 0.0)
-    assert(cellRows(SemanticIndex.readCellsLive(spark, dir)) === live)
+    assert(cellRows(SemanticIndex.readCellsLive(spark, DeltaFold.gen(dir))) === live)
 
     // COMPACTION: rebuild-from-union must be BIT-EQUAL to the wholesale
     // build on the grown corpus (celled + seeds + counts)
-    SemanticIndex.compactDeltas(spark, dir, 50, 100)
-    assert(!new java.io.File(s"$dir/delta").exists(), "folded delta retired")
+    SemanticIndex.compactDeltas(spark, DeltaFold.gen(dir), 50, 100)
+    assert(!DeltaFold.gen(dir).hasDelta(), "folded delta retired")
     val wholeDir = SemanticIndex.ensure(sf, emb, 50, 100)
     assert(
-      cellRows(spark.read.parquet(s"$dir/celled")) ===
+      cellRows(spark.read.parquet(DeltaFold.gen(dir)("celled"))) ===
         cellRows(spark.read.parquet(s"$wholeDir/celled")),
       "folded celled table == wholesale build"
     )
     def seedRows(d: String) = spark.read
-      .parquet(s"$d/seeds")
+      .parquet(DeltaFold.gen(d)("seeds"))
       .select(col("cell"), col("centroid"))
       .as[(Long, Seq[Double])]
       .collect()
       .toSet
     assert(seedRows(dir) === seedRows(wholeDir), "re-derived seeds == wholesale seeds")
     def countRows(d: String) = spark.read
-      .parquet(s"$d/counts")
+      .parquet(DeltaFold.gen(d)("counts"))
       .as[(Long, Long)]
       .collect()
       .toSet
@@ -138,9 +140,9 @@ class SemanticIndexSpec extends AnyFunSuite {
     // and a replay AFTER compaction re-lands in delta/, then the next
     // fold's dedup restores exactly-once
     SemanticIndex.upsertBatch(growth, dir, batchId = 0L, 50, 100, compactAt = 0.0)
-    SemanticIndex.compactDeltas(spark, dir, 50, 100)
+    SemanticIndex.compactDeltas(spark, DeltaFold.gen(dir), 50, 100)
     assert(
-      cellRows(spark.read.parquet(s"$dir/celled")) ===
+      cellRows(spark.read.parquet(DeltaFold.gen(dir)("celled"))) ===
         cellRows(spark.read.parquet(s"$wholeDir/celled")),
       "post-compaction replay folds away"
     )

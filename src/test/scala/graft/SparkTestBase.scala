@@ -18,21 +18,24 @@ object TestSpark {
 /** Assets a suite builds under throwaway sfDirs. The sfDir is part of an
   * asset's fingerprint, so each such build lands in a `target/<family>/<fp12>`
   * dir and a catalog entry that no later run can reach; the suite removes
-  * them, and the sfDirs, when it finishes.
+  * them, the sfDirs and its other scratch dirs when it finishes.
   */
 trait ScratchAssets extends org.scalatest.BeforeAndAfterAll { this: org.scalatest.Suite =>
   import java.nio.file.{Files, Paths}
   import scala.jdk.CollectionConverters._
 
-  private val sfDirs = scala.collection.mutable.Buffer[String]()
+  private val scratchDirs = scala.collection.mutable.Buffer[String]()
   private val assets = scala.collection.mutable.Buffer[String]()
 
   /** A sfDir no earlier run has keyed an asset by, so an asset call under
     * it builds.
     */
-  protected def freshSf(): String = synchronized {
-    val d = Files.createTempDirectory("graft_sf").toString
-    sfDirs += d
+  protected def freshSf(): String = scratchDir("sf")
+
+  /** A new temp dir, removed after the suite. */
+  protected def scratchDir(tag: String): String = synchronized {
+    val d = Files.createTempDirectory(s"graft_$tag").toString
+    scratchDirs += d
     d
   }
 
@@ -56,6 +59,6 @@ trait ScratchAssets extends org.scalatest.BeforeAndAfterAll { this: org.scalates
           if (Files.readAllLines(f).asScala.headOption.exists(gone)) { Files.deleteIfExists(f); () }
         } finally entries.close()
       }
-      sfDirs.foreach(d => graft.operators.Indexes.deleteRecursively(Paths.get(d)))
+      scratchDirs.foreach(d => graft.operators.Indexes.deleteRecursively(Paths.get(d)))
     }
 }

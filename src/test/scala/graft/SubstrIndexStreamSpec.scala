@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
-import graft.streaming.SubstrIndexStream
+import graft.streaming.{DeltaFold, SubstrIndexStream}
 
 /** Streaming maintenance of the persisted ExactSubstr gram index: live-view
   * equality with a wholesale rebuild, replay exactly-once (before AND after
   * compaction), write-once clean output, and debt-policy compaction through
-  * the shared crash-safe swap.
+  * the shared generation pointer commit.
   */
 class SubstrIndexStreamSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
@@ -37,7 +37,7 @@ class SubstrIndexStreamSpec extends AnyFunSuite with ScratchAssets {
   private lazy val base = owned(Dedup.ensureSubstrGramIndex(freshSf(), corpus))
 
   private def freshDir(): String = {
-    val idx = s"target/test_substr_stream/${System.nanoTime()}/idx"
+    val idx = scratchDir("substr_stream") + "/idx"
     graft.operators.Indexes.copyDir(base, idx)
     idx
   }
@@ -89,8 +89,8 @@ class SubstrIndexStreamSpec extends AnyFunSuite with ScratchAssets {
     )
     // fold the delta, then replay the SAME batch once more: its rows
     // re-land in delta/, and the live view's distinct() collapses them
-    assert(SubstrIndexStream.maybeCompact(spark, dir, maxDeltaFraction = 1e-9))
-    assert(!new java.io.File(s"$dir/delta").exists(), "fold retires the delta dir")
+    assert(SubstrIndexStream.maybeCompact(spark, DeltaFold.gen(dir), maxDeltaFraction = 1e-9))
+    assert(!DeltaFold.gen(dir).hasDelta(), "fold retires the delta dir")
     val viewAfterFold = gramSet(dir)
     assert(viewAfterFold === view1, "compaction must not change the live view")
     SubstrIndexStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 0) // post-fold replay
@@ -192,14 +192,13 @@ class SubstrIndexStreamSpec extends AnyFunSuite with ScratchAssets {
     assert(got === expected, "recomputed clean output matches the operator rewrite")
   }
 
-  test("direct compactDeltas after a crash mid-swap recovers the landed journal first") {
+  test("direct folds after a crash on either side of the pointer replace") {
     val dir = freshDir()
     SubstrIndexStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 0)
     val truth = rebuiltSet(corpus.unionByName(growth))
-    // Manufacture the mid-replay crash state the advice describes: a
-    // compaction fully wrote grams.compact-<s> and landed the journal,
-    // replay renamed grams/ away, then the process died — grams/ missing,
-    // delta/ still present, journal pointing at <s>.
+    // a crash BEFORE the pointer replace: a compaction fully wrote
+    // grams.g-<s>, then died — no generation names it, grams/ and delta/
+    // are live as before
     val stamp = "crashsim"
     spark.read
       .parquet(s"$dir/grams")
@@ -208,41 +207,22 @@ class SubstrIndexStreamSpec extends AnyFunSuite with ScratchAssets {
       .distinct()
       .write
       .partitionBy("b")
-      .parquet(s"$dir/grams.compact-$stamp")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/swap.journal"),
-      s"$stamp\ngrams".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    )
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$dir/grams"),
-      java.nio.file.Paths.get(s"$dir/grams.retired-$stamp")
-    )
-    // pre-fix this direct call failed on the missing grams/ path, then
-    // commitSwap overwrote the landed journal without replaying it
-    SubstrIndexStream.compactDeltas(spark, dir)
-    assert(!new java.io.File(s"$dir/swap.journal").exists(), "journal replayed, not clobbered")
-    assert(!new java.io.File(s"$dir/delta").exists(), "folded delta retired")
-    assert(gramSet(dir) === truth, "recovered index equals the wholesale rebuild")
-    // and the policy entry point recovers the same way
+      .parquet(s"$dir/grams.g-$stamp")
+    assert(gramSet(dir) === truth, "readers keep the committed generation")
+    SubstrIndexStream.compactDeltas(spark, DeltaFold.gen(dir))
+    assert(!new java.io.File(s"$dir/grams.g-$stamp").exists(), "the orphaned generation is swept")
+    assert(!DeltaFold.gen(dir).hasDelta(), "folded delta retired")
+    assert(gramSet(dir) === truth, "the fold equals the wholesale rebuild")
+    // a crash AFTER the pointer replace, before its sweep: the build's
+    // grams/ and the folded delta/ are back on disk; the policy entry
+    // point finds no debt, and the view is the folded one
     val dir2 = freshDir()
+    val saved = scratchDir("substr_saved")
     SubstrIndexStream.upsertBatch(growth, dir2, batchId = 0L, compactAt = 0)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir2/swap.journal"),
-      s"$stamp\ngrams".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    )
-    spark.read
-      .parquet(s"$dir2/grams")
-      .select(col("b"), col("gh"))
-      .unionByName(spark.read.parquet(s"$dir2/delta").select(col("b"), col("gh")))
-      .distinct()
-      .write
-      .partitionBy("b")
-      .parquet(s"$dir2/grams.compact-$stamp")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$dir2/grams"),
-      java.nio.file.Paths.get(s"$dir2/grams.retired-$stamp")
-    )
-    assert(!SubstrIndexStream.maybeCompact(spark, dir2), "recovery folds the delta; no debt left")
+    Seq("grams", "delta").foreach(n => graft.operators.Indexes.copyDir(s"$dir2/$n", s"$saved/$n"))
+    SubstrIndexStream.compactDeltas(spark, DeltaFold.gen(dir2))
+    Seq("grams", "delta").foreach(n => graft.operators.Indexes.copyDir(s"$saved/$n", s"$dir2/$n"))
+    assert(!SubstrIndexStream.maybeCompact(spark, DeltaFold.gen(dir2)), "no debt left")
     assert(gramSet(dir2) === truth)
   }
 }

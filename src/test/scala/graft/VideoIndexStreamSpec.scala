@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Video
-import graft.streaming.VideoIndexStream
+import graft.streaming.{DeltaFold, VideoIndexStream}
 
 /** Incremental video scene-index maintenance: delta append, live merged
-  * sig/aggregate views, debt-policy compaction with the crash-safe
-  * journaled swap, replay exactly-once, and the no-corpus-rescan plan
+  * sig/aggregate views, debt-policy compaction behind the generation
+  * pointer commit, replay exactly-once, and the no-corpus-rescan plan
   * pin — the video twin of the AudioIndexStream contract.
   */
 class VideoIndexStreamSpec extends AnyFunSuite {
@@ -31,16 +31,16 @@ class VideoIndexStreamSpec extends AnyFunSuite {
 
     val dir = java.nio.file.Files.createTempDirectory("graft_video_idx").toString + "/idx"
     graft.operators.Indexes.copyDir(Video.ensureSceneIndex(sf, base), dir)
-    val baseSig = sigSet(spark.read.parquet(s"$dir/sig"))
+    val baseSig = sigSet(spark.read.parquet(DeltaFold.gen(dir)("sig")))
     assert(baseSig === sigSet(freshSig(base)), "sig/ holds the distinct corpus signatures")
 
     // batch 0: below the 20% debt threshold — delta persists, and EVERY
     // live view equals a fresh derivation over base ∪ slice1
     VideoIndexStream.upsertBatch(slice1, dir, batchId = 0L, compactAt = 0.2)
-    assert(new java.io.File(s"$dir/delta").exists(), "below threshold: delta must persist")
+    assert(DeltaFold.gen(dir).hasDelta(), "below threshold: delta must persist")
     val upto1 = base.unionByName(slice1)
     val sig1 = freshSig(upto1).localCheckpoint()
-    assert(sigSet(VideoIndexStream.readSig(spark, dir)) === sigSet(sig1))
+    assert(sigSet(VideoIndexStream.readSig(spark, DeltaFold.gen(dir))) === sigSet(sig1))
     assert(
       VideoIndexStream.readDfs(spark, dir).as[(Long, Long)].collect().toSet
         === Video.sigDfs(sig1).as[(Long, Long)].collect().toSet
@@ -69,38 +69,38 @@ class VideoIndexStreamSpec extends AnyFunSuite {
 
     // replaying batch 0 (same content, same id) changes nothing
     VideoIndexStream.upsertBatch(slice1, dir, batchId = 0L, compactAt = 0.2)
-    assert(sigSet(VideoIndexStream.readSig(spark, dir)) === sigSet(sig1))
+    assert(sigSet(VideoIndexStream.readSig(spark, DeltaFold.gen(dir))) === sigSet(sig1))
 
     // batch 1: the rest — pushes delta debt over 20% of base, folds, and
     // every folded table equals a fresh build over ALL docs
     VideoIndexStream.upsertBatch(slice2, dir, batchId = 1L, compactAt = 0.2)
-    assert(!new java.io.File(s"$dir/delta").exists(), "threshold crossed: delta must fold")
+    assert(!DeltaFold.gen(dir).hasDelta(), "threshold crossed: delta must fold")
     val sigAll = freshSig(docs).localCheckpoint()
-    assert(sigSet(spark.read.parquet(s"$dir/sig")) === sigSet(sigAll))
+    assert(sigSet(spark.read.parquet(DeltaFold.gen(dir)("sig"))) === sigSet(sigAll))
     assert(
-      spark.read.parquet(s"$dir/rsig").select(col("rid"), col("dhash"))
+      spark.read.parquet(DeltaFold.gen(dir)("rsig")).select(col("rid"), col("dhash"))
         .as[(Long, Long)].collect().toSet
         === Video.repSig(sigAll).as[(Long, Long)].collect().toSet
     )
     assert(
-      spark.read.parquet(s"$dir/sizes").as[(Long, Long)].collect().toSet
+      spark.read.parquet(DeltaFold.gen(dir)("sizes")).as[(Long, Long)].collect().toSet
         === Video.sigSizes(sigAll).as[(Long, Long)].collect().toSet
     )
-    assert(!new java.io.File(s"$dir/swap.journal").exists(),
-      "completed compaction leaves no journal behind")
+    assert(DeltaFold.gen(dir).stamp.nonEmpty && !new java.io.File(s"$dir/sig").exists(),
+      "completed compaction commits a generation and sweeps the build's dirs")
 
     // a batch replayed AFTER compaction folded it re-lands in delta/ with
     // bit-identical sig rows; the live view stays exact and the next
     // fold's distinct() restores exactly-once
     VideoIndexStream.upsertBatch(slice2, dir, batchId = 1L, compactAt = 0.0)
-    assert(new java.io.File(s"$dir/delta").exists(), "replayed batch re-lands in delta")
-    assert(sigSet(VideoIndexStream.readSig(spark, dir)) === sigSet(sigAll),
+    assert(DeltaFold.gen(dir).hasDelta(), "replayed batch re-lands in delta")
+    assert(sigSet(VideoIndexStream.readSig(spark, DeltaFold.gen(dir))) === sigSet(sigAll),
       "live view stays exact under post-compaction replay")
-    VideoIndexStream.compactDeltas(spark, dir)
-    assert(sigSet(spark.read.parquet(s"$dir/sig")) === sigSet(sigAll),
+    VideoIndexStream.compactDeltas(spark, DeltaFold.gen(dir))
+    assert(sigSet(spark.read.parquet(DeltaFold.gen(dir)("sig"))) === sigSet(sigAll),
       "fold after replay must not double-count")
     assert(
-      spark.read.parquet(s"$dir/rsizes").as[(Long, Long)].collect().toSet
+      spark.read.parquet(DeltaFold.gen(dir)("rsizes")).as[(Long, Long)].collect().toSet
         === Video.repSig(sigAll).groupBy(col("rid")).agg(count(lit(1)).as("n"))
           .as[(Long, Long)].collect().toSet
     )
@@ -121,7 +121,7 @@ class VideoIndexStreamSpec extends AnyFunSuite {
     graft.operators.Indexes.copyDir(Video.ensureSceneIndex(sf, corpus0), dir)
     // fold the growth batch in (compactAt tiny -> immediate fold)
     VideoIndexStream.upsertBatch(grow, dir, batchId = 0L, compactAt = 1e-9)
-    assert(!new java.io.File(s"$dir/delta").exists())
+    assert(!DeltaFold.gen(dir).hasDelta())
 
     // the batch verdict over the stream-grown index equals the verdict
     // over a fresh wholesale build of the same corpus

@@ -7,7 +7,9 @@ import java.util.zip.GZIPOutputStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Indexes
 import graft.sources.Warc
+import graft.streaming.{CdxStream, DeltaFold}
 
 /** WARC container source pins: record framing round-trip through the
   * sink's real gzip-member shards, plain-.warc parsing, concatenated-gzip
@@ -215,7 +217,7 @@ class WarcSpec extends AnyFunSuite with ScratchAssets {
       .write.mode("overwrite").parquet(s"$dir/idx")
     graft.streaming.CdxStream
       .upsertBatch(spark, warcDir, "part-00001.warc.gz", dir, batchId = 0L, compactAt = 1e-9)
-    assert(!new java.io.File(s"$dir/delta").exists(), "forced compaction must fold the delta")
+    assert(!DeltaFold.gen(dir).hasDelta(), "forced compaction must fold the delta")
 
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("path", "member_offset", "member_len", "warc_type", "target_uri", "surt")
@@ -233,29 +235,35 @@ class WarcSpec extends AnyFunSuite with ScratchAssets {
     val before = graft.streaming.CdxStream.readCaptures(spark, dir).count()
     graft.streaming.CdxStream
       .upsertBatch(spark, warcDir, "part-00001.warc.gz", dir, batchId = 0L, compactAt = 0)
-    graft.streaming.CdxStream.compactDeltas(spark, dir)
+    graft.streaming.CdxStream.compactDeltas(spark, DeltaFold.gen(dir))
     assert(graft.streaming.CdxStream.readCaptures(spark, dir).count() === before)
   }
 
-  test("CdxStream: a landed swap journal recovers before any direct idx read") {
+  test("CdxStream: a fold that died after its pointer replace counts no capture twice") {
     val warcDir = tmpDir("cdxr_warc")
-    Files.write(Paths.get(s"$warcDir/part-00000.warc.gz"), gzBytes(respA))
+    Files.write(Paths.get(s"$warcDir/part-00000.warc.gz"), gzBytes(reqA))
+    Files.write(Paths.get(s"$warcDir/part-00001.warc.gz"), gzBytes(respA))
     val dir = tmpDir("cdxr_idx") + "/cdx"
-    val idx = graft.sources.Warc
-      .memberIndex(spark, warcDir)
+    val saved = tmpDir("cdxr_saved")
+    Warc
+      .memberIndex(spark, warcDir, "part-00000.warc.gz")
       .withColumn("surt", graft.operators.Urls.surt(col("target_uri")))
-    idx.write.mode("overwrite").parquet(s"$dir/idx")
-    val n = spark.read.parquet(s"$dir/idx").count()
-    // simulate a crash mid-swap: compact tree written, journal landed,
-    // live idx/ already retired, replay not finished
-    val stamp = "test-crash"
-    Files.move(Paths.get(s"$dir/idx"), Paths.get(s"$dir/idx.retired-$stamp"))
-    idx.write.mode("overwrite").parquet(s"$dir/idx.compact-$stamp")
-    Files.write(Paths.get(s"$dir/swap.journal"), s"$stamp\nidx".getBytes("UTF-8"))
-    // a reader must finish the flip and see the compacted rows
-    assert(graft.streaming.CdxStream.readCaptures(spark, dir).count() === n)
-    assert(new java.io.File(s"$dir/idx").exists())
-    assert(!new java.io.File(s"$dir/swap.journal").exists(), "journal must clear after replay")
+      .write.mode("overwrite").parquet(s"$dir/idx")
+    CdxStream.upsertBatch(spark, warcDir, "part-00001.warc.gz", dir, batchId = 0L, compactAt = 0)
+    val n = CdxStream.readCaptures(spark, dir).count()
+    assert(n === 2L)
+    // a crash between the pointer replace and its sweep: the new
+    // generation is committed, the build's idx/ and the folded delta/ are
+    // still on disk. The live view has no distinct, so a delta that
+    // stayed live would count its captures twice
+    Seq("idx", "delta").foreach(d => Indexes.copyDir(s"$dir/$d", s"$saved/$d"))
+    CdxStream.compactDeltas(spark, DeltaFold.gen(dir))
+    Seq("idx", "delta").foreach(d => Indexes.copyDir(s"$saved/$d", s"$dir/$d"))
+    assert(CdxStream.readCaptures(spark, dir).count() === n, "the folded delta counts once")
+    // the next fold sweeps both
+    CdxStream.upsertBatch(spark, warcDir, "part-00001.warc.gz", dir, batchId = 0L, compactAt = 1e-9)
+    assert(!new java.io.File(s"$dir/idx").exists() && !new java.io.File(s"$dir/delta").exists())
+    assert(CdxStream.readCaptures(spark, dir).count() === n)
   }
 
   test("fetch: a ranged read of one member equals that record from the full scan") {

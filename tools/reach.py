@@ -34,8 +34,6 @@ ALLOWED = {
     "readDfs": "VideoIndexStream accessor that VideoIndexStreamSpec checks after a fold",
     "readSizes": "VideoIndexStream accessor that VideoIndexStreamSpec checks after a fold",
     "disable": "Summaries.disable: the switch specs use to run without summary rewrites",
-    "liveDir": "pointer-commit reader, to be wired into fold compaction on object stores",
-    "commitSwapMarker": "pointer commit, to be wired into fold compaction on object stores",
     "Bench": "main",
     "Verify": "main",
     "ScaleData": "main",
