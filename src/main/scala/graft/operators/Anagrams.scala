@@ -37,11 +37,9 @@ object Anagrams {
   def anagramKey(word: Column): Column =
     ExpressionUtils.column(graft.functions.SortChars(ExpressionUtils.expression(word)))
 
-  /** documents(textCol) → one row per surviving token. */
-  def words(docs: DataFrame, textCol: String = "text", dropStop: Boolean = true): DataFrame = {
-    val toks = if (dropStop) Text.tokens(col(textCol)) else Text.tokensAll(col(textCol))
-    docs.select(explode(toks).as("word"))
-  }
+  /** documents(text) → one row per token that survives the stop list. */
+  def words(docs: DataFrame): DataFrame =
+    docs.select(explode(Text.tokens(col("text"))).as("word"))
 
   /** Group words by anagram key; keep groups with >= minSize distinct words;
     * members sorted and joined to a canonical string (global row order is

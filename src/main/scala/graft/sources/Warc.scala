@@ -1,11 +1,15 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, EOFException, InputStream}
+import java.util.zip.{CRC32, DataFormatException, GZIPOutputStream, Inflater, ZipException}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.operators.Indexes
 
 /** WARC (ISO 28500) web-archive container source + sink — gate −1 of a
   * crawl pipeline: the format a Common-Crawl-shaped corpus actually
@@ -143,27 +147,22 @@ object Warc {
     */
   def write(records: DataFrame, dir: String): Unit = {
     val out = dir
-    // session Hadoop overlay captured at the driver: the task-side conf
-    // must carry the session's fs impls/credentials (object-store posture)
-    val hconf = graft.util.HadoopConfs.capture(records.sparkSession)
+    val conf = sessionConf
     records
       .select(col("record_bytes"))
       .foreachPartition { (it: Iterator[Row]) =>
         if (it.hasNext) {
           val tc = org.apache.spark.TaskContext.get()
           val pid = tc.partitionId()
-          val conf = graft.util.HadoopConfs.build(hconf)
           // task-commit protocol (the Spark file-sink discipline): stream
           // into a dot-prefixed attempt-unique temp path (globs and the
           // source's suffix filter skip it), rename into place only on
           // task success — a speculative or retried attempt can never
           // interleave bytes into the final shard, and a failed attempt
           // leaves only an ignorable temp to best-effort delete
-          val finalPath = new org.apache.hadoop.fs.Path(f"$out/part-$pid%05d.warc.gz")
-          val tmpPath = new org.apache.hadoop.fs.Path(
-            f"$out/.part-$pid%05d.attempt-${tc.taskAttemptId()}.inprogress"
-          )
-          val fs = finalPath.getFileSystem(conf)
+          val finalPath = new Path(f"$out/part-$pid%05d.warc.gz")
+          val tmpPath = new Path(f"$out/.part-$pid%05d.attempt-${tc.taskAttemptId()}.inprogress")
+          val fs = finalPath.getFileSystem(conf.value)
           try {
             val os = fs.create(tmpPath, true)
             try it.foreach { r =>
@@ -193,14 +192,24 @@ object Warc {
 
   // ---------------------------------------------------------------- source
 
+  /** The session's Hadoop conf, shipped to tasks the way Spark's own file
+    * sources ship it. A task-side `new Configuration()` would load only
+    * the classpath defaults and drop what the session injected (an object
+    * store's `fs.<scheme>.impl`, endpoint and credentials); the wrapper
+    * carries the driver's full view and replays it onto a defaults-free
+    * `Configuration(false)`, so a key the session removed stays absent.
+    */
+  private def sessionConf: SerializableConfiguration =
+    new SerializableConfiguration(Indexes.sessionHadoopConf)
+
   /** Shard files under `dir` matching `glob`, listed once at the driver
     * (a directory listing is driver-scale: one row per shard). Hidden
     * files (`.`/`_` prefixes — including this sink's in-progress task
     * attempts) are skipped, matching Spark's file-source convention.
     */
-  private def listShardPaths(spark: SparkSession, dir: String, glob: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir, glob)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def listShardPaths(dir: String, glob: String): Seq[String] = {
+    val p = new Path(dir, glob)
+    val fs = p.getFileSystem(Indexes.sessionHadoopConf)
     Option(fs.globStatus(p))
       .map(_.toSeq)
       .getOrElse(Seq.empty)
@@ -212,40 +221,48 @@ object Warc {
       .sorted
   }
 
-  /** Open a shard for streaming, gunzipping transparently when the magic
-    * bytes say so (Java's GZIPInputStream consumes concatenated members
-    * natively, member by member — nothing is materialized).
+  /** One streaming task per shard under `dir` matching `glob`: `rows`
+    * walks the shard's open raw stream, which closes exactly once — on
+    * exhaustion for the normal path, via the task-completion listener
+    * when a downstream limit/failure abandons the iterator.
     */
-  private def openShard(
-      conf: org.apache.hadoop.conf.Configuration,
-      pathStr: String
-  ): java.io.InputStream = {
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val raw = new java.io.BufferedInputStream(p.getFileSystem(conf).open(p), 1 << 16)
-    raw.mark(2)
-    val b0 = raw.read()
-    val b1 = raw.read()
-    raw.reset()
-    if (b0 == 0x1f && b1 == 0x8b) new GZIPInputStream(raw, 1 << 16) else raw
+  private def perShard(spark: SparkSession, dir: String, glob: String, rowSchema: StructType)(
+      rows: (String, InputStream) => Iterator[Row]
+  ): DataFrame = {
+    val paths = listShardPaths(dir, glob)
+    val conf = sessionConf
+    spark
+      .createDataset(paths)(Encoders.STRING)
+      .repartition(math.max(paths.size, 1))
+      .mapPartitions(_.flatMap { pathStr =>
+        val p = new Path(pathStr)
+        val in = p.getFileSystem(conf.value).open(p)
+        var closed = false
+        def closeOnce(): Unit = if (!closed) { closed = true; in.close() }
+        Option(org.apache.spark.TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
+        val it = rows(pathStr, in)
+        new Iterator[Row] {
+          def hasNext: Boolean = it.hasNext || { closeOnce(); false }
+          def next(): Row = it.next()
+        }
+      })(Encoders.row(rowSchema))
   }
 
-  /** Wrap a per-shard iterator so the underlying stream closes exactly
-    * once — on exhaustion for the normal path, via the task-completion
-    * listener when a downstream limit/failure abandons the iterator.
+  /** `in` gunzipped ([[Gunzip]]) when it starts with the gzip magic bytes,
+    * as it is otherwise — the one sniff for whole shards, CDX members and
+    * ranged reads — and buffered for [[RecordStream]]'s byte reads.
     */
-  private def closeOnExhaust[A](it: Iterator[A], close: () => Unit): Iterator[A] =
-    new Iterator[A] {
-      private var closed = false
-      private def closeOnce(): Unit = if (!closed) { closed = true; close() }
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-      def hasNext: Boolean = {
-        val h = it.hasNext
-        if (!h) closeOnce()
-        h
-      }
-      def next(): A = it.next()
+  private def decoded(in: InputStream): InputStream = {
+    val b = in match {
+      case a: ByteArrayInputStream => a
+      case _                       => new BufferedInputStream(in, 1 << 16)
     }
+    b.mark(2)
+    val gz = b.read() == 0x1f && b.read() == 0x8b
+    b.reset()
+    if (gz) new BufferedInputStream(new Gunzip(b), 1 << 16) else b
+  }
 
   private def recRow(w: Rec): Row =
     Row(
@@ -268,21 +285,8 @@ object Warc {
     * a time (WarcSpec pins the incremental consumption with a counting
     * stream). There is no per-shard size cap.
     */
-  def read(spark: SparkSession, dir: String, glob: String = "*.warc*"): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val paths = listShardPaths(spark, dir, glob)
-    val hconf = graft.util.HadoopConfs.capture(spark)
-    spark
-      .createDataset(paths)(org.apache.spark.sql.Encoders.STRING)
-      .repartition(math.max(paths.size, 1))
-      .mapPartitions { it =>
-        val conf = graft.util.HadoopConfs.build(hconf)
-        it.flatMap { pathStr =>
-          val in = openShard(conf, pathStr)
-          closeOnExhaust(new RecordStream(pathStr, in).map(recRow), () => in.close())
-        }
-      }(enc)
-  }
+  def read(spark: SparkSession, dir: String, glob: String = "*.warc*"): DataFrame =
+    perShard(spark, dir, glob, schema)((path, in) => new RecordStream(path, decoded(in)).map(recRow))
 
   /** Re-spread parsed records when the shard count undershoots the
     * session's parallelism: a gzip member stream parses sequentially per
@@ -392,23 +396,32 @@ object Warc {
       malformed: String
   )
 
-  /** Streaming walk over a (possibly multi-member) gzip STREAM: yields
-    * each member's exact compressed extent (RFC 1952 header fields
-    * skipped, raw-deflate inflate to the member boundary, 8-byte
-    * CRC32/ISIZE trailer) holding only the fixed 64 KiB fill buffer plus
-    * ONE member's decompressed bytes — per-task residency is
-    * member-sized, so a 1 GB (or 100 GB) shard walks in constant memory.
-    * Halts at the first unframeable member with a sentinel [[Member]]
-    * (past corruption there is no safe resync).
+  /** Strict streaming gunzip over a (possibly multi-member) gzip STREAM,
+    * the one gzip decoder of this source: whole-shard reads, ranged point
+    * reads and the member walk all go through it. It holds a fixed 64 KiB
+    * fill buffer; member boundaries are exact (RFC 1952 header fields
+    * skipped, raw-deflate inflate to the member's end, CRC32/ISIZE trailer
+    * checked). Unlike `java.util.zip.GZIPInputStream`, which ends the
+    * stream silently when the bytes after a member do not parse as a
+    * header, every malformed or truncated member throws (`ZipException` /
+    * `EOFException`); only EOF exactly on a member boundary is a clean end.
+    * `read` runs across members; [[readMember]] stops at the current
+    * member's end and [[nextMember]] opens the next.
     */
-  private[graft] final class GzipMemberIterator(in: java.io.InputStream)
-      extends Iterator[Member] {
+  private[graft] final class Gunzip(in: InputStream) extends InputStream {
     private val buf = new Array[Byte](1 << 16)
     private var lo = 0 // next unconsumed index
     private var hi = 0 // end of the filled region
-    private var absPos = 0L // absolute stream offset of buf(lo)
-    private var pending: Member = null
-    private var done = false
+    private var pos = 0L // absolute stream offset of buf(lo)
+    private val inf = new Inflater(true)
+    private val crc = new CRC32
+    private var inMember = false
+    private val one = new Array[Byte](1)
+
+    /** Compressed offset of the next unconsumed byte: a member's end once
+      * [[readMember]] has returned -1 for it.
+      */
+    def offset: Long = pos
 
     /** Compact + refill; false when the stream is exhausted AND empty. */
     private def refill(): Boolean = {
@@ -424,76 +437,102 @@ object Warc {
     /** Consume one byte; -1 on end of stream. */
     private def byteAt(): Int =
       if (lo == hi && !refill()) -1
-      else { val b = buf(lo) & 0xff; lo += 1; absPos += 1; b }
+      else { val b = buf(lo) & 0xff; lo += 1; pos += 1; b }
 
-    private def skipNulTerminated(): Boolean = {
-      var b = byteAt()
-      while (b > 0) b = byteAt()
-      b == 0
+    private def need(): Int = {
+      val b = byteAt()
+      if (b < 0) throw new EOFException("truncated gzip member")
+      b
     }
 
-    private def advance(): Unit = {
-      if (done) return
-      val start = absPos
+    private def u32(): Long = (0 until 4).foldLeft(0L)((v, i) => v | (need().toLong << (8 * i)))
+
+    /** Open the next member: false on a clean end (EOF on a boundary). */
+    def nextMember(): Boolean = {
       val b0 = byteAt()
-      if (b0 < 0) { done = true; return } // clean end on a member boundary
-      val b1 = byteAt()
-      def halt(): Unit = { pending = Member(start, 0L, null, "bad-member"); done = true }
-      if (b0 != 0x1f || b1 != 0x8b) { halt(); return }
-      try {
-        byteAt() // CM
-        val flg = byteAt()
-        var ok = flg >= 0
-        var i = 0
-        while (ok && i < 6) { ok = byteAt() >= 0; i += 1 } // MTIME + XFL + OS
-        if (ok && (flg & 4) != 0) { // FEXTRA
-          val x0 = byteAt(); val x1 = byteAt()
-          ok = x0 >= 0 && x1 >= 0
-          var left = x0 | (x1 << 8)
-          while (ok && left > 0) { ok = byteAt() >= 0; left -= 1 }
-        }
-        if (ok && (flg & 8) != 0) ok = skipNulTerminated() // FNAME
-        if (ok && (flg & 16) != 0) ok = skipNulTerminated() // FCOMMENT
-        if (ok && (flg & 2) != 0) ok = byteAt() >= 0 && byteAt() >= 0 // FHCRC
-        if (!ok) { halt(); return }
+      if (b0 < 0) return false
+      if (b0 != 0x1f || need() != 0x8b || need() != 8) throw new ZipException("not a gzip member")
+      val flg = need()
+      (0 until 6).foreach(_ => need()) // MTIME + XFL + OS
+      if ((flg & 4) != 0) (0 until (need() | (need() << 8))).foreach(_ => need()) // FEXTRA
+      if ((flg & 8) != 0) while (need() != 0) () // FNAME
+      if ((flg & 16) != 0) while (need() != 0) () // FCOMMENT
+      if ((flg & 2) != 0) { need(); need() } // FHCRC
+      inf.reset()
+      crc.reset()
+      inMember = true
+      true
+    }
+
+    /** Up to `len` decompressed bytes of the member in flight; -1 once it
+      * has ended and its trailer checked out.
+      */
+    def readMember(b: Array[Byte], off: Int, len: Int): Int = {
+      var n = 0
+      while (inMember && n == 0 && len > 0) {
         // raw-deflate inflate straight off the fill buffer; lo advances
         // eagerly as chunks are fed and rolls back by getRemaining once
         // the member's deflate stream ends
-        val inf = new java.util.zip.Inflater(true)
-        val bos = new ByteArrayOutputStream(1 << 16)
-        val out = new Array[Byte](1 << 16)
-        var truncated = false
-        try {
-          while (!inf.finished() && !truncated) {
-            if (inf.needsInput()) {
-              if (lo == hi && !refill()) truncated = true
-              else {
-                val fed = hi - lo
-                inf.setInput(buf, lo, fed)
-                lo = hi
-                absPos += fed
-              }
-            }
-            if (!truncated) {
-              val n = inf.inflate(out)
-              if (n > 0) bos.write(out, 0, n)
-            }
-          }
-          if (!truncated) {
-            val rem = inf.getRemaining
-            lo -= rem
-            absPos -= rem
-          }
-        } finally inf.end()
-        if (truncated) { halt(); return }
-        // CRC32 + ISIZE trailer
-        var t = 0
-        var tok = true
-        while (tok && t < 8) { tok = byteAt() >= 0; t += 1 }
-        if (!tok) { halt(); return }
-        pending = Member(start, absPos - start, bos.toByteArray, null)
-      } catch {
-        case _: java.util.zip.DataFormatException => halt()
+        if (inf.needsInput()) {
+          if (lo == hi && !refill()) throw new EOFException("truncated gzip member")
+          inf.setInput(buf, lo, hi - lo)
+          pos += hi - lo
+          lo = hi
+        }
+        n =
+          try inf.inflate(b, off, len)
+          catch { case e: DataFormatException => throw new ZipException(e.getMessage) }
+        crc.update(b, off, n)
+        if (inf.finished()) {
+          val rem = inf.getRemaining
+          lo -= rem
+          pos -= rem
+          if (u32() != crc.getValue || u32() != (inf.getBytesWritten & 0xffffffffL))
+            throw new ZipException("gzip member trailer mismatch")
+          inMember = false
+        } else if (n == 0 && inf.needsDictionary()) throw new ZipException("deflate dictionary")
+      }
+      if (n == 0 && !inMember) -1 else n
+    }
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      var n = readMember(b, off, len)
+      while (n < 0 && nextMember()) n = readMember(b, off, len)
+      n
+    }
+
+    override def read(): Int = if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+
+    override def close(): Unit = { inf.end(); in.close() }
+  }
+
+  /** The member walk over a gzip stream ([[Gunzip]]): each member's exact
+    * compressed extent and decompressed bytes, holding the fixed fill
+    * buffer plus ONE member — per-task residency is member-sized, so a
+    * 1 GB (or 100 GB) shard walks in constant memory. Halts at the first
+    * unframeable member with a sentinel [[Member]] (past corruption there
+    * is no safe resync).
+    */
+  private[graft] final class GzipMemberIterator(in: InputStream) extends Iterator[Member] {
+    private val gz = new Gunzip(in)
+    private val chunk = new Array[Byte](1 << 16)
+    private var pending: Member = null
+    private var done = false
+
+    private def advance(): Unit = {
+      val start = gz.offset
+      try
+        if (!gz.nextMember()) done = true
+        else {
+          val bos = new ByteArrayOutputStream(1 << 16)
+          var n = gz.readMember(chunk, 0, chunk.length)
+          while (n >= 0) { bos.write(chunk, 0, n); n = gz.readMember(chunk, 0, chunk.length) }
+          pending = Member(start, gz.offset - start, bos.toByteArray, null)
+        }
+      catch {
+        case _: ZipException | _: EOFException =>
+          pending = Member(start, 0L, null, "bad-member")
+          done = true
       }
     }
 
@@ -509,9 +548,9 @@ object Warc {
     }
   }
 
-  /** Byte-array convenience over [[GzipMemberIterator]] (specs + the
-    * ranged-fetch path): complete members only — the halt sentinel, if
-    * any, is dropped, matching the original strict walk.
+  /** Byte-array convenience over [[GzipMemberIterator]], the reference
+    * member splitter specs check the reader against: complete members
+    * only — the halt sentinel, if any, is dropped.
     */
   private[graft] def gzipMembers(raw: Array[Byte]): Seq[(Long, Long, Array[Byte])] =
     new GzipMemberIterator(new ByteArrayInputStream(raw))
@@ -531,33 +570,16 @@ object Warc {
     * offset, so a CDX consumer can DETECT truncated coverage instead of
     * silently losing every subsequent capture.
     */
-  def memberIndex(spark: SparkSession, dir: String, glob: String = "*.warc.gz"): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(memberSchema)
-    val paths = listShardPaths(spark, dir, glob)
-    val hconf = graft.util.HadoopConfs.capture(spark)
-    spark
-      .createDataset(paths)(org.apache.spark.sql.Encoders.STRING)
-      .repartition(math.max(paths.size, 1))
-      .mapPartitions { it =>
-        val conf = graft.util.HadoopConfs.build(hconf)
-        it.flatMap { pathStr =>
-          val p = new org.apache.hadoop.fs.Path(pathStr)
-          val in = p.getFileSystem(conf).open(p)
-          val rows = new GzipMemberIterator(in).flatMap { m =>
-            if (m.malformed != null)
-              Some(Row(pathStr, m.offset, 0L, null, null, null, null, m.malformed))
-            else
-              parseShard(pathStr, m.bytes).headOption.map { w =>
-                Row(
-                  pathStr, m.offset, m.clen,
-                  w.warcType, w.targetUri, w.warcDate, w.contentLength, w.malformed
-                )
-              }
+  def memberIndex(spark: SparkSession, dir: String, glob: String = "*.warc.gz"): DataFrame =
+    perShard(spark, dir, glob, memberSchema) { (path, in) =>
+      new GzipMemberIterator(in).flatMap { m =>
+        if (m.malformed != null) Some(Row(path, m.offset, 0L, null, null, null, null, m.malformed))
+        else
+          new RecordStream(path, decoded(new ByteArrayInputStream(m.bytes))).nextOption().map { w =>
+            Row(path, m.offset, m.clen, w.warcType, w.targetUri, w.warcDate, w.contentLength, w.malformed)
           }
-          closeOnExhaust(rows, () => in.close())
-        }
-      }(enc)
-  }
+      }
+    }
 
   /** Ranged point reads: for each index row `(path, member_offset,
     * member_len)`, seek to the member, read exactly its compressed
@@ -565,46 +587,31 @@ object Warc {
     * (`rec_offset` is member-relative, i.e. 0). This is the random-
     * access half of the CDX contract: fetching k captures from a 100 TB
     * archive costs k ranged reads of a few KB each, never a shard scan.
-    * Hadoop `Configuration` is built once per PARTITION (constructing it
-    * per row re-parses the XML resources — measured 7.4 s → ~1.5 s on a
-    * 1 352-capture bulk lookup), `FileSystem` instances come from
-    * Hadoop's per-scheme cache, and a bulk lookup whose index arrives in
-    * fewer partitions than the session's parallelism is re-spread so the
-    * point reads fan out across cores.
+    * A member that does not gunzip or frame comes back as a malformed
+    * row, as in [[read]]. The session conf reaches each task once, so
+    * per-row lookups never rebuild a `Configuration` (re-parsing the XML
+    * resources per row measured 7.4 s vs ~1.5 s on a 1 352-capture bulk
+    * lookup); `FileSystem` instances come from Hadoop's per-scheme cache,
+    * and a bulk lookup whose index arrives in fewer partitions than the
+    * session's parallelism is re-spread so the point reads fan out
+    * across cores.
     */
   def fetch(spark: SparkSession, index: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(schema)
     val rows = index.select(col("path"), col("member_offset"), col("member_len"))
     val par = spark.sparkContext.defaultParallelism
     val spread = if (rows.rdd.getNumPartitions < par) rows.repartition(par) else rows
-    val hconf = graft.util.HadoopConfs.capture(spark)
-    spread.mapPartitions { it =>
-      val conf = graft.util.HadoopConfs.build(hconf)
-      it.flatMap { r =>
-        val pathStr = r.getString(0)
-        val buf = new Array[Byte](r.getLong(2).toInt)
-        val p = new org.apache.hadoop.fs.Path(pathStr)
-        val in = p.getFileSystem(conf).open(p)
-        try {
-          in.seek(r.getLong(1))
-          in.readFully(buf)
-        } finally in.close()
-        parseShard(pathStr, buf).map(w =>
-          Row(
-            w.path,
-            w.recOffset,
-            w.warcType,
-            w.recordId,
-            w.targetUri,
-            w.warcDate,
-            w.contentType,
-            w.contentLength,
-            w.block,
-            w.malformed
-          )
-        )
-      }
-    }(enc)
+    val conf = sessionConf
+    spread.mapPartitions(_.flatMap { r =>
+      val pathStr = r.getString(0)
+      val buf = new Array[Byte](r.getLong(2).toInt)
+      val p = new Path(pathStr)
+      val in = p.getFileSystem(conf.value).open(p)
+      try {
+        in.seek(r.getLong(1))
+        in.readFully(buf)
+      } finally in.close()
+      new RecordStream(pathStr, decoded(new ByteArrayInputStream(buf))).map(recRow)
+    })(Encoders.row(schema))
   }
 
   // ------------------------------------------------------- fixture corpus
@@ -624,7 +631,7 @@ object Warc {
   private def ensureShards(family: String, sfDir: String, docs: DataFrame, version: Int)(
       records: => DataFrame
   ): String =
-    graft.operators.Indexes.ensure(family, sfDir, docs, "doc_id", "text", s"ns=$Shards,v=$version") {
+    Indexes.ensure(family, sfDir, docs, "doc_id", "text", s"ns=$Shards,v=$version") {
       tmp =>
         val recs = records
         val keys = recs.columns.filter(_ != "record_bytes").map(col).toSeq
@@ -641,7 +648,7 @@ object Warc {
     */
   def ensureCdxDir(sfDir: String, docs: DataFrame): (String, String) = {
     val warcDir = ensureFixtureDir(sfDir, docs)
-    val dir = graft.operators.Indexes.ensure("warc-cdx", sfDir, docs, "doc_id", "text", "v=1") { tmp =>
+    val dir = Indexes.ensure("warc-cdx", sfDir, docs, "doc_id", "text", "v=1") { tmp =>
       memberIndex(docs.sparkSession, warcDir)
         .withColumn("surt", graft.operators.Urls.surt(col("target_uri")))
         .write
@@ -1319,28 +1326,9 @@ object Warc {
         StructField("refers_to", StringType)
       )
     )
-    val enc = org.apache.spark.sql.Encoders.row(ext)
-    val paths = listShardPaths(spark, dir, "*.warc*")
-    val hconf = graft.util.HadoopConfs.capture(spark)
-    spark
-      .createDataset(paths)(org.apache.spark.sql.Encoders.STRING)
-      .repartition(math.max(paths.size, 1))
-      .mapPartitions { it =>
-        val conf = graft.util.HadoopConfs.build(hconf)
-        it.flatMap { pathStr =>
-          val in = openShard(conf, pathStr)
-          closeOnExhaust(
-            new RecordStream(pathStr, in).map { w =>
-              Row(
-                w.path, w.recOffset, w.warcType, w.recordId, w.targetUri, w.warcDate,
-                w.contentType, w.contentLength, w.block, w.malformed,
-                w.payloadDigest, w.refersTo
-              )
-            },
-            () => in.close()
-          )
-        }
-      }(enc)
+    perShard(spark, dir, "*.warc*", ext) { (path, in) =>
+      new RecordStream(path, decoded(in)).map(w => Row.fromSeq(recRow(w).toSeq ++ Seq(w.payloadDigest, w.refersTo)))
+    }
   }
 
   /** Resolve a DEDUPLICATED archive back to its full capture table: one
@@ -1527,29 +1515,30 @@ object Warc {
       malformed: String,
       // optional revisit-resolution headers (ISO 28500 §6.7.2); null when
       // absent — [[read]]'s 10-column schema never surfaces them, only
-      // [[readWithRevisitHeaders]] does
+      // the revisit resolution's read ([[resolveRevisits]]) does
       refersTo: String = null,
       payloadDigest: String = null
   )
 
-  /** Streaming record framer over a DECOMPRESSED shard stream — the
-    * incremental form of [[parseShard]] with identical framing and
-    * malformed semantics (`bad-version` / `bad-length` / `truncated`,
-    * halt-on-first), but RECORD-sized residency: only the in-flight
-    * record's block is ever materialized. A gzip member corrupted
-    * mid-stream surfaces here as end-of-stream (the inflater's
-    * ZipException/EOFException), so the in-flight record reports
-    * `truncated` — same resync discipline, no task failure.
+  /** The one WARC record framer, over a buffered DECOMPRESSED stream
+    * ([[decoded]]) — a whole shard ([[read]]), one member ([[memberIndex]])
+    * or one ranged read ([[fetch]]). Malformed semantics: `bad-version` / `bad-length` /
+    * `truncated`, halt-on-first. RECORD-sized residency: only the
+    * in-flight record's block is ever materialized. A gzip member
+    * corrupted or cut mid-stream surfaces here as a failed end of stream
+    * ([[Gunzip]]'s ZipException/EOFException): the in-flight record
+    * reports `truncated`, or, when the failure falls on a record
+    * boundary, one `truncated` row with no headers marks where the
+    * stream broke — same resync discipline, no task failure.
     *
     * Records > 2 GiB report `bad-length`: a block must fit one binary
     * column value — the per-RECORD row-width bound that replaced the old
     * per-SHARD `binaryFile` cap.
     */
-  private[graft] final class RecordStream(path: String, in0: java.io.InputStream)
-      extends Iterator[Rec] {
-    private val in = new java.io.BufferedInputStream(in0, 1 << 16)
+  private[graft] final class RecordStream(path: String, in: InputStream) extends Iterator[Rec] {
     private var pos = 0L // offset in the decompressed stream
     private var eof = false
+    private var failed = false // the stream ended in a decode error
     private var halted = false
     private var pushed = -1
     private var pending: Rec = null
@@ -1559,10 +1548,7 @@ object Warc {
       if (eof) return -1
       val b =
         try in.read()
-        catch {
-          case _: java.util.zip.ZipException => -1
-          case _: java.io.EOFException => -1
-        }
+        catch { case _: ZipException | _: EOFException => failed = true; -1 }
       if (b < 0) eof = true else pos += 1
       b
     }
@@ -1588,10 +1574,7 @@ object Warc {
       while (off < want && n >= 0) {
         n =
           try in.read(arr, off, want - off)
-          catch {
-            case _: java.util.zip.ZipException => -1
-            case _: java.io.EOFException => -1
-          }
+          catch { case _: ZipException | _: EOFException => failed = true; -1 }
         if (n > 0) { off += n; pos += n }
       }
       if (off == want) (arr, true)
@@ -1602,7 +1585,11 @@ object Warc {
       if (halted) return
       var b = readByte()
       while (b == '\r' || b == '\n') b = readByte()
-      if (b < 0) return // clean end on a record boundary
+      if (b < 0) { // end on a record boundary: clean unless the stream broke
+        if (failed) pending = Rec(path, pos, null, null, null, null, null, -1L, null, "truncated")
+        halted = true
+        return
+      }
       push(b)
       val recOff = pos
       val version = readLine()
@@ -1656,99 +1643,5 @@ object Warc {
       pending = null
       r
     }
-  }
-
-  /** Decompress (if gzipped — Java's GZIPInputStream consumes
-    * concatenated members natively) and frame every record in a shard —
-    * the BUFFER-shaped twin of [[RecordStream]], kept for the paths that
-    * already hold record-sized byte slices ([[fetch]]'s ranged reads,
-    * per-member framing in [[memberIndex]]).
-    */
-  private[graft] def parseShard(path: String, raw: Array[Byte]): Seq[Rec] = {
-    val bytes =
-      if (raw.length >= 2 && (raw(0) & 0xff) == 0x1f && (raw(1) & 0xff) == 0x8b) {
-        val in = new GZIPInputStream(new ByteArrayInputStream(raw), 1 << 16)
-        val out = new ByteArrayOutputStream(raw.length * 4)
-        val buf = new Array[Byte](1 << 16)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toByteArray
-      } else raw
-    val recs = scala.collection.mutable.ArrayBuffer.empty[Rec]
-    var pos = 0
-    def lineAt(p: Int): (String, Int) = {
-      // a header line, CRLF- (or bare-LF-) terminated
-      var e = p
-      while (e < bytes.length && bytes(e) != '\n') e += 1
-      val cut = if (e > p && bytes(e - 1) == '\r') e - 1 else e
-      (new String(bytes, p, cut - p, "UTF-8"), math.min(e + 1, bytes.length))
-    }
-    var halt = false
-    while (!halt && pos < bytes.length) {
-      // skip inter-record CRLFs
-      while (pos < bytes.length && (bytes(pos) == '\r' || bytes(pos) == '\n')) pos += 1
-      if (pos < bytes.length) {
-        val recOff = pos.toLong
-        val (version, afterV) = lineAt(pos)
-        if (!version.startsWith("WARC/")) {
-          recs += Rec(path, recOff, null, null, null, null, null, -1L, null, "bad-version")
-          halt = true // no trustworthy length — cannot resync inside this stream
-        } else {
-          var p = afterV
-          val headers = scala.collection.mutable.Map.empty[String, String]
-          var open = true
-          while (open && p < bytes.length) {
-            val (l, np) = lineAt(p)
-            p = np
-            if (l.isEmpty) open = false
-            else {
-              val i = l.indexOf(':')
-              if (i > 0) headers += (l.take(i).trim.toLowerCase -> l.drop(i + 1).trim)
-            }
-          }
-          val len = headers.get("content-length").flatMap(_.toLongOption)
-          len match {
-            case None =>
-              recs += Rec(
-                path, recOff,
-                headers.getOrElse("warc-type", null),
-                headers.getOrElse("warc-record-id", null),
-                headers.getOrElse("warc-target-uri", null),
-                headers.getOrElse("warc-date", null),
-                headers.getOrElse("content-type", null),
-                -1L, null, "bad-length"
-              )
-              halt = true
-            case Some(n) if p + n > bytes.length =>
-              recs += Rec(
-                path, recOff,
-                headers.getOrElse("warc-type", null),
-                headers.getOrElse("warc-record-id", null),
-                headers.getOrElse("warc-target-uri", null),
-                headers.getOrElse("warc-date", null),
-                headers.getOrElse("content-type", null),
-                n, java.util.Arrays.copyOfRange(bytes, p, bytes.length), "truncated",
-                headers.getOrElse("warc-refers-to", null),
-                headers.getOrElse("warc-payload-digest", null)
-              )
-              halt = true
-            case Some(n) =>
-              recs += Rec(
-                path, recOff,
-                headers.getOrElse("warc-type", null),
-                headers.getOrElse("warc-record-id", null),
-                headers.getOrElse("warc-target-uri", null),
-                headers.getOrElse("warc-date", null),
-                headers.getOrElse("content-type", null),
-                n, java.util.Arrays.copyOfRange(bytes, p, p + n.toInt), null,
-                headers.getOrElse("warc-refers-to", null),
-                headers.getOrElse("warc-payload-digest", null)
-              )
-              pos = p + n.toInt
-          }
-        }
-      }
-    }
-    recs.toSeq
   }
 }

@@ -12,7 +12,7 @@ import graft.streaming.{AudioIndexStream, DeltaFold}
   * audio twin of the VideoIndexStream contract. The shared crash states
   * are also the audio row of [[DeltaFoldSpec]].
   */
-class AudioIndexStreamSpec extends AnyFunSuite {
+class AudioIndexStreamSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
   import spark.implicits._
@@ -39,7 +39,7 @@ class AudioIndexStreamSpec extends AnyFunSuite {
     val slice1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 110)
     val slice2 = docs.filter(col("doc_id") >= 110)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_audio_idx").toString + "/idx"
+    val dir = scratchDir("audio_idx") + "/idx"
     graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, base), dir)
     assert(spark.read.parquet(DeltaFold.gen(dir)("docs")).count() === base.count(),
       "docs/ holds one fingerprint row per corpus clip")
@@ -102,7 +102,7 @@ class AudioIndexStreamSpec extends AnyFunSuite {
     def fresh(ds: org.apache.spark.sql.DataFrame) =
       clusterSet(Audio.fpClusters(Audio.spectralFp(spark, ds)))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_audio_spec_idx").toString + "/idx"
+    val dir = scratchDir("audio_spec_idx") + "/idx"
     graft.operators.Indexes.copyDir(Audio.ensureAudioSpectralIndex(sf, base), dir)
     AudioIndexStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 0.0,
       fp = Audio.spectralFp)
@@ -120,8 +120,8 @@ class AudioIndexStreamSpec extends AnyFunSuite {
       .filter(col("doc_id") < 40)
     val base = docs.filter(col("doc_id") < 30)
     val growth = docs.filter(col("doc_id") >= 30)
-    val dir = java.nio.file.Files.createTempDirectory("graft_audio_crash").toString + "/idx"
-    val saved = java.nio.file.Files.createTempDirectory("graft_audio_saved").toString
+    val dir = scratchDir("audio_crash") + "/idx"
+    val saved = scratchDir("audio_saved")
     graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, base), dir)
     AudioIndexStream.upsertBatch(growth, dir, batchId = 0L, compactAt = 0.0)
 
@@ -149,7 +149,7 @@ class AudioIndexStreamSpec extends AnyFunSuite {
       .filter(col("doc_id") < 40)
     val base = docs.filter(col("doc_id") < 30)
     val growth = docs.filter(col("doc_id") >= 30)
-    val dir = java.nio.file.Files.createTempDirectory("graft_audio_orphan").toString + "/idx"
+    val dir = scratchDir("audio_orphan") + "/idx"
     graft.operators.Indexes.copyDir(Audio.ensureAudioFpIndex(sf, base), dir)
     // plant the generation dirs of a fictitious crashed compaction
     val stale = "999-deadbeef"

@@ -30,7 +30,7 @@ class CurationFoldSpec extends AnyFunSuite with ScratchAssets {
       .sorted
 
   private def scratch(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cfold_$tag").toString + "/asset"
+    scratchDir(s"cfold_$tag") + "/asset"
 
   test("fold == wholesale rebuild, bit for bit; replays are exactly-once") {
     val full = corpus(30)

@@ -12,7 +12,7 @@ import graft.operators.Curation
   * operators really are shuffle-free, and the two-level perplexity
   * rank equals the single-window formulation.
   */
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with ScratchAssets {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -320,7 +320,7 @@ class CurationSpec extends AnyFunSuite {
       1L -> "aa bb cc dd",
       2L -> "xx" // single token: one whole-list shingle, never vanishes
     )
-    val tmp = java.nio.file.Files.createTempDirectory("graft_toxgate").toString
+    val tmp = scratchDir("toxgate")
     val got = graft.operators.TrainedClf
       .toxicityScores(tmp, d)
       .collect()

@@ -12,7 +12,7 @@ import graft.operators.Indexes
   * an asset), while staleness safety is unchanged — any data edit or
   * derivation change re-keys and falls back to the content scan.
   */
-class FingerprintCatalogSpec extends AnyFunSuite {
+class FingerprintCatalogSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -35,7 +35,7 @@ class FingerprintCatalogSpec extends AnyFunSuite {
   /** [[Indexes.ensureUnder]] a scratch root with a build body that only
     * counts: the asset call's location and publication, without a layout.
     */
-  private val root = java.nio.file.Files.createTempDirectory("fpcat_assets").toString
+  private val root = scratchDir("fpcat_assets")
   private val builds = new java.util.concurrent.atomic.AtomicInteger
   private def locate(sfDir: String, df: org.apache.spark.sql.DataFrame, params: String = ""): String =
     Indexes.ensureUnder(root, "fpcat-test", sfDir, df, "doc_id", "text", params) { _ =>
@@ -56,7 +56,7 @@ class FingerprintCatalogSpec extends AnyFunSuite {
   }
 
   test("data edit re-keys: same path, new bytes -> new fingerprint dir") {
-    val tmp = java.nio.file.Files.createTempDirectory("fpcat_edit").toString
+    val tmp = scratchDir("fpcat_edit")
     import spark.implicits._
     Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/t")

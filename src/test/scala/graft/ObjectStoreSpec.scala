@@ -14,12 +14,12 @@ import graft.streaming.DeltaFold
   *   - the streaming walk round-trips the same bytes it wrote;
   *   - CDX point reads stay RANGED — k members cost k opens and
   *     ~sum(member_len) bytes, never a shard scan;
-  *   - all of it through per-partition REBUILT Configurations, proving
-  *     the session's fs overlay reaches executor tasks
-  *     ([[graft.util.HadoopConfs]] — with a bare `new Configuration()`
-  *     in the task these tests die with "No FileSystem for scheme").
+  *   - all of it through the session conf shipped to tasks
+  *     (`org.apache.spark.util.SerializableConfiguration` — with a bare
+  *     `new Configuration()` in the task these tests die with "No
+  *     FileSystem for scheme").
   */
-class ObjectStoreSpec extends AnyFunSuite {
+class ObjectStoreSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = {
     val s = TestSpark.spark
     // register the shim the way an object store is configured: on the
@@ -30,7 +30,7 @@ class ObjectStoreSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def slowDir(tag: String): String =
-    "slowfs:" + java.nio.file.Files.createTempDirectory(s"graft_slowfs_$tag").toString + "/warc"
+    "slowfs:" + scratchDir(s"slowfs_$tag") + "/warc"
 
   private def fixtureRecords() = {
     val recs = (1L to 24L).flatMap { id =>
@@ -52,7 +52,8 @@ class ObjectStoreSpec extends AnyFunSuite {
       .sortWithinPartitions("g", "ord", "sub")
   }
 
-  test("HadoopConfs: full capture replays the exact session view, removals stay removed") {
+  test("SerializableConfiguration: the task conf replays the exact session view, removals stay removed") {
+    import scala.jdk.CollectionConverters._
     val hc = spark.sparkContext.hadoopConfiguration
     // a default key the session deliberately REMOVES must not resurrect
     val removedKey = {
@@ -65,34 +66,41 @@ class ObjectStoreSpec extends AnyFunSuite {
       }
       k
     }
+    def entries(c: org.apache.hadoop.conf.Configuration) =
+      c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
     try {
       hc.set("fs.graft.test.endpoint", "https://store.invalid:9000")
       hc.set("fs.graft.test.secret", "k3y")
       if (removedKey != null) hc.unset(removedKey)
-      val overlay = graft.util.HadoopConfs.capture(spark)
-      val m = overlay.toMap
-      assert(m.get("fs.graft.test.endpoint").contains("https://store.invalid:9000"))
-      assert(m.get("fs.graft.test.secret").contains("k3y"))
-      // full capture, not a driver-default diff (that semantics depended
-      // on homogeneous executor classpaths) — but still closure-sized: a
-      // Hadoop conf is a few hundred entries, not data-sized
-      assert(overlay.length > 200, s"expected the full conf, got ${overlay.length} entries")
-      assert(overlay.length < 5000, s"overlay must stay closure-sized, got ${overlay.length}")
-      // rebuild carries the injected keys a bare Configuration would drop
-      val rebuilt = graft.util.HadoopConfs.build(overlay)
-      assert(rebuilt.get("fs.graft.test.endpoint") === "https://store.invalid:9000")
+      // what a task receives: the session conf, wrapped as the WARC paths
+      // wrap it, through a Java-serialization round trip
+      val session = graft.operators.Indexes.sessionHadoopConf
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(new org.apache.spark.util.SerializableConfiguration(session))
+      out.close()
+      val task = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject()
+        .asInstanceOf[org.apache.spark.util.SerializableConfiguration]
+        .value
+      // the task conf carries the injected keys a bare Configuration drops
+      assert(task.get("fs.graft.test.endpoint") === "https://store.invalid:9000")
+      assert(task.get("fs.graft.test.secret") === "k3y")
       assert(new org.apache.hadoop.conf.Configuration().get("fs.graft.test.endpoint") === null)
-      // a removed key was never captured, so a defaults-free rebuild
+      // a removed key was never shipped, and the defaults-free task conf
       // cannot resurrect it — even where executor classpath defaults
       // would have carried it
       if (removedKey != null)
-        assert(rebuilt.getRaw(removedKey) === null, s"$removedKey must stay unset")
-      // the rebuilt view is EXACTLY the session view: same key set, same
-      // values — nothing dropped, nothing leaked in from defaults
-      import scala.jdk.CollectionConverters._
-      val rebuiltMap = rebuilt.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-      val sessMap = hc.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-      assert(rebuiltMap === sessMap)
+        assert(task.getRaw(removedKey) === null, s"$removedKey must stay unset")
+      // the task view is EXACTLY the driver's session view: same key set,
+      // same values — nothing dropped, nothing leaked in from defaults
+      val sessMap = entries(session)
+      assert(entries(task) === sessMap)
+      // the full conf, not a diff — but still closure-sized: a Hadoop conf
+      // is a few hundred entries, not data-sized
+      assert(sessMap.size > 200, s"expected the full conf, got ${sessMap.size} entries")
+      assert(sessMap.size < 5000, s"the conf must stay closure-sized, got ${sessMap.size} entries")
+      assert(bytes.size() < (1 << 20), s"the shipped conf must stay closure-sized, got ${bytes.size()} bytes")
     } finally {
       // the session is shared across suites — leave no fake keys behind
       hc.unset("fs.graft.test.endpoint")
@@ -104,8 +112,7 @@ class ObjectStoreSpec extends AnyFunSuite {
 
   test("asset publication on the remote scheme: marker-commit build + pointer-committed compaction") {
     import graft.operators.Indexes
-    val root = "slowfs:" +
-      java.nio.file.Files.createTempDirectory("graft_slowfs_asset").toString + "/target"
+    val root = "slowfs:" + scratchDir("slowfs_asset") + "/target"
     val corpus = (1 to 10).map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text")
     var builds = 0
     def ensure(body: String => Unit): String =
@@ -177,13 +184,12 @@ class ObjectStoreSpec extends AnyFunSuite {
   test("delta fold on the remote scheme: batches stay visible and compaction commits") {
     import graft.streaming.CdxStream
     // local WARC shards; the fold asset itself lives on the remote scheme
-    val warcDir = java.nio.file.Files.createTempDirectory("graft_slowfs_foldwarc").toString
+    val warcDir = scratchDir("slowfs_foldwarc")
     Warc.write(fixtureRecords().select(col("record_bytes")), warcDir)
     val shards = new java.io.File(warcDir).listFiles().map(_.getName)
       .filter(_.endsWith(".warc.gz")).sorted
     assert(shards.length >= 2, shards.mkString(", "))
-    val dir = "slowfs:" +
-      java.nio.file.Files.createTempDirectory("graft_slowfs_fold").toString + "/cdx"
+    val dir = "slowfs:" + scratchDir("slowfs_fold") + "/cdx"
     Warc.memberIndex(spark, warcDir, shards(0))
       .withColumn("surt", graft.operators.Urls.surt(col("target_uri")))
       .write.parquet(s"$dir/idx")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * at 100 TB (scan-level pushdown, broadcast of small dims, partial
   * aggregation) must be visible in the plan, not assumed.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -122,7 +122,7 @@ class PlanSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      val out = java.nio.file.Files.createTempDirectory("graft_sink_plan").toString + "/res"
+      val out = scratchDir("sink_plan") + "/res"
       graft.operators.Anagrams.writeSingleText(
         graft.operators.Anagrams.pipeline(Tables.documents(spark, sf)),
         out
@@ -342,7 +342,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
     val dir =
-      java.nio.file.Files.createTempDirectory("graft_dpp").toString + "/orders_part"
+      scratchDir("dpp") + "/orders_part"
     Tables
       .table(spark, sf, "orders")
       .write
@@ -354,7 +354,7 @@ class PlanSpec extends AnyFunSuite {
     // constant-folded away (ConvertToLocalRelation), and DPP only fires on
     // a surviving selective predicate
     val dimDir =
-      java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString + "/dim"
+      scratchDir("dpp_dim") + "/dim"
     Seq(("O", 1L), ("F", 2L), ("P", 3L))
       .toDF("st", "flag")
       .write

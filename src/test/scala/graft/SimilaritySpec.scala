@@ -106,7 +106,7 @@ class SimilaritySpec extends AnyFunSuite with ScratchAssets {
     // cells, which would make the prune trivially ineffective to observe).
     val emb = Tables.embeddings(spark, sf)
     val out =
-      java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/corpus"
+      scratchDir("ivf") + "/corpus"
     emb
       .withColumnRenamed("label", "cell")
       .write
@@ -127,7 +127,7 @@ class SimilaritySpec extends AnyFunSuite with ScratchAssets {
 
   test("persisted IVF index: search prunes to probed cells and matches in-memory IVF") {
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
+    val dir = scratchDir("ivf_idx")
     // label stands in for the cell id (same rationale as the scale-path
     // test: trained cells on isotropic vectors collapse, making the prune
     // unobservable); the build/search mechanics are cell-column-agnostic.
@@ -159,7 +159,7 @@ class SimilaritySpec extends AnyFunSuite with ScratchAssets {
 
   test("filtered search: predicate reaches the scan as PushedFilters beside the cell prune") {
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_filt").toString
+    val dir = scratchDir("ivf_filt")
     // label-as-cell rationale as above; store a second metadata column
     // (vec_id parity) to filter on, so the filter column differs from the
     // cell column and the pushdown is observable independently.
@@ -334,7 +334,7 @@ class SimilaritySpec extends AnyFunSuite with ScratchAssets {
   test("IVF-PQ: search prunes the code read to probed cells and matches exact IVF") {
     import graft.operators.{IvfPq, Similarity}
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString + "/idx"
+    val dir = scratchDir("ivfpq_idx") + "/idx"
     // label stands in for the cell id so the prune is observable (trained
     // cells on isotropic vectors collapse — same rationale as the IVF
     // tests); build/search mechanics are cell-column-agnostic.
@@ -411,7 +411,7 @@ class SimilaritySpec extends AnyFunSuite with ScratchAssets {
   test("IVF-PQ filtered: predicate reaches the codes scan as PushedFilters beside the cell prune") {
     import graft.operators.IvfPq
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_filt").toString + "/idx"
+    val dir = scratchDir("ivfpq_filt") + "/idx"
     // label-as-cell + an independent metadata column (vec_id parity) so
     // the pushdown is observable beside the partition prune — the same
     // construction as the IvfIndex filtered test, now on the CODE table.

@@ -13,10 +13,11 @@ import org.apache.hadoop.fs.{FSDataInputStream, Path, PositionedReadable, RawLoc
   * read" that secretly scans the whole shard is detectable).
   *
   * Registered only via `fs.slowfs.impl` on the session Hadoop conf — so
-  * any spec that reaches it through a per-partition rebuilt Configuration
-  * also proves the session overlay actually flows to tasks
-  * ([[graft.util.HadoopConfs]]); a task that fell back to classpath
-  * defaults would fail with "No FileSystem for scheme: slowfs".
+  * any spec that reaches it through a task-side Configuration also proves
+  * the session conf actually flows to tasks
+  * (`org.apache.spark.util.SerializableConfiguration`); a task that fell
+  * back to classpath defaults would fail with "No FileSystem for scheme:
+  * slowfs".
   */
 class SlowFs extends RawLocalFileSystem {
   override def getScheme: String = "slowfs"

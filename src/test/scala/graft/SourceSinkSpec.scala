@@ -8,14 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * schema + values, and bucketed tables join without an exchange — the
   * co-location technique that removes the big-side shuffle at 100 TB.
   */
-class SourceSinkSpec extends AnyFunSuite {
+class SourceSinkSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$name").toString + "/t"
+    scratchDir(name) + "/t"
 
   test("parquet round-trip preserves schema and values") {
     val src = Tables.orders(spark, sf)

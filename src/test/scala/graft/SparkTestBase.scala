@@ -6,9 +6,11 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = {
     // Spark reads `spark.*` system properties into the session conf; the
-    // temp warehouse keeps saveAsTable output out of the checkout.
-    sys.props("spark.sql.warehouse.dir") =
-      java.nio.file.Files.createTempDirectory("graft_wh").toString
+    // temp warehouse keeps saveAsTable output out of the checkout and is
+    // removed when the test JVM exits.
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh")
+    sys.addShutdownHook(graft.operators.Indexes.deleteRecursively(wh))
+    sys.props("spark.sql.warehouse.dir") = wh.toString
     val s = Session(4)
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.{UserEvent, UserStats}
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
 
   test("hourlyStats under streaming equals the same transform under batch") {
@@ -187,7 +187,7 @@ class StreamingSpec extends AnyFunSuite {
     // terminates (Trigger.AvailableNow). Re-processing old files — the
     // failure dedup downstream would have to absorb — must not happen.
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_avnow")
+    val root = java.nio.file.Paths.get(scratchDir("avnow"))
     val in = root.toString + "/in"
     val out = root.toString + "/out"
     val ckpt = root.toString + "/ckpt"

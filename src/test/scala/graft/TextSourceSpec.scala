@@ -10,7 +10,7 @@ import graft.sources.TextSource
   * and the single-file text sink round-trip — the full input/output contract
   * of the reference (`/root/reference/src/index.js:141-146,375-377`).
   */
-class TextSourceSpec extends AnyFunSuite {
+class TextSourceSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -53,7 +53,7 @@ class TextSourceSpec extends AnyFunSuite {
     val groups = Anagrams.groups(
       docs.select(explode(Text.tokens(col("text"), sw)).as("word"))
     )
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/res"
+    val out = scratchDir("sink") + "/res"
     Anagrams.writeSingleText(groups, out)
     val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
     assert(parts.length === 1, "the sink must produce a single text file")

@@ -10,12 +10,12 @@ import graft.sources.Versioned
   * semantics, schema evolution across commits, and manifest atomicity
   * (no torn manifests on disk).
   */
-class VersionedSpec extends AnyFunSuite {
+class VersionedSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_versioned").toString
+    scratchDir("versioned")
 
   test("append and overwrite commits: each version is its exact row set, forever") {
     val dir = freshDir()

@@ -11,7 +11,7 @@ import graft.streaming.{DeltaFold, VideoIndexStream}
   * pointer commit, replay exactly-once, and the no-corpus-rescan plan
   * pin — the video twin of the AudioIndexStream contract.
   */
-class VideoIndexStreamSpec extends AnyFunSuite {
+class VideoIndexStreamSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
   import spark.implicits._
@@ -29,7 +29,7 @@ class VideoIndexStreamSpec extends AnyFunSuite {
     val slice1 = docs.filter(col("doc_id") >= 80 && col("doc_id") < 88)
     val slice2 = docs.filter(col("doc_id") >= 88)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_video_idx").toString + "/idx"
+    val dir = scratchDir("video_idx") + "/idx"
     graft.operators.Indexes.copyDir(Video.ensureSceneIndex(sf, base), dir)
     val baseSig = sigSet(spark.read.parquet(DeltaFold.gen(dir)("sig")))
     assert(baseSig === sigSet(freshSig(base)), "sig/ holds the distinct corpus signatures")
@@ -117,7 +117,7 @@ class VideoIndexStreamSpec extends AnyFunSuite {
     val grow = docs.filter(col("doc_id") % 7 === 3 && col("doc_id") < 50)
     val delta = docs.filter(col("doc_id") % 7 === 3 && col("doc_id") >= 50)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_video_grow").toString + "/idx"
+    val dir = scratchDir("video_grow") + "/idx"
     graft.operators.Indexes.copyDir(Video.ensureSceneIndex(sf, corpus0), dir)
     // fold the growth batch in (compactAt tiny -> immediate fold)
     VideoIndexStream.upsertBatch(grow, dir, batchId = 0L, compactAt = 1e-9)

@@ -4,7 +4,9 @@ import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPOutputStream
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Indexes
@@ -20,8 +22,7 @@ class WarcSpec extends AnyFunSuite with ScratchAssets {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_warc_$tag").toString
+  private def tmpDir(tag: String): String = scratchDir(s"warc_$tag")
 
   private def gzBytes(recs: Array[Byte]*): Array[Byte] = {
     val out = new ByteArrayOutputStream()
@@ -366,6 +367,136 @@ class WarcSpec extends AnyFunSuite with ScratchAssets {
     assert(idx(1).getAs[Long]("member_offset") > 0L, "sentinel sits at the halt offset")
   }
 
+  // ------------------------------------------------ the one record framer
+
+  private val headerValue: Gen[String] =
+    Gen.choose(1, 24).flatMap(Gen.listOfN(_, Gen.alphaNumChar)).map(_.mkString)
+
+  /** Blocks that make framing by content rather than by length go wrong:
+    * CRLF runs, bare CR/LF, an embedded record head, arbitrary bytes.
+    */
+  private val block: Gen[Array[Byte]] =
+    Gen.choose(0, 40).flatMap { n =>
+      Gen.listOfN(
+        n,
+        Gen.frequency(
+          5 -> headerValue,
+          4 -> Gen.oneOf("\r\n", "\r\n\r\n", "\r\n\r\n\r\n", "\r", "\n", "\n\n"),
+          1 -> Gen.const("WARC/1.0\r\nContent-Length: 3\r\n\r\n"),
+          2 -> Gen.listOfN(6, Gen.choose(0, 255)).map(_.map(_.toChar).mkString)
+        )
+      )
+    }.map(_.mkString.getBytes("ISO-8859-1"))
+
+  /** One rendered record, numbered `i` (its record id). */
+  private val record: Gen[Int => Array[Byte]] =
+    for {
+      wType <- Gen.oneOf("response", "request", "metadata", "revisit", "conversion", "warcinfo")
+      uri <- Gen.option(headerValue.map(v => s"http://g.example.com/$v"))
+      date <- Gen.oneOf(Warc.FixtureDate, Warc.RevisitDate)
+      ctype <- Gen.oneOf("application/http; msgtype=response", "text/plain", "application/json")
+      extra <- Gen.listOf(
+        Gen.zip(Gen.oneOf("WARC-Refers-To", "WARC-Payload-Digest", "WARC-Profile", "X-Note"), headerValue)
+      )
+      blk <- block
+    } yield (i: Int) =>
+      Warc.renderRecord(wType, s"<urn:uuid:gen-$i>", uri, date, ctype, blk, extra.distinctBy(_._1).take(3))
+
+  /** A row's cells with binary as a comparable Seq, `skip` columns left out. */
+  private def cells(r: Row, skip: String*): Seq[Any] =
+    r.schema.fieldNames.toSeq.zip(r.toSeq).collect {
+      case (f, v) if !skip.contains(f) =>
+        v match {
+          case b: Array[Byte] => b.toSeq
+          case x              => x
+        }
+    }
+
+  test("one framer: fetch over memberIndex equals read per member; a cut shard keeps its prefix (forAll)") {
+    val gen = for {
+      n <- Gen.choose(1, 8)
+      recs <- Gen.listOfN(n, record)
+      fracs <- Gen.listOfN(3, Gen.choose(0.0, 1.0))
+      headCut <- Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(1, 12))
+    } yield (recs.zipWithIndex.map { case (r, i) => r(i) }, fracs, headCut)
+    val prop = Prop.forAllNoShrink(gen) { case (recs, fracs, (memberFrac, intoHeader)) =>
+      val dir = tmpDir("prop")
+      // one gzip member per record, as the sink writes them
+      val members = recs.map(r => gzBytes(r))
+      val shard = members.reduce(_ ++ _)
+      val ends = members.scanLeft(0)(_ + _.length).tail
+      Files.write(Paths.get(s"$dir/full.warc.gz"), shard)
+      // cuts at random bytes, plus one a few bytes into a member's header
+      val starts = 0 +: ends.init
+      val cuts = (fracs.map(f => 1 + (f * (shard.length - 1)).toInt) :+
+        math.min(starts((memberFrac * (starts.size - 1)).round.toInt) + intoHeader, shard.length - 1)).distinct
+      cuts.foreach(c => Files.write(Paths.get(f"$dir/cut-$c%07d.warc.gz"), java.util.Arrays.copyOf(shard, c)))
+
+      val byFile = Warc.read(spark, dir).collect().toSeq
+        .groupBy(r => new org.apache.hadoop.fs.Path(r.getAs[String]("path")).getName)
+        .map { case (f, rs) => f -> rs.sortBy(_.getAs[Long]("rec_offset")) }
+      val full = byFile("full.warc.gz")
+      val fullOk = full.size == recs.size && full.forall(_.getAs[String]("malformed") == null)
+
+      // every member's ranged read equals its record in the full scan,
+      // rec_offset aside (member-relative in fetch)
+      val idx = Warc.memberIndex(spark, dir, "full.warc.gz")
+      val fetched = Warc.fetch(spark, idx).collect().toSeq.sortBy(_.getAs[String]("record_id"))
+      val fetchBad =
+        if (fetched.map(cells(_, "rec_offset")) != full.sortBy(_.getAs[String]("record_id")).map(cells(_, "rec_offset")))
+          Seq(s"fetch differs from read: ${fetched.map(cells(_, "block"))} vs ${full.map(cells(_, "block"))}")
+        else if (!fetched.forall(_.getAs[Long]("rec_offset") == 0L)) Seq("fetch rec_offset not member-relative")
+        else Nil
+
+      // a cut keeps every record before it, then one malformed row — none
+      // when the cut falls on a member boundary (a shorter valid shard)
+      val cutBad = cuts.flatMap { c =>
+        val got = byFile.getOrElse(f"cut-$c%07d.warc.gz", Seq.empty)
+        val whole = ends.count(_ <= c)
+        val prefixOk = (n: Int) => got.take(n).map(cells(_, "path")) == full.take(n).map(cells(_, "path"))
+        val ok =
+          if (ends.contains(c)) got.size == whole && prefixOk(whole)
+          else
+            got.size >= whole + 1 && prefixOk(got.size - 1) &&
+            got.last.getAs[String]("malformed") != null
+        if (ok) None
+        else Some(s"cut at $c of ${shard.length} (member ends $ends): ${got.map(cells(_, "path", "block"))}")
+      }
+      val bad = (if (fullOk) Nil else Seq(s"full read: ${full.map(cells(_, "block"))}")) ++ fetchBad ++ cutBad
+      Prop(bad.isEmpty) :| bad.take(3).mkString("\n")
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(25).withWorkers(1).withInitialSeed(20261019L),
+      prop
+    )
+    assert(res.passed, res.status match {
+      case Test.Failed(_, labels) => labels.mkString("\n")
+      case other                  => other.toString
+    })
+  }
+
+  test("fetch: a member whose deflate bytes are corrupt comes back malformed, not as a task failure") {
+    val dir = tmpDir("corrupt")
+    val path = Paths.get(s"$dir/s.warc.gz")
+    val raw = gzBytes(reqA, respA)
+    Files.write(path, raw)
+    val idx = Warc.memberIndex(spark, dir).orderBy("member_offset").collect()
+    assert(idx.length === 2 && idx.forall(_.getAs[String]("malformed") == null))
+    // the second member's deflate stream opens with a block of the
+    // reserved type 3 right after its 10-byte header
+    val second = idx(1).getAs[Long]("member_offset").toInt
+    java.util.Arrays.fill(raw, second + 10, second + 14, 0xff.toByte)
+    Files.write(path, raw)
+    val fetched = Warc.fetch(spark, spark.createDataFrame(java.util.Arrays.asList(idx: _*), idx.head.schema)).collect()
+      .sortBy(_.getAs[String]("record_id") == null)
+    assert(fetched.length === 2)
+    assert(fetched(0).getAs[String]("record_id") === "<urn:uuid:req-1>" && fetched(0).getAs[String]("malformed") == null)
+    assert(fetched(1).getAs[String]("malformed") === "truncated")
+    // the whole-shard walk reports the broken member instead of ending quietly
+    val read = Warc.read(spark, dir).orderBy("rec_offset").collect()
+    assert(read.map(_.getAs[String]("malformed")).toSeq === Seq(null, "truncated"))
+  }
+
   test("httpSlice: per-encoding decode — gzip, deflate, chunked+gzip, header latin-1, meta latin-1") {
     val dir = tmpDir("httpmix")
     val pages = (0 to 5).map { m =>
@@ -484,7 +615,7 @@ class WarcSpec extends AnyFunSuite with ScratchAssets {
     assert(txt.contains("WARC-Refers-To: <urn:uuid:orig-1>\r\n"))
     assert(txt.contains("WARC-Payload-Digest: md5:0123456789abcdef0123456789abcdef\r\n"))
     assert(txt.contains("Content-Length: 0\r\n"))
-    val parsed = Warc.parseShard("p", rec)
+    val parsed = new Warc.RecordStream("p", new java.io.ByteArrayInputStream(rec)).toSeq
     assert(parsed.size === 1)
     val w = parsed.head
     assert(w.warcType === "revisit" && w.malformed == null)
@@ -537,7 +668,7 @@ class WarcSpec extends AnyFunSuite with ScratchAssets {
     assert(txt.contains(s"WARC-Profile: ${Warc.NotModifiedProfile}\r\n"))
     assert(txt.contains("WARC-Refers-To-Target-URI: http://a.com/x\r\n"))
     assert(txt.contains("WARC-Refers-To-Date: 2026-01-01T00:00:00Z\r\n"))
-    val parsed = Warc.parseShard("p", rec)
+    val parsed = new Warc.RecordStream("p", new java.io.ByteArrayInputStream(rec)).toSeq
     assert(parsed.size === 1 && parsed.head.warcType === "revisit")
     assert(new String(parsed.head.block, "UTF-8") === "HTTP/1.1 304 Not Modified\r\n\r\n")
 
