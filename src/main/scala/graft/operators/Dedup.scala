@@ -5,6 +5,7 @@ import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Cols._
+import graft.util.Iterate
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, blocked n-gram Jaccard.
@@ -324,26 +325,22 @@ object Dedup {
     // so an unbroken lineage doubles per iteration — by round 4 the driver
     // is canonicalizing a 16×-duplicated tree per action, and analysis +
     // cache lookup (both O(plan size)) dwarf the actual 510-row compute.
-    // localCheckpoint truncates the plan to the materialized partitions
-    // each round — the same reason GraphX/MLlib checkpoint their iterative
-    // lineages. (On a cluster, executor loss then costs a re-run from the
-    // checkpoint; a reliable checkpoint dir is the production variant.)
-    // The cache() underneath lets a rerun in the same session skip the
-    // upstream pair computation before the checkpoint re-materializes.
-    val e = edges.cache().localCheckpoint()
+    // Iterate cuts the edges, the undirected edge set every round reads
+    // and each round's labels with a reliable checkpoint — the same reason
+    // GraphX/MLlib checkpoint their iterative lineages — so executor loss
+    // costs a re-read of checkpoint files, not the job.
+    val e = Iterate.cut(edges)
     val und = e
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(e.select(col("b_id").as("src"), col("a_id").as("dst")))
       .distinct()
-      .localCheckpoint()
-    var labels = und
+      .transform(Iterate.cut)
+    val labels0 = und
       .select(col("src").as("id"))
       .distinct()
       .withColumn("comp", col("id"))
-      .localCheckpoint()
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
+      .transform(Iterate.cut)
+    def round(labels: DataFrame): DataFrame = {
       val prop = und
         .join(labels, col("src") === col("id"))
         .groupBy(col("dst"))
@@ -361,25 +358,24 @@ object Dedup {
       // O(log diameter) — the difference between a 4-round and a
       // 10^6-round job on a pathological long-chain dup graph.
       val parent = stepped.select(col("id").as("p_id"), col("comp").as("p_comp"))
-      val next = stepped
+      stepped
         .join(parent, col("comp") === col("p_id"), "left")
         .select(
           col("id"),
           coalesce(col("p_comp"), col("comp")).as("comp"),
           (col("moved") || col("p_comp") < col("comp")).as("moved")
         )
-        .localCheckpoint()
-      changed = next.filter(col("moved")).count()
-      labels = next.select("id", "comp")
-      it += 1
     }
+    val run = Iterate(labels0, maxIters, done = (_, next) => next.filter(col("moved")).count() == 0)(
+      labels => Some(round(labels))
+    )
     require(
-      changed == 0,
+      run.stopped,
       s"connectedComponents did not converge within $maxIters rounds " +
         "(pointer-jumped min propagation needs ~log2(diameter) rounds; " +
         "raise maxIters for adversarially deep graphs)"
     )
-    labels
+    run.last.select("id", "comp")
   }
 
   /** Near-dup clusters: MinHash-LSH pairs → connected components → per-doc

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Iterate
 
 /** Host-level link-graph analytics: damped PageRank over a (src, dst)
   * edge list in EXACT integer fixed-point — the ranking Common Crawl
@@ -33,9 +34,8 @@ import org.apache.spark.sql.functions._
   * a mega-hub's in-mass sum is bounded by total mass N·RankScale ≈
   * 10^17 < Long.MaxValue at RankScale=10^9, and past ~10^9 hosts the
   * sum lane lifts to DECIMAL(38,0) the way BM25's scores did
-  * ([[TextIndex]]). For many rounds on a real cluster, checkpoint the
-  * rank table every few rounds to cut lineage — at the fixture's 3
-  * rounds the unrolled plan is the faster form.
+  * ([[TextIndex]]). Rounds run through [[graft.util.Iterate]], which cuts
+  * each round's lineage with a reliable checkpoint.
   */
 object LinkGraph {
 
@@ -65,126 +65,84 @@ object LinkGraph {
     * rounds.
     */
   def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
-    // Materialize the edge list ONCE: it feeds outdegrees, the node set,
-    // and every round's contribution join — left lazy, each of those
-    // references re-runs the whole upstream derivation (scan + normalize
-    // + explode + joins), turning 3 rounds into ~16 corpus passes.
-    // localCheckpoint also truncates lineage so round t's plan doesn't
-    // nest round t-1's; at production scale swap for a reliable
-    // checkpoint dir (same call shape, fault-tolerant storage).
-    val e = edges
-      .select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = e
-      .select(col("src").as("h"))
-      .union(e.select(col("dst").as("h")))
-      .distinct()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    var r = nodes.withColumn("rank", lit(RankScale))
-    for (it <- 1 to iters) {
-      val contrib = e
-        .join(deg, "src")
-        .join(r.withColumnRenamed("h", "src"), "src")
-        .select(col("dst"), expr("rank DIV outdeg").as("c"))
-      val inMass = contrib.groupBy(col("dst")).agg(sum(col("c")).as("m"))
-      r = nodes
-        .join(inMass.withColumnRenamed("dst", "h"), Seq("h"), "left")
-        .select(
-          col("h"),
-          (lit((DampDen - DampNum) * RankScale / DampDen) +
-            expr(s"($DampNum * coalesce(m, CAST(0 AS BIGINT))) DIV $DampDen")).as("rank")
-        )
-      // truncate lineage between rounds; the LAST round stays lazy so the
-      // caller composes (and plan-audits) a real join+agg plan, not an
-      // opaque materialized-RDD scan
-      if (it < iters) r = r.localCheckpoint()
-    }
-    r
+    val e = simpleEdges(edges)
+    val nodes = nodesOf(e)
+    val r0 = nodes.withColumn("rank", lit(RankScale))
+    // every round but the LAST is cut; the last stays lazy so the caller
+    // composes (and plan-audits) a real join+agg plan, not an opaque
+    // materialized-RDD scan
+    if (iters < 1) r0 else round(e, nodes)(Iterate.rounds(r0, iters - 1)(round(e, nodes)))
   }
 
-  /** [[pageRank]] with an EPSILON STOP and optional dangling-mass
-    * redistribution — the published formulation's two knobs the
-    * fixed-round form leaves out.
-    *
-    *   - Convergence: after each round the max absolute rank movement
-    *     (integer [[RankScale]] units) is checked on the driver; the
-    *     walk stops at the first round where it drops below
-    *     `epsilonUnits`, else at `maxIters`. Integer arithmetic makes
-    *     the round count itself bit-deterministic — the same corpus
-    *     always converges at the same round on any cluster, so the
-    *     oracle can replay the unrolled recurrence and re-derive BOTH
-    *     the ranks and the stopping round.
-    *   - Dangling mass: hosts without outlinks forward nothing; by
-    *     default their mass leaks (the [[pageRank]] contract). With
-    *     `redistributeDangling` each node instead receives
-    *     `danglingMass DIV n` extra in-mass per round (the uniform
-    *     redistribution of the published formulation; the sub-`n`
-    *     remainder still leaks — exact-integer price, documented).
-    *     Redistribution CHANGES the ranking on leaky graphs, pinned in
-    *     UrlSpec.
+  /** [[pageRank]] with an EPSILON STOP — the published formulation's
+    * convergence rule the fixed-round form leaves out. After each round
+    * the max absolute rank movement (integer [[RankScale]] units) is
+    * checked on the driver; the walk stops at the first round where it
+    * drops below `epsilonUnits`, else at `maxIters`. Integer arithmetic
+    * makes the round count itself bit-deterministic — the same corpus
+    * always converges at the same round on any cluster, so the oracle can
+    * replay the unrolled recurrence and re-derive BOTH the ranks and the
+    * stopping round. Dangling mass leaks, as in [[pageRank]].
     *
     * Returns (`h`, `rank`, `rounds`) with `rounds` the executed count.
     * Per-round cost adds one tiny driver action (the max-delta check —
-    * |hosts|-row aggregate) and, when redistributing, one anti-join sum
-    * over the rank table; everything stays keyed shuffles, no all-pairs.
+    * |hosts|-row aggregate); everything stays keyed shuffles, no
+    * all-pairs.
     */
   def pageRankConverged(
       edges: DataFrame,
       maxIters: Int = 6,
-      epsilonUnits: Long = RankScale / 10,
-      redistributeDangling: Boolean = false
+      epsilonUnits: Long = RankScale / 10
   ): DataFrame = {
-    val e = edges
+    val e = simpleEdges(edges)
+    val nodes = nodesOf(e).transform(Iterate.cut)
+    def maxDelta(r: DataFrame, rNew: DataFrame): Long = rNew
+      .join(r.select(col("h"), col("rank").as("prev")), "h")
+      .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0L)))
+      .head()
+      .getLong(0)
+    val run = Iterate(
+      nodes.withColumn("rank", lit(RankScale)).transform(Iterate.cut),
+      maxIters,
+      done = (r, rNew) => maxDelta(r, rNew) < epsilonUnits
+    )(r => Some(round(e, nodes)(r)))
+    run.last.withColumn("rounds", lit(run.rounds.toLong))
+  }
+
+  /** The simple digraph of `edges` (self-loops and duplicate edges
+    * dropped), cut ONCE: it feeds outdegrees, the node set and every
+    * round's contribution join — left lazy, each of those references
+    * re-runs the whole upstream derivation (scan + normalize + explode +
+    * joins), turning 3 rounds into ~16 corpus passes.
+    */
+  private def simpleEdges(edges: DataFrame): DataFrame =
+    edges
       .select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint()
-    val nodes = e
-      .select(col("src").as("h"))
-      .union(e.select(col("dst").as("h")))
-      .distinct()
-      .localCheckpoint()
+      .transform(Iterate.cut)
+
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("h")).union(e.select(col("dst").as("h"))).distinct()
+
+  /** One damped round over (`h`, `rank`): contributions fan out along
+    * edges, sum per destination, and every node takes teleport plus its
+    * damped in-mass.
+    */
+  private def round(e: DataFrame, nodes: DataFrame)(r: DataFrame): DataFrame = {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val nNodes = math.max(1L, nodes.count())
-    var r = nodes.withColumn("rank", lit(RankScale)).localCheckpoint()
-    var rounds = 0
-    var converged = false
-    while (rounds < maxIters && !converged) {
-      val dangleShare =
-        if (redistributeDangling) {
-          val dm = r
-            .join(deg.withColumnRenamed("src", "h"), Seq("h"), "left_anti")
-            .agg(coalesce(sum(col("rank")), lit(0L)))
-            .head()
-            .getLong(0)
-          dm / nNodes
-        } else 0L
-      val contrib = e
-        .join(deg, "src")
-        .join(r.withColumnRenamed("h", "src"), "src")
-        .select(col("dst"), expr("rank DIV outdeg").as("c"))
-      val inMass = contrib.groupBy(col("dst")).agg(sum(col("c")).as("m"))
-      val rNew = nodes
-        .join(inMass.withColumnRenamed("dst", "h"), Seq("h"), "left")
-        .select(
-          col("h"),
-          (lit((DampDen - DampNum) * RankScale / DampDen) +
-            expr(s"($DampNum * (coalesce(m, CAST(0 AS BIGINT)) + ${dangleShare}L)) DIV $DampDen"))
-            .as("rank")
-        )
-        .localCheckpoint()
-      val delta = rNew
-        .join(r.select(col("h"), col("rank").as("prev")), "h")
-        .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0L)))
-        .head()
-        .getLong(0)
-      r = rNew
-      rounds += 1
-      converged = delta < epsilonUnits
-    }
-    r.withColumn("rounds", lit(rounds.toLong))
+    val contrib = e
+      .join(deg, "src")
+      .join(r.withColumnRenamed("h", "src"), "src")
+      .select(col("dst"), expr("rank DIV outdeg").as("c"))
+    val inMass = contrib.groupBy(col("dst")).agg(sum(col("c")).as("m"))
+    nodes
+      .join(inMass.withColumnRenamed("dst", "h"), Seq("h"), "left")
+      .select(
+        col("h"),
+        (lit((DampDen - DampNum) * RankScale / DampDen) +
+          expr(s"($DampNum * coalesce(m, CAST(0 AS BIGINT))) DIV $DampDen")).as("rank")
+      )
   }
 
   /** Crawl-budget apportionment by rank share — largest-remainder

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Iterate
 
 /** Integer-exact PageRank over an undirected pair graph — the second
   * iterative graph operator next to connected components
@@ -20,11 +21,12 @@ import org.apache.spark.sql.functions._
   * bit-for-bit on any partitioning.
   *
   * Scale shape: one edges⋈ranks equi-join plus one partial-aggregable
-  * groupBy per iteration (the standard message-passing round); per-round
-  * `localCheckpoint` keeps lineage flat (plan size would otherwise double
-  * per iteration and driver-side analysis would dominate — the
-  * connected-components lesson). Degrees are computed once. No driver
-  * state beyond the loop counter.
+  * groupBy per iteration (the standard message-passing round), run by
+  * [[graft.util.Iterate]], which cuts each round's lineage with a reliable
+  * checkpoint (plan size would otherwise double per iteration and
+  * driver-side analysis would dominate — the connected-components
+  * lesson). Degrees are computed once. No driver state beyond the loop
+  * counter.
   */
 object PageRank {
 
@@ -39,25 +41,21 @@ object PageRank {
     val edges = pairs
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .localCheckpoint()
+      .transform(Iterate.cut)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = edges.join(deg, Seq("src")).localCheckpoint()
-
-    var ranks = deg.select(col("src").as("id"), lit(Scale).as("r"))
-    var it = 0
-    while (it < iters) {
-      ranks = withDeg
-        .join(ranks, col("src") === col("id"))
-        .select(
-          col("dst"),
-          expr(s"(17L * r) div (20L * deg)").as("contrib")
-        )
-        .groupBy(col("dst"))
-        .agg((lit(Base) + sum(col("contrib"))).as("r"))
-        .select(col("dst").as("id"), col("r"))
-        .localCheckpoint()
-      it += 1
-    }
-    ranks.select(col("id"), col("r").as("pr"))
+    val withDeg = Iterate.cut(edges.join(deg, Seq("src")))
+    Iterate
+      .rounds(deg.select(col("src").as("id"), lit(Scale).as("r")), iters) { ranks =>
+        withDeg
+          .join(ranks, col("src") === col("id"))
+          .select(
+            col("dst"),
+            expr(s"(17L * r) div (20L * deg)").as("contrib")
+          )
+          .groupBy(col("dst"))
+          .agg((lit(Base) + sum(col("contrib"))).as("r"))
+          .select(col("dst").as("id"), col("r"))
+      }
+      .select(col("id"), col("r").as("pr"))
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.util.Cols._
+import graft.util.Iterate
 
 /** Text-analysis operators for LLM training-data pipelines: language ID,
   * quality scoring, token counting, document fingerprinting. All pure
@@ -534,8 +535,9 @@ object TextAnalysis {
     * cross-engine.
     *
     * Returns (step, x, y, merged, support) — the trained merge table,
-    * which IS the tokenizer artifact. `seqs` lineage is truncated per
-    * step (localCheckpoint) so the plan stays flat across iterations.
+    * which IS the tokenizer artifact. Each step's `seqs` is cut by
+    * [[graft.util.Iterate]] (a reliable checkpoint), so the plan stays
+    * flat across iterations.
     */
   def bpeTrain(docs: DataFrame, nMerges: Int): DataFrame =
     bpeTrainFull(docs, nMerges)._1
@@ -581,8 +583,8 @@ object TextAnalysis {
     * production vocabulary scale (BpeSpec's 256-merge run) independent of
     * the fixture corpus's closed vocabulary. Per-step cost is ONE pass
     * over the compact word table (pair-count aggregate + bounded top-1
-    * collect) plus a map-only fold applying the merge; the
-    * localCheckpoint per step keeps the plan CONSTANT-SIZE across steps
+    * collect) plus a map-only fold applying the merge; the per-step cut
+    * ([[graft.util.Iterate]]) keeps the plan CONSTANT-SIZE across steps
     * — without it the lineage (and analysis cost) grows linearly with
     * the step index, which is what kills long trainings.
     */
@@ -651,11 +653,8 @@ object TextAnalysis {
   private def bpeTrainSeqs(seqs0: DataFrame, nMerges: Int): (DataFrame, DataFrame) = {
     val spark = seqs0.sparkSession
     import spark.implicits._
-    var seqs = seqs0.localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
+    val run = Iterate(Iterate.cut(seqs0), nMerges) { seqs =>
       val tk = split(col("seq"), " ")
       val n = size(tk)
       val best = seqs
@@ -674,169 +673,13 @@ object TextAnalysis {
         .orderBy(col("c").desc, col("pair"))
         .limit(1)
         .collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val Array(x, y) = best(0).getString(0).split(" ", 2)
-        val support = best(0).getLong(1)
-        merges += ((step.toLong, x, y, x + y, support))
-        val fold = mergeFold(col("seq"), x, y)
-        seqs = seqs
-          .select(col("word"), col("cnt"), fold.as("seq"))
-          .localCheckpoint()
-        step += 1
+      best.headOption.map { top =>
+        val Array(x, y) = top.getString(0).split(" ", 2)
+        merges += ((merges.length + 1L, x, y, x + y, top.getLong(1)))
+        seqs.select(col("word"), col("cnt"), mergeFold(col("seq"), x, y).as("seq"))
       }
     }
-    (merges.toSeq.toDF("step", "x", "y", "merged", "support"), seqs)
-  }
-
-  /** BATCHED Sennrich BPE training — BIT-EQUAL to [[bpeTrainWords]] but
-    * applying several merges per corpus pass, attacking the driver-
-    * sequential step count (the 32k-merge bottleneck: one cluster round
-    * trip per merge).
-    *
-    * Exactness argument (why the batch replays the sequential trainer's
-    * choices): candidates are the pair counts in sequential order
-    * (count desc, pair asc). The batch is the maximal CONTIGUOUS prefix
-    * whose members are pairwise disjoint on {x, y, x+y} and whose merged
-    * outputs are not already vocabulary symbols. Then
-    *
-    *   1. applying an accepted merge cannot change any other accepted
-    *      candidate's count (no shared symbols; the output is a brand-new
-    *      symbol, so no old pair gains occurrences);
-    *   2. every pair OUTSIDE the prefix has old count <= t (the first
-    *      excluded candidate's count) and can only decrease; pairs
-    *      CREATED by an accepted merge are bounded by their parent pair's
-    *      old count, and the parent shares a symbol with an accepted
-    *      candidate, so it sits outside the prefix: also <= t;
-    *   3. ties: an old outsider tying an accepted candidate at count t
-    *      ranks lexicographically AFTER it (prefix contiguity), so the
-    *      sequential tiebreak still picks the candidate. A CREATED pair
-    *      tying at t has no such lex guarantee, so accepted candidates
-    *      after the first must have count STRICTLY > t (the first
-    *      candidate precedes any created pair and keeps the lex argument).
-    *
-    * If the guards reduce the batch to nothing beyond the argmax, the pass
-    * degrades to exactly one sequential step — correctness never depends
-    * on batch luck. Returns (merge table, trained seqs, passes executed);
-    * the merge table is bit-equal to the sequential trainer's
-    * (BpeSpec-pinned).
-    */
-  def bpeTrainWordsBatched(
-      words: DataFrame,
-      nMerges: Int,
-      maxBatch: Int = 32
-  ): (DataFrame, DataFrame, Long) = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    var seqs = words
-      .select(
-        col("word"),
-        col("cnt"),
-        trim(regexp_replace(col("word"), "(.)", "$1 ")).as("seq")
-      )
-      .localCheckpoint()
-    // driver-side symbol vocabulary: initial characters + merged outputs.
-    // Alphabet-bounded at start, +1 per merge — O(nMerges) driver state.
-    val vocab = scala.collection.mutable.Set.empty[String]
-    vocab ++= seqs
-      .select(explode(split(col("seq"), " ")).as("s"))
-      .distinct()
-      .as[String]
-      .collect()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var rounds = 0L
-    var exhausted = false
-    while (merges.length < nMerges && !exhausted) {
-      val tk = split(col("seq"), " ")
-      val n = size(tk)
-      val top = seqs
-        .select(
-          col("cnt"),
-          explode(
-            zip_with(
-              slice(tk, lit(1), n - 1),
-              slice(tk, lit(2), n - 1),
-              (a, b) => concat(a, lit(" "), b)
-            )
-          ).as("pair")
-        )
-        .groupBy(col("pair"))
-        .agg(lng(sum(col("cnt"))).as("c"))
-        .orderBy(col("c").desc, col("pair"))
-        .limit(maxBatch + 1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val cands = top.take(maxBatch).map { r =>
-          val Array(x, y) = r.getString(0).split(" ", 2)
-          (x, y, r.getLong(1))
-        }
-        // maximal safe contiguous prefix. The FIRST candidate is the global
-        // argmax — a single-merge batch is exactly one sequential step, so
-        // it is always accepted (the sequential trainer merges the argmax
-        // unconditionally, even when x+y collides with an existing vocab
-        // symbol formed from a different decomposition). The vocab guard
-        // applies only to later candidates, where a collision would make
-        // the simultaneous fold diverge from one-at-a-time application.
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var stop = false
-        for (cand @ (x, y, _) <- cands if !stop) {
-          val syms = Set(x, y, x + y)
-          if (syms.forall(s => !used(s)) && (accepted.isEmpty || !vocab(x + y))) {
-            accepted += cand
-            used ++= syms
-            // A COLLIDING first candidate (x+y already a vocab symbol via a
-            // different decomposition) must end the batch at exactly one
-            // merge: its created pairs fold INTO existing pair counts
-            // (new = old + created, old ≤ t, created ≤ c1), which can
-            // exceed a tail candidate's count — the > t tail guard only
-            // bounds created pairs that start from zero. One merge is one
-            // sequential step, so stopping keeps bit-equality
-            if (accepted.length == 1 && vocab(x + y)) stop = true
-          } else stop = true
-        }
-        // t = first excluded candidate's count (conflict, horizon, or none)
-        val t =
-          if (accepted.length < cands.length) cands(accepted.length)._3
-          else if (top.length > maxBatch) top(maxBatch).getLong(1)
-          else -1L
-        // cand_1 is the global argmax: exact even at count == t (it ranks
-        // lex-first among count-t pairs and precedes any created pair);
-        // later candidates need the strict > t guard against created-pair
-        // ties
-        val batch =
-          (accepted.head +: accepted.tail.takeWhile(_._3 > t))
-            .take(nMerges - merges.length)
-        batch.foreach { case (x, y, c) =>
-          merges += ((merges.length + 1L, x, y, x + y, c))
-          vocab += x + y
-        }
-        // one combined greedy fold: the merge rules as a literal map
-        // (x -> y); at most one rule can match a given (last symbol,
-        // token) slot because accepted x's are pairwise distinct — so the
-        // simultaneous fold equals applying the rules one at a time
-        val mm = map(
-          batch.toSeq.flatMap { case (x, y, _) => Seq(lit(x), lit(y)) }: _*
-        )
-        val fold = aggregate(
-          split(col("seq"), " "),
-          lit(""),
-          (acc, tkn) =>
-            when(
-              element_at(mm, substring_index(acc, " ", -1)) === tkn,
-              concat(acc, tkn)
-            ).otherwise(
-              when(acc === lit(""), tkn).otherwise(concat(acc, lit(" "), tkn))
-            )
-        )
-        seqs = seqs
-          .select(col("word"), col("cnt"), fold.as("seq"))
-          .localCheckpoint()
-        rounds += 1
-      }
-    }
-    (merges.toSeq.toDF("step", "x", "y", "merged", "support"), seqs, rounds)
+    (merges.toSeq.toDF("step", "x", "y", "merged", "support"), run.last)
   }
 
   /** DRIVER-LOCAL exact Sennrich BPE training — BIT-EQUAL to
@@ -848,14 +691,12 @@ object TextAnalysis {
     * corpus-sized work in BPE training is the single distributed pass
     * producing the frequency-weighted vocabulary ([[wordCounts]]).
     * Everything after runs on that table, whose size is the DISTINCT-WORD
-    * count — MBs where the corpus is TBs. The cluster trainers
-    * ([[bpeTrainWords]], [[bpeTrainWordsBatched]]) still pay one cluster
-    * round trip over that small table per merge (or per batch) — the
-    * 32k-merge tail BASELINE.md documents (~1.2 h extrapolated even after
-    * exact batching). This trainer collects the table once (`maxWords`
-    * bounds the driver heap; at open-web scale apply the standard
-    * minCount frequency floor to the word table first, or fall back to
-    * [[bpeTrainWordsBatched]]) and then maintains pair statistics
+    * count — MBs where the corpus is TBs. The cluster trainer
+    * ([[bpeTrainWords]]) still pays one cluster round trip over that
+    * small table per merge — the 32k-merge tail BASELINE.md documents.
+    * This trainer collects the table once (`maxWords` bounds the driver
+    * heap; at open-web scale apply the standard minCount frequency floor
+    * to the word table first) and then maintains pair statistics
     * INCREMENTALLY, the architecture of the published single-node
     * trainers (Sennrich et al. 2016 `learn_bpe.py`; HuggingFace
     * tokenizers):
@@ -892,7 +733,7 @@ object TextAnalysis {
     require(
       nWords <= maxWords,
       s"bpeTrainWordsLocal: $nWords distinct words exceed maxWords=$maxWords; " +
-        "apply a minCount floor to the word table or use bpeTrainWordsBatched"
+        "apply a minCount floor to the word table"
     )
     val rows = words.select(col("word"), lng(col("cnt"))).as[(String, Long)].collect()
     // per-word symbol sequences; code-point split = the distributed

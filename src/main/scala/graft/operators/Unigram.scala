@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Iterate
 
 /** Unigram-LM tokenizer training (Kudo 2018, "Subword Regularization" —
   * SentencePiece's default algorithm) beside BPE, INTEGER-EXACT throughout
@@ -150,15 +151,10 @@ object Unigram {
       vocabSize: Int,
       maxPieceLen: Int,
       rounds: Int
-  ): DataFrame = {
-    var pieces = seedVocab(words, vocabSize, maxPieceLen).localCheckpoint()
-    var r = 0
-    while (r < rounds) {
-      pieces = trainRound(words, pieces, vocabSize, maxPieceLen).localCheckpoint()
-      r += 1
+  ): DataFrame =
+    Iterate.rounds(Iterate.cut(seedVocab(words, vocabSize, maxPieceLen)), rounds) { pieces =>
+      trainRound(words, pieces, vocabSize, maxPieceLen)
     }
-    pieces
-  }
 
   /** Corpus encode against a trained table: per-doc word count, piece
     * count, summed piece score, and integral pieces-per-100-words

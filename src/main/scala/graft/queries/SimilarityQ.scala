@@ -1315,18 +1315,15 @@ object SimilarityQ {
         val docs = Tables.documents(s, d)
         val dir = graft.operators.TextIndex.ensure(d, docs)
         val (w1, w2) = graft.operators.TextIndex.topBigram(s, dir)
-        // rank over the ALREADY-LIMITED k rows — the window never sees
-        // more than 20 rows, no global-sort hazard. The lit(1) partition
-        // key is semantics-neutral (one partition either way) but keeps
-        // WindowExec's "No Partition Defined" warning out of the bench
-        // tail the driver parses.
+        // rank over the ALREADY-LIMITED k rows: the window has no
+        // partition key, so WindowExec runs it in one task and logs its
+        // "No Partition Defined" warning, but it never sees more than 20
+        // rows — no global-sort hazard.
         val term = graft.operators.TextIndex
           .searchTopK(s, dir, Seq(w1, w2), 20)
           .withColumn(
             "trank",
-            row_number()
-              .over(Window.partitionBy(lit(1)).orderBy(col("score").desc, col("doc_id")))
-              .cast("long")
+            row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long")
           )
           .select(col("doc_id"), col("trank"))
         val emb = Tables.embeddings(s, d)

@@ -57,8 +57,8 @@ class BpeSpec extends AnyFunSuite {
 
   test("deeper merge loop holds its invariants (16 steps, production loop shape)") {
     // Longer training runs are the production shape (the per-step cost
-    // sits on the compact vocabulary table; localCheckpoint keeps the
-    // plan flat, so step count can grow without plan blowup). Pin the
+    // sits on the compact vocabulary table; the per-step Iterate cut keeps
+    // the plan flat, so step count can grow without plan blowup). Pin the
     // classic BPE invariant over a 16-step run: max pair support never
     // increases step over step (a merge can only reduce or preserve the
     // best remaining pair count), and merged symbols chain consistently.
@@ -98,7 +98,7 @@ class BpeSpec extends AnyFunSuite {
     //   1. the pair supply sustains >= 256 merges (no early exhaustion);
     //   2. per-step cost is FLAT in the step index — one pass over the
     //      compact word table per merge, plan size held constant by the
-    //      per-step localCheckpoint. Without that checkpoint the lineage
+    //      per-step Iterate cut. Without that checkpoint the lineage
     //      grows linearly and step cost with it; we pin flatness by
     //      comparing a 256-step run against a 64-step run: flat per-step
     //      cost => T(256) ~= 4 x T(64); 8x allowed for noise.
@@ -127,67 +127,6 @@ class BpeSpec extends AnyFunSuite {
       t256 <= 8L * t64,
       s"per-step cost grew with step index: T(256)=$t256 ms vs T(64)=$t64 ms"
     )
-  }
-
-  test("batched trainer is BIT-EQUAL to the sequential trainer (merge table + final seqs)") {
-    // pathological shapes included: same-char runs (aaaa), composition
-    // over merged symbols (abab), ties — plus a natural-text corpus
-    val corpora = Seq(
-      docs("aaaa aaaa aaaa", "abab abab", "ab cd", "ab cd"),
-      docs(
-        "banana bandana cabana banana",
-        "pepper peppers pepped pepper",
-        "mississippi missive mission",
-        "abracadabra abracadabra"
-      )
-    )
-    for (corpus <- corpora; n <- Seq(4, 16)) {
-      val words = graft.operators.TextAnalysis
-        .wordCounts(corpus)
-        .select(col("token").as("word"), col("cnt"))
-        .localCheckpoint()
-      val (ms, ss) = TextAnalysis.bpeTrainWords(words, n)
-      val (mb, sb, rounds) = TextAnalysis.bpeTrainWordsBatched(words, n)
-      val a = ms.orderBy("step").collect().map(_.toString).toSeq
-      val b = mb.orderBy("step").collect().map(_.toString).toSeq
-      assert(a === b, s"merge tables diverge at n=$n")
-      assert(
-        ss.orderBy("word").collect().map(_.toString).toSeq ===
-          sb.orderBy("word").collect().map(_.toString).toSeq,
-        s"trained segmentations diverge at n=$n"
-      )
-      assert(rounds <= a.length, "rounds must not exceed merges")
-    }
-  }
-
-  test("batched trainer: production shape — bit-equal at 64 merges, fewer driver rounds at 256") {
-    def md5Hex(s: String): String =
-      java.security.MessageDigest
-        .getInstance("MD5")
-        .digest(s.getBytes("UTF-8"))
-        .map("%02x".format(_))
-        .mkString
-    val words = (0 until 5000)
-      .map(i => (md5Hex(s"w$i"), 1L + i % 7))
-      .toDF("word", "cnt")
-      .repartition(8)
-      .cache()
-    words.count()
-    // bit-equality on the production shape (hex alphabet, skewed counts)
-    val seqMerges = TextAnalysis.bpeTrainWords(words, 64)._1
-      .orderBy("step").collect().map(_.toString).toSeq
-    val (mb, _, r64) = TextAnalysis.bpeTrainWordsBatched(words, 64)
-    assert(mb.orderBy("step").collect().map(_.toString).toSeq === seqMerges)
-    info(s"64 merges in $r64 driver rounds")
-    assert(r64 < 64, "batching must save at least some rounds on the production shape")
-    // the round count is the quantity under attack: measure it at 256
-    val t0 = System.nanoTime()
-    val (m256, _, r256) = TextAnalysis.bpeTrainWordsBatched(words, 256)
-    val n256 = m256.count()
-    val ms = (System.nanoTime() - t0) / 1000000L
-    info(s"256 merges in $r256 driver rounds, $ms ms (${ms / 256} ms/merge)")
-    assert(n256 === 256L)
-    assert(r256 < 256, "batching must reduce the driver-sequential round count")
   }
 
   test("local trainer is BIT-EQUAL to the sequential trainer (merge table + final seqs)") {

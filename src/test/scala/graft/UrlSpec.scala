@@ -440,26 +440,24 @@ class UrlSpec extends AnyFunSuite {
     assert(r.map(_._2).toSet === Set(graft.operators.LinkGraph.RankScale))
   }
 
-  test("pageRankConverged: dangling mass leaks by default, redistributes on request") {
+  test("pageRankConverged: dangling mass leaks") {
     import graft.operators.LinkGraph
-    // c is DANGLING (no outlinks): in leak mode its absorbed mass
-    // vanishes; redistribution feeds dangling/n back to every node
+    // c is DANGLING (no outlinks): the mass it absorbs vanishes instead of
+    // flowing back to a and b
     val edges = Seq(("a", "b"), ("b", "a"), ("a", "c")).toDF("src", "dst")
-    def ranks(redistribute: Boolean) = LinkGraph
-      .pageRankConverged(edges, maxIters = 4, epsilonUnits = 1L, redistributeDangling = redistribute)
+    def ranks(maxIters: Int) = LinkGraph
+      .pageRankConverged(edges, maxIters = maxIters, epsilonUnits = 1L)
       .as[(String, Long, Long)]
       .collect()
       .map(x => x._1 -> x._2)
       .toMap
-    val leak = ranks(false)
-    val redi = ranks(true)
-    // redistribution only ADDS in-mass: no rank may drop, some must rise
-    assert(leak.keySet === redi.keySet)
-    assert(leak.keys.forall(k => redi(k) >= leak(k)))
-    assert(leak.keys.exists(k => redi(k) > leak(k)), "redistribution must change the ranking")
-    // and the redistributed total retains strictly more of the 3*Scale mass
-    assert(redi.values.sum > leak.values.sum)
-    assert(redi.values.sum <= 3L * LinkGraph.RankScale)
+    // one round from S each: a gets b's S, b and c split a's S; c forwards
+    // nothing, so the total is 3S less c's damped S (0.85 * S)
+    val s = LinkGraph.RankScale
+    assert(ranks(1) === Map("a" -> s, "b" -> 575000000L, "c" -> 575000000L))
+    assert(ranks(1).values.sum === 3L * s - 85L * s / 100L)
+    // and the leak never reverses over further rounds
+    assert(ranks(4).values.sum < 3L * s)
   }
 
   test("crawl budget: largest-remainder apportionment sums exactly and breaks ties by name") {
