@@ -2,12 +2,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft Spark session is built. Bench, Verify, the other
-  * mains and the test session get the same six settings — UTC session
+  * mains and the test session get the same five settings — UTC session
   * time zone, [[plans.GraftExtensions]], AQE, `nanosAsLong` (the only way
-  * events.parquet's TIMESTAMP(NANOS) column reads: as LongType nanos), no
-  * UI, and checkpoint cleaning (the files of a [[util.Iterate]] round are
-  * deleted once its frame is garbage) — and differ only in their core
-  * count, which also sets the shuffle partition count.
+  * events.parquet's TIMESTAMP(NANOS) column reads: as LongType nanos) and
+  * no UI — and differ only in their core count, which also sets the
+  * shuffle partition count.
   *
   * Any other `spark.*` setting comes from a JVM system property, which
   * Spark loads into every session's conf:
@@ -23,7 +22,6 @@ object Session {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -326,9 +326,8 @@ object Dedup {
     // is canonicalizing a 16×-duplicated tree per action, and analysis +
     // cache lookup (both O(plan size)) dwarf the actual 510-row compute.
     // Iterate cuts the edges, the undirected edge set every round reads
-    // and each round's labels with a reliable checkpoint — the same reason
-    // GraphX/MLlib checkpoint their iterative lineages — so executor loss
-    // costs a re-read of checkpoint files, not the job.
+    // and each round's labels with a checkpoint — the same reason
+    // GraphX/MLlib checkpoint their iterative lineages.
     val e = Iterate.cut(edges)
     val und = e
       .select(col("a_id").as("src"), col("b_id").as("dst"))

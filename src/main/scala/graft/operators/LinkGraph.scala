@@ -35,7 +35,7 @@ import graft.util.Iterate
   * 10^17 < Long.MaxValue at RankScale=10^9, and past ~10^9 hosts the
   * sum lane lifts to DECIMAL(38,0) the way BM25's scores did
   * ([[TextIndex]]). Rounds run through [[graft.util.Iterate]], which cuts
-  * each round's lineage with a reliable checkpoint.
+  * each round's lineage with a checkpoint.
   */
 object LinkGraph {
 

@@ -22,7 +22,7 @@ import graft.util.Iterate
   *
   * Scale shape: one edges⋈ranks equi-join plus one partial-aggregable
   * groupBy per iteration (the standard message-passing round), run by
-  * [[graft.util.Iterate]], which cuts each round's lineage with a reliable
+  * [[graft.util.Iterate]], which cuts each round's lineage with a
   * checkpoint (plan size would otherwise double per iteration and
   * driver-side analysis would dominate — the connected-components
   * lesson). Degrees are computed once. No driver state beyond the loop

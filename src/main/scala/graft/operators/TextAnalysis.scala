@@ -536,8 +536,7 @@ object TextAnalysis {
     *
     * Returns (step, x, y, merged, support) — the trained merge table,
     * which IS the tokenizer artifact. Each step's `seqs` is cut by
-    * [[graft.util.Iterate]] (a reliable checkpoint), so the plan stays
-    * flat across iterations.
+    * [[graft.util.Iterate]], so the plan stays flat across iterations.
     */
   def bpeTrain(docs: DataFrame, nMerges: Int): DataFrame =
     bpeTrainFull(docs, nMerges)._1

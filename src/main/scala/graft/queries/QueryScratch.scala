@@ -8,10 +8,9 @@ package graft.queries
   * (hooks are never deduplicated by the JVM, so per-invocation
   * registration would accumulate threads). Safe to wipe at entry: by the
   * time a query is re-invoked, the previous invocation's DataFrame has
-  * been fully consumed. [[graft.util.Iterate]] keeps its checkpoints in one
-  * such dir when the deployment sets no `spark.checkpoint.dir`.
+  * been fully consumed.
   */
-private[graft] object QueryScratch {
+private[queries] object QueryScratch {
 
   private val hookedPaths =
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()

@@ -5,19 +5,14 @@ import org.apache.spark.sql.DataFrame
 /** The one loop of graft's iterative operators (PageRank, connected
   * components, BPE and Unigram training) and its lineage policy.
   *
-  * Every round's frame, and every frame the rounds read, is cut by [[cut]]:
-  * an eager RELIABLE checkpoint. The plan stays one scan deep however many
-  * rounds run (an unbroken lineage grows, or doubles, per round), and the
-  * cut rows live in checkpoint files, so a lost executor costs a re-read,
-  * not the job — a `localCheckpoint` keeps its blocks only on the executor
-  * that wrote them and has no lineage to recompute them from. The write is
-  * one job, as the eager `localCheckpoint` was.
-  *
-  * Checkpoints go to Spark's own `spark.checkpoint.dir` when the
-  * deployment sets it; otherwise to a per-process dir under
-  * `target/graft_scratch`, removed at JVM exit. [[graft.Session]] turns on
-  * checkpoint cleaning, so rounds a loop has moved past are deleted as
-  * their frames are collected.
+  * Every round's frame, and every frame the rounds read, is cut by [[cut]],
+  * so the plan stays one scan deep however many rounds run (an unbroken
+  * lineage grows, or doubles, per round, and driver-side analysis then
+  * dominates). The cut is an eager `localCheckpoint`: one write job, its
+  * blocks held by the executors that wrote them. Every graft session runs
+  * `local[N]`, where an executor cannot be lost without the driver; on a
+  * cluster a lost executor would fail the loop, and the reliable
+  * `Dataset.checkpoint` that closes that hazard is a one-line swap here.
   */
 object Iterate {
 
@@ -53,15 +48,8 @@ object Iterate {
   def rounds(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
     apply(init, rounds)(cur => Some(step(cur))).last
 
-  /** `df` materialized by an eager reliable checkpoint: a scan of its rows
-    * in checkpoint files, with no lineage above it.
+  /** `df` materialized by an eager checkpoint: a scan of its rows with no
+    * lineage above it.
     */
-  def cut(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    synchronized {
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(graft.queries.QueryScratch.dir("checkpoints"))
-    }
-    df.checkpoint(eager = true)
-  }
+  def cut(df: DataFrame): DataFrame = df.localCheckpoint()
 }

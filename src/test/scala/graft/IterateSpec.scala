@@ -1,43 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.Iterate
 
-/** The loop helper survives the loss of every cached block between rounds,
-  * which is what a lost executor does to a `localCheckpoint`.
-  *
-  * The stand-in for executor loss is an optimizer rule that, each time a
-  * query is planned, unpersists every RDD this suite made (blocking). It
-  * runs on the driver thread before each action, so the blocks are gone
-  * before the next round reads them, with no race against the listener bus.
+/** The loop helper: its round count and stop rules, and its cut, which
+  * leaves each round a scan of materialized rows with no lineage above it.
   */
 class IterateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import spark.implicits._
-
-  /** `body` with every RDD made from here on unpersisted before each
-    * planned query.
-    */
-  private def losingBlocks[T](body: => T): T = {
-    val sc = spark.sparkContext
-    val firstId = sc.emptyRDD[Int].id
-    val dropAll = new Rule[LogicalPlan] {
-      def apply(plan: LogicalPlan): LogicalPlan = {
-        sc.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (id > firstId) rdd.unpersist(blocking = true)
-        }
-        plan
-      }
-    }
-    spark.experimental.extraOptimizations = Seq(dropAll)
-    try body
-    finally spark.experimental.extraOptimizations = Nil
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -46,39 +20,41 @@ class IterateSpec extends AnyFunSuite {
   private def bump(df: DataFrame) = df.select(col("id"), col("v") * 3 + col("id") % 5)
     .toDF("id", "v")
 
-  test("the helper finishes a 4-round loop with the undisturbed rows when blocks are lost") {
-    val clean = rows(Iterate.rounds(start, 4)(bump))
-    val disturbed = losingBlocks(rows(Iterate.rounds(start, 4)(bump)))
-    assert(disturbed === clean)
+  /** The checkpointed RDD scans in `df`'s plan. */
+  private def scans(df: DataFrame): Seq[LogicalRDD] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r }
+
+  test("cut: the frame is one scan of checkpointed rows, with no lineage above it") {
+    val c = Iterate.cut(bump(start))
+    val s = scans(c)
+    assert(s.length === 1, c.queryExecution.logical.treeString)
+    assert(s.head.rdd.isCheckpointed, "the cut must materialize its rows eagerly")
+    assert(c.queryExecution.logical.collect { case p if p.nodeName == "Range" => p }.isEmpty)
+    assert(rows(c) === rows(bump(start)))
   }
 
-  test("control: the same loss kills a localCheckpoint loop") {
-    val e = intercept[Exception] {
-      losingBlocks {
-        var r = start.localCheckpoint()
-        for (_ <- 1 to 4) r = bump(r).localCheckpoint()
-        r.collect()
-      }
-    }
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-    assert(
-      msgs.exists(m => m != null && m.contains("Checkpoint block") && m.contains("not found")),
-      s"expected Spark's lost-checkpoint-block error, got: $e"
+  test("rounds: the uncut fold's rows, and the last round's plan stays one scan deep") {
+    val uncut = (1 to 4).foldLeft(start)((df, _) => bump(df))
+    val last = Iterate.rounds(start, 4)(bump)
+    assert(rows(last) === rows(uncut))
+    assert(scans(last).length === 1)
+    assert(scans(last).head.rdd.isCheckpointed)
+  }
+
+  test("stop rules: None stops before the round, done after it, the cap leaves stopped unset") {
+    val capped = Iterate(start, 3)(df => Some(bump(df)))
+    assert((capped.rounds, capped.stopped) === ((3, false)))
+
+    var calls = 0
+    val empty = Iterate(start, 5) { df => calls += 1; if (calls == 3) None else Some(bump(df)) }
+    assert((empty.rounds, empty.stopped) === ((2, true)))
+    assert(rows(empty.last) === rows(bump(bump(start))))
+
+    val conv = Iterate(start, 10, done = (_, next) => next.filter(col("v") > 1000).count() > 0)(df =>
+      Some(bump(df))
     )
-  }
-
-  test("connectedComponents and pageRankConverged: same rows when blocks are lost every round") {
-    val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (21L, 20L))
-      .toDF("a_id", "b_id")
-    val links = Seq(("a", "b"), ("b", "a"), ("a", "c"), ("c", "d"), ("d", "a"))
-      .toDF("src", "dst")
-    def cc = rows(graft.operators.Dedup.connectedComponents(pairs))
-    def ranks = graft.operators.LinkGraph.pageRankConverged(links, maxIters = 6, epsilonUnits = 1L)
-    def pr = rows(ranks)
-    val (cleanCc, cleanPr) = (cc, pr)
-    assert(ranks.select(max(col("rounds"))).as[Long].head() >= 3L, "the walk must run 3+ rounds")
-    val (lostCc, lostPr) = losingBlocks((cc, pr))
-    assert(lostCc === cleanCc)
-    assert(lostPr === cleanPr)
+    // v grows ~3x a round from at most 6: the first round past 1000 is the 5th.
+    assert((conv.rounds, conv.stopped) === ((5, true)))
+    assert(rows(conv.last) === rows((1 to 5).foldLeft(start)((df, _) => bump(df))))
   }
 }

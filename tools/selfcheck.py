@@ -8,22 +8,13 @@ matching SQL from <verifyOutDir>/oracle_sql.json in DuckDB against views over
 <sfDir>/*.parquet, and compares: columns sorted by name, rows sorted by all
 columns, exact value equality. Reports per-query PASS/FAIL, and MISS (counted
 as a failure) for an oracle query with no parquet output.
-
-Each query gets its own DuckDB connection with a memory limit, a thread cap
-and a spill dir (<verifyOutDir>/.selfcheck_tmp, removed at the end), so no
-query's buffers outlive it and one heavy oracle cannot grow the process
-beside a Spark JVM. A query that runs out of memory under the limit is rerun
-once on a fresh connection with DuckDB's defaults, and its line says so:
-sf0.01's d_semantic_prod oracle needs more than 11 GB on DuckDB 1.0.
 """
-import sys, os, json, glob, shutil
+import sys, os, json, glob
 import duckdb
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
-MEMORY_LIMIT = "4GB"
-THREADS = 2
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -73,60 +64,36 @@ def cmp_frames(a: pd.DataFrame, b: pd.DataFrame):
     return None
 
 
-def check(con, out_dir: str, name: str, oracle: dict):
-    """One query's report line, and whether it counts as a failure."""
-    files = glob.glob(f"{out_dir}/{name}/*.parquet")
-    if not files:
-        return f"MISS {name}: no parquet written", True
-    spark_df = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
-    if name not in oracle:
-        return f"SKIP {name}: rows-only ({len(spark_df)} rows)", False
-    try:
-        oracle_df = con.sql(oracle[name]).df()
-    except Exception as e:
-        return f"FAIL {name}: oracle SQL error: {e}", True
-    err = cmp_frames(spark_df, oracle_df)
-    if err:
-        return f"FAIL {name}: {err}", True
-    return f"PASS {name} ({len(spark_df)} rows)", False
-
-
-def run_check(sf_dir, tmp_dir, out_dir, name, oracle, bounded):
-    """check() on a fresh connection: with the memory limit, thread cap and
-    spill dir when bounded, else with DuckDB's defaults."""
-    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
-                                 "threads": THREADS,
-                                 "temp_directory": tmp_dir} if bounded else {})
-    try:
-        for t in TABLES:
-            p = f"{sf_dir}/{t}.parquet"
-            if os.path.exists(p):
-                con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        return check(con, out_dir, name, oracle)
-    finally:
-        con.close()
-
-
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    tmp_dir = f"{out_dir}/.selfcheck_tmp"
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     # Every oracle key must have output: a query that threw in Verify
     # writes no directory, and skipping it would read as a pass.
     names = sorted({os.path.basename(p) for p in glob.glob(f"{out_dir}/*")
                     if os.path.isdir(p)} | set(oracle))
     n_pass = n_fail = 0
-    try:
-        for name in names:
-            line, failed = run_check(sf_dir, tmp_dir, out_dir, name, oracle, True)
-            if "Out of Memory Error" in line:
-                line, failed = run_check(sf_dir, tmp_dir, out_dir, name, oracle, False)
-                line += f" [over the {MEMORY_LIMIT} limit; rerun unbounded]"
-            print(line, flush=True)
-            n_fail += failed
-            n_pass += line.startswith("PASS")
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    for name in names:
+        files = glob.glob(f"{out_dir}/{name}/*.parquet")
+        if not files:
+            print(f"MISS {name}: no parquet written"); n_fail += 1; continue
+        spark_df = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
+        if name not in oracle:
+            print(f"SKIP {name}: rows-only ({len(spark_df)} rows)")
+            continue
+        try:
+            oracle_df = con.sql(oracle[name]).df()
+        except Exception as e:
+            print(f"FAIL {name}: oracle SQL error: {e}"); n_fail += 1; continue
+        err = cmp_frames(spark_df, oracle_df)
+        if err:
+            print(f"FAIL {name}: {err}"); n_fail += 1
+        else:
+            print(f"PASS {name} ({len(spark_df)} rows)"); n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
